@@ -56,6 +56,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from ..plans.shaping import checkpoint_pinned, kernel_fits, presorted
+
 #: One shuffle partition per this many iteration-state rows (floor 4,
 #: ceiling the session conf) — the same sizing rule the round-4 conf flip
 #: used, now applied per-shuffle-point.
@@ -74,36 +76,12 @@ _STATE_ROWS_PER_PARTITION = 50_000
 #: (~20 ms each).  4M edges ≈ 24 B/edge ≈ 100 MB of task arrays, well
 #: inside one task's memory share on any sane executor; above the
 #: ceiling the distributed loop (the 100 TB path) is unchanged.
-#: Kill-switch: spark.graft.pagerank_local_max_edges=0.
+#: Ceiling conf: spark.graft.pagerank_local_max_edges (0 = kernel off).
 _PAGERANK_KERNEL_MAX_EDGES = 4_000_000
 
 
 def _state_parts(m: int, conf_parts: int) -> int:
     return max(4, min(conf_parts, -(-m // _STATE_ROWS_PER_PARTITION)))
-
-
-def _presorted(df: DataFrame, *keys: str) -> DataFrame:
-    """Sort a loop-invariant table by its loop join key before its
-    checkpoint so iteration-time SortMergeJoins can skip re-sorting it.
-    Only effective through :func:`_ckpt_pinned` — a plain localCheckpoint
-    under AQE erases the stored ordering (and partitioning), which is
-    exactly why the r9 presort left pagerank's 13 GB/iteration sort spill
-    unchanged at x256: the per-iteration SMJ re-sorted (and re-exchanged)
-    the edge table anyway.  Mechanism, evidence and kill-switch
-    (spark.graft.presort=false): plans/shaping.presorted."""
-    from ..plans.shaping import presorted
-
-    return presorted(df, *keys)
-
-
-def _ckpt_pinned(df: DataFrame) -> DataFrame:
-    """Eager localCheckpoint that keeps partitioning/ordering metadata
-    under AQE (plans/shaping.checkpoint_pinned) — the property every
-    loop-invariant table here depends on.  Kill-switch
-    spark.graft.pin=false."""
-    from ..plans.shaping import checkpoint_pinned
-
-    return checkpoint_pinned(df)
 
 
 def _sized(df: DataFrame, parts: int, conf_parts: int, *keys: str) -> DataFrame:
@@ -207,12 +185,13 @@ def _pagerank_arrow(
 def _cc_arrow(und: DataFrame, max_iter: int) -> DataFrame:
     """Single-task connected components over a small symmetrized distinct
     edge table: the EXACT distributed schedule (one-hop neighbor minimum +
-    two pointer jumps per iteration, stop on unchanged labels, raise past
-    ``max_iter``) run in NumPy inside one ``mapInArrow`` task.  Pure
-    integer math — iterates, iteration counts and the non-convergence
-    contract are identical to the distributed loop by construction.
-    Emits (node, cluster, iters); iters is constant (observability for
-    the stats dict)."""
+    two pointer jumps per iteration, stop on unchanged labels, give up
+    past ``max_iter``) run in NumPy inside one ``mapInArrow`` task.  Pure
+    integer math — iterates and iteration counts are identical to the
+    distributed loop by construction.  Emits (node, cluster, iters,
+    converged) with the last two constant; the task never raises, so
+    :func:`connected_components` reports non-convergence on the driver
+    from the observed ``converged`` flag."""
     node_t = und.schema["src"].dataType.simpleString()
 
     def kernel(batches):
@@ -248,37 +227,32 @@ def _cc_arrow(und: DataFrame, max_iter: int) -> DataFrame:
                 break
             label = new
             iterations += 1
-        if not converged:
-            raise RuntimeError(
-                f"connected_components did not converge in {max_iter} "
-                "iterations (component diameter exceeds max_iter); raise "
-                "max_iter"
-            )
         yield pa.RecordBatch.from_arrays(
             [
                 pa.array(nodes),
                 pa.array(nodes[label]),
                 pa.array(np.full(n, iterations, dtype=np.int32)),
+                pa.array(np.full(n, converged)),
             ],
-            names=["node", "cluster", "iters"],
+            names=["node", "cluster", "iters", "converged"],
         )
 
     return und.coalesce(1).mapInArrow(
-        kernel, schema=f"node {node_t}, cluster {node_t}, iters int"
+        kernel,
+        schema=f"node {node_t}, cluster {node_t}, iters int, converged boolean",
     )
 
 
 #: Edge-count ceiling for the single-task connected-components kernel —
 #: same arithmetic and rationale as _PAGERANK_KERNEL_MAX_EDGES (the CC
 #: loop additionally runs a VARIABLE number of driver-synced iterations,
-#: up to max_iter + 1 jobs).  Kill-switch: spark.graft.cc_local_max_edges=0.
+#: up to max_iter + 1 jobs).  Ceiling conf: spark.graft.cc_local_max_edges.
 _CC_KERNEL_MAX_EDGES = 4_000_000
 
 
 def connected_components(
     edges: DataFrame,
     max_iter: int = 20,
-    checkpoint: bool = True,
     stats: dict | None = None,
 ) -> DataFrame:
     """Connected components of an undirected graph.
@@ -292,8 +266,11 @@ def connected_components(
     number of label-update iterations executed (convergence-detection
     iteration excluded) — observability for the log-diameter guarantee.
 
-    Job budget (checkpoint=True): setup = 2 jobs (edge checkpoint+count,
-    label checkpoint), then exactly 1 job per iteration — the label
+    Raises ``RuntimeError`` on the driver when the labels have not
+    converged within ``max_iter`` iterations, on either path.
+
+    Job budget: setup = 2 jobs (edge checkpoint+count, label
+    checkpoint), then exactly 1 job per iteration — the label
     checkpoint, whose ``observe`` carries the convergence sum.
     """
     u, v = edges.columns[:2]
@@ -317,68 +294,58 @@ def connected_components(
         .select("e.src", "e.dst")
         .distinct()
     )
-    if checkpoint:
-        # The edge list is re-joined every iteration; without truncating its
-        # lineage here, the WHOLE upstream pipeline that produced the edges
-        # (e.g. MinHash-LSH candidate generation) re-executes per iteration.
-        und = und.localCheckpoint(eager=True)
+    # The edge list is re-joined every iteration; without truncating its
+    # lineage here, the WHOLE upstream pipeline that produced the edges
+    # (e.g. MinHash-LSH candidate generation) re-executes per iteration.
+    und = und.localCheckpoint(eager=True)
     m = und.count()
     # Small-graph fast path (round 11, mirroring pagerank's): below the
     # kernel ceiling the whole label-propagation loop (up to max_iter + 1
     # driver-synced jobs of pure scheduling floor on a near-dup candidate
     # graph) runs inside ONE Arrow task with the identical integer
-    # schedule, including the non-convergence raise — surfaced here
-    # driver-side via an eager materialization so the contract (raise
-    # from THIS call, not a later action) is preserved.  Kill-switch:
-    # spark.graft.cc_local_max_edges=0.
-    cc_kernel_max = int(
-        spark.conf.get(
-            "spark.graft.cc_local_max_edges", str(_CC_KERNEL_MAX_EDGES)
+    # schedule.  Its iteration count and convergence flag ride the eager
+    # checkpoint job as observe metrics, so non-convergence raises here
+    # on the driver, from THIS call, without a failed task.
+    if kernel_fits(
+        spark, "spark.graft.cc_local_max_edges", _CC_KERNEL_MAX_EDGES, m
+    ):
+        obs_k = Observation()
+        labeled = (
+            _cc_arrow(und, max_iter)
+            .observe(
+                obs_k,
+                F.min("iters").alias("iters"),
+                F.min("converged").alias("converged"),
+            )
+            .localCheckpoint(eager=True)
         )
-    )
-    if checkpoint and m <= cc_kernel_max:
-        labeled = _cc_arrow(und, max_iter)
-        try:
-            labeled = labeled.localCheckpoint(eager=True)
-        except Exception as exc:  # noqa: BLE001 — re-raise unless ours
-            # The kernel's raise surfaces wrapped (PythonException /
-            # Py4JJavaError depending on path); restore the operator's
-            # driver-side RuntimeError contract.
-            if "did not converge" not in str(exc):
-                raise
+        if obs_k.get["converged"] is False:
             raise RuntimeError(
                 f"connected_components did not converge in {max_iter} "
                 "iterations (component diameter exceeds max_iter); "
                 "raise max_iter"
-            ) from None
+            )
         if stats is not None:
-            row = labeled.select("iters").first()
-            stats["iterations"] = 0 if row is None else int(row[0])
+            stats["iterations"] = obs_k.get["iters"] or 0
         return labeled.select("node", "cluster")
     parts = _state_parts(m, conf_parts)
-    if checkpoint:
-        # Pin the (large) edge side on dst at state width once; the per-
-        # iteration join und⋈labels is then co-partitioned and exchange-free
-        # and pre-SORTED on dst so the per-iteration SortMergeJoin skips
-        # re-sorting the loop-invariant edge side too.  _ckpt_pinned is
-        # what makes both properties real at scale: a plain
-        # localCheckpoint under AQE stores Unknown/Nil and every iteration
-        # re-exchanges AND re-sorts the |E|-row side (round-10 finding).
-        und = _ckpt_pinned(
-            und.repartition(parts, "dst").transform(_presorted, "dst")
-        )
+    # Pin the (large) edge side on dst at state width once; the per-
+    # iteration join und⋈labels is then co-partitioned and exchange-free
+    # and pre-SORTED on dst so the per-iteration SortMergeJoin skips
+    # re-sorting the loop-invariant edge side too.  checkpoint_pinned is
+    # what makes both properties real at scale: a plain localCheckpoint
+    # under AQE stores Unknown/Nil and every iteration re-exchanges AND
+    # re-sorts the |E|-row side (round-10 finding).
+    und = checkpoint_pinned(presorted(und.repartition(parts, "dst"), "dst"))
 
     labels = (
         _sized(und.select(F.col("src").alias("node")), parts, conf_parts, "node")
         .distinct()
         .withColumn("cluster", F.col("node"))
     )
-    if checkpoint:
-        obs0 = Observation()
-        labels = _ckpt_pinned(labels.observe(obs0, F.sum("cluster").alias("s")))
-        prev_sum = obs0.get["s"]
-    else:
-        prev_sum = labels.agg(F.sum("cluster")).collect()[0][0]
+    obs0 = Observation()
+    labels = checkpoint_pinned(labels.observe(obs0, F.sum("cluster").alias("s")))
+    prev_sum = obs0.get["s"]
 
     converged = False
     iterations = 0
@@ -435,15 +402,11 @@ def connected_components(
                     F.coalesce(F.col("p_cluster"), F.col("cluster")).alias("cluster"),
                 )
             )
-        if checkpoint:
-            obs = Observation()
-            new_labels = new_labels.observe(
-                obs, F.sum("cluster").alias("s")
-            ).localCheckpoint(eager=True)
-            new_sum = obs.get["s"]
-        else:
-            new_sum = new_labels.agg(F.sum("cluster")).collect()[0][0]
-        labels = new_labels
+        obs = Observation()
+        labels = new_labels.observe(
+            obs, F.sum("cluster").alias("s")
+        ).localCheckpoint(eager=True)
+        new_sum = obs.get["s"]
         if new_sum == prev_sum:
             converged = True
             break
@@ -466,7 +429,6 @@ def pagerank(
     edges: DataFrame,
     damping: float = 0.85,
     iterations: int = 10,
-    checkpoint: bool = True,
     assume_distinct: bool = False,
     approx_edge_bound: int | None = None,
 ) -> DataFrame:
@@ -485,7 +447,8 @@ def pagerank(
     sized dedup exchange (graph_pagerank's pairs are distinct-then-
     symmetrized over a disjoint odd/even node encoding, so its union can
     never introduce duplicates).  Nodes appear iff they occur in an edge.
-    Returns (node, rank) with sum(rank) == 1: per iteration,
+    Returns (node, rank) with sum(rank) == 1 (no rows for an empty edge
+    table): per iteration,
 
         rank'(v) = (1-d)/N + d * (sum_{u->v} rank(u)/outdeg(u) + D/N)
 
@@ -503,7 +466,7 @@ def pagerank(
 
     Scale posture: edges are normalized ONCE into (src, dst, 1/outdeg),
     REPARTITIONED BY src, pre-sorted and lineage-truncated with
-    _ckpt_pinned — the checkpoint that actually KEEPS the hash
+    checkpoint_pinned — the checkpoint that actually KEEPS the hash
     partitioning and sort order in its LogicalRDD under AQE (a plain
     localCheckpoint stores Unknown/Nil there, and at x256 that cost a
     full |E| re-exchange + re-sort every iteration: 139 GB of sort spill,
@@ -514,9 +477,9 @@ def pagerank(
     mass from src- to dst-partitioning (information-theoretically
     required), plus a |V|-sized contrib re-exchange in the lazy ranks
     view (the contrib checkpoint deliberately stays un-pinned so the
-    heavy aggregation job keeps AQE's advisory-size coalescing).  Job budget
-    (checkpoint=True): 2 setup jobs at real scale (normalized-edge and
-    node checkpoints, with the edge/node counts riding them as observe
+    heavy aggregation job keeps AQE's advisory-size coalescing).  Job
+    budget: 2 setup jobs at real scale (normalized-edge and node
+    checkpoints, with the edge/node counts riding them as observe
     metrics; +1 cheap state-width re-pin job in the small regime), then
     exactly 1 job per iteration.  The only driver state is three scalars
     (m, n, and D per iteration).
@@ -525,12 +488,7 @@ def pagerank(
     spark = edges.sparkSession
     conf_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     e = edges.select(F.col(u).alias("src"), F.col(v).alias("dst"))
-    kernel_max = int(
-        spark.conf.get(
-            "spark.graft.pagerank_local_max_edges",
-            str(_PAGERANK_KERNEL_MAX_EDGES),
-        )
-    )
+    gate = ("spark.graft.pagerank_local_max_edges", _PAGERANK_KERNEL_MAX_EDGES)
     # Bounded-ahead kernel path (round 11): when the caller can bound the
     # edge count from metadata (an UPPER bound, so the "small" decision is
     # never wrong on a big graph), skip the distributed loop's whole setup
@@ -539,8 +497,8 @@ def pagerank(
     # derivation's stages feed a keyless single-partition exchange into
     # the Arrow kernel, which computes 1/outdeg itself (the identical
     # IEEE division).  See _PAGERANK_KERNEL_MAX_EDGES for the sizing
-    # argument; spark.graft.pagerank_local_max_edges=0 disables.
-    if approx_edge_bound is not None and approx_edge_bound <= kernel_max:
+    # argument.
+    if kernel_fits(spark, *gate, approx_edge_bound):
         # Duplicate edges (if any) collapse INSIDE the kernel — a NumPy
         # unique on index pairs instead of a distributed distinct
         # exchange the kernel would make redundant.
@@ -571,85 +529,64 @@ def pagerank(
     # aggregate, so shuffle volume and the contribution SUM are
     # unchanged; per-dst sum ORDER changes with row order, which the
     # oracle's 1e-7 rounding has always absorbed (same tolerance class as
-    # DuckDB's own order).  Kill-switch: spark.graft.pagerank_grouped=
-    # false restores the row-per-edge loop.
-    grouped = (
-        spark.conf.get("spark.graft.pagerank_grouped", "true") != "false"
+    # DuckDB's own order).
+    e_loop = (
+        e.repartition(F.col("src"))
+        .groupBy("src")
+        .agg(F.collect_list("dst").alias("dsts"))
+        .select("src", "dsts", (F.lit(1.0) / F.size("dsts")).alias("w"))
     )
-    e2 = e.repartition(F.col("src"))
-    if grouped:
-        e_loop = (
-            e2.groupBy("src")
-            .agg(F.collect_list("dst").alias("dsts"))
-            .select(
-                "src", "dsts", (F.lit(1.0) / F.size("dsts")).alias("w")
-            )
+    obs_m = Observation()
+    e_loop = checkpoint_pinned(
+        presorted(
+            e_loop.observe(
+                obs_m, F.coalesce(F.sum(F.size("dsts")), F.lit(0)).alias("m")
+            ),
+            "src",
         )
-        m_expr = F.coalesce(F.sum(F.size("dsts")), F.lit(0)).alias("m")
-    else:
-        outdeg = e2.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-        e_loop = e2.join(outdeg, "src").select(
-            "src", "dst", (F.lit(1.0) / F.col("outdeg")).alias("w")
-        )
-        m_expr = F.count(F.lit(1)).alias("m")
-    if checkpoint:
-        obs_m = Observation()
-        e_loop = _ckpt_pinned(
-            e_loop.observe(obs_m, m_expr).transform(_presorted, "src")
-        )
-        m = obs_m.get["m"]
-    else:
-        m = e_loop.agg(m_expr).collect()[0][0]
+    )
+    m = obs_m.get["m"]
     # Small-graph fast path (round 11): once the edge count is measured
     # (it rides the checkpoint job either way), a graph under the kernel
     # ceiling runs every iteration inside one Arrow task — no node
     # checkpoint, no per-iteration jobs, identical math (see
     # _pagerank_arrow).  The distributed loop below stays the at-scale
-    # path; spark.graft.pagerank_local_max_edges=0 disables the kernel
-    # for paired A/Bs.
-    if m <= kernel_max:
-        rows = (
-            e_loop.select("src", F.explode("dsts").alias("dst"), "w")
-            if grouped
-            else e_loop
-        )
+    # path.
+    if kernel_fits(spark, *gate, m):
+        rows = e_loop.select("src", F.explode("dsts").alias("dst"), "w")
         return _pagerank_arrow(rows, damping, iterations, normalized=True)
+    if m == 0:
+        # No nodes: the loop's 1/n teleport term is undefined.
+        return e_loop.select(F.col("src").alias("node"), F.lit(0.0).alias("rank"))
     # Iteration-state width: see module docstring (_sized) — one partition
     # per ~50k state rows, floor 4, ceiling the session conf (no-op at real
     # scale), applied per shuffle point instead of the r4 session-conf flip.
     parts = _state_parts(m, conf_parts)
-    if checkpoint and parts < conf_parts:
+    if parts < conf_parts:
         # Small-state regime: re-pin the (small) normalized edges at state
         # width so every loop stage runs at `parts`; at real scale the
         # join output is already hashpartitioning(src, conf-width) from
         # the materialized exchange — nothing to re-pin.
-        e_loop = _ckpt_pinned(
-            e_loop.repartition(parts, "src").transform(_presorted, "src")
+        e_loop = checkpoint_pinned(
+            presorted(e_loop.repartition(parts, "src"), "src")
         )
 
-    dst_nodes = (
-        e_loop.select(F.explode("dsts").alias("node"))
-        if grouped
-        else e_loop.select(F.col("dst").alias("node"))
-    )
     nodes = (
         _sized(
-            e_loop.select(F.col("src").alias("node")).union(dst_nodes),
+            e_loop.select(F.col("src").alias("node")).union(
+                e_loop.select(F.explode("dsts").alias("node"))
+            ),
             parts,
             conf_parts,
             "node",
         )
         .distinct()
     )
-    if checkpoint:
-        obs_n = Observation()
-        nodes = _ckpt_pinned(
-            nodes.observe(obs_n, F.count(F.lit(1)).alias("n"))
-            .transform(_presorted, "node")
-        )
-        n = obs_n.get["n"]
-    else:
-        n = nodes.count()
+    obs_n = Observation()
+    nodes = checkpoint_pinned(
+        presorted(nodes.observe(obs_n, F.count(F.lit(1)).alias("n")), "node")
+    )
+    n = obs_n.get["n"]
 
     # Loop shape: the ONLY materialization per iteration is the
     # contribution table (eager checkpoint = one job), whose observe
@@ -662,38 +599,22 @@ def pagerank(
     # deep without checkpointing ranks at all.
     ranks = nodes.withColumn("rank", F.lit(1.0 / n))
     for _ in range(iterations):
-        joined = e_loop.join(ranks, e_loop["src"] == ranks["node"])
-        if grouped:
-            rows = joined.select(
-                F.explode("dsts").alias("dst"),
-                (F.col("rank") * F.col("w")).alias("c"),
-            )
-        else:
-            rows = joined.select(
-                "dst", (F.col("rank") * F.col("w")).alias("c")
-            )
+        rows = e_loop.join(ranks, e_loop["src"] == ranks["node"]).select(
+            F.explode("dsts").alias("dst"),
+            (F.col("rank") * F.col("w")).alias("c"),
+        )
+        obs = Observation()
         contrib = (
             _sized(rows, parts, conf_parts, "dst")
             .groupBy("dst")
             .agg(F.sum("c").alias("contrib"))
+            .observe(obs, F.coalesce(F.sum("contrib"), F.lit(0.0)).alias("s"))
+            .localCheckpoint(eager=True)
         )
-        if checkpoint:
-            obs = Observation()
-            contrib = contrib.observe(
-                obs, F.coalesce(F.sum("contrib"), F.lit(0.0)).alias("s")
-            ).localCheckpoint(eager=True)
-            dm = F.lit(1.0 - obs.get["s"])
-        else:
-            # Lazy path: the dangling mass stays a 1-row DataFrame cross-
-            # broadcast onto the update (no materialization to observe).
-            dangling = contrib.agg(
-                (F.lit(1.0) - F.coalesce(F.sum("contrib"), F.lit(0.0))).alias("dm")
-            )
-        new_ranks = nodes.join(contrib, nodes["node"] == contrib["dst"], "left")
-        if not checkpoint:
-            new_ranks = new_ranks.crossJoin(F.broadcast(dangling))
-            dm = F.col("dm")
-        ranks = new_ranks.select(
+        dm = F.lit(1.0 - obs.get["s"])
+        ranks = nodes.join(
+            contrib, nodes["node"] == contrib["dst"], "left"
+        ).select(
             "node",
             (
                 F.lit((1.0 - damping) / n)
@@ -707,7 +628,7 @@ def pagerank(
 #: Edge-count ceiling for the single-task triangle kernel.  Wedge volume
 #: is Σ outdeg² ≤ m^1.5 under the compact-forward orientation; the kernel
 #: streams wedges in O(m) memory per gap step, so the ceiling only bounds
-#: TIME (~m^1.5 vectorized ops).  Kill-switch: spark.graft.tri_local_max_edges=0.
+#: TIME (~m^1.5 vectorized ops).  Ceiling conf: spark.graft.tri_local_max_edges.
 _TRI_KERNEL_MAX_EDGES = 200_000
 
 
@@ -808,8 +729,7 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     SORTED the whole Σ outdeg² wedge table (the r9 ledger's 29 GB x256
     memory spill).  An SHJ build partition holds |E|/width rows, which
     AQE's advisory sizing keeps bounded at any corpus size; the wedge
-    side is never sorted anywhere in the plan.  Kill-switch for paired
-    A/Bs: spark.graft.tri_shj=false (SMJ planner default).
+    side is never sorted anywhere in the plan.
 
     Edge materialization + small-graph kernel (round 11): the edge list
     has THREE consumers below (two degree projections + the orientation
@@ -819,21 +739,18 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     checkpoint runs the (expensive) edge derivation exactly once, and the
     measured count gates the single-task NumPy kernel (_tri_arrow) for
     small graphs — same algorithm, exact integer counts, one task instead
-    of ~6 stages.  Kill-switch: spark.graft.tri_local_max_edges=0
-    restores the round-10 shape byte-for-byte."""
-    spark = edges.sparkSession
-    tri_max = int(
-        spark.conf.get(
-            "spark.graft.tri_local_max_edges", str(_TRI_KERNEL_MAX_EDGES)
-        )
-    )
-    if tri_max > 0:
-        obs = Observation()
-        edges = edges.observe(
-            obs, F.count(F.lit(1)).alias("m")
-        ).localCheckpoint(eager=True)
-        if obs.get["m"] <= tri_max:
-            return _tri_arrow(edges)
+    of ~6 stages.  The checkpoint runs on both sides of the gate."""
+    obs = Observation()
+    edges = edges.observe(
+        obs, F.count(F.lit(1)).alias("m")
+    ).localCheckpoint(eager=True)
+    if kernel_fits(
+        edges.sparkSession,
+        "spark.graft.tri_local_max_edges",
+        _TRI_KERNEL_MAX_EDGES,
+        obs.get["m"],
+    ):
+        return _tri_arrow(edges)
     deg = (
         edges.select(F.col("u").alias("n"))
         .union(edges.select("v"))
@@ -867,15 +784,10 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
         F.when(F.col("ku") < F.col("kv"), F.col("u")).otherwise(F.col("v")).alias("src"),
         F.when(F.col("ku") < F.col("kv"), F.col("v")).otherwise(F.col("u")).alias("dst"),
     ).localCheckpoint(eager=False)
-    shj = (
-        edges.sparkSession.conf.get("spark.graft.tri_shj", "true") != "false"
-    )
-    e1, e2 = o.alias("e1"), o.alias("e2")
+    e1, e2 = o.alias("e1"), o.alias("e2").hint("shuffle_hash")
     closing = o.select(
         F.least("src", "dst").alias("cu"), F.greatest("src", "dst").alias("cv")
-    )
-    if shj:
-        e2, closing = e2.hint("shuffle_hash"), closing.hint("shuffle_hash")
+    ).hint("shuffle_hash")
     tri = (
         e1.join(
             e2,

@@ -6,6 +6,7 @@ from .shaping import (  # noqa: F401
     explain_str,
     forced_join_strategy,
     join_kinds,
+    kernel_fits,
     physical_plan_str,
     presorted,
     pushed_filters,

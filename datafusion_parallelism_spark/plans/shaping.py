@@ -130,12 +130,7 @@ def presorted(df: DataFrame, *keys: str) -> DataFrame:
     checkpoint so the metadata is captured; EnsureRequirements then
     elides the per-iteration Sort (and Exchange) under SortMergeJoin /
     SortAggregate consumers of the loop-INVARIANT table at every scale.
-
-    Kill-switch for paired A/Bs: spark.graft.presort=false (a Spark conf
-    so probe.py --paired-conf can drive it).
     """
-    if df.sparkSession.conf.get("spark.graft.presort", "true") == "false":
-        return df
     return df.sortWithinPartitions(*keys)
 
 
@@ -170,16 +165,26 @@ def checkpoint_pinned(df: DataFrame) -> DataFrame:
     The flip is session-global for the duration of the job; engine
     sessions run one query at a time (driver/bench), and a concurrent
     planner caught in the window would merely plan non-adaptively
-    (correct, possibly slower).
-
-    Kill-switch for paired A/Bs: spark.graft.pin=false (falls back to a
-    plain eager localCheckpoint)."""
+    (correct, possibly slower)."""
     conf = df.sparkSession.conf
-    if conf.get("spark.graft.pin", "true") == "false":
-        return df.localCheckpoint(eager=True)
     prev = conf.get("spark.sql.adaptive.enabled")
     conf.set("spark.sql.adaptive.enabled", "false")
     try:
         return df.localCheckpoint(eager=True)
     finally:
         conf.set("spark.sql.adaptive.enabled", prev)
+
+
+def kernel_fits(
+    spark: SparkSession, key: str, default: int, bound: int | None
+) -> bool:
+    """The one kernel-vs-distributed size gate: True when an input of at
+    most ``bound`` rows may run as a single-task Arrow kernel.
+
+    ``key`` names the kernel's ceiling conf (``default`` when unset).
+    ``bound`` is a measured count or a metadata upper bound; ``None``
+    (no bound known) never fits.  A ceiling of 0 or less turns the kernel
+    off for every input, an empty one included, so tests can force the
+    distributed side of any gate."""
+    ceiling = int(spark.conf.get(key, str(default)))
+    return ceiling > 0 and bound is not None and bound <= ceiling

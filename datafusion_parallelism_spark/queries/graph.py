@@ -105,6 +105,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the customer↔supplier trade graph (10 iterations,
     d=0.85, dangling mass redistributed).  See module docstring."""
     from ..operators.graph import _PAGERANK_KERNEL_MAX_EDGES
+    from ..plans.shaping import kernel_fits
     from ..session import parquet_num_rows
 
     orders = load(spark, sf_dir, "orders")
@@ -113,13 +114,13 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one (cust, supp) pair, so |edges| <= 2·|lineitem| after
     # symmetrization (parquet footer read, no Spark job).
     li_rows = parquet_num_rows(os.path.join(sf_dir, "lineitem.parquet"))
-    kernel_max = int(
-        spark.conf.get(
-            "spark.graft.pagerank_local_max_edges",
-            str(_PAGERANK_KERNEL_MAX_EDGES),
-        )
+    edge_bound = None if li_rows is None else 2 * li_rows
+    small = kernel_fits(
+        spark,
+        "spark.graft.pagerank_local_max_edges",
+        _PAGERANK_KERNEL_MAX_EDGES,
+        edge_bound,
     )
-    small = li_rows is not None and 2 * li_rows <= kernel_max
     pairs = orders.join(
         lineitem, orders["o_orderkey"] == lineitem["l_orderkey"]
     ).select(
@@ -159,7 +160,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         damping=_DAMPING,
         iterations=_ITERS,
         assume_distinct=not small,
-        approx_edge_bound=None if li_rows is None else 2 * li_rows,
+        approx_edge_bound=edge_bound,
     )
     return ranks.select(
         F.when(F.col("node") % 2 == 0, F.lit("customer"))
@@ -250,14 +251,12 @@ def graph_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # was the setup stage's 10.4 GB x256 spill: (o, p) rows off a
     # lineitem scan are ~unique, so the partial aggregate combined
     # nothing and fell back to sort-based aggregation over the whole
-    # scan (docs/spill_ledger_r10.jsonl).  Kill-switch:
-    # spark.graft.pair_stream=false (the same class toggle).
-    pu = li.select(
-        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
+    # scan (docs/spill_ledger_r10.jsonl).
+    pu = (
+        li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
+        .repartition("o")
+        .distinct()
     )
-    if spark.conf.get("spark.graft.pair_stream", "true") != "false":
-        pu = pu.repartition("o")
-    pu = pu.distinct()
     e = co_purchase_edges(pu)
     return triangle_counts(e).select(
         F.col("node").alias("part"), "triangles"
@@ -309,15 +308,10 @@ def co_purchase_edges(
     # different o-partitions, so the map-side partial aggregate combines
     # ~nothing while its hash map falls back to sort-based aggregation
     # and re-sorts the whole pair stream (the 10.4 GB x256 spill in the
-    # triangle setup stage, docs/spill_ledger_r10.jsonl).  Kill-switch:
-    # spark.graft.pair_stream=false (shared with the dedup pair counts).
-    if (
-        pairs.sparkSession.conf.get("spark.graft.pair_stream", "true")
-        != "false"
-    ):
-        pairs = pairs.repartition("u", "v")
+    # triangle setup stage, docs/spill_ledger_r10.jsonl).
     return (
-        pairs.groupBy("u", "v")
+        pairs.repartition("u", "v")
+        .groupBy("u", "v")
         .agg(F.count(F.lit(1)).alias("w"))
         .filter(F.col("w") >= min_shared)
         .select("u", "v")

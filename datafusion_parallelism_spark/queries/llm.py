@@ -45,6 +45,7 @@ from ..functions.text import (
     word_shingles,
 )
 from ..functions.vectors import as_double, cosine, norm
+from ..plans.shaping import kernel_fits
 from ..session import load, spread_for_compute
 from .registry import query
 
@@ -287,6 +288,10 @@ def _pair_parallelism(spark: SparkSession) -> int:
     )
 
 
+#: Pair-exchange width over the session width (see _stream_pairs).
+_PAIR_WIDTH_FACTOR = 4
+
+
 def _stream_pairs(pairs: DataFrame) -> DataFrame:
     """Route a Σ df(key)² candidate-pair stream through a pair-keyed
     exchange BEFORE its count aggregate (see winnow_pair_counts for the
@@ -298,9 +303,9 @@ def _stream_pairs(pairs: DataFrame) -> DataFrame:
     With the exchange below the aggregate, the join stage hash-routes
     pair rows straight to the shuffle and each reduce task counts its
     own pairs over an AQE-coalesced input — bounded state at any corpus
-    size.  Kill-switch for paired A/Bs: spark.graft.pair_stream=false.
+    size.
 
-    The exchange width is EXPLICIT at pair_width_factor × session width
+    The exchange width is EXPLICIT at _PAIR_WIDTH_FACTOR × session width
     (r10): a column-only repartition inherits spark.sql.shuffle.partitions,
     which is sized from INPUT bytes — but the pair stream is Σ df²,
     superlinear in input, so the reduce-side count aggregate's hash map
@@ -309,16 +314,9 @@ def _stream_pairs(pairs: DataFrame) -> DataFrame:
     32-concurrent-task pool contention).  AQE can coalesce an oversized
     exchange but can never SPLIT an undersized one, so the width must
     start data-ahead; the ×4 default buys one decade of pair-volume
-    growth and costs only smaller tasks where the stream is small.
-    Kill-switch: spark.graft.pair_width_factor=0 restores the
-    column-only (session-width, AQE-coalescible) exchange."""
-    spark = pairs.sparkSession
-    if spark.conf.get("spark.graft.pair_stream", "true") == "false":
-        return pairs
-    factor = int(spark.conf.get("spark.graft.pair_width_factor", "4"))
-    if factor <= 0:
-        return pairs.repartition("doc_a", "doc_b")
-    return pairs.repartition(factor * _pair_parallelism(spark), "doc_a", "doc_b")
+    growth and costs only smaller tasks where the stream is small."""
+    width = _PAIR_WIDTH_FACTOR * _pair_parallelism(pairs.sparkSession)
+    return pairs.repartition(width, "doc_a", "doc_b")
 
 
 def _blocked_index_from_arrays(arrays: DataFrame, n_part: int) -> DataFrame:
@@ -347,12 +345,8 @@ def _shared_shingle_arrays(d: DataFrame) -> DataFrame:
     pass at ~23 s of the 90 s total; sharing it through a lazy
     localCheckpoint saves the second execution at the cost of
     materializing the gram arrays (MEMORY_AND_DISK, spills instead of
-    OOM).  ``SPARK_GRAFT_JACCARD_NO_SHARE=1`` restores the recompute
-    shape — kept as the measurement kill-switch for paired A/Bs."""
-    arrays = _doc_shingles(d)
-    if os.environ.get("SPARK_GRAFT_JACCARD_NO_SHARE", "") == "1":
-        return arrays
-    return arrays.localCheckpoint(eager=False)
+    OOM)."""
+    return _doc_shingles(d).localCheckpoint(eager=False)
 
 
 #: Stop-shingle document-frequency ceiling for the pair self-joins.  The
@@ -641,13 +635,7 @@ def winnow_pair_counts(
     # pair rows straight to the shuffle (hash-route, no sort, no map),
     # and each reduce task counts only its own pairs over an
     # AQE-coalesced input — bounded state at any corpus size.
-    # Kill-switch for paired A/Bs: spark.graft.winnow_stream=false.
-    if (
-        pairs.sparkSession.conf.get("spark.graft.winnow_stream", "true")
-        != "false"
-    ):
-        pairs = pairs.repartition("doc_a", "doc_b")
-    return pairs.groupBy("doc_a", "doc_b").agg(
+    return pairs.repartition("doc_a", "doc_b").groupBy("doc_a", "doc_b").agg(
         F.count(F.lit(1)).alias("shared_fps")
     )
 
@@ -1901,19 +1889,8 @@ def corpus_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     dominant cost) ran over every document TWICE, once per branch.
     Filtering the scan first pushes ``source`` into parquet
     (PushedFilters) and each document is shingled exactly once, in
-    exactly one branch; the doc_id attach join disappears entirely.
-    Kill-switch for paired A/Bs: ``spark.graft.decon_split=false``
-    restores the shingle-then-filter shape."""
+    exactly one branch; the doc_id attach join disappears entirely."""
     d = _docs_spread(spark, sf_dir)
-    if spark.conf.get("spark.graft.decon_split", "true") == "false":
-        sh = _shingle_table(d).join(d.select("doc_id", "source"), "doc_id")
-        bench = sh.filter(F.col("source") == "src1").select("s").distinct()
-        return (
-            sh.filter(F.col("source") != "src1")
-            .join(F.broadcast(bench), "s")
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("n_shared"))
-        )
     bench = (
         _shingle_table(d.filter(F.col("source") == "src1")).select("s").distinct()
     )
@@ -2891,16 +2868,18 @@ def _pq_arrow_on(spark: SparkSession) -> bool:
 #: (~24 B/row of NumPy arrays, ≈100 MB at the ceiling) and ships back
 #: only the M·K codebook; above it the per-iteration distributed jobs
 #: remain (the 100 TB posture — at that scale each job does real work).
-#: Kill-switch: spark.graft.pq_local_train_max=0.
+#: Ceiling conf: spark.graft.pq_local_train_max.
 _PQ_LOCAL_TRAIN_MAX_SUBV = 4_000_000
 
 
 def _round_half_up(x, scale: int):
-    """Exact replica of Spark's ROUND (BigDecimal HALF_UP on the double's
-    exact binary value) for a NumPy array: vectorized half-away-from-zero
-    fast path, with a Decimal fallback for values within 1e-9 of a
-    rounding boundary where the ``x * 10^scale`` product's own rounding
-    could disagree with the exact decimal expansion."""
+    """Exact replica of Spark's ROUND(double) for a NumPy array.  Spark
+    rounds HALF_UP the SHORTEST decimal that reads back as the double
+    (``Double.toString``, Python's ``repr``), not its exact binary value:
+    ROUND(2.675, 2) is 2.68 although the double is 2.67499999....
+    Vectorized half-away-from-zero fast path, with a Decimal fallback for
+    values within 1e-9 of a rounding boundary, where the ``x * 10^scale``
+    product's own rounding could disagree with the decimal."""
     import numpy as np
 
     p = 10.0 ** scale
@@ -2915,7 +2894,7 @@ def _round_half_up(x, scale: int):
         q = Decimal(1).scaleb(-scale)
         for i in np.nonzero(near)[0]:
             out[i] = float(
-                Decimal(float(x[i])).quantize(q, rounding=ROUND_HALF_UP)
+                Decimal(repr(float(x[i]))).quantize(q, rounding=ROUND_HALF_UP)
             )
     return out
 
@@ -2988,18 +2967,21 @@ def _pq_train_local(subv: DataFrame) -> DataFrame:
 
 
 def _pq_anchor_arrays(rows):
-    """Codebook rows (j, aid, a1, a2) → three [M, K] NumPy arrays with the
-    K anchors of each subspace COLUMN-SORTED BY aid, so ``np.argmin``'s
+    """Codebook rows (j, aid, a1, a2) → three [M, k_eff] NumPy arrays with
+    the anchors of each subspace COLUMN-SORTED BY aid, so ``np.argmin``'s
     first-minimum tie rule coincides with the oracle's MIN(aid)-among-
-    minima tie rule."""
+    minima tie rule.  k_eff is the real anchor count per subspace (fewer
+    than _PQ_K on a corpus with fewer vectors), so no padding anchor can
+    win an argmin."""
     import numpy as np
 
     per_j: dict[int, list] = {}
     for r in rows:
         per_j.setdefault(r[0], []).append((r[1], r[2], r[3]))
-    aid = np.zeros((_PQ_M, _PQ_K), dtype=np.int64)
-    a1 = np.zeros((_PQ_M, _PQ_K), dtype=np.float64)
-    a2 = np.zeros((_PQ_M, _PQ_K), dtype=np.float64)
+    k_eff = max(map(len, per_j.values()), default=0)
+    aid = np.zeros((_PQ_M, k_eff), dtype=np.int64)
+    a1 = np.zeros((_PQ_M, k_eff), dtype=np.float64)
+    a2 = np.zeros((_PQ_M, k_eff), dtype=np.float64)
     for j, lst in per_j.items():
         lst.sort()
         for k, (i, x1, x2) in enumerate(lst):
@@ -3079,7 +3061,7 @@ def _pq_trained_anchors_arrow(spark: SparkSession, subv: DataFrame, seed: DataFr
         )
         upd = {(r[0], r[1]): (r[2], r[3]) for r in means}
         for j in range(_PQ_M):
-            for k in range(_PQ_K):
+            for k in range(aid.shape[1]):
                 m = upd.get((j, int(aid[j, k])))
                 if m is not None:
                     a1[j, k] = m[0]
@@ -3087,7 +3069,7 @@ def _pq_trained_anchors_arrow(spark: SparkSession, subv: DataFrame, seed: DataFr
     rows = [
         (j, int(aid[j, k]), float(a1[j, k]), float(a2[j, k]))
         for j in range(_PQ_M)
-        for k in range(_PQ_K)
+        for k in range(aid.shape[1])
     ]
     return rows, (aid, a1, a2)
 
@@ -3101,13 +3083,12 @@ def _pq_model(spark: SparkSession, vecs: DataFrame):
     if _pq_arrow_on(spark):
         counted: list = []
         subv = _pq_subv(vecs, spark, count_into=counted)
-        local_max = int(
-            spark.conf.get(
-                "spark.graft.pq_local_train_max",
-                str(_PQ_LOCAL_TRAIN_MAX_SUBV),
-            )
-        )
-        if counted and counted[0] <= local_max:
+        if kernel_fits(
+            spark,
+            "spark.graft.pq_local_train_max",
+            _PQ_LOCAL_TRAIN_MAX_SUBV,
+            counted[0],
+        ):
             # One-task fit; collecting the M·K codebook is the same
             # constant-size model-artifact materialization the
             # distributed loop already performs per iteration.
@@ -3654,8 +3635,8 @@ def _km_arrow_on(spark: SparkSession) -> bool:
 
 #: Dims-row ceiling for one-task Lloyd training — same rationale and
 #: arithmetic as _PQ_LOCAL_TRAIN_MAX_SUBV (sequential driver-synced jobs
-#: whose scheduling floor dwarfs the math below this size).  Kill-switch:
-#: spark.graft.km_local_train_max=0.
+#: whose scheduling floor dwarfs the math below this size).  Ceiling conf:
+#: spark.graft.km_local_train_max.
 _KM_LOCAL_TRAIN_MAX_DIMS = 4_000_000
 
 
@@ -3685,7 +3666,11 @@ def _km_assign_arrow(dims: DataFrame, cids, cent) -> DataFrame:
     grid with the exact HALF_UP replica BEFORE the argmin — the same
     round-then-argmin contract the join + min(struct) form implements.
     Replaces the K-way broadcast-join expansion (K·D rows per vector)
-    with in-cache matrix math (guide §4.2).  Emits (vec_id, cid, d2)."""
+    with in-cache matrix math (guide §4.2).  Emits (vec_id, cid, d2).
+
+    Each vector's D rows must sit in one partition (the vec_id
+    partitioning of _km_dims' checkpoint); a vector whose rows are not
+    exactly i = 1..D there raises instead of being misassigned."""
     n_dim = cent.shape[1]
 
     def kernel(batches):
@@ -3702,10 +3687,20 @@ def _km_assign_arrow(dims: DataFrame, cids, cent) -> DataFrame:
         ii = np.concatenate(cols[1])
         x = np.concatenate(cols[2])
         order = np.lexsort((ii, vec))
-        vec, x = vec[order], x[order]
+        vec, ii, x = vec[order], ii[order], x[order]
         nv = len(vec) // n_dim
-        mat = x.reshape(nv, n_dim)
         vids = vec[::n_dim]
+        if (
+            len(vec) % n_dim
+            or (vec.reshape(nv, n_dim) != vids[:, None]).any()
+            or (ii.reshape(nv, n_dim) != np.arange(1, n_dim + 1)).any()
+        ):
+            raise ValueError(
+                f"k-means assignment needs each vector's {n_dim} dims "
+                "rows i = 1..D in one partition; got a vector split "
+                "across partitions or with missing/duplicate dims"
+            )
+        mat = x.reshape(nv, n_dim)
         out_cid = np.empty(nv, dtype=np.int64)
         out_d2 = np.empty(nv, dtype=np.float64)
         step = 1 << 16
@@ -3800,12 +3795,12 @@ def _km_model(spark: SparkSession, sf_dir: str):
         return dims, _km_centroids(spark, dims), None
     counted: list = []
     dims = _km_dims(spark, sf_dir, count_into=counted)
-    local_max = int(
-        spark.conf.get(
-            "spark.graft.km_local_train_max", str(_KM_LOCAL_TRAIN_MAX_DIMS)
-        )
-    )
-    if counted and counted[0] <= local_max:
+    if kernel_fits(
+        spark,
+        "spark.graft.km_local_train_max",
+        _KM_LOCAL_TRAIN_MAX_DIMS,
+        counted[0],
+    ):
         rows = [tuple(r) for r in _km_train_local(dims).collect()]
     else:
         # Distributed training with the Arrow assignment kernel: one
@@ -3828,8 +3823,6 @@ def _km_model(spark: SparkSession, sf_dir: str):
                 .collect()
             )
             upd = {(r[0], r[1]): r[2] for r in means}
-            import numpy as np  # noqa: PLC0415 — executor-free driver use
-
             for k, cid in enumerate(cids):
                 for i in range(cent.shape[1]):
                     m = upd.get((int(cid), i + 1))

@@ -717,7 +717,7 @@ def tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem projections on l_orderkey and sorted all three in one SMJ
     reduce stage (x64 ledger: 999 MB shuffle read, 391 s CPU, 12.6 GB
     peak in that stage alone).  Both subqueries are per-ORDER facts, so
-    the default form computes them as per-order supplier aggregates over
+    this form computes them as per-order supplier aggregates over
     ONE lineitem⋈orders pass instead (guide §2.3/§2.4 — aggregate,
     don't re-join):
 
@@ -731,35 +731,9 @@ def tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     suppkey among late lineitems), both via one (ok, sk) pre-aggregate
     (no Expand: two plain counts over per-supplier flags).  Every
     aggregate and the agg⋈per_supp join reuse the single l_orderkey
-    exchange.  Results are identical (oracle-verified; the EXISTS form
-    stays under spark.graft.q21_agg=false — the decorrelation surface
-    itself is still exercised by join_exists/join_left_semi and the
-    other EXISTS queries)."""
-    if spark.conf.get("spark.graft.q21_agg", "true") == "false":
-        return _sql(
-            spark,
-            sf_dir,
-            """
-            SELECT s_name, COUNT(*) AS numwait
-            FROM supplier
-            JOIN lineitem l1 ON s_suppkey = l1.l_suppkey
-            JOIN orders ON o_orderkey = l1.l_orderkey
-            WHERE o_orderstatus = 'F'
-              AND l1.l_shipdate > o_orderdate + INTERVAL 60 DAY
-              AND EXISTS (
-                SELECT 1 FROM lineitem l2
-                WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey
-              )
-              AND NOT EXISTS (
-                SELECT 1 FROM lineitem l3
-                WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey
-                  AND l3.l_shipdate > o_orderdate + INTERVAL 60 DAY
-              )
-            GROUP BY s_name
-            ORDER BY numwait DESC, s_name
-            LIMIT 20
-            """,
-        )
+    exchange.  Results are identical (oracle-verified); the decorrelation
+    surface itself is still exercised by join_exists/join_left_semi and
+    the other EXISTS queries."""
     return _sql(
         spark,
         sf_dir,

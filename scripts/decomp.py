@@ -33,16 +33,16 @@ PROTOCOL = "decomp-v1"
 
 
 def jaccard_stages(spark, sf_dir):
-    """Cumulative prefixes of dedup_ngram_jaccard's NO_SHARE shape.
+    """Cumulative prefixes of dedup_ngram_jaccard's unshared shape.
 
     These stages decompose the PRE-round-8 plan — a fresh
     ``_blocked_shingle_index`` plus a fresh ``_doc_shingles`` denominator —
     i.e. the recompute shape whose duplicated scan+tokenize+shingle pass the
-    r8 shared-checkpoint fix removed (queries/llm.py:287).  That is what the
-    r8 investigation needed (it produced the finding), but it is NOT the
-    shipped plan anymore: to compare decomp rows against a live run, set
-    ``SPARK_GRAFT_JACCARD_NO_SHARE=1`` so the product runs this same shape
-    (ADVICE r8 #2)."""
+    r8 shared-checkpoint fix removed (queries/llm.py
+    ``_shared_shingle_arrays``).  That is what the r8 investigation needed
+    (it produced the finding), but it is NOT the shipped plan, and the
+    query has no switch back to it: compare these rows with each other,
+    not with a live run of the query (ADVICE r8 #2)."""
     from datafusion_parallelism_spark.queries.llm import (
         JACCARD_THRESHOLD,
         _blocked_shingle_index,

@@ -1,15 +1,15 @@
-"""Dump formatted explain output for the round-11-touched queries.
+"""Dump formatted explain output for the named queries.
 
-Writes ``<out_dir>/<query>_<suffix>.txt`` for each named query, using the
-same benchmark_session conf as bench.py so the plans match what the bench
-executes.  Run once at HEAD (suffix ``after``) and once from a worktree at
-the round-10 end commit (suffix ``before``) to produce the paired plan
-evidence required by the optimization-round contract.
+Writes ``<out_dir>/<query>_<suffix>.txt`` for each query, using the same
+benchmark_session conf as bench.py so the plans match what the bench
+executes.  Run once per commit with different suffixes (for example
+``before`` on the base commit, ``after`` on the change) to get paired
+plan evidence for a change.
 
 Usage::
 
-    python scripts/dump_plans_r11.py --out-dir plans/r11 --suffix after \
-        [--data-path /root/testdata/sf0.1] [query ...]
+    python scripts/dump_plans.py --out-dir plans/r11 --suffix after \
+        [--data-path /root/testdata/sf0.1] query [query ...]
 """
 
 from __future__ import annotations
@@ -24,17 +24,6 @@ from datafusion_parallelism_spark.plans.shaping import explain_str  # noqa: E402
 from datafusion_parallelism_spark.queries import REGISTRY  # noqa: E402
 from datafusion_parallelism_spark.session import benchmark_session  # noqa: E402
 
-R11_QUERIES = [
-    "graph_pagerank",
-    "graph_triangle_counts",
-    "tpch_q21",
-    "vec_pq_codes",
-    "ann_pq_topk",
-    "ann_ivfpq_topk",
-    "vec_kmeans_clusters",
-    "mix_cluster_balanced_sample",
-]
-
 
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__)
@@ -43,18 +32,17 @@ def main() -> None:
         default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
     )
     ap.add_argument("--out-dir", required=True)
-    ap.add_argument("--suffix", required=True, choices=["before", "after"])
-    ap.add_argument("queries", nargs="*", default=None)
+    ap.add_argument("--suffix", required=True)
+    ap.add_argument("queries", nargs="+")
     args = ap.parse_args()
 
-    names = args.queries or R11_QUERIES
-    unknown = [n for n in names if n not in REGISTRY]
+    unknown = [n for n in args.queries if n not in REGISTRY]
     if unknown:
         raise SystemExit(f"unknown queries: {unknown}")
 
     os.makedirs(args.out_dir, exist_ok=True)
-    spark = benchmark_session(args.data_path, app_name=f"plans-r11-{args.suffix}")
-    for name in names:
+    spark = benchmark_session(args.data_path, app_name=f"plans-{args.suffix}")
+    for name in args.queries:
         spark.sparkContext.setJobDescription(f"plan:{name}")
         df = REGISTRY[name].fn(spark, args.data_path)
         path = os.path.join(args.out_dir, f"{name}_{args.suffix}.txt")

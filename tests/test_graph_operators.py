@@ -1,10 +1,12 @@
 """Graph-operator unit tests: connected_components and pagerank."""
 
 import numpy as np
+import pytest
 
 from datafusion_parallelism_spark.operators.graph import (
     connected_components,
     pagerank,
+    triangle_counts,
 )
 
 
@@ -196,8 +198,6 @@ def test_cc_kernel_matches_distributed_loop(spark):
 def test_triangle_kernel_matches_distributed(spark):
     """r11 single-task triangle kernel ≡ distributed plan (exact integer
     counts) on a graph where degree order disagrees with id order."""
-    from datafusion_parallelism_spark.operators.graph import triangle_counts
-
     raw = [(i, j) for i in range(10) for j in range(i + 1, 10) if (i * j) % 4 != 1]
     df = spark.createDataFrame(raw, schema="u long, v long")
     kern = {r.node: r.triangles for r in triangle_counts(df).collect()}
@@ -211,3 +211,48 @@ def test_triangle_kernel_matches_distributed(spark):
         else:
             spark.conf.set("spark.graft.tri_local_max_edges", prev)
     assert kern == dist
+
+
+@pytest.mark.parametrize("ceiling", ["0", None])
+@pytest.mark.parametrize(
+    "op, key, kernel",
+    [
+        (pagerank, "spark.graft.pagerank_local_max_edges", "_pagerank_arrow"),
+        (connected_components, "spark.graft.cc_local_max_edges", "_cc_arrow"),
+        (triangle_counts, "spark.graft.tri_local_max_edges", "_tri_arrow"),
+    ],
+    ids=["pagerank", "cc", "triangles"],
+)
+def test_empty_graph_on_both_sides_of_the_gate(
+    spark, monkeypatch, op, key, kernel, ceiling
+):
+    """An empty edge table yields zero rows on the kernel (default ceiling)
+    and on the distributed side (ceiling 0).  Ceiling 0 means kernel off
+    even for an input of 0 edges."""
+    from datafusion_parallelism_spark.operators import graph
+    from datafusion_parallelism_spark.plans.shaping import physical_plan_str
+
+    calls = []
+    real = getattr(graph, kernel)
+
+    def spy(*args, **kwargs):
+        calls.append(kernel)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(graph, kernel, spy)
+    edges = spark.createDataFrame([], schema="u long, v long")
+    prev = spark.conf.get(key, None)
+    if ceiling is not None:
+        spark.conf.set(key, ceiling)
+    try:
+        out = op(edges)
+        plan = physical_plan_str(out)
+        assert out.count() == 0
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    assert bool(calls) == (ceiling is None), calls
+    if ceiling == "0":
+        assert "MapInArrow" not in plan, plan

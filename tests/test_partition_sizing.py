@@ -222,7 +222,7 @@ def test_pair_exchange_width_is_data_ahead_4x(spark, sf_dir):
     and rejected twice (r10, r11): the estimate needs an eager
     materialization of the lazy shingle explode inside every query path.
     If a deployment outgrows the decade, raise
-    spark.graft.pair_width_factor — this test documents that contract."""
+    queries/llm.py _PAIR_WIDTH_FACTOR — this test documents that contract."""
     from pyspark.sql import functions as F
 
     from datafusion_parallelism_spark.queries.llm import (

@@ -378,8 +378,7 @@ def test_triangle_wedge_table_never_sorted(spark):
     side) and the wedge join itself is also SHJ — under the SMJ planner
     default the semi join SORTED the whole wedge table (29 GB of x256
     memory spill, r9 ledger item #3).  Pins: both joins shuffled-hash, no
-    Sort anywhere in the plan; kill-switch spark.graft.tri_shj=false
-    restores the planner default (SMJ at non-broadcast sizes)."""
+    Sort anywhere in the plan."""
     from datafusion_parallelism_spark.operators.graph import triangle_counts
 
     edges = spark.createDataFrame(
@@ -400,11 +399,6 @@ def test_triangle_wedge_table_never_sorted(spark):
         assert plan.count("ShuffledHashJoin") == 2, plan
         assert "SortMergeJoin" not in plan, plan
         assert "Sort " not in plan, plan
-        with _with_conf(spark, {"spark.graft.tri_shj": "false"}):
-            plan = physical_plan_str(triangle_counts(edges)).split(
-                "== Initial Plan =="
-            )[0]
-            assert "SortMergeJoin" in plan, plan
 
 
 def test_pagerank_final_plan_is_copartitioned_no_exchange(spark):
@@ -524,7 +518,8 @@ def test_checkpoint_pinned_preserves_metadata_under_aqe(spark):
     time it is joined — checkpoint_pinned (scoped AQE-off around the
     checkpoint job) keeps both, and an AQE-ON consumer honors them.
     Pins: pinned side contributes NO Exchange and NO Sort to a forced
-    SMJ; the spark.graft.pin=false kill-switch restores both."""
+    SMJ; a plain eager localCheckpoint of the same table contributes
+    both."""
     import re
 
     from datafusion_parallelism_spark.plans import checkpoint_pinned
@@ -558,9 +553,8 @@ def test_checkpoint_pinned_preserves_metadata_under_aqe(spark):
         assert (exch, sorts) == (1, 1), (exch, sorts)
         # AQE must be restored after the pin (scoped flip)
         assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-        with _with_conf(spark, {"spark.graft.pin": "false"}):
-            base2 = df.repartition(8, "k").sortWithinPartitions("k")
-            exch, sorts = smj_counts(checkpoint_pinned(base2))
+        base2 = df.repartition(8, "k").sortWithinPartitions("k")
+        exch, sorts = smj_counts(base2.localCheckpoint(eager=True))
         assert (exch, sorts) == (2, 2), (exch, sorts)
 
 
@@ -570,10 +564,12 @@ def test_pq_training_iteration_streams_without_sort_or_exchange(spark, sf_dir):
     with NO Sort and NO Exchange — under AQE-ON (the at-scale posture),
     not just the AQE-off session where r9 originally verified it.  The
     subvector checkpoint is pinned (vec_id partitioning + (vec_id, j)
-    ordering), so the per-iteration SortAggregate streams.  Kill-switch
-    check: spark.graft.pin=false restores the Sort."""
+    ordering), so the per-iteration SortAggregate streams.  Negative
+    control: a plain eager localCheckpoint of the same presorted table
+    brings the Sort or Exchange back."""
     import re
 
+    from datafusion_parallelism_spark.plans import presorted
     from datafusion_parallelism_spark.queries.llm import _pq_subv
 
     def train_iter_plan(subv):
@@ -602,11 +598,13 @@ def test_pq_training_iteration_streams_without_sort_or_exchange(spark, sf_dir):
         txt = train_iter_plan(_pq_subv(vecs, spark))
         assert not re.search(r"Sort \[vec_id#", txt), txt
         assert not re.search(r"Exchange hashpartitioning\(vec_id#", txt), txt
-        with _with_conf(spark, {"spark.graft.pin": "false"}):
-            txt = train_iter_plan(_pq_subv(vecs, spark))
-            assert re.search(r"Sort \[vec_id#", txt) or re.search(
-                r"Exchange hashpartitioning\(vec_id#", txt
-            ), txt
+        plain = presorted(
+            _pq_subv(vecs, spark, checkpoint=False), "vec_id", "j"
+        ).localCheckpoint(eager=True)
+        txt = train_iter_plan(plain)
+        assert re.search(r"Sort \[vec_id#", txt) or re.search(
+            r"Exchange hashpartitioning\(vec_id#", txt
+        ), txt
 
 
 def test_pagerank_pinned_nodes_side_no_exchange_under_aqe(spark):

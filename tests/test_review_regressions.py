@@ -1,5 +1,6 @@
 """Regression tests for review findings (round 1): exact ns→µs truncation,
-merge NULL-key handling, salted-join type validation, CC non-convergence."""
+merge NULL-key handling, salted-join type validation, CC non-convergence,
+kernel rounding and input contracts."""
 
 import os
 
@@ -67,8 +68,117 @@ def test_connected_components_raises_on_non_convergence(spark):
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(399)], schema="u long, v long"
     )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, max_iter=2)
+    # The error surfaces once, on the driver: no task fails (and retries)
+    # on the way.
+    sc = spark.sparkContext
+    sc.setJobGroup("cc-non-convergence", "connected_components max_iter=2")
+    try:
+        with pytest.raises(RuntimeError, match="did not converge"):
+            connected_components(chain, max_iter=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    stages = [
+        tracker.getStageInfo(sid)
+        for jid in tracker.getJobIdsForGroup("cc-non-convergence")
+        for sid in tracker.getJobInfo(jid).stageIds
+    ]
+    assert stages, "no jobs recorded for the job group"
+    assert sum(st.numFailedTasks for st in stages if st is not None) == 0
     # and converges fine with enough iterations (log-diameter budget)
     out = connected_components(chain, max_iter=15)
     assert {r.cluster for r in out.collect()} == {0}
+
+
+def test_round_half_up_matches_spark_round(spark):
+    """The kernels' NumPy ROUND replica must agree with Spark ROUND(double)
+    on rounding-boundary doubles: Spark rounds the shortest decimal repr
+    (2.675 -> 2.68), not the exact binary value (2.67499...)."""
+    import numpy as np
+
+    from datafusion_parallelism_spark.queries.llm import _round_half_up
+
+    probes = [
+        (2.675, 2, 2.68),
+        (1.005, 2, 1.01),
+        (0.00015, 4, 0.0002),
+        (2.00005, 4, 2.0001),
+        (-2.675, 2, -2.68),
+    ]
+    df = spark.createDataFrame([(x,) for x, _, _ in probes], "x double")
+    spark_rounded = df.select(
+        F.round("x", 2).alias("r2"), F.round("x", 4).alias("r4")
+    ).collect()
+    for (x, scale, want), row in zip(probes, spark_rounded):
+        assert row[f"r{scale}"] == want, (x, scale, row)
+        got = _round_half_up(np.array([x]), scale)[0]
+        assert got == want, (x, scale, got)
+
+
+def test_pq_kernel_matches_join_form_with_fewer_vectors_than_k(spark):
+    """With fewer vectors than _PQ_K the codebook has k_eff < K anchors
+    per subspace.  The kernel's anchor arrays must hold exactly those, so
+    a subvector near the origin is coded to its nearest REAL anchor, as
+    in the join form (pq_arrow=false)."""
+    import numpy as np
+
+    from datafusion_parallelism_spark.queries.llm import (
+        _PQ_K,
+        _PQ_M,
+        _pq_assign_arrow,
+        _pq_codes,
+        _pq_dists_from,
+        _pq_model,
+    )
+
+    n = 5
+    assert n < _PQ_K
+    rng = np.random.default_rng(7)
+    vecs = spark.createDataFrame(
+        [(i + 1, rng.normal(size=2 * _PQ_M).tolist()) for i in range(n)],
+        "vec_id long, embedding array<float>",
+    )
+    probes = spark.createDataFrame(
+        [(0, j, 1e-3, 0.0) for j in range(_PQ_M)],
+        "vec_id long, j int, e1 double, e2 double",
+    )
+
+    def codes(df):
+        return {(r.vec_id, r.j): r.code for r in df.collect()}
+
+    subv, _, arrays = _pq_model(spark, vecs)
+    assert arrays[0].shape == (_PQ_M, n)
+    kernel = codes(
+        _pq_assign_arrow(subv.unionByName(probes), *arrays, include_coords=False)
+    )
+    spark.conf.set("spark.graft.pq_arrow", "false")
+    try:
+        subv_j, anch_j, _ = _pq_model(spark, vecs)
+        join = codes(_pq_codes(_pq_dists_from(subv_j.unionByName(probes), anch_j)))
+    finally:
+        spark.conf.unset("spark.graft.pq_arrow")
+    assert len(kernel) == (n + 1) * _PQ_M
+    assert kernel == join
+
+
+def test_km_assign_kernel_rejects_vector_split_across_partitions(spark):
+    """The k-means assignment kernel regroups each partition's rows into
+    [vectors, D]; a vector whose dims rows sit in two partitions must
+    raise, not be silently misassigned."""
+    import numpy as np
+
+    from datafusion_parallelism_spark.queries.llm import _km_assign_arrow
+
+    d = 4
+    cids = np.array([0, 1], dtype=np.int64)
+    cent = np.array([[0.0] * d, [1.0] * d])
+    # i-major order: parallelize's two slices each get dims 1-2 or 3-4 of
+    # BOTH vectors.
+    rows = [(v, i, float(v)) for i in range(1, d + 1) for v in range(2)]
+    schema = "vec_id long, i int, x double"
+    whole = spark.createDataFrame(rows, schema).coalesce(1)
+    got = {r.vec_id: r.cid for r in _km_assign_arrow(whole, cids, cent).collect()}
+    assert got == {0: 0, 1: 1}
+    split = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+    with pytest.raises(Exception, match="in one partition"):
+        _km_assign_arrow(split, cids, cent).collect()
