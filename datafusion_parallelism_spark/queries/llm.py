@@ -2822,21 +2822,16 @@ def _pq_subv(
     )
     # One corpus shuffle total (the barrier repartition): vec_id
     # partitioning is preserved through the broadcast cross join and
-    # localCheckpoint, so every training iteration's groupBy(vec_id, j)
-    # argmin runs exchange-free (same posture as _km_dims).
+    # localCheckpoint (same posture as _km_dims).
     # checkpoint=False exposes the pre-checkpoint plan (tests assert scan
     # pruning on it; the checkpointed plan has no visible file scan).
     if not checkpoint:
         return subv
-    # Pre-SORTED by the training loop's group key and checkpointed with
-    # the metadata PINNED: min(struct) plans as SortAggregate, and with
-    # stored (vec_id, j) ordering + vec_id partitioning the per-iteration
-    # aggregate streams with no Sort and no Exchange.  checkpoint_pinned
-    # is load-bearing — a plain localCheckpoint under AQE (the at-scale
-    # posture) erases both properties, and round 10 found the training
-    # iterations were paying Sort+Exchange+Sort per iteration at the
-    # replicas despite the r9 presort (whose elision evidence came from
-    # AQE-off sessions; see plans/shaping.checkpoint_pinned).
+    # Pre-SORTED by (vec_id, j) and checkpointed with the metadata
+    # PINNED, so a per-(vec_id, j) aggregate over the table streams with
+    # no Sort and no Exchange even under AQE (a plain localCheckpoint
+    # erases both properties; see plans/shaping.checkpoint_pinned and
+    # test_pq_training_iteration_streams_without_sort_or_exchange).
     from ..plans.shaping import checkpoint_pinned, presorted
 
     pre_ckpt = presorted(subv, "vec_id", "j")
@@ -2850,13 +2845,6 @@ def _pq_subv(
     )
     count_into.append(obs.get["m"])
     return out
-
-
-def _pq_arrow_on(spark: SparkSession) -> bool:
-    """Round-11 default: PQ assignment runs as a vectorized Arrow kernel
-    (see _pq_assign_arrow).  Kill-switch spark.graft.pq_arrow=false
-    restores the broadcast-join + min(struct) formulation."""
-    return spark.conf.get("spark.graft.pq_arrow", "true") != "false"
 
 
 #: Subvector-row ceiling for ONE-TASK Lloyd training (round 11).  The
@@ -2996,16 +2984,14 @@ def _pq_assign_arrow(
 ) -> DataFrame:
     """Nearest-anchor assignment as ONE vectorized Arrow pass (guide §4.2):
     each batch computes the full (rows × K) squared-L2 distance matrix for
-    its subspaces with the identical IEEE ops the Catalyst expression runs
-    ((e−a)·(e−a), no power()), then ``argmin`` per row.  Replaces the
-    broadcast join's K-way row expansion (|corpus|·M·K intermediate rows,
-    the dominant CPU of every PQ query at every scale) with in-cache
-    NumPy; the codebook ([M,K] arrays, ~50 KB) rides the task closure.
-    Ties: anchors are aid-sorted per subspace, so argmin's first minimum
-    IS the smallest aid — the oracle's tie rule.  Emits
-    (vec_id, j, code, dmin[, e1, e2]); row order preserved, so the
-    pinned vec_id partitioning/ordering of the checkpointed subvector
-    table still makes downstream per-vector aggregates exchange-free."""
+    its subspaces with the identical IEEE ops _pq_dists_from and the
+    oracle SQL run ((e−a)·(e−a), no power()), then ``argmin`` per row.
+    In-cache NumPy instead of a broadcast join's K-way row expansion
+    (|corpus|·M·K intermediate rows); the codebook ([M,K] arrays, ~50 KB)
+    rides the task closure.  Ties: anchors are aid-sorted per subspace,
+    so argmin's first minimum IS the smallest aid — the oracle's
+    MIN(aid)-among-minima rule.  Emits (vec_id, j, code, dmin[, e1, e2])
+    in input row order."""
     out_schema = "vec_id long, j int, code long, dmin double"
     names = ["vec_id", "j", "code", "dmin"]
     if include_coords:
@@ -3040,14 +3026,18 @@ def _pq_assign_arrow(
     )
 
 
-def _pq_trained_anchors_arrow(spark: SparkSession, subv: DataFrame, seed: DataFrame):
-    """Arrow-kernel variant of the Lloyd loop: ONE job per iteration (the
-    means collect; the assignment kernel runs inside it), with the
-    empty-cluster COALESCE applied driver-side to the [M,K] codebook
-    arrays instead of a join — same values, same rounding (the mean is
-    still F.round(F.avg(...)) inside the distributed aggregate).  Returns
+def _pq_train_distributed(subv: DataFrame):
+    """Distributed Lloyd training above the one-task gate: _PQ_ITERS
+    deterministic iterations, each ONE job (the means collect; the
+    assignment kernel runs inside it).  Every subvector goes to its
+    nearest anchor (ties → smallest aid), every anchor becomes the
+    rounded member mean and an empty cluster keeps its anchor, applied
+    driver-side to the [M,K] codebook arrays — the computation the
+    oracle's unrolled CTE chain performs.  The codebook is a model
+    artifact of constant size (M·K rows ≈ 2k), so collecting it per
+    iteration is the one legitimate driver materialization.  Returns
     (codebook rows, anchor arrays)."""
-    rows = [(r[0], r[1], r[2], r[3]) for r in seed.collect()]
+    rows = [(r[0], r[1], r[2], r[3]) for r in _pq_seed(subv).collect()]
     aid, a1, a2 = _pq_anchor_arrays(rows)
     for _ in range(_PQ_ITERS):
         assign = _pq_assign_arrow(subv, aid, a1, a2, include_coords=True)
@@ -3076,30 +3066,29 @@ def _pq_trained_anchors_arrow(spark: SparkSession, subv: DataFrame, seed: DataFr
 
 def _pq_model(spark: SparkSession, vecs: DataFrame):
     """(subv, anch_df, anch_arrays): the checkpointed subvector table plus
-    the TRAINED codebook as a local DataFrame (for LUT broadcasts) and,
-    on the Arrow path, as [M,K] arrays for the assignment kernel
-    (``anch_arrays is None`` on the kill-switch path)."""
-    schema = "j int, aid long, a1 double, a2 double"
-    if _pq_arrow_on(spark):
-        counted: list = []
-        subv = _pq_subv(vecs, spark, count_into=counted)
-        if kernel_fits(
-            spark,
-            "spark.graft.pq_local_train_max",
-            _PQ_LOCAL_TRAIN_MAX_SUBV,
-            counted[0],
-        ):
-            # One-task fit; collecting the M·K codebook is the same
-            # constant-size model-artifact materialization the
-            # distributed loop already performs per iteration.
-            rows = [tuple(r) for r in _pq_train_local(subv).collect()]
-            arrays = _pq_anchor_arrays(rows)
-        else:
-            seed = _pq_seed(subv)
-            rows, arrays = _pq_trained_anchors_arrow(spark, subv, seed)
-        return subv, spark.createDataFrame(rows, schema=schema), arrays
-    subv = _pq_subv(vecs, spark)
-    return subv, _pq_trained_anchors(spark, subv, _pq_seed(subv)), None
+    the TRAINED codebook as a local DataFrame (for the query-side LUT
+    broadcast) and as [M,K] arrays for the assignment kernel.  Both
+    trainers follow the DuckDB oracle's rule: argmin over the anchors,
+    ties to MIN(aid), means rounded to the _PQ_ROUND grid."""
+    counted: list = []
+    subv = _pq_subv(vecs, spark, count_into=counted)
+    if kernel_fits(
+        spark,
+        "spark.graft.pq_local_train_max",
+        _PQ_LOCAL_TRAIN_MAX_SUBV,
+        counted[0],
+    ):
+        # One-task fit; collecting the M·K codebook is the same
+        # constant-size model-artifact materialization the
+        # distributed loop already performs per iteration.
+        rows = [tuple(r) for r in _pq_train_local(subv).collect()]
+        arrays = _pq_anchor_arrays(rows)
+    else:
+        rows, arrays = _pq_train_distributed(subv)
+    anch_df = spark.createDataFrame(
+        rows, schema="j int, aid long, a1 double, a2 double"
+    )
+    return subv, anch_df, arrays
 
 
 def _pq_seed(subv: DataFrame) -> DataFrame:
@@ -3115,65 +3104,6 @@ def _pq_seed(subv: DataFrame) -> DataFrame:
     )
 
 
-def _pq_trained_anchors(spark: SparkSession, subv: DataFrame, seed: DataFrame):
-    """Train the codebook: _PQ_ITERS deterministic Lloyd iterations over
-    the subvector table.  Each iteration assigns every subvector to its
-    nearest anchor (ties → smallest aid) and replaces each anchor with the
-    rounded member mean (empty clusters keep their anchor) — the exact
-    computation the oracle's unrolled CTE chain performs.  The codebook is
-    a model artifact of constant size (M·K rows ≈ 2k), so each update is
-    collected and re-broadcast — the one legitimate driver materialization
-    (same class as CC's convergence scalars); at 100 TB training would run
-    on a corpus sample with the identical plan.  Since round 11 this is
-    the spark.graft.pq_arrow=false kill-switch path; the default is
-    _pq_trained_anchors_arrow."""
-    schema = "j int, aid long, a1 double, a2 double"
-    anch = seed
-    for _ in range(_PQ_ITERS):
-        d2 = (F.col("e1") - F.col("a1")) * (F.col("e1") - F.col("a1")) + (
-            F.col("e2") - F.col("a2")
-        ) * (F.col("e2") - F.col("a2"))
-        # The subvector coordinates ride through the argmin inside the
-        # struct (they are constant per (vec_id, j) group and (d2, aid) is
-        # unique, so they never influence the lexicographic min) — this
-        # removes the assign⋈subv join a naive two-step update would pay,
-        # leaving ONE exchange-free corpus agg (vec_id partitioning from
-        # _pq_subv's checkpoint) + one tiny post-combine shuffle of M·K
-        # partials per iteration.
-        assign = (
-            subv.join(F.broadcast(anch), "j")
-            .select("vec_id", "j", "aid", d2.alias("d2"), "e1", "e2")
-            .groupBy("vec_id", "j")
-            .agg(F.min(F.struct("d2", "aid", "e1", "e2")).alias("s"))
-            .select(
-                "vec_id",
-                "j",
-                F.col("s.aid").alias("code"),
-                F.col("s.e1").alias("e1"),
-                F.col("s.e2").alias("e2"),
-            )
-        )
-        means = (
-            assign.groupBy("j", F.col("code").alias("aid"))
-            .agg(
-                F.round(F.avg("e1"), _PQ_ROUND).alias("m1"),
-                F.round(F.avg("e2"), _PQ_ROUND).alias("m2"),
-            )
-        )
-        updated = (
-            anch.join(means, ["j", "aid"], "left")
-            .select(
-                "j",
-                "aid",
-                F.coalesce("m1", "a1").alias("a1"),
-                F.coalesce("m2", "a2").alias("a2"),
-            )
-            .collect()
-        )
-        anch = spark.createDataFrame(updated, schema=schema)
-    return anch
-
-
 def _pq_dists_from(subv: DataFrame, anch: DataFrame) -> DataFrame:
     """(vec_id, j, aid, d2): squared L2 between each normalized subvector
     and every TRAINED codebook anchor — the Spark mirror of
@@ -3186,23 +3116,6 @@ def _pq_dists_from(subv: DataFrame, anch: DataFrame) -> DataFrame:
     ) * (F.col("e2") - F.col("a2"))
     return subv.join(F.broadcast(anch), "j").select(
         "vec_id", "j", "aid", d2.alias("d2")
-    )
-
-
-def _pq_dists(spark: SparkSession, vecs: DataFrame) -> DataFrame:
-    """Full distance table over the whole corpus (kill-switch path)."""
-    subv, anch, _ = _pq_model(spark, vecs)
-    return _pq_dists_from(subv, anch)
-
-
-def _pq_codes(dists: DataFrame) -> DataFrame:
-    """(vec_id, j, code, dmin): nearest anchor per subspace; ties broken by
-    smallest anchor id via lexicographic struct-min — the same tie rule the
-    oracle's MIN(aid)-among-minima join expresses."""
-    return (
-        dists.groupBy("vec_id", "j")
-        .agg(F.min(F.struct("d2", "aid")).alias("s"))
-        .select("vec_id", "j", F.col("s.aid").alias("code"), F.col("s.d2").alias("dmin"))
     )
 
 
@@ -3231,19 +3144,15 @@ def vec_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 64-float vector to M small ints (here 32×6 bits) — the storage
     layer every billion-vector ANN index needs.
 
-    Scale shape: codebook broadcasts (K·M subvectors — KBs even at
-    K=256); assignment is a per-row map over the corpus (no shuffle); the
-    M-way min is a tiny grouped aggregation keyed by (vec_id, j).  Exactly
-    the plan a 100 TB corpus wants: linear scan, zero data movement.
-    Since round 11 the assignment map is the vectorized Arrow kernel
-    (_pq_assign_arrow) — no |corpus|·M·K row expansion; the kill-switch
-    spark.graft.pq_arrow=false restores the broadcast-join argmin."""
+    Scale shape: the codebook (K·M subvectors — KBs even at K=256) rides
+    the task closure of the vectorized Arrow assignment kernel
+    (_pq_assign_arrow), a per-row map over the corpus with no |corpus|·M·K
+    row expansion and no shuffle; the per-vector code array is one
+    grouped aggregation keyed by vec_id.  The kernel follows the DuckDB
+    oracle's rule: argmin of the squared distance, ties to MIN(aid)."""
     e = load(spark, sf_dir, "embeddings")
-    subv, anch_df, arrays = _pq_model(spark, e)
-    if arrays is not None:
-        codes = _pq_assign_arrow(subv, *arrays, include_coords=False)
-    else:
-        codes = _pq_codes(_pq_dists_from(subv, anch_df))
+    subv, _, arrays = _pq_model(spark, e)
+    codes = _pq_assign_arrow(subv, *arrays, include_coords=False)
     return codes.groupBy("vec_id").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("j", "code"))),
@@ -3297,21 +3206,14 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     composition."""
     e = load(spark, sf_dir, "embeddings")
     subv, anch_df, arrays = _pq_model(spark, e)
-    if arrays is not None:
-        # Corpus side: argmin via the Arrow kernel — no M·K expansion.
-        # Query side (the LUT) still needs the FULL per-anchor distance
-        # table, but only for the 10 query vectors: the Catalyst
-        # expression over the filtered subvector slice is trivial.
-        codes = _pq_assign_arrow(
-            subv.filter(F.col("vec_id") >= 10), *arrays, include_coords=False
-        ).select("vec_id", "j", "code")
-        dists_q = _pq_dists_from(subv.filter(F.col("vec_id") < 10), anch_df)
-    else:
-        dists = _pq_dists_from(subv, anch_df)
-        codes = _pq_codes(dists.filter(F.col("vec_id") >= 10)).select(
-            "vec_id", "j", "code"
-        )
-        dists_q = dists.filter(F.col("vec_id") < 10)
+    # Corpus side: argmin via the Arrow kernel — no M·K expansion.
+    # Query side (the LUT) still needs the FULL per-anchor distance
+    # table, but only for the 10 query vectors: the Catalyst
+    # expression over the filtered subvector slice is trivial.
+    codes = _pq_assign_arrow(
+        subv.filter(F.col("vec_id") >= 10), *arrays, include_coords=False
+    ).select("vec_id", "j", "code")
+    dists_q = _pq_dists_from(subv.filter(F.col("vec_id") < 10), anch_df)
     lut = dists_q.select(F.col("vec_id").alias("qid"), "j", "aid", "d2")
     adc = (
         codes.join(F.broadcast(lut), (codes["j"] == lut["j"]) & (codes["code"] == lut["aid"]))
@@ -3400,21 +3302,14 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "cid")
     )
     subv, anch_df, arrays = _pq_model(spark, e)
-    if arrays is not None:
-        codes = _pq_assign_arrow(
-            subv.filter(F.col("vec_id") >= _N_QUERY_VECS),
-            *arrays,
-            include_coords=False,
-        ).select("vec_id", "j", "code")
-        dists_q = _pq_dists_from(
-            subv.filter(F.col("vec_id") < _N_QUERY_VECS), anch_df
-        )
-    else:
-        dists = _pq_dists_from(subv, anch_df)
-        codes = _pq_codes(
-            dists.filter(F.col("vec_id") >= _N_QUERY_VECS)
-        ).select("vec_id", "j", "code")
-        dists_q = dists.filter(F.col("vec_id") < _N_QUERY_VECS)
+    codes = _pq_assign_arrow(
+        subv.filter(F.col("vec_id") >= _N_QUERY_VECS),
+        *arrays,
+        include_coords=False,
+    ).select("vec_id", "j", "code")
+    dists_q = _pq_dists_from(
+        subv.filter(F.col("vec_id") < _N_QUERY_VECS), anch_df
+    )
     lut = dists_q.select(
         F.col("vec_id").alias("qid"), F.col("j").alias("lj"),
         F.col("aid").alias("laid"), "d2",
@@ -3574,20 +3469,20 @@ def _kmeans_oracle() -> str:
 _KM_ORACLE_CTE = _kmeans_oracle()
 
 
-def _km_dims(
-    spark: SparkSession, sf_dir: str, count_into: list | None = None
-) -> DataFrame:
-    """(vec_id, i, x): every L2-normalized vector in long format — the
-    shape that lets centroid updates be plain partial-aggregated GROUP BYs
-    and distances be broadcast-join + SUM (never a per-row HOF fold whose
-    summation order could differ from the oracle's).
+def _km_dims(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
+    """((vec_id, i, x), row count): every L2-normalized vector in long
+    format — the shape that lets centroid updates be plain
+    partial-aggregated GROUP BYs keyed by (cid, i), as in the oracle's
+    CTE chain.
 
     The table is repartitioned by vec_id and lineage-truncated ONCE with
-    the partitioning metadata pinned (checkpoint_pinned), so every
-    training iteration's groupBy(vec_id, ...) argmin and the asg⋈dims
-    means join are exchange-free — the corpus is read, normalized and shuffled
+    the partitioning metadata pinned (checkpoint_pinned), so each
+    vector's D rows sit in one partition for the assignment kernel
+    (_km_assign_arrow) — the corpus is read, normalized and shuffled
     exactly one time no matter how many Lloyd iterations follow (the
-    standard cache-the-training-set posture of iterative ML on Spark)."""
+    standard cache-the-training-set posture of iterative ML on Spark).
+    The row count rides the eager checkpoint as an observe metric, so
+    the one-task-training gate reads it without another job."""
     pre = _normalized_cols(load(spark, sf_dir, "embeddings"))
     dims = pre.select("vec_id", "nrm", F.posexplode("v0").alias("i0", "x")).select(
         "vec_id",
@@ -3601,36 +3496,9 @@ def _km_dims(
     # re-exchanging the corpus at the replicas.
     from ..plans.shaping import checkpoint_pinned
 
-    if count_into is None:
-        return checkpoint_pinned(dims)
-    # Row count rides the eager checkpoint as an observe metric — the
-    # one-task-training gate reads it for free (round 11).
     obs = Observation()
     out = checkpoint_pinned(dims.observe(obs, F.count(F.lit(1)).alias("m")))
-    count_into.append(obs.get["m"])
-    return out
-
-
-def _km_assign(dims: DataFrame, cent: DataFrame) -> DataFrame:
-    """(vec_id, cid): nearest-centroid assignment — broadcast the K·D
-    centroid table, squared-L2 partial-aggregated per (vec_id, cid),
-    rounded to the oracle's 1e-4 grid, argmin with cid tiebreak."""
-    d2 = (F.col("x") - F.col("c")) * (F.col("x") - F.col("c"))
-    return (
-        dims.join(F.broadcast(cent), "i")
-        .groupBy("vec_id", "cid")
-        .agg(F.round(F.sum(d2), 4).alias("d2"))
-        .groupBy("vec_id")
-        .agg(F.min(F.struct("d2", "cid")).alias("m"))
-        .select("vec_id", F.col("m.cid").alias("cid"), F.col("m.d2").alias("d2"))
-    )
-
-
-def _km_arrow_on(spark: SparkSession) -> bool:
-    """Round-11 default: k-means assignment runs as a vectorized Arrow
-    kernel (no K-way broadcast-join row expansion); kill-switch
-    spark.graft.km_arrow=false restores the join + double-groupBy form."""
-    return spark.conf.get("spark.graft.km_arrow", "true") != "false"
+    return out, obs.get["m"]
 
 
 #: Dims-row ceiling for one-task Lloyd training — same rationale and
@@ -3650,7 +3518,7 @@ def _km_cent_arrays(rows):
     for cid, i, c in rows:
         per.setdefault(cid, {})[i] = c
     cids = np.array(sorted(per), dtype=np.int64)
-    d = max(max(m) for m in per.values())
+    d = max((max(m) for m in per.values()), default=0)
     mat = np.zeros((len(cids), d), dtype=np.float64)
     for k, cid in enumerate(cids):
         for i, c in per[cid].items():
@@ -3663,10 +3531,11 @@ def _km_assign_arrow(dims: DataFrame, cids, cent) -> DataFrame:
     dims table: per partition, rows are regrouped [n_vec, D] and the
     (vec × K) squared-L2 matrix computed in NumPy with the identical
     (x−c)·(x−c) IEEE ops, each distance rounded to the oracle's 1e-4
-    grid with the exact HALF_UP replica BEFORE the argmin — the same
-    round-then-argmin contract the join + min(struct) form implements.
-    Replaces the K-way broadcast-join expansion (K·D rows per vector)
-    with in-cache matrix math (guide §4.2).  Emits (vec_id, cid, d2).
+    grid with the exact HALF_UP replica BEFORE the argmin, ties to the
+    smallest cid — the DuckDB oracle's round-then-argmin / MIN(cid) rule
+    (its MIN(struct_pack(d2, cid))).  In-cache matrix math instead of a
+    K-way broadcast-join expansion (K·D rows per vector; guide §4.2).
+    Emits (vec_id, cid, d2).
 
     Each vector's D rows must sit in one partition (the vec_id
     partitioning of _km_dims' checkpoint); a vector whose rows are not
@@ -3786,86 +3655,48 @@ def _km_train_local(dims: DataFrame) -> DataFrame:
 
 
 def _km_model(spark: SparkSession, sf_dir: str):
-    """(dims, cent_df, cent_arrays): the checkpointed dims table plus the
-    TRAINED centroids as a local DataFrame and, on the Arrow path, as
-    (cids, [K,D]) arrays for the assignment kernel (None on the
-    kill-switch path)."""
-    if not _km_arrow_on(spark):
-        dims = _km_dims(spark, sf_dir)
-        return dims, _km_centroids(spark, dims), None
-    counted: list = []
-    dims = _km_dims(spark, sf_dir, count_into=counted)
+    """(dims, (cids, cent)): the checkpointed dims table plus the TRAINED
+    centroids as (cid-sorted int64[K], float64[K, D]) arrays for the
+    assignment kernel.  Both trainers follow the DuckDB oracle's rule:
+    distances rounded to 1e-4, then argmin with ties to MIN(cid); means
+    rounded to the _KM_RND grid; an empty cluster keeps its centroid.
+    An empty corpus has no centroids (K = 0), so assignment emits no
+    rows."""
+    dims, n_rows = _km_dims(spark, sf_dir)
+    if not n_rows:
+        return dims, _km_cent_arrays([])
     if kernel_fits(
         spark,
         "spark.graft.km_local_train_max",
         _KM_LOCAL_TRAIN_MAX_DIMS,
-        counted[0],
+        n_rows,
     ):
         rows = [tuple(r) for r in _km_train_local(dims).collect()]
-    else:
-        # Distributed training with the Arrow assignment kernel: one
-        # means-collect job per iteration, as before, minus the K-way
-        # row expansion inside each.
-        seed_ids = (
-            dims.select("vec_id").distinct().orderBy("vec_id").limit(_KM_K)
-        )
-        seed = dims.join(F.broadcast(seed_ids), "vec_id").select(
-            F.col("vec_id").alias("cid"), "i", F.col("x").alias("c")
-        )
-        rows = [tuple(r) for r in seed.collect()]
-        cids, cent = _km_cent_arrays(rows)
-        for _ in range(_KM_ITERS):
-            asg = _km_assign_arrow(dims, cids, cent).select("vec_id", "cid")
-            means = (
-                asg.join(dims, "vec_id")
-                .groupBy("cid", "i")
-                .agg(F.round(F.avg("x"), _KM_RND).alias("mc"))
-                .collect()
-            )
-            upd = {(r[0], r[1]): r[2] for r in means}
-            for k, cid in enumerate(cids):
-                for i in range(cent.shape[1]):
-                    m = upd.get((int(cid), i + 1))
-                    if m is not None:
-                        cent[k, i] = m
-        rows = [
-            (int(cids[k]), i + 1, float(cent[k, i]))
-            for k in range(len(cids))
-            for i in range(cent.shape[1])
-        ]
-    cent_df = spark.createDataFrame(rows, schema="cid long, i int, c double")
-    return dims, cent_df, _km_cent_arrays(rows)
-
-
-def _km_centroids(spark: SparkSession, dims: DataFrame) -> DataFrame:
-    """TRAINED centroid table (cid, i, c): seed from the _KM_K smallest
-    vec_ids, then _KM_ITERS deterministic Lloyd iterations.  The centroid
-    table is a constant-size model artifact (K·D = 512 rows), so each
-    update is collected and re-broadcast — the same legitimate driver
-    materialization as the PQ codebook; at 100 TB training runs on a
-    corpus sample with the identical plan, assignment stays distributed."""
+        return dims, _km_cent_arrays(rows)
+    # Distributed training: one means-collect job per iteration, with
+    # the Arrow assignment kernel inside it.  The centroid table is a
+    # constant-size model artifact (K·D = 512 rows), so each update is
+    # applied driver-side.
     seed_ids = dims.select("vec_id").distinct().orderBy("vec_id").limit(_KM_K)
-    cent = (
-        dims.join(F.broadcast(seed_ids), "vec_id")
-        .select(F.col("vec_id").alias("cid"), "i", F.col("x").alias("c"))
+    seed = dims.join(F.broadcast(seed_ids), "vec_id").select(
+        F.col("vec_id").alias("cid"), "i", F.col("x").alias("c")
     )
-    schema = "cid long, i int, c double"
+    cids, cent = _km_cent_arrays([tuple(r) for r in seed.collect()])
     for _ in range(_KM_ITERS):
-        asg = _km_assign(dims, cent).select("vec_id", "cid")
+        asg = _km_assign_arrow(dims, cids, cent).select("vec_id", "cid")
         means = (
             asg.join(dims, "vec_id")
             .groupBy("cid", "i")
             .agg(F.round(F.avg("x"), _KM_RND).alias("mc"))
-        )
-        updated = (
-            cent.join(means, ["cid", "i"], "left")
-            .select("cid", "i", F.coalesce("mc", "c").alias("c"))
             .collect()
         )
-        cent = spark.createDataFrame(
-            [(r.cid, r.i, r.c) for r in updated], schema=schema
-        )
-    return cent
+        upd = {(r[0], r[1]): r[2] for r in means}
+        for k, cid in enumerate(cids):
+            for i in range(cent.shape[1]):
+                m = upd.get((int(cid), i + 1))
+                if m is not None:
+                    cent[k, i] = m
+    return dims, (cids, cent)
 
 
 @query(
@@ -3885,21 +3716,16 @@ def vec_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the PQ codebook).  Returns every vector's cluster and its squared L2
     distance to the trained centroid.
 
-    Scale: the centroid table (K·D rows) broadcasts; assignment is one
-    map-side broadcast join + partial-aggregated SUM per vector — the
+    Scale: the centroid table (K·D rows) rides the task closure of the
+    vectorized Arrow assignment kernel (_km_assign_arrow), a map over the
+    vec_id-partitioned dims table with no K-way row expansion — the
     corpus never shuffles on anything wider than vec_id.  Driver traffic
-    is K·D scalars per iteration (model artifact, not data).  Since
-    round 11 assignment runs as the vectorized Arrow kernel
-    (_km_assign_arrow — no K-way row expansion) and small corpora train
-    in one task (_km_train_local); spark.graft.km_arrow=false restores
-    the join formulation."""
-    dims, cent, arrays = _km_model(spark, sf_dir)
-    out = (
-        _km_assign_arrow(dims, *arrays)
-        if arrays is not None
-        else _km_assign(dims, cent)
+    is K·D scalars per iteration (model artifact, not data); small
+    corpora train in one task (_km_train_local)."""
+    dims, arrays = _km_model(spark, sf_dir)
+    return _km_assign_arrow(dims, *arrays).select(
+        "vec_id", F.col("cid").alias("cluster_id"), "d2"
     )
-    return out.select("vec_id", F.col("cid").alias("cluster_id"), "d2")
 
 
 @query(

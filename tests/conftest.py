@@ -1,5 +1,6 @@
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -25,3 +26,19 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def sf_dir_oracle():
     return SF_DIR_ORACLE
+
+
+@contextmanager
+def with_conf(spark, pairs):
+    """Set session confs for the block; restore (or unset) them on exit."""
+    saved = {k: spark.conf.get(k, None) for k in pairs}
+    try:
+        for k, v in pairs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -5,6 +5,8 @@ exactness is checked separately by each query's own oracle)."""
 
 from datafusion_parallelism_spark.queries import REGISTRY
 
+from conftest import with_conf
+
 
 def _topk_sets(spark, sf_dir, name):
     out = {}
@@ -84,72 +86,20 @@ def _rows_set(df):
     }
 
 
-def test_pq_arrow_kernel_matches_join_formulation(spark, sf_dir_oracle):
-    """Round-11 contract: the Arrow assignment kernel + one-task trainer
-    must emit byte-identical results to the broadcast-join + min(struct)
-    formulation (spark.graft.pq_arrow=false) for every PQ query."""
-    names = ["vec_pq_codes", "ann_pq_topk"]
-    fast = {n: _rows_set(REGISTRY[n].fn(spark, sf_dir_oracle)) for n in names}
-    prev = spark.conf.get("spark.graft.pq_arrow", None)
-    spark.conf.set("spark.graft.pq_arrow", "false")
-    try:
-        slow = {
-            n: _rows_set(REGISTRY[n].fn(spark, sf_dir_oracle)) for n in names
-        }
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.graft.pq_arrow")
-        else:
-            spark.conf.set("spark.graft.pq_arrow", prev)
-    for n in names:
-        assert fast[n] == slow[n], n
-
-
-def test_km_arrow_kernel_matches_join_formulation(spark, sf_dir_oracle):
-    """Same contract for k-means: Arrow kernel (incl. the exact HALF_UP
-    round-before-argmin replica) ≡ join + double-groupBy formulation."""
-    name = "vec_kmeans_clusters"
-    fast = _rows_set(REGISTRY[name].fn(spark, sf_dir_oracle))
-    prev = spark.conf.get("spark.graft.km_arrow", None)
-    spark.conf.set("spark.graft.km_arrow", "false")
-    try:
-        slow = _rows_set(REGISTRY[name].fn(spark, sf_dir_oracle))
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.graft.km_arrow")
-        else:
-            spark.conf.set("spark.graft.km_arrow", prev)
-    assert fast == slow
-
-
 def test_pq_distributed_training_matches_local(spark, sf_dir_oracle):
     """The one-task trainer (default below the gate) and the distributed
     per-iteration trainer (spark.graft.pq_local_train_max=0) must produce
     the identical codebook, hence identical codes."""
     name = "vec_pq_codes"
     local = _rows_set(REGISTRY[name].fn(spark, sf_dir_oracle))
-    prev = spark.conf.get("spark.graft.pq_local_train_max", None)
-    spark.conf.set("spark.graft.pq_local_train_max", "0")
-    try:
+    with with_conf(spark, {"spark.graft.pq_local_train_max": "0"}):
         dist = _rows_set(REGISTRY[name].fn(spark, sf_dir_oracle))
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.graft.pq_local_train_max")
-        else:
-            spark.conf.set("spark.graft.pq_local_train_max", prev)
     assert local == dist
 
 
 def test_km_distributed_training_matches_local(spark, sf_dir_oracle):
     name = "vec_kmeans_clusters"
     local = _rows_set(REGISTRY[name].fn(spark, sf_dir_oracle))
-    prev = spark.conf.get("spark.graft.km_local_train_max", None)
-    spark.conf.set("spark.graft.km_local_train_max", "0")
-    try:
+    with with_conf(spark, {"spark.graft.km_local_train_max": "0"}):
         dist = _rows_set(REGISTRY[name].fn(spark, sf_dir_oracle))
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.graft.km_local_train_max")
-        else:
-            spark.conf.set("spark.graft.km_local_train_max", prev)
     assert local == dist

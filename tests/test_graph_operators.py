@@ -9,6 +9,8 @@ from datafusion_parallelism_spark.operators.graph import (
     triangle_counts,
 )
 
+from conftest import with_conf
+
 
 def _cc(spark, edges):
     df = spark.createDataFrame(edges, schema="u long, v long")
@@ -140,15 +142,8 @@ def test_pagerank_kernel_matches_distributed_loop(spark):
         (1, 3), (2, 3), (4, 3), (3, 1), (1, 2), (5, 1), (3, 7), (6, 7),
     ]
     kernel = _pr(spark, edges, damping=0.85, iterations=10)
-    prev = spark.conf.get("spark.graft.pagerank_local_max_edges", None)
-    spark.conf.set("spark.graft.pagerank_local_max_edges", "0")
-    try:
+    with with_conf(spark, {"spark.graft.pagerank_local_max_edges": "0"}):
         dist = _pr(spark, edges, damping=0.85, iterations=10)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.graft.pagerank_local_max_edges")
-        else:
-            spark.conf.set("spark.graft.pagerank_local_max_edges", prev)
     assert kernel.keys() == dist.keys()
     for k in dist:
         assert abs(kernel[k] - dist[k]) < 1e-12
@@ -179,18 +174,11 @@ def test_cc_kernel_matches_distributed_loop(spark):
         r.node: r.cluster
         for r in connected_components(df, stats=k_stats).collect()
     }
-    prev = spark.conf.get("spark.graft.cc_local_max_edges", None)
-    spark.conf.set("spark.graft.cc_local_max_edges", "0")
-    try:
+    with with_conf(spark, {"spark.graft.cc_local_max_edges": "0"}):
         dist = {
             r.node: r.cluster
             for r in connected_components(df, stats=d_stats).collect()
         }
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.graft.cc_local_max_edges")
-        else:
-            spark.conf.set("spark.graft.cc_local_max_edges", prev)
     assert kernel == dist
     assert k_stats["iterations"] == d_stats["iterations"]
 
@@ -201,15 +189,8 @@ def test_triangle_kernel_matches_distributed(spark):
     raw = [(i, j) for i in range(10) for j in range(i + 1, 10) if (i * j) % 4 != 1]
     df = spark.createDataFrame(raw, schema="u long, v long")
     kern = {r.node: r.triangles for r in triangle_counts(df).collect()}
-    prev = spark.conf.get("spark.graft.tri_local_max_edges", None)
-    spark.conf.set("spark.graft.tri_local_max_edges", "0")
-    try:
+    with with_conf(spark, {"spark.graft.tri_local_max_edges": "0"}):
         dist = {r.node: r.triangles for r in triangle_counts(df).collect()}
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.graft.tri_local_max_edges")
-        else:
-            spark.conf.set("spark.graft.tri_local_max_edges", prev)
     assert kern == dist
 
 
@@ -241,18 +222,43 @@ def test_empty_graph_on_both_sides_of_the_gate(
 
     monkeypatch.setattr(graph, kernel, spy)
     edges = spark.createDataFrame([], schema="u long, v long")
-    prev = spark.conf.get(key, None)
-    if ceiling is not None:
-        spark.conf.set(key, ceiling)
-    try:
+    with with_conf(spark, {} if ceiling is None else {key: ceiling}):
         out = op(edges)
         plan = physical_plan_str(out)
         assert out.count() == 0
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
     assert bool(calls) == (ceiling is None), calls
     if ceiling == "0":
         assert "MapInArrow" not in plan, plan
+
+
+@pytest.mark.parametrize("ceiling", ["0", None])
+@pytest.mark.parametrize(
+    "name, key",
+    [
+        ("vec_kmeans_clusters", "spark.graft.km_local_train_max"),
+        ("vec_pq_codes", "spark.graft.pq_local_train_max"),
+        ("ann_pq_topk", "spark.graft.pq_local_train_max"),
+    ],
+    ids=["kmeans", "pq_codes", "pq_topk"],
+)
+def test_empty_corpus_on_both_sides_of_the_gate(
+    spark, tmp_path, name, key, ceiling
+):
+    """A 0-row embeddings table yields zero rows from k-means and PQ with
+    the one-task trainer (default ceiling) and with the distributed one
+    (ceiling 0), as the DuckDB oracle does."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from datafusion_parallelism_spark.queries import REGISTRY
+
+    schema = pa.schema(
+        [
+            ("vec_id", pa.int64()),
+            ("embedding", pa.list_(pa.float32())),
+            ("label", pa.int32()),
+        ]
+    )
+    pq.write_table(schema.empty_table(), tmp_path / "embeddings.parquet")
+    with with_conf(spark, {} if ceiling is None else {key: ceiling}):
+        assert REGISTRY[name].fn(spark, str(tmp_path)).count() == 0

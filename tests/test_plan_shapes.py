@@ -21,6 +21,8 @@ from datafusion_parallelism_spark.plans import (
 from datafusion_parallelism_spark.queries import REGISTRY
 from datafusion_parallelism_spark.session import load, register_tables
 
+from conftest import with_conf
+
 
 def test_exists_decorrelates_to_left_semi(spark, sf_dir):
     """EXISTS → LeftSemi (reference assert: src/lib.rs:357-358)."""
@@ -264,18 +266,15 @@ def test_exists_in_disjunction_plans_existence_join(spark, sf_dir):
 
 def test_pq_codebook_broadcasts_and_scan_prunes(spark, sf_dir):
     """vec_pq_codes: the codebook must reach the corpus without ever
-    exchanging the vector side before the per-vector aggregation — since
-    round 11 via the task-closure Arrow kernel (MapInArrow, codebook in
-    the closure, no join at all); under spark.graft.pq_arrow=false via
-    broadcast.  The embeddings scan must read only the two used columns
+    exchanging the vector side before the per-vector aggregation — via
+    the task-closure Arrow kernel (MapInArrow, codebook in the closure,
+    no join at all), which applies the DuckDB oracle's argmin / MIN(aid)
+    rule.  The embeddings scan must read only the two used columns
     (asserted on the pre-checkpoint subvector plan, where the file scan
     is still visible)."""
     plan = physical_plan_str(REGISTRY["vec_pq_codes"].fn(spark, sf_dir))
     assert "MapInArrow" in plan, plan
     assert "SortMergeJoin" not in plan, plan
-    with _with_conf(spark, {"spark.graft.pq_arrow": "false"}):
-        plan = physical_plan_str(REGISTRY["vec_pq_codes"].fn(spark, sf_dir))
-        assert "BroadcastExchange" in plan
     from datafusion_parallelism_spark.queries.llm import _pq_subv
     from datafusion_parallelism_spark.session import load
 
@@ -342,7 +341,7 @@ def test_pagerank_iteration_plan_is_truncated(spark):
     )
     # Kill the r11 small-graph Arrow kernel so this keeps pinning the
     # DISTRIBUTED loop's plan shape (the kernel path has no joins at all).
-    with _with_conf(spark, {"spark.graft.pagerank_local_max_edges": "0"}):
+    with with_conf(spark, {"spark.graft.pagerank_local_max_edges": "0"}):
         plan = physical_plan_str(pagerank(edges, iterations=4))
     assert "Scan ExistingRDD" in plan, plan
     # One iteration = one edges-ranks join; a non-truncated plan would
@@ -357,7 +356,7 @@ def test_triangle_corners_single_generator_pass(spark, sf_dir):
     writes but each copy re-reads and re-joins; measured 22-exchange plan
     vs 10).  Pin: exactly one LeftSemi (the closing-edge check), exactly
     one Generate (the corner explode), no BroadcastNestedLoop/cartesian."""
-    with _with_conf(spark, {"spark.graft.tri_local_max_edges": "0"}):
+    with with_conf(spark, {"spark.graft.tri_local_max_edges": "0"}):
         plan = physical_plan_str(
             REGISTRY["graph_triangle_counts"].fn(spark, sf_dir)
         )
@@ -385,7 +384,7 @@ def test_triangle_wedge_table_never_sorted(spark):
         [(i, j) for i in range(12) for j in range(i + 1, 12) if (i + j) % 3],
         schema="u long, v long",
     )
-    with _with_conf(
+    with with_conf(
         spark,
         {
             "spark.sql.autoBroadcastJoinThreshold": "-1",
@@ -417,13 +416,14 @@ def test_pagerank_final_plan_is_copartitioned_no_exchange(spark):
     # exchanges it doesn't need — the co-partitioning contract this test
     # pins is the AQE-off small-input regime (and at real scale AQE's
     # runtime reuse makes its own call).
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        with _with_conf(spark, {"spark.graft.pagerank_local_max_edges": "0"}):
-            plan = physical_plan_str(pagerank(edges, iterations=3))
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    with with_conf(
+        spark,
+        {
+            "spark.sql.adaptive.enabled": "false",
+            "spark.graft.pagerank_local_max_edges": "0",
+        },
+    ):
+        plan = physical_plan_str(pagerank(edges, iterations=3))
     assert "Exchange" not in plan, plan
 
 
@@ -471,44 +471,13 @@ def test_winnow_capped_fingerprints_df_window_rides_join_partitioning(spark):
 
 def test_kmeans_final_plan_broadcast_assign_two_exchanges(spark, sf_dir):
     """vec_kmeans_clusters' final assignment must never shuffle the
-    corpus side: since round 11 the centroids ride the Arrow kernel's
-    task closure (MapInArrow over the checkpointed dims — zero joins,
-    zero exchanges); under spark.graft.km_arrow=false they broadcast
-    onto the vector table, with only the count aggregation's exchanges."""
+    corpus side: the centroids ride the Arrow kernel's task closure
+    (MapInArrow over the checkpointed dims — zero joins, zero exchanges),
+    which applies the DuckDB oracle's round-then-argmin / MIN(cid) rule."""
     plan = physical_plan_str(REGISTRY["vec_kmeans_clusters"].fn(spark, sf_dir))
     assert "MapInArrow" in plan, plan
     assert "Exchange" not in plan, plan
     assert "Join" not in plan, plan
-    with _with_conf(spark, {"spark.graft.km_arrow": "false"}):
-        plan = physical_plan_str(
-            REGISTRY["vec_kmeans_clusters"].fn(spark, sf_dir)
-        )
-        assert (
-            "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-        ), plan
-        assert plan.count("Exchange") <= 3, plan
-        assert "SortMergeJoin" not in plan, plan
-
-
-def _with_conf(spark, pairs):
-    """Context manager: set confs, restore on exit."""
-    from contextlib import contextmanager
-
-    @contextmanager
-    def cm():
-        saved = {k: spark.conf.get(k, None) for k in pairs}
-        try:
-            for k, v in pairs.items():
-                spark.conf.set(k, v)
-            yield
-        finally:
-            for k, v in saved.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
-
-    return cm()
 
 
 def test_checkpoint_pinned_preserves_metadata_under_aqe(spark):
@@ -539,7 +508,7 @@ def test_checkpoint_pinned_preserves_metadata_under_aqe(spark):
             len(re.findall(r"Sort \[k#", txt)),
         )
 
-    with _with_conf(
+    with with_conf(
         spark,
         {
             "spark.sql.adaptive.enabled": "true",
@@ -593,7 +562,7 @@ def test_pq_training_iteration_streams_without_sort_or_exchange(spark, sf_dir):
         )
         return physical_plan_str(assign).split("== Initial Plan ==")[0]
 
-    with _with_conf(spark, {"spark.sql.adaptive.enabled": "true"}):
+    with with_conf(spark, {"spark.sql.adaptive.enabled": "true"}):
         vecs = load(spark, sf_dir, "embeddings")
         txt = train_iter_plan(_pq_subv(vecs, spark))
         assert not re.search(r"Sort \[vec_id#", txt), txt
@@ -621,7 +590,7 @@ def test_pagerank_pinned_nodes_side_no_exchange_under_aqe(spark):
         [(i, (i + 1) % 8) for i in range(8)] + [(0, 4), (2, 6)],
         schema="u long, v long",
     )
-    with _with_conf(
+    with with_conf(
         spark,
         {
             "spark.sql.adaptive.enabled": "true",

@@ -115,19 +115,17 @@ def test_round_half_up_matches_spark_round(spark):
         assert got == want, (x, scale, got)
 
 
-def test_pq_kernel_matches_join_form_with_fewer_vectors_than_k(spark):
+def test_pq_kernel_matches_numpy_argmin_with_fewer_vectors_than_k(spark):
     """With fewer vectors than _PQ_K the codebook has k_eff < K anchors
     per subspace.  The kernel's anchor arrays must hold exactly those, so
-    a subvector near the origin is coded to its nearest REAL anchor, as
-    in the join form (pq_arrow=false)."""
+    a subvector near the origin is coded to its nearest REAL anchor: the
+    oracle's argmin over the codebook rows, ties to the smallest aid."""
     import numpy as np
 
     from datafusion_parallelism_spark.queries.llm import (
         _PQ_K,
         _PQ_M,
         _pq_assign_arrow,
-        _pq_codes,
-        _pq_dists_from,
         _pq_model,
     )
 
@@ -143,22 +141,25 @@ def test_pq_kernel_matches_join_form_with_fewer_vectors_than_k(spark):
         "vec_id long, j int, e1 double, e2 double",
     )
 
-    def codes(df):
-        return {(r.vec_id, r.j): r.code for r in df.collect()}
-
-    subv, _, arrays = _pq_model(spark, vecs)
+    subv, anch_df, arrays = _pq_model(spark, vecs)
     assert arrays[0].shape == (_PQ_M, n)
-    kernel = codes(
-        _pq_assign_arrow(subv.unionByName(probes), *arrays, include_coords=False)
-    )
-    spark.conf.set("spark.graft.pq_arrow", "false")
-    try:
-        subv_j, anch_j, _ = _pq_model(spark, vecs)
-        join = codes(_pq_codes(_pq_dists_from(subv_j.unionByName(probes), anch_j)))
-    finally:
-        spark.conf.unset("spark.graft.pq_arrow")
+    points = subv.unionByName(probes)
+    kernel = {
+        (r.vec_id, r.j): r.code
+        for r in _pq_assign_arrow(
+            points, *arrays, include_coords=False
+        ).collect()
+    }
+    book: dict = {}
+    for r in anch_df.collect():
+        book.setdefault(r.j, []).append((r.aid, r.a1, r.a2))
+    want = {}
+    for r in points.collect():
+        aid, a1, a2 = np.array(book[r.j]).T
+        d2 = (r.e1 - a1) * (r.e1 - a1) + (r.e2 - a2) * (r.e2 - a2)
+        want[(r.vec_id, r.j)] = int(aid[np.lexsort((aid, d2))[0]])
     assert len(kernel) == (n + 1) * _PQ_M
-    assert kernel == join
+    assert kernel == want
 
 
 def test_km_assign_kernel_rejects_vector_split_across_partitions(spark):

@@ -18,6 +18,8 @@ from datafusion_parallelism_spark.streaming.events import (
     user_running_totals_stream,
 )
 
+from conftest import with_conf
+
 
 def _rows(df, *order):
     return [tuple(r) for r in df.orderBy(*order).collect()]
@@ -137,8 +139,7 @@ def test_driver_bounded_routes_to_memory_sink(spark, sf_dir):
     mem_rows = _rows(t, "hour_start", "event_type")
     assert not os.path.isdir(staged)
     assert mem_rows
-    spark.conf.set("spark.graft.stream_sink", "parquet")
-    try:
+    with with_conf(spark, {"spark.graft.stream_sink": "parquet"}):
         t2 = run_to_table(
             hourly_counts_stream(read_events_stream(spark, sf_dir)),
             name,
@@ -147,8 +148,6 @@ def test_driver_bounded_routes_to_memory_sink(spark, sf_dir):
         )
         assert os.path.isdir(staged)
         assert _rows(t2, "hour_start", "event_type") == mem_rows
-    finally:
-        spark.conf.unset("spark.graft.stream_sink")
 
 
 def test_bucketized_totals_emissions_match_per_user(spark, sf_dir):
