@@ -19,13 +19,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.joins import equi_join
-from ..session import load, register_tables
+from ..session import load, sql
 from .registry import query
-
-
-def _sql(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
-    register_tables(spark, sf_dir)
-    return spark.sql(text)
 
 
 # --------------------------------------------------------------------------
@@ -186,27 +181,18 @@ def cube_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     return o.cube("o_orderstatus", "o_orderpriority").agg(F.count(F.lit(1)).alias("n"))
 
 
-@query(
-    "grouping_sets_revenue",
-    oracle="""
-    SELECT l_returnflag, l_linestatus,
-           ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue
-    FROM lineitem
-    GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-    """,
-)
+_GROUPING_SETS_SQL = """
+SELECT l_returnflag, l_linestatus,
+       ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue
+FROM lineitem
+GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
+"""
+
+
+@query("grouping_sets_revenue", oracle=_GROUPING_SETS_SQL)
 def grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS (via spark.sql — syntax parity both engines)."""
-    return _sql(
-        spark,
-        sf_dir,
-        """
-        SELECT l_returnflag, l_linestatus,
-               ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue
-        FROM lineitem
-        GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        """,
-    )
+    return sql(spark, sf_dir, _GROUPING_SETS_SQL)
 
 
 # --------------------------------------------------------------------------
@@ -1389,7 +1375,7 @@ def agg_filtered_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum(case when) idiom; Catalyst plans it as a single partial+final
     hash aggregate, no extra scan or shuffle per condition).  Identical
     SQL text runs on both engines."""
-    return _sql(spark, sf_dir, _FILTERED_SUMS_SQL)
+    return sql(spark, sf_dir, _FILTERED_SUMS_SQL)
 
 
 @query(
@@ -1728,7 +1714,7 @@ def agg_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUP BY ALL — the analyzer derives the grouping keys from the
     non-aggregate select items; one SQL text runs verbatim on both
     engines (syntax-level parity, not just semantic parity)."""
-    return _sql(spark, sf_dir, _GROUP_BY_ALL_SQL)
+    return sql(spark, sf_dir, _GROUP_BY_ALL_SQL)
 
 
 @query(

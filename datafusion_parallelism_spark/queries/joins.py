@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 import os
 
 from ..operators.joins import equi_join
-from ..session import load, spread_for_compute
+from ..session import load, spread_for_compute, sql
 from .registry import query
 
 
@@ -416,13 +416,6 @@ WHERE c_acctbal < 0
 """
 
 
-def _sql(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
-    from ..session import register_tables
-
-    register_tables(spark, sf_dir)
-    return spark.sql(text)
-
-
 @query("join_existence_mark", oracle=_EXISTENCE_MARK_SQL)
 def join_existence_mark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXISTS inside a disjunction — not rewritable to a plain semi join
@@ -433,7 +426,7 @@ def join_existence_mark(spark: SparkSession, sf_dir: str) -> DataFrame:
     (LeftMark rejected at probe_lookup_implementation.rs:32-75; its tests
     only use top-level [NOT] EXISTS).  Plan shape pinned in
     tests/test_plan_shapes.py."""
-    return _sql(spark, sf_dir, _EXISTENCE_MARK_SQL)
+    return sql(spark, sf_dir, _EXISTENCE_MARK_SQL)
 
 
 @query(

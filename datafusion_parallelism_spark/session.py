@@ -520,6 +520,13 @@ def register_tables(
     return out
 
 
+def sql(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
+    """``spark.sql(text)`` over the tables of ``sf_dir`` registered as
+    views — the reference's ``ctx.sql`` entry point."""
+    register_tables(spark, sf_dir)
+    return spark.sql(text)
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one table as a DataFrame (scan stays lazy; Catalyst prunes).
 

@@ -2,14 +2,14 @@
 
 The reference runs every query through BOTH entry points: ``parse_sql``
 (src/parse_sql.rs:73-76) and the DataFrame-flavored harness; its test
-matrix asserts both yield the same rows.  The repo splits its corpus
-roughly half/half between the two APIs (queries/tpch.py:15-18), so this
-test closes the loop for representative DataFrame-flavor queries: the
-registered DataFrame formulation and the SAME semantics expressed as SQL
-(the oracle text, which Spark's parser also accepts) must produce
-hash-identical results through Catalyst.  Catches analysis/optimizer drift
-between the two APIs — e.g. a DataFrame join whose key resolution diverges
-from the SQL binder's.
+matrix asserts both yield the same rows.  TPC-H runs as SQL text (one
+text per query, shared with its oracle — queries/tpch.py), so this test
+closes the loop for representative DataFrame-API queries from the join
+and analytics corpora: the registered DataFrame formulation and the SAME
+semantics expressed as SQL (the oracle text, which Spark's parser also
+accepts) must produce hash-identical results through Catalyst.  Catches
+analysis/optimizer drift between the two APIs — e.g. a DataFrame join
+whose key resolution diverges from the SQL binder's.
 """
 
 import pytest
@@ -18,10 +18,10 @@ from datafusion_parallelism_spark.queries import REGISTRY
 from datafusion_parallelism_spark.session import register_tables
 from datafusion_parallelism_spark.testing import _canon_rows
 
-#: DataFrame-flavor queries whose oracle SQL is also valid Spark SQL:
-#: scan-agg (q1), top-k join (q3), 5-way broadcast join (q5),
-#: IN-subquery-on-HAVING semi join (q18).
-PARITY = ["tpch_q1", "tpch_q3", "tpch_q5", "tpch_q18"]
+#: DataFrame-API queries whose oracle SQL is also valid Spark SQL:
+#: 4-way inner join chain, EXISTS written as a left semi join, ROW_NUMBER
+#: top-3 window, multi-COUNT(DISTINCT) split into joined aggregates.
+PARITY = ["join_inner_chain", "join_left_semi", "window_rank_orders", "agg_count_distinct"]
 
 
 @pytest.mark.parametrize("name", PARITY)
