@@ -54,7 +54,7 @@ def stage_metrics(spark: SparkSession, timeout: float = 10.0) -> dict[int, dict]
 
     One row per completed Spark stage since the context started; callers
     doing per-query attribution snapshot the id set between queries (see
-    ``scripts/decomp.py``).
+    ``perfbench/tracer.py``).
     """
     base = spark.sparkContext.uiWebUrl
     if not base:

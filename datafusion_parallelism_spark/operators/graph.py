@@ -76,7 +76,7 @@ _STATE_ROWS_PER_PARTITION = 50_000
 #: (~20 ms each).  4M edges ≈ 24 B/edge ≈ 100 MB of task arrays, well
 #: inside one task's memory share on any sane executor; above the
 #: ceiling the distributed loop (the 100 TB path) is unchanged.
-#: Ceiling conf: spark.graft.pagerank_local_max_edges (0 = kernel off).
+#: 0 turns the kernel off (tests patch it to force the distributed loop).
 _PAGERANK_KERNEL_MAX_EDGES = 4_000_000
 
 
@@ -246,7 +246,7 @@ def _cc_arrow(und: DataFrame, max_iter: int) -> DataFrame:
 #: Edge-count ceiling for the single-task connected-components kernel —
 #: same arithmetic and rationale as _PAGERANK_KERNEL_MAX_EDGES (the CC
 #: loop additionally runs a VARIABLE number of driver-synced iterations,
-#: up to max_iter + 1 jobs).  Ceiling conf: spark.graft.cc_local_max_edges.
+#: up to max_iter + 1 jobs).
 _CC_KERNEL_MAX_EDGES = 4_000_000
 
 
@@ -306,9 +306,7 @@ def connected_components(
     # schedule.  Its iteration count and convergence flag ride the eager
     # checkpoint job as observe metrics, so non-convergence raises here
     # on the driver, from THIS call, without a failed task.
-    if kernel_fits(
-        spark, "spark.graft.cc_local_max_edges", _CC_KERNEL_MAX_EDGES, m
-    ):
+    if kernel_fits(m, _CC_KERNEL_MAX_EDGES):
         obs_k = Observation()
         labeled = (
             _cc_arrow(und, max_iter)
@@ -488,7 +486,6 @@ def pagerank(
     spark = edges.sparkSession
     conf_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     e = edges.select(F.col(u).alias("src"), F.col(v).alias("dst"))
-    gate = ("spark.graft.pagerank_local_max_edges", _PAGERANK_KERNEL_MAX_EDGES)
     # Bounded-ahead kernel path (round 11): when the caller can bound the
     # edge count from metadata (an UPPER bound, so the "small" decision is
     # never wrong on a big graph), skip the distributed loop's whole setup
@@ -498,7 +495,7 @@ def pagerank(
     # the Arrow kernel, which computes 1/outdeg itself (the identical
     # IEEE division).  See _PAGERANK_KERNEL_MAX_EDGES for the sizing
     # argument.
-    if kernel_fits(spark, *gate, approx_edge_bound):
+    if kernel_fits(approx_edge_bound, _PAGERANK_KERNEL_MAX_EDGES):
         # Duplicate edges (if any) collapse INSIDE the kernel — a NumPy
         # unique on index pairs instead of a distributed distinct
         # exchange the kernel would make redundant.
@@ -552,7 +549,7 @@ def pagerank(
     # checkpoint, no per-iteration jobs, identical math (see
     # _pagerank_arrow).  The distributed loop below stays the at-scale
     # path.
-    if kernel_fits(spark, *gate, m):
+    if kernel_fits(m, _PAGERANK_KERNEL_MAX_EDGES):
         rows = e_loop.select("src", F.explode("dsts").alias("dst"), "w")
         return _pagerank_arrow(rows, damping, iterations, normalized=True)
     if m == 0:
@@ -628,7 +625,7 @@ def pagerank(
 #: Edge-count ceiling for the single-task triangle kernel.  Wedge volume
 #: is Σ outdeg² ≤ m^1.5 under the compact-forward orientation; the kernel
 #: streams wedges in O(m) memory per gap step, so the ceiling only bounds
-#: TIME (~m^1.5 vectorized ops).  Ceiling conf: spark.graft.tri_local_max_edges.
+#: TIME (~m^1.5 vectorized ops).
 _TRI_KERNEL_MAX_EDGES = 200_000
 
 
@@ -744,12 +741,7 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     edges = edges.observe(
         obs, F.count(F.lit(1)).alias("m")
     ).localCheckpoint(eager=True)
-    if kernel_fits(
-        edges.sparkSession,
-        "spark.graft.tri_local_max_edges",
-        _TRI_KERNEL_MAX_EDGES,
-        obs.get["m"],
-    ):
+    if kernel_fits(obs.get["m"], _TRI_KERNEL_MAX_EDGES):
         return _tri_arrow(edges)
     deg = (
         edges.select(F.col("u").alias("n"))

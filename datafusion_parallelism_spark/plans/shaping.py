@@ -175,16 +175,14 @@ def checkpoint_pinned(df: DataFrame) -> DataFrame:
         conf.set("spark.sql.adaptive.enabled", prev)
 
 
-def kernel_fits(
-    spark: SparkSession, key: str, default: int, bound: int | None
-) -> bool:
+def kernel_fits(bound: int | None, ceiling: int) -> bool:
     """The one kernel-vs-distributed size gate: True when an input of at
     most ``bound`` rows may run as a single-task Arrow kernel.
 
-    ``key`` names the kernel's ceiling conf (``default`` when unset).
     ``bound`` is a measured count or a metadata upper bound; ``None``
-    (no bound known) never fits.  A ceiling of 0 or less turns the kernel
-    off for every input, an empty one included, so tests can force the
-    distributed side of any gate."""
-    ceiling = int(spark.conf.get(key, str(default)))
+    (no bound known) never fits.  ``ceiling`` is the kernel's module
+    constant, read by the caller when the gate runs.  A ceiling of 0 or
+    less turns the kernel off for every input, an empty one included, so
+    tests can force the distributed side of any gate by patching that
+    constant to 0."""
     return ceiling > 0 and bound is not None and bound <= ceiling

@@ -115,12 +115,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # symmetrization (parquet footer read, no Spark job).
     li_rows = parquet_num_rows(os.path.join(sf_dir, "lineitem.parquet"))
     edge_bound = None if li_rows is None else 2 * li_rows
-    small = kernel_fits(
-        spark,
-        "spark.graft.pagerank_local_max_edges",
-        _PAGERANK_KERNEL_MAX_EDGES,
-        edge_bound,
-    )
+    small = kernel_fits(edge_bound, _PAGERANK_KERNEL_MAX_EDGES)
     pairs = orders.join(
         lineitem, orders["o_orderkey"] == lineitem["l_orderkey"]
     ).select(

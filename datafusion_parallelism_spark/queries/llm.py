@@ -263,14 +263,6 @@ def _shingle_table(d: DataFrame) -> DataFrame:
     return _doc_shingles(d).select("doc_id", F.explode("shingles").alias("s"))
 
 
-def _blocked_shingle_index(d: DataFrame, n_part: int) -> DataFrame:
-    """Pair-join-ready inverted shingle index: repartitioned by shingle
-    (co-partitions both self-join aliases) with stop-shingles above
-    SHINGLE_DF_CEILING removed.  The df filter is a window COUNT over the
-    same s-partitioning the join needs — zero extra exchanges."""
-    return _blocked_index_from_arrays(_doc_shingles(d), n_part)
-
-
 def _pair_parallelism(spark: SparkSession) -> int:
     """Width for the blocked pair self-joins' explicit key repartitions:
     max(cores, session shuffle width).  defaultParallelism alone (the
@@ -320,9 +312,12 @@ def _stream_pairs(pairs: DataFrame) -> DataFrame:
 
 
 def _blocked_index_from_arrays(arrays: DataFrame, n_part: int) -> DataFrame:
-    """``_blocked_shingle_index`` starting from an already-built
-    (doc_id, shingles, n) table — lets callers that ALSO need the per-doc
-    set sizes share one tokenize+shingle pass instead of two."""
+    """Pair-join-ready inverted shingle index over a (doc_id, shingles, n)
+    table: repartitioned by shingle (co-partitions both self-join aliases)
+    with stop-shingles above SHINGLE_DF_CEILING removed.  The df filter is
+    a window COUNT over the same s-partitioning the join needs — zero
+    extra exchanges.  Taking the arrays lets callers that ALSO need the
+    per-doc set sizes share one tokenize+shingle pass instead of two."""
     sh = arrays.select("doc_id", F.explode("shingles").alias("s")).repartition(
         n_part, "s"
     )
@@ -374,6 +369,38 @@ _SHINGLE_CTE = f"""
 """
 
 
+def _shared_pair_counts(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """(shared, cnt) for the shingle-overlap scorers: ``shared`` is
+    (doc_a, doc_b, c) — the count of shingles each doc pair (doc_a <
+    doc_b) shares — and ``cnt`` is (doc_id, n), the per-doc set size.
+
+    The index is repartitioned by the join key (co-partitions BOTH
+    aliases, so the join adds no further exchange) at data-proportional
+    width — see _pair_parallelism.  The pair count STREAMS through a
+    pair-keyed exchange (round 10, replacing the r2 map-side-combine
+    posture whose 16x-scale measurement predated the x256 evidence):
+    _stream_pairs."""
+    arrays = _shared_shingle_arrays(_docs_spread(spark, sf_dir))
+    sh = _blocked_index_from_arrays(arrays, _pair_parallelism(spark))
+    a, b = sh.alias("a"), sh.alias("b")
+    shared = (
+        _stream_pairs(
+            a.join(
+                b,
+                (F.col("a.s") == F.col("b.s"))
+                & (F.col("a.doc_id") < F.col("b.doc_id")),
+            ).select(
+                F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+            )
+        )
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    return shared, arrays.select("doc_id", "n")
+
+
 @query(
     "dedup_ngram_jaccard",
     oracle=f"""
@@ -401,30 +428,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     generation (stop-shingle rule, mirrored in the oracle): without the
     ceiling the Σ df² cost grows super-linearly as common boilerplate
     accumulates — measured 33 s at x16 -> 314 s at x64 before the cap."""
-    d = _docs_spread(spark, sf_dir)
-    # Repartition the index by the join key (co-partitions BOTH aliases,
-    # so the join adds no further exchange) at data-proportional width —
-    # see _pair_parallelism.  The pair count STREAMS through a pair-keyed
-    # exchange (round 10, replacing the r2 map-side-combine posture whose
-    # 16x-scale measurement predated the x256 evidence): _stream_pairs.
-    n_part = _pair_parallelism(spark)
-    arrays = _shared_shingle_arrays(d)
-    sh = _blocked_index_from_arrays(arrays, n_part)
-    a, b = sh.alias("a"), sh.alias("b")
-    shared = (
-        _stream_pairs(
-            a.join(
-                b,
-                (F.col("a.s") == F.col("b.s"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            ).select(
-                F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-            )
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    cnt = arrays.select("doc_id", "n")
+    shared, cnt = _shared_pair_counts(spark, sf_dir)
     jac = F.round(F.col("c") / (F.col("ca.n") + F.col("cb.n") - F.col("c")), 4)
     return (
         shared.join(cnt.alias("ca"), F.col("ca.doc_id") == F.col("doc_a"))
@@ -464,25 +468,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression differs — at 100 TB both queries share the Σ df(s)² cost
     profile, the stop-shingle ceiling, and the AQE skew-split mitigation
     for hot shingles."""
-    d = _docs_spread(spark, sf_dir)
-    n_part = _pair_parallelism(spark)
-    arrays = _shared_shingle_arrays(d)
-    sh = _blocked_index_from_arrays(arrays, n_part)
-    a, b = sh.alias("a"), sh.alias("b")
-    shared = (
-        _stream_pairs(
-            a.join(
-                b,
-                (F.col("a.s") == F.col("b.s"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            ).select(
-                F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-            )
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    cnt = arrays.select("doc_id", "n")
+    shared, cnt = _shared_pair_counts(spark, sf_dir)
     cont = F.round(F.col("c") / F.least(F.col("ca.n"), F.col("cb.n")), 4)
     return (
         shared.join(cnt.alias("ca"), F.col("ca.doc_id") == F.col("doc_a"))
@@ -593,7 +579,7 @@ def winnow_capped_fingerprints(
     on h, then drop fingerprints with document frequency > ceiling.  The
     df count is a window COUNT over the same h-partitioning the pair join
     needs, so the cap costs zero extra exchanges, exactly like
-    ``_blocked_shingle_index`` — pinned by the exchange-count assert in
+    ``_blocked_index_from_arrays`` — pinned by the exchange-count assert in
     tests/test_plan_shapes.py (the executed query plan truncates at the
     localCheckpoint, so this subtree is what makes the claim auditable;
     its dump is the second section of docs/plans/dedup_winnow_spans.txt)."""
@@ -2856,7 +2842,8 @@ def _pq_subv(
 #: (~24 B/row of NumPy arrays, ≈100 MB at the ceiling) and ships back
 #: only the M·K codebook; above it the per-iteration distributed jobs
 #: remain (the 100 TB posture — at that scale each job does real work).
-#: Ceiling conf: spark.graft.pq_local_train_max.
+#: 0 turns the one-task fit off (tests patch it to force the distributed
+#: trainer).
 _PQ_LOCAL_TRAIN_MAX_SUBV = 4_000_000
 
 
@@ -3072,12 +3059,7 @@ def _pq_model(spark: SparkSession, vecs: DataFrame):
     ties to MIN(aid), means rounded to the _PQ_ROUND grid."""
     counted: list = []
     subv = _pq_subv(vecs, spark, count_into=counted)
-    if kernel_fits(
-        spark,
-        "spark.graft.pq_local_train_max",
-        _PQ_LOCAL_TRAIN_MAX_SUBV,
-        counted[0],
-    ):
+    if kernel_fits(counted[0], _PQ_LOCAL_TRAIN_MAX_SUBV):
         # One-task fit; collecting the M·K codebook is the same
         # constant-size model-artifact materialization the
         # distributed loop already performs per iteration.
@@ -3503,8 +3485,7 @@ def _km_dims(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
 
 #: Dims-row ceiling for one-task Lloyd training — same rationale and
 #: arithmetic as _PQ_LOCAL_TRAIN_MAX_SUBV (sequential driver-synced jobs
-#: whose scheduling floor dwarfs the math below this size).  Ceiling conf:
-#: spark.graft.km_local_train_max.
+#: whose scheduling floor dwarfs the math below this size).
 _KM_LOCAL_TRAIN_MAX_DIMS = 4_000_000
 
 
@@ -3665,12 +3646,7 @@ def _km_model(spark: SparkSession, sf_dir: str):
     dims, n_rows = _km_dims(spark, sf_dir)
     if not n_rows:
         return dims, _km_cent_arrays([])
-    if kernel_fits(
-        spark,
-        "spark.graft.km_local_train_max",
-        _KM_LOCAL_TRAIN_MAX_DIMS,
-        n_rows,
-    ):
+    if kernel_fits(n_rows, _KM_LOCAL_TRAIN_MAX_DIMS):
         rows = [tuple(r) for r in _km_train_local(dims).collect()]
         return dims, _km_cent_arrays(rows)
     # Distributed training: one means-collect job per iteration, with

@@ -377,10 +377,7 @@ def parquet_num_rows(path: str) -> int | None:
 
 
 def spread_for_compute(
-    df: DataFrame,
-    target: int | None = None,
-    input_bytes: int | None = None,
-    input_path: str | None = None,
+    df: DataFrame, input_path: str, target: int | None = None
 ) -> DataFrame:
     """Round-robin repartition iff the plan currently has fewer partitions
     than the cluster has cores — use before CPU-bound per-row stages
@@ -392,25 +389,17 @@ def spread_for_compute(
     scan already yields ≥cores partitions (any real data size), this is a
     no-op — no shuffle is added at scale.
 
-    When ``input_path`` names the parquet file being scanned, the split
-    estimate is capped by its row-group count (``parquet_scan_tasks``) —
-    byte-range splits beyond the row-group count are EMPTY tasks, and
-    treating them as parallelism skips the repartition exactly when a
-    big-row-group text corpus needs it most (round-7 x256 cliff; see
-    ``parquet_scan_tasks``).  ``input_bytes`` keeps the bytes-only
-    estimate for callers without a single stat-able file.  The
-    ``df.rdd.getNumPartitions()`` fallback builds an RDD-conversion plan
-    driver-side on every call, a fixed py4j cost that dominates toy-scale
-    measurements."""
+    ``input_path`` names the parquet file or directory being scanned: the
+    split estimate is capped by its row-group count
+    (``parquet_scan_tasks``) — byte-range splits beyond the row-group
+    count are EMPTY tasks, and treating them as parallelism skips the
+    repartition exactly when a big-row-group text corpus needs it most
+    (round-7 x256 cliff; see ``parquet_scan_tasks``).  The estimate is a
+    driver-local file stat + footer read, with no per-call py4j
+    RDD-conversion cost."""
     sc = df.sparkSession.sparkContext
     target = target or sc.defaultParallelism
-    if input_path is not None:
-        current = parquet_scan_tasks(input_path, sc.defaultParallelism)
-    elif input_bytes is not None:
-        current = est_scan_partitions(input_bytes, sc.defaultParallelism)
-    else:
-        current = df.rdd.getNumPartitions()
-    if current < target:
+    if parquet_scan_tasks(input_path, sc.defaultParallelism) < target:
         return df.repartition(target)
     return df
 

@@ -225,16 +225,11 @@ def user_running_totals_stream(
     scales with the session (4× defaultParallelism — enough keys to
     spread over any state-partition count; per-bucket state is
     |users|/buckets, the same shard-growth class as the state store
-    itself).  Kill-switch: ``spark.graft.totals_buckets=0`` restores
-    per-user keys; any positive value overrides the bucket count."""
-    spark = events.sparkSession
+    itself).  ``buckets=0`` keys state per user: the reference form the
+    bucketed emissions are tested against; any positive value sets the
+    bucket count."""
     if buckets is None:
-        conf = spark.conf.get("spark.graft.totals_buckets", "")
-        buckets = (
-            int(conf)
-            if conf
-            else 4 * spark.sparkContext.defaultParallelism
-        )
+        buckets = 4 * events.sparkSession.sparkContext.defaultParallelism
     if buckets <= 0:
         return events.groupBy("user_id").applyInPandasWithState(
             _update_user_totals,
@@ -304,16 +299,11 @@ def run_to_table(
     O(#windows) rows no matter how large the corpus) — those keep the
     memory sink, which the x64 pairs measured as ~2–3 s cheaper per query
     (no parquet write+scan round-trip) and which stays driver-safe at any
-    scale because the row count cannot grow with the input.  Explicitly
-    setting ``spark.graft.stream_sink`` (``parquet``/``memory``) overrides
-    the flag in either direction — that is the paired-A/B kill-switch."""
+    scale because the row count cannot grow with the input."""
     import shutil
 
     spark = stream_df.sparkSession
-    sink = spark.conf.get("spark.graft.stream_sink", "")
-    if not sink:
-        sink = "memory" if driver_bounded else "parquet"
-    if sink == "memory":
+    if driver_bounded:
         run_to_memory(stream_df, name, output_mode)
         return spark.table(name)
     base = os.path.join("/tmp/spark_graft_stream_out", f"{os.getpid()}_{name}")

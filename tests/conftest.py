@@ -42,3 +42,17 @@ def with_conf(spark, pairs):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def spy_calls(monkeypatch, module, name):
+    """Wrap ``module.name`` for the test so each call is recorded; returns
+    the (growing) list of calls."""
+    calls = []
+    real = getattr(module, name)
+
+    def spy(*args, **kwargs):
+        calls.append(name)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(module, name, spy)
+    return calls

@@ -5,7 +5,7 @@ exactness is checked separately by each query's own oracle)."""
 
 from datafusion_parallelism_spark.queries import REGISTRY
 
-from conftest import with_conf
+from conftest import spy_calls
 
 
 def _topk_sets(spark, sf_dir, name):
@@ -86,20 +86,35 @@ def _rows_set(df):
     }
 
 
-def test_pq_distributed_training_matches_local(spark, sf_dir_oracle):
-    """The one-task trainer (default below the gate) and the distributed
-    per-iteration trainer (spark.graft.pq_local_train_max=0) must produce
-    the identical codebook, hence identical codes."""
-    name = "vec_pq_codes"
-    local = _rows_set(REGISTRY[name].fn(spark, sf_dir_oracle))
-    with with_conf(spark, {"spark.graft.pq_local_train_max": "0"}):
-        dist = _rows_set(REGISTRY[name].fn(spark, sf_dir_oracle))
+def _local_vs_distributed(spark, monkeypatch, sf_dir, name, trainer, ceiling):
+    """Rows of query ``name`` with the one-task ``trainer`` (default below
+    its gate), then with the gate constant ``ceiling`` patched to 0 (the
+    distributed per-iteration trainer); the spy proves each side ran."""
+    from datafusion_parallelism_spark.queries import llm
+
+    calls = spy_calls(monkeypatch, llm, trainer)
+    local = _rows_set(REGISTRY[name].fn(spark, sf_dir))
+    assert calls
+    calls.clear()
+    monkeypatch.setattr(llm, ceiling, 0)
+    dist = _rows_set(REGISTRY[name].fn(spark, sf_dir))
+    assert not calls
+    return local, dist
+
+
+def test_pq_distributed_training_matches_local(spark, monkeypatch, sf_dir_oracle):
+    """The one-task trainer and the distributed per-iteration trainer
+    must produce the identical codebook, hence identical codes."""
+    local, dist = _local_vs_distributed(
+        spark, monkeypatch, sf_dir_oracle, "vec_pq_codes",
+        "_pq_train_local", "_PQ_LOCAL_TRAIN_MAX_SUBV",
+    )
     assert local == dist
 
 
-def test_km_distributed_training_matches_local(spark, sf_dir_oracle):
-    name = "vec_kmeans_clusters"
-    local = _rows_set(REGISTRY[name].fn(spark, sf_dir_oracle))
-    with with_conf(spark, {"spark.graft.km_local_train_max": "0"}):
-        dist = _rows_set(REGISTRY[name].fn(spark, sf_dir_oracle))
+def test_km_distributed_training_matches_local(spark, monkeypatch, sf_dir_oracle):
+    local, dist = _local_vs_distributed(
+        spark, monkeypatch, sf_dir_oracle, "vec_kmeans_clusters",
+        "_km_train_local", "_KM_LOCAL_TRAIN_MAX_DIMS",
+    )
     assert local == dist

@@ -9,7 +9,7 @@ from datafusion_parallelism_spark.operators.graph import (
     triangle_counts,
 )
 
-from conftest import with_conf
+from conftest import spy_calls
 
 
 def _cc(spark, edges):
@@ -133,17 +133,23 @@ def test_pagerank_duplicate_edges_collapsed(spark):
         assert abs(a[k] - b[k]) < 1e-12
 
 
-def test_pagerank_kernel_matches_distributed_loop(spark):
+def test_pagerank_kernel_matches_distributed_loop(spark, monkeypatch):
     """The r11 single-task Arrow kernel (default below
-    spark.graft.pagerank_local_max_edges) must emit the same ranks as the
+    _PAGERANK_KERNEL_MAX_EDGES) must emit the same ranks as the
     distributed join+aggregate loop — including dangling-mass handling
     (node 7 has no out-edges) and hub asymmetry."""
+    from datafusion_parallelism_spark.operators import graph
+
     edges = [
         (1, 3), (2, 3), (4, 3), (3, 1), (1, 2), (5, 1), (3, 7), (6, 7),
     ]
+    calls = spy_calls(monkeypatch, graph, "_pagerank_arrow")
     kernel = _pr(spark, edges, damping=0.85, iterations=10)
-    with with_conf(spark, {"spark.graft.pagerank_local_max_edges": "0"}):
-        dist = _pr(spark, edges, damping=0.85, iterations=10)
+    assert calls
+    calls.clear()
+    monkeypatch.setattr(graph, "_PAGERANK_KERNEL_MAX_EDGES", 0)
+    dist = _pr(spark, edges, damping=0.85, iterations=10)
+    assert not calls
     assert kernel.keys() == dist.keys()
     for k in dist:
         assert abs(kernel[k] - dist[k]) < 1e-12
@@ -163,49 +169,62 @@ def test_pagerank_kernel_plan_is_single_arrow_pass(spark):
     assert "Join" not in plan, plan
 
 
-def test_cc_kernel_matches_distributed_loop(spark):
+def test_cc_kernel_matches_distributed_loop(spark, monkeypatch):
     """The r11 single-task CC kernel must emit the same labels AND the
     same iteration count as the distributed loop (it runs the identical
-    integer schedule)."""
+    integer schedule; _CC_KERNEL_MAX_EDGES=0 forces the loop)."""
+    from datafusion_parallelism_spark.operators import graph
+
     edges = [(1, 2), (2, 3), (10, 11), (12, 12), (5, 6), (6, 7), (7, 8)]
     df = spark.createDataFrame(edges, schema="u long, v long")
     k_stats, d_stats = {}, {}
+    calls = spy_calls(monkeypatch, graph, "_cc_arrow")
     kernel = {
         r.node: r.cluster
         for r in connected_components(df, stats=k_stats).collect()
     }
-    with with_conf(spark, {"spark.graft.cc_local_max_edges": "0"}):
-        dist = {
-            r.node: r.cluster
-            for r in connected_components(df, stats=d_stats).collect()
-        }
+    assert calls
+    calls.clear()
+    monkeypatch.setattr(graph, "_CC_KERNEL_MAX_EDGES", 0)
+    dist = {
+        r.node: r.cluster
+        for r in connected_components(df, stats=d_stats).collect()
+    }
+    assert not calls
     assert kernel == dist
     assert k_stats["iterations"] == d_stats["iterations"]
 
 
-def test_triangle_kernel_matches_distributed(spark):
+def test_triangle_kernel_matches_distributed(spark, monkeypatch):
     """r11 single-task triangle kernel ≡ distributed plan (exact integer
-    counts) on a graph where degree order disagrees with id order."""
+    counts) on a graph where degree order disagrees with id order;
+    _TRI_KERNEL_MAX_EDGES=0 forces the distributed plan."""
+    from datafusion_parallelism_spark.operators import graph
+
     raw = [(i, j) for i in range(10) for j in range(i + 1, 10) if (i * j) % 4 != 1]
     df = spark.createDataFrame(raw, schema="u long, v long")
+    calls = spy_calls(monkeypatch, graph, "_tri_arrow")
     kern = {r.node: r.triangles for r in triangle_counts(df).collect()}
-    with with_conf(spark, {"spark.graft.tri_local_max_edges": "0"}):
-        dist = {r.node: r.triangles for r in triangle_counts(df).collect()}
+    assert calls
+    calls.clear()
+    monkeypatch.setattr(graph, "_TRI_KERNEL_MAX_EDGES", 0)
+    dist = {r.node: r.triangles for r in triangle_counts(df).collect()}
+    assert not calls
     assert kern == dist
 
 
-@pytest.mark.parametrize("ceiling", ["0", None])
+@pytest.mark.parametrize("ceiling", [0, None])
 @pytest.mark.parametrize(
-    "op, key, kernel",
+    "op, const, kernel",
     [
-        (pagerank, "spark.graft.pagerank_local_max_edges", "_pagerank_arrow"),
-        (connected_components, "spark.graft.cc_local_max_edges", "_cc_arrow"),
-        (triangle_counts, "spark.graft.tri_local_max_edges", "_tri_arrow"),
+        (pagerank, "_PAGERANK_KERNEL_MAX_EDGES", "_pagerank_arrow"),
+        (connected_components, "_CC_KERNEL_MAX_EDGES", "_cc_arrow"),
+        (triangle_counts, "_TRI_KERNEL_MAX_EDGES", "_tri_arrow"),
     ],
     ids=["pagerank", "cc", "triangles"],
 )
 def test_empty_graph_on_both_sides_of_the_gate(
-    spark, monkeypatch, op, key, kernel, ceiling
+    spark, monkeypatch, op, const, kernel, ceiling
 ):
     """An empty edge table yields zero rows on the kernel (default ceiling)
     and on the distributed side (ceiling 0).  Ceiling 0 means kernel off
@@ -213,36 +232,30 @@ def test_empty_graph_on_both_sides_of_the_gate(
     from datafusion_parallelism_spark.operators import graph
     from datafusion_parallelism_spark.plans.shaping import physical_plan_str
 
-    calls = []
-    real = getattr(graph, kernel)
-
-    def spy(*args, **kwargs):
-        calls.append(kernel)
-        return real(*args, **kwargs)
-
-    monkeypatch.setattr(graph, kernel, spy)
+    calls = spy_calls(monkeypatch, graph, kernel)
+    if ceiling is not None:
+        monkeypatch.setattr(graph, const, ceiling)
     edges = spark.createDataFrame([], schema="u long, v long")
-    with with_conf(spark, {} if ceiling is None else {key: ceiling}):
-        out = op(edges)
-        plan = physical_plan_str(out)
-        assert out.count() == 0
+    out = op(edges)
+    plan = physical_plan_str(out)
+    assert out.count() == 0
     assert bool(calls) == (ceiling is None), calls
-    if ceiling == "0":
+    if ceiling == 0:
         assert "MapInArrow" not in plan, plan
 
 
-@pytest.mark.parametrize("ceiling", ["0", None])
+@pytest.mark.parametrize("ceiling", [0, None])
 @pytest.mark.parametrize(
-    "name, key",
+    "name, const",
     [
-        ("vec_kmeans_clusters", "spark.graft.km_local_train_max"),
-        ("vec_pq_codes", "spark.graft.pq_local_train_max"),
-        ("ann_pq_topk", "spark.graft.pq_local_train_max"),
+        ("vec_kmeans_clusters", "_KM_LOCAL_TRAIN_MAX_DIMS"),
+        ("vec_pq_codes", "_PQ_LOCAL_TRAIN_MAX_SUBV"),
+        ("ann_pq_topk", "_PQ_LOCAL_TRAIN_MAX_SUBV"),
     ],
     ids=["kmeans", "pq_codes", "pq_topk"],
 )
 def test_empty_corpus_on_both_sides_of_the_gate(
-    spark, tmp_path, name, key, ceiling
+    spark, monkeypatch, tmp_path, name, const, ceiling
 ):
     """A 0-row embeddings table yields zero rows from k-means and PQ with
     the one-task trainer (default ceiling) and with the distributed one
@@ -250,7 +263,7 @@ def test_empty_corpus_on_both_sides_of_the_gate(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from datafusion_parallelism_spark.queries import REGISTRY
+    from datafusion_parallelism_spark.queries import REGISTRY, llm
 
     schema = pa.schema(
         [
@@ -260,5 +273,6 @@ def test_empty_corpus_on_both_sides_of_the_gate(
         ]
     )
     pq.write_table(schema.empty_table(), tmp_path / "embeddings.parquet")
-    with with_conf(spark, {} if ceiling is None else {key: ceiling}):
-        assert REGISTRY[name].fn(spark, str(tmp_path)).count() == 0
+    if ceiling is not None:
+        monkeypatch.setattr(llm, const, ceiling)
+    assert REGISTRY[name].fn(spark, str(tmp_path)).count() == 0

@@ -32,13 +32,14 @@ def test_stop_shingle_ceiling_prunes_hot_shingles(spark):
 
     from datafusion_parallelism_spark.queries.llm import (
         SHINGLE_DF_CEILING,
-        _blocked_shingle_index,
+        _blocked_index_from_arrays,
+        _doc_shingles,
     )
 
     hot = SHINGLE_DF_CEILING + 10
     docs = [(i, "common boiler plate " + f"unique{i} token{i} tail{i}") for i in range(hot)]
     d = spark.createDataFrame(docs, "doc_id long, text string")
-    idx = _blocked_shingle_index(d, 4)
+    idx = _blocked_index_from_arrays(_doc_shingles(d), 4)
     shingles = {r.s for r in idx.select("s").distinct().collect()}
     # 'common boiler plate' appears in every doc (> ceiling) -> pruned;
     # the per-doc unique shingles (df == 1) survive.
@@ -46,8 +47,7 @@ def test_stop_shingle_ceiling_prunes_hot_shingles(spark):
     assert any(s.startswith("plate unique") for s in shingles)
     # and no surviving shingle exceeds the ceiling
     dfs = (
-        _blocked_shingle_index(d, 4)
-        .groupBy("s")
+        idx.groupBy("s")
         .agg(F.count(F.lit(1)).alias("df"))
         .agg(F.max("df"))
         .collect()[0][0]

@@ -330,33 +330,36 @@ def test_agg_count_distinct_split_no_expand(spark, sf_dir):
     assert plan.count("HashAggregate") >= 8, plan
 
 
-def test_pagerank_iteration_plan_is_truncated(spark):
+def test_pagerank_iteration_plan_is_truncated(spark, monkeypatch):
     """localCheckpoint must keep each iteration's plan O(1) deep: the
     final rank DataFrame's physical plan may reference checkpointed RDDs
     but not re-derive the full 10-iteration join chain."""
-    from datafusion_parallelism_spark.operators.graph import pagerank
+    from datafusion_parallelism_spark.operators import graph
 
     edges = spark.createDataFrame(
         [(i, (i + 1) % 6) for i in range(6)], schema="u long, v long"
     )
     # Kill the r11 small-graph Arrow kernel so this keeps pinning the
     # DISTRIBUTED loop's plan shape (the kernel path has no joins at all).
-    with with_conf(spark, {"spark.graft.pagerank_local_max_edges": "0"}):
-        plan = physical_plan_str(pagerank(edges, iterations=4))
+    monkeypatch.setattr(graph, "_PAGERANK_KERNEL_MAX_EDGES", 0)
+    plan = physical_plan_str(graph.pagerank(edges, iterations=4))
     assert "Scan ExistingRDD" in plan, plan
     # One iteration = one edges-ranks join; a non-truncated plan would
     # contain 4+ joins.
     assert plan.count("Join") <= 2, plan
 
 
-def test_triangle_corners_single_generator_pass(spark, sf_dir):
+def test_triangle_corners_single_generator_pass(spark, monkeypatch, sf_dir):
     """The per-corner count must come from ONE explode over the triangle
     list, not a 3-way union of projections — union would inline the
     wedge-join subtree three times (ReusedExchange dedupes the shuffle
     writes but each copy re-reads and re-joins; measured 22-exchange plan
     vs 10).  Pin: exactly one LeftSemi (the closing-edge check), exactly
     one Generate (the corner explode), no BroadcastNestedLoop/cartesian."""
-    with with_conf(spark, {"spark.graft.tri_local_max_edges": "0"}):
+    from datafusion_parallelism_spark.operators import graph
+
+    with monkeypatch.context() as m:
+        m.setattr(graph, "_TRI_KERNEL_MAX_EDGES", 0)
         plan = physical_plan_str(
             REGISTRY["graph_triangle_counts"].fn(spark, sf_dir)
         )
@@ -371,28 +374,28 @@ def test_triangle_corners_single_generator_pass(spark, sf_dir):
     assert "Join" not in plan, plan
 
 
-def test_triangle_wedge_table_never_sorted(spark):
+def test_triangle_wedge_table_never_sorted(spark, monkeypatch):
     """Round-10 contract: the Σ outdeg² wedge table streams through a
     ShuffledHashJoin for the closing-edge semi probe (build = edge-sized
     side) and the wedge join itself is also SHJ — under the SMJ planner
     default the semi join SORTED the whole wedge table (29 GB of x256
     memory spill, r9 ledger item #3).  Pins: both joins shuffled-hash, no
     Sort anywhere in the plan."""
-    from datafusion_parallelism_spark.operators.graph import triangle_counts
+    from datafusion_parallelism_spark.operators import graph
 
     edges = spark.createDataFrame(
         [(i, j) for i in range(12) for j in range(i + 1, 12) if (i + j) % 3],
         schema="u long, v long",
     )
+    monkeypatch.setattr(graph, "_TRI_KERNEL_MAX_EDGES", 0)
     with with_conf(
         spark,
         {
             "spark.sql.autoBroadcastJoinThreshold": "-1",
             "spark.sql.adaptive.enabled": "true",
-            "spark.graft.tri_local_max_edges": "0",
         },
     ):
-        plan = physical_plan_str(triangle_counts(edges)).split(
+        plan = physical_plan_str(graph.triangle_counts(edges)).split(
             "== Initial Plan =="
         )[0]
         assert plan.count("ShuffledHashJoin") == 2, plan
@@ -400,30 +403,25 @@ def test_triangle_wedge_table_never_sorted(spark):
         assert "Sort " not in plan, plan
 
 
-def test_pagerank_final_plan_is_copartitioned_no_exchange(spark):
+def test_pagerank_final_plan_is_copartitioned_no_exchange(spark, monkeypatch):
     """The returned ranks view (nodes ⋈ final contribs, both checkpoint-
     partitioned at state width) must plan exchange-free: losing the
     src/node partitioning reuse would show up here as a new Exchange."""
-    from datafusion_parallelism_spark.operators.graph import pagerank
+    from datafusion_parallelism_spark.operators import graph
 
     edges = spark.createDataFrame(
         [(i, (i + 1) % 8) for i in range(8)] + [(0, 4), (2, 6)],
         schema="u long, v long",
     )
+    monkeypatch.setattr(graph, "_PAGERANK_KERNEL_MAX_EDGES", 0)
     # Benchmark-session posture below the AQE byte gate (session.py): with
     # AQE on, the checkpoint materializes under AdaptiveSparkPlan and its
     # LogicalRDD reports UnknownPartitioning, so the final join re-plans
     # exchanges it doesn't need — the co-partitioning contract this test
     # pins is the AQE-off small-input regime (and at real scale AQE's
     # runtime reuse makes its own call).
-    with with_conf(
-        spark,
-        {
-            "spark.sql.adaptive.enabled": "false",
-            "spark.graft.pagerank_local_max_edges": "0",
-        },
-    ):
-        plan = physical_plan_str(pagerank(edges, iterations=3))
+    with with_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
+        plan = physical_plan_str(graph.pagerank(edges, iterations=3))
     assert "Exchange" not in plan, plan
 
 
@@ -576,7 +574,7 @@ def test_pq_training_iteration_streams_without_sort_or_exchange(spark, sf_dir):
         ), txt
 
 
-def test_pagerank_pinned_nodes_side_no_exchange_under_aqe(spark):
+def test_pagerank_pinned_nodes_side_no_exchange_under_aqe(spark, monkeypatch):
     """The pagerank loop's exchange-free contract now holds under AQE-ON
     (round 10; previously only pinned AQE-off): the returned ranks view
     joins pinned nodes with the (deliberately un-pinned) contrib
@@ -584,20 +582,15 @@ def test_pagerank_pinned_nodes_side_no_exchange_under_aqe(spark):
     and no Sort; contrib's small dst-side re-exchange is the only one."""
     import re
 
-    from datafusion_parallelism_spark.operators.graph import pagerank
+    from datafusion_parallelism_spark.operators import graph
 
     edges = spark.createDataFrame(
         [(i, (i + 1) % 8) for i in range(8)] + [(0, 4), (2, 6)],
         schema="u long, v long",
     )
-    with with_conf(
-        spark,
-        {
-            "spark.sql.adaptive.enabled": "true",
-            "spark.graft.pagerank_local_max_edges": "0",
-        },
-    ):
-        plan = physical_plan_str(pagerank(edges, iterations=3)).split(
+    monkeypatch.setattr(graph, "_PAGERANK_KERNEL_MAX_EDGES", 0)
+    with with_conf(spark, {"spark.sql.adaptive.enabled": "true"}):
+        plan = physical_plan_str(graph.pagerank(edges, iterations=3)).split(
             "== Initial Plan =="
         )[0]
     assert not re.search(r"Exchange hashpartitioning\(node#", plan), plan

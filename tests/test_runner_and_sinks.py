@@ -12,6 +12,8 @@ from datafusion_parallelism_spark.sources.memory import (
     release_tables,
 )
 
+from conftest import with_conf
+
 
 def test_write_csv_roundtrip(spark, sf_dir, tmp_path):
     df = load(spark, sf_dir, "nation")
@@ -44,9 +46,26 @@ def test_materialize_tables_serves_cache(spark, sf_dir):
         release_tables(dfs)
 
 
+#: The runtime confs ``benchmark_session`` sets on the session it reuses.
+_RUNNER_CONFS = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+
+
+def _run_isolated(spark, argv):
+    """``runner.run`` reuses the shared test session through
+    ``benchmark_session``, which turns AQE off below its input-size gate.
+    Hold both confs it sets so later test files keep the session as
+    conftest built it."""
+    before = {k: spark.conf.get(k) for k in _RUNNER_CONFS}
+    with with_conf(spark, before):
+        report = runner.run(argv)
+    assert {k: spark.conf.get(k) for k in _RUNNER_CONFS} == before
+    return report
+
+
 def test_runner_from_memory_mode(spark, sf_dir):
-    report = runner.run(
-        ["--data-path", sf_dir, "--query", "tpch_q6", "--iterations", "1", "--from-memory"]
+    report = _run_isolated(
+        spark,
+        ["--data-path", sf_dir, "--query", "tpch_q6", "--iterations", "1", "--from-memory"],
     )
     assert report["from_memory"] is True
     assert "tpch_q6" in report["queries"]
@@ -54,7 +73,8 @@ def test_runner_from_memory_mode(spark, sf_dir):
 
 def test_runner_cli_artifacts(spark, sf_dir, tmp_path):
     out = str(tmp_path / "results")
-    report = runner.run(
+    report = _run_isolated(
+        spark,
         [
             "--data-path", sf_dir,
             "--query", "tpch_q1",

@@ -18,8 +18,6 @@ from datafusion_parallelism_spark.streaming.events import (
     user_running_totals_stream,
 )
 
-from conftest import with_conf
-
 
 def _rows(df, *order):
     return [tuple(r) for r in df.orderBy(*order).collect()]
@@ -121,8 +119,8 @@ def test_run_to_table_matches_memory_sink_append(spark, sf_dir):
 
 def test_driver_bounded_routes_to_memory_sink(spark, sf_dir):
     """driver_bounded=True (time-range-bounded output) keeps the memory
-    sink — no parquet staging dir is created — and an explicit
-    spark.graft.stream_sink conf overrides the flag, with identical
+    sink — no parquet staging dir is created — while the default routes
+    the same stream through the parquet staging dir, with identical
     table content either way."""
     import os
     import shutil
@@ -139,15 +137,13 @@ def test_driver_bounded_routes_to_memory_sink(spark, sf_dir):
     mem_rows = _rows(t, "hour_start", "event_type")
     assert not os.path.isdir(staged)
     assert mem_rows
-    with with_conf(spark, {"spark.graft.stream_sink": "parquet"}):
-        t2 = run_to_table(
-            hourly_counts_stream(read_events_stream(spark, sf_dir)),
-            name,
-            output_mode="complete",
-            driver_bounded=True,
-        )
-        assert os.path.isdir(staged)
-        assert _rows(t2, "hour_start", "event_type") == mem_rows
+    t2 = run_to_table(
+        hourly_counts_stream(read_events_stream(spark, sf_dir)),
+        name,
+        output_mode="complete",
+    )
+    assert os.path.isdir(staged)
+    assert _rows(t2, "hour_start", "event_type") == mem_rows
 
 
 def test_bucketized_totals_emissions_match_per_user(spark, sf_dir):
