@@ -46,7 +46,7 @@ from ..functions.text import (
 )
 from ..functions.vectors import as_double, cosine, norm
 from ..plans.shaping import kernel_fits
-from ..session import load, spread_for_compute
+from ..session import load, parquet_num_rows, spread_for_compute
 from .registry import query
 
 # --------------------------------------------------------------------------
@@ -2874,17 +2874,72 @@ def _round_half_up(x, scale: int):
     return out
 
 
+#: Subvector rows per argmin chunk: the (rows × K) distance block stays
+#: ~130 MB at K=64 however many rows a kernel holds, where a whole
+#: (vectors × M × K) tensor at the _PQ_LOCAL_TRAIN_MAX_SUBV ceiling
+#: would take GBs.
+_PQ_CHUNK_ROWS = 1 << 18
+
+
+def _pq_nearest(j, e1, e2, a1, a2):
+    """Nearest anchor of each subvector row, in row chunks: (k, dmin)
+    with ``k`` a column index into the [M, k_eff] anchor arrays of row
+    ``j``.  Distances are the IEEE (e−a)·(e−a) sums the oracle SQL and
+    _pq_dists_from run (no power()); anchors are aid-sorted per subspace,
+    so argmin's first minimum IS the smallest aid — the oracle's
+    MIN(aid)-among-minima tie rule."""
+    import numpy as np
+
+    k = np.empty(len(j), np.int64)
+    dmin = np.empty(len(j), np.float64)
+    for lo in range(0, len(j), _PQ_CHUNK_ROWS):
+        sl = slice(lo, lo + _PQ_CHUNK_ROWS)
+        d = e1[sl, None] - a1[j[sl]]
+        d *= d
+        t = e2[sl, None] - a2[j[sl]]
+        t *= t
+        d += t
+        k[sl] = np.argmin(d, axis=1)
+        dmin[sl] = d[np.arange(len(d)), k[sl]]
+    return k, dmin
+
+
+def _pq_lloyd(vec, j, e1, e2):
+    """Seed + _PQ_ITERS Lloyd iterations over subvector rows (vec_id, j,
+    e1, e2) in NumPy; returns the aid-sorted [M, k_eff] arrays (aid, a1,
+    a2).  Value-identical to the distributed loop: the seed is the
+    subvectors of the k_eff = min(_PQ_K, #vectors) smallest vec_ids,
+    assignment is _pq_nearest, means are sum/count doubles rounded with
+    the exact HALF_UP replica (_round_half_up) and an empty cluster keeps
+    its anchor; the only difference is summation ORDER, which the
+    _PQ_ROUND grid absorbs by design (the same tolerance the oracle
+    comparison already rests on)."""
+    import numpy as np
+
+    m_sub = _PQ_M
+    uids = np.unique(vec)
+    k_eff = min(_PQ_K, len(uids))
+    smask = np.isin(vec, uids[:k_eff])
+    order = np.lexsort((vec[smask], j[smask]))
+    aid = vec[smask][order].reshape(m_sub, k_eff)
+    a1 = e1[smask][order].reshape(m_sub, k_eff).copy()
+    a2 = e2[smask][order].reshape(m_sub, k_eff).copy()
+    for _ in range(_PQ_ITERS):
+        jk = j * k_eff + _pq_nearest(j, e1, e2, a1, a2)[0]
+        cnt = np.bincount(jk, minlength=m_sub * k_eff)
+        s1 = np.bincount(jk, weights=e1, minlength=m_sub * k_eff)
+        s2 = np.bincount(jk, weights=e2, minlength=m_sub * k_eff)
+        nz = cnt > 0
+        a1.ravel()[nz] = _round_half_up(s1[nz] / cnt[nz], _PQ_ROUND)
+        a2.ravel()[nz] = _round_half_up(s2[nz] / cnt[nz], _PQ_ROUND)
+    return aid, a1, a2
+
+
 def _pq_train_local(subv: DataFrame) -> DataFrame:
-    """ONE-task Lloyd training: seed + every iteration (assign, means,
-    empty-cluster coalesce) inside a single ``mapInArrow`` task over the
-    checkpointed subvector table; emits the trained codebook (M·K rows).
-    Value-identical to the distributed loop: distances are the same IEEE
-    (e−a)·(e−a) ops, argmin over aid-sorted anchors reproduces the
-    MIN(aid) tie rule, means are sum/count doubles rounded with the
-    exact HALF_UP replica (_round_half_up); the only difference is
-    summation ORDER, which the _PQ_ROUND grid absorbs by design (the
-    same tolerance the oracle comparison already rests on)."""
-    iters, m_sub, k_anch, rnd = _PQ_ITERS, _PQ_M, _PQ_K, _PQ_ROUND
+    """ONE-task Lloyd training: _pq_lloyd inside a single ``mapInArrow``
+    task over the checkpointed subvector table; emits the trained
+    codebook (M·K rows)."""
+    m_sub = _PQ_M
 
     def kernel(batches):
         import numpy as np
@@ -2896,36 +2951,12 @@ def _pq_train_local(subv: DataFrame) -> DataFrame:
                 cols[i].append(b.column(i).to_numpy(zero_copy_only=False))
         if not cols[0]:
             return
-        vec = np.concatenate(cols[0])
-        j = np.concatenate(cols[1]).astype(np.int64)
-        e1 = np.concatenate(cols[2])
-        e2 = np.concatenate(cols[3])
-        uids = np.unique(vec)
-        k_eff = min(k_anch, len(uids))
-        seeds = uids[:k_eff]
-        smask = np.isin(vec, seeds)
-        order = np.lexsort((vec[smask], j[smask]))
-        aid = vec[smask][order].reshape(m_sub, k_eff)
-        a1 = e1[smask][order].reshape(m_sub, k_eff).copy()
-        a2 = e2[smask][order].reshape(m_sub, k_eff).copy()
-        for _ in range(iters):
-            codek = np.empty(len(vec), np.int64)
-            for lo in range(0, len(vec), 1 << 18):
-                sl = slice(lo, lo + (1 << 18))
-                d1 = e1[sl, None] - a1[j[sl]]
-                d2 = e2[sl, None] - a2[j[sl]]
-                codek[sl] = np.argmin(d1 * d1 + d2 * d2, axis=1)
-            jk = j * k_eff + codek
-            cnt = np.bincount(jk, minlength=m_sub * k_eff)
-            s1 = np.bincount(jk, weights=e1, minlength=m_sub * k_eff)
-            s2 = np.bincount(jk, weights=e2, minlength=m_sub * k_eff)
-            nz = cnt > 0
-            a1.ravel()[nz] = _round_half_up(s1[nz] / cnt[nz], rnd)
-            a2.ravel()[nz] = _round_half_up(s2[nz] / cnt[nz], rnd)
+        vec, j, e1, e2 = map(np.concatenate, cols)
+        aid, a1, a2 = _pq_lloyd(vec, j.astype(np.int64), e1, e2)
         yield pa.RecordBatch.from_arrays(
             [
                 pa.array(
-                    np.repeat(np.arange(m_sub, dtype=np.int32), k_eff)
+                    np.repeat(np.arange(m_sub, dtype=np.int32), aid.shape[1])
                 ),
                 pa.array(aid.ravel()),
                 pa.array(a1.ravel(), type=pa.float64()),
@@ -2970,15 +3001,10 @@ def _pq_assign_arrow(
     subv: DataFrame, aid, a1, a2, include_coords: bool
 ) -> DataFrame:
     """Nearest-anchor assignment as ONE vectorized Arrow pass (guide §4.2):
-    each batch computes the full (rows × K) squared-L2 distance matrix for
-    its subspaces with the identical IEEE ops _pq_dists_from and the
-    oracle SQL run ((e−a)·(e−a), no power()), then ``argmin`` per row.
-    In-cache NumPy instead of a broadcast join's K-way row expansion
-    (|corpus|·M·K intermediate rows); the codebook ([M,K] arrays, ~50 KB)
-    rides the task closure.  Ties: anchors are aid-sorted per subspace,
-    so argmin's first minimum IS the smallest aid — the oracle's
-    MIN(aid)-among-minima rule.  Emits (vec_id, j, code, dmin[, e1, e2])
-    in input row order."""
+    _pq_nearest per batch, in-cache NumPy instead of a broadcast join's
+    K-way row expansion (|corpus|·M·K intermediate rows); the codebook
+    ([M,K] arrays, ~50 KB) rides the task closure.  Emits (vec_id, j,
+    code, dmin[, e1, e2]) in input row order."""
     out_schema = "vec_id long, j int, code long, dmin double"
     names = ["vec_id", "j", "code", "dmin"]
     if include_coords:
@@ -2986,23 +3012,22 @@ def _pq_assign_arrow(
         names += ["e1", "e2"]
 
     def kernel(batches):
-        import numpy as np
         import pyarrow as pa
 
         for b in batches:
             j = b.column(1).to_numpy(zero_copy_only=False)
-            e1 = b.column(2).to_numpy(zero_copy_only=False)
-            e2 = b.column(3).to_numpy(zero_copy_only=False)
-            d1 = e1[:, None] - a1[j]
-            d2 = e2[:, None] - a2[j]
-            dist = d1 * d1 + d2 * d2
-            k = np.argmin(dist, axis=1)
-            rows = np.arange(len(k))
+            k, dmin = _pq_nearest(
+                j,
+                b.column(2).to_numpy(zero_copy_only=False),
+                b.column(3).to_numpy(zero_copy_only=False),
+                a1,
+                a2,
+            )
             cols = [
                 b.column(0),
                 b.column(1),
                 pa.array(aid[j, k]),
-                pa.array(dist[rows, k], type=pa.float64()),
+                pa.array(dmin, type=pa.float64()),
             ]
             if include_coords:
                 cols += [b.column(2), b.column(3)]
@@ -3172,41 +3197,143 @@ def vec_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric-distance (ADC) top-k over PQ codes: queries keep full
     vectors, the corpus is represented ONLY by its PQ codes, and each
-    query precomputes a lookup table of subspace distances to every
+    query precomputes a lookup table (LUT) of subspace distances to every
     anchor; a corpus vector's approximate distance is then M table
-    lookups summed — no corpus floats are ever touched at query time.
+    lookups summed — no corpus floats are touched at query time.
 
-    Scale shape: the LUT is |Q|·M·K rows (tiny — broadcasts at any corpus
-    size); the corpus side joins its codes against it map-side; the
-    per-query exact top-k runs as ONE window whose rank filter Spark
-    plans with a partial WindowGroupLimit — each map task forwards at
-    most k rows per query to the final window's exchange (verified in
-    docs/plans/ann_pq_topk.txt), the same two-phase exact-top-k argument
-    ann_bruteforce_topk implements manually inside its pandas stage.  In
-    a production index this ADC scan runs per IVF cell (ann_ivf_topk is
+    Scale shape: one size gate, read from the parquet footer (no Spark
+    job), picks the plan.  Below _PQ_LOCAL_TRAIN_MAX_SUBV subvectors the
+    whole pipeline — normalize, Lloyd training, corpus encoding, the
+    (Q, M, K) LUT, ADC and each query's top _TOPK — is ONE ``mapInArrow``
+    task over (vec_id, v0, nrm) (_pq_topk_arrow): no build-time job, no
+    broadcast, no corpus-side row expansion; at most Q·_TOPK rows reach
+    Spark's final rank window (docs/plans/ann_pq_topk.txt, one
+    MapInArrow and no Exchange below it).  Above the gate the corpus
+    side joins its codes against the broadcast LUT map-side and the exact
+    top-k rides Spark's partial WindowGroupLimit (_pq_adc_distributed).
+    Both sides give identical rows (tests/test_ann_quality.py).  In a
+    production index this ADC scan runs per IVF cell (ann_ivf_topk is
     the cell-pruning layer); flat ADC is the recall-1.0 baseline of that
     composition."""
-    e = load(spark, sf_dir, "embeddings")
-    subv, anch_df, arrays = _pq_model(spark, e)
-    # Corpus side: argmin via the Arrow kernel — no M·K expansion.
-    # Query side (the LUT) still needs the FULL per-anchor distance
-    # table, but only for the 10 query vectors: the Catalyst
-    # expression over the filtered subvector slice is trivial.
+    n_vecs = parquet_num_rows(os.path.join(sf_dir, "embeddings.parquet"))
+    return _pq_topk(load(spark, sf_dir, "embeddings"), n_vecs)
+
+
+def _pq_topk(vecs: DataFrame, n_vecs: int | None) -> DataFrame:
+    """ann_pq_topk over ``vecs`` (vec_id, embedding), given an upper
+    bound ``n_vecs`` on its row count (``None``: unknown, distributed).
+    The gate is _PQ_LOCAL_TRAIN_MAX_SUBV on the n_vecs·M subvector rows
+    that one-task training already holds; only the candidate stage
+    differs between the two sides, the rank window is shared."""
+    bound = None if n_vecs is None else n_vecs * _PQ_M
+    if kernel_fits(bound, _PQ_LOCAL_TRAIN_MAX_SUBV):
+        adc = _pq_topk_arrow(vecs)
+    else:
+        adc = _pq_adc_distributed(vecs)
+    wg = Window.partitionBy("qid").orderBy("adist", "vid")
+    return (
+        adc.withColumn("rk", F.row_number().over(wg))
+        .filter(F.col("rk") <= _TOPK)
+        .select("qid", "vid", F.round("adist", 6).alias("adist"), "rk")
+    )
+
+
+def _pq_adc_distributed(vecs: DataFrame) -> DataFrame:
+    """(qid, vid, adist) for every query × corpus pair above the gate:
+    the trained model (_pq_model), corpus codes from the Arrow assignment
+    kernel, and a map-side join of the codes against the broadcast
+    |Q|·M·K-row LUT summed per (qid, vid)."""
+    subv, anch_df, arrays = _pq_model(vecs.sparkSession, vecs)
     codes = _pq_assign_arrow(
-        subv.filter(F.col("vec_id") >= 10), *arrays, include_coords=False
+        subv.filter(F.col("vec_id") >= _N_QUERY_VECS),
+        *arrays,
+        include_coords=False,
     ).select("vec_id", "j", "code")
-    dists_q = _pq_dists_from(subv.filter(F.col("vec_id") < 10), anch_df)
+    dists_q = _pq_dists_from(
+        subv.filter(F.col("vec_id") < _N_QUERY_VECS), anch_df
+    )
     lut = dists_q.select(F.col("vec_id").alias("qid"), "j", "aid", "d2")
-    adc = (
+    return (
         codes.join(F.broadcast(lut), (codes["j"] == lut["j"]) & (codes["code"] == lut["aid"]))
         .groupBy(F.col("qid"), F.col("vec_id").alias("vid"))
         .agg(F.sum("d2").alias("adist"))
     )
-    wg = Window.partitionBy("qid").orderBy("adist", "vid")
+
+
+def _pq_topk_arrow(vecs: DataFrame) -> DataFrame:
+    """(qid, vid, adist): each query's _TOPK nearest corpus vectors by
+    (adist, vid), computed in ONE ``mapInArrow`` task over (vec_id, v0,
+    nrm) — the fused form of _pq_adc_distributed for inputs under the
+    gate.  Value-identical to it: elements are divided by the same
+    Spark-computed norm, training is _pq_lloyd, encoding is _pq_nearest
+    with the trained anchors, LUT entries are the same (e−a)·(e−a) sums,
+    and ADC adds the M lookups in j order, as Spark's SUM does over the
+    join rows.  An embedding whose length is not M·D raises ValueError
+    naming its vec_id."""
+    m_sub, width, n_q, topk = _PQ_M, _PQ_M * _PQ_D, _N_QUERY_VECS, _TOPK
+
+    def kernel(batches):
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        ids, rows, nrms = [], [], []
+        for b in batches:
+            vid = b.column(0).to_numpy(zero_copy_only=False)
+            v0 = b.column(1)
+            lens = pc.list_value_length(v0).fill_null(0).to_numpy()
+            bad = np.nonzero(lens != width)[0]
+            if len(bad):
+                i = bad[0]
+                raise ValueError(
+                    f"ann_pq_topk: embedding of vec_id {vid[i]} has "
+                    f"{lens[i]} elements, expected {width} "
+                    f"({m_sub} subspaces x {_PQ_D} dims)"
+                )
+            ids.append(vid)
+            rows.append(
+                v0.flatten().to_numpy(zero_copy_only=False).reshape(-1, width)
+            )
+            nrms.append(b.column(2).to_numpy(zero_copy_only=False))
+        if not ids:
+            return
+        vid = np.concatenate(ids)
+        order = np.argsort(vid, kind="stable")
+        vid = vid[order]
+        x = (np.concatenate(rows) / np.concatenate(nrms)[:, None])[order]
+        e1, e2 = x[:, 0::2], x[:, 1::2]
+        j = np.tile(np.arange(m_sub), len(vid))
+        aid, a1, a2 = _pq_lloyd(
+            np.repeat(vid, m_sub), j, e1.ravel(), e2.ravel()
+        )
+        corpus, query = vid >= n_q, vid < n_q
+        n_c = int(corpus.sum())
+        code = _pq_nearest(
+            j[: n_c * m_sub], e1[corpus].ravel(), e2[corpus].ravel(), a1, a2
+        )[0].reshape(n_c, m_sub)
+        d1 = e1[query][:, :, None] - a1
+        d2 = e2[query][:, :, None] - a2
+        lut = d1 * d1 + d2 * d2
+        adist = np.zeros((len(lut), n_c))
+        for jj in range(m_sub):
+            adist += lut[:, jj, code[:, jj]]
+        cid = vid[corpus]
+        for qid, row in zip(vid[query], adist):
+            top = np.lexsort((cid, row))[:topk]
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(np.full(len(top), qid)),
+                    pa.array(cid[top]),
+                    pa.array(row[top], type=pa.float64()),
+                ],
+                names=["qid", "vid", "adist"],
+            )
+
+    vd = as_double(F.col("embedding"))
     return (
-        adc.withColumn("rk", F.row_number().over(wg))
-        .filter(F.col("rk") <= 5)
-        .select("qid", "vid", F.round("adist", 6).alias("adist"), "rk")
+        vecs.select("vec_id", vd.alias("v0"), norm(vd).alias("nrm"))
+        .coalesce(1)
+        .mapInArrow(kernel, schema="qid long, vid long, adist double")
     )
 
 

@@ -2,6 +2,7 @@
 brute-force ground truth (the contract an ANN index actually makes —
 exactness is checked separately by each query's own oracle)."""
 
+import pytest
 
 from datafusion_parallelism_spark.queries import REGISTRY
 
@@ -86,13 +87,13 @@ def _rows_set(df):
     }
 
 
-def _local_vs_distributed(spark, monkeypatch, sf_dir, name, trainer, ceiling):
-    """Rows of query ``name`` with the one-task ``trainer`` (default below
+def _local_vs_distributed(spark, monkeypatch, sf_dir, name, kernel, ceiling):
+    """Rows of query ``name`` with the one-task ``kernel`` (default below
     its gate), then with the gate constant ``ceiling`` patched to 0 (the
-    distributed per-iteration trainer); the spy proves each side ran."""
+    distributed side); the spy proves each side ran."""
     from datafusion_parallelism_spark.queries import llm
 
-    calls = spy_calls(monkeypatch, llm, trainer)
+    calls = spy_calls(monkeypatch, llm, kernel)
     local = _rows_set(REGISTRY[name].fn(spark, sf_dir))
     assert calls
     calls.clear()
@@ -118,3 +119,81 @@ def test_km_distributed_training_matches_local(spark, monkeypatch, sf_dir_oracle
         "_km_train_local", "_KM_LOCAL_TRAIN_MAX_DIMS",
     )
     assert local == dist
+
+
+def test_pq_topk_fused_kernel_matches_distributed(spark, monkeypatch, sf_dir_oracle):
+    """Below the footer gate ann_pq_topk is one fused Arrow task; with the
+    gate at 0 it is the distributed model and broadcast-LUT join.  Both
+    must return identical rows."""
+    fused, dist = _local_vs_distributed(
+        spark, monkeypatch, sf_dir_oracle, "ann_pq_topk",
+        "_pq_topk_arrow", "_PQ_LOCAL_TRAIN_MAX_SUBV",
+    )
+    assert fused == dist
+
+
+def _pq_vectors(spark, rows):
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+def _random_vectors(ids, dim):
+    import numpy as np
+
+    rng = np.random.default_rng(11)
+    return [(i, rng.normal(size=dim).tolist()) for i in ids]
+
+
+@pytest.mark.parametrize(
+    "ids",
+    [
+        [0, 1, 2, *range(10, 30)],
+        [*range(10), 10, 11, 12],
+        list(range(10, 80)),
+        [],
+    ],
+    ids=["fewer_than_k", "fewer_corpus_than_topk", "no_queries", "empty"],
+)
+def test_pq_topk_degenerate_inputs_match_distributed(spark, monkeypatch, ids):
+    """The fused kernel on degenerate corpora: fewer vectors than _PQ_K,
+    fewer corpus vectors than _TOPK, no query vectors, and no rows at all.
+    Each gives the distributed side's rows (an unknown bound never fits
+    the gate); an empty table returns no rows and does not raise."""
+    from datafusion_parallelism_spark.queries import llm
+
+    calls = spy_calls(monkeypatch, llm, "_pq_topk_arrow")
+    vecs = _pq_vectors(spark, _random_vectors(ids, llm._PQ_M * llm._PQ_D))
+    fused = _rows_set(llm._pq_topk(vecs, len(ids)))
+    assert calls
+    dist = _rows_set(llm._pq_topk(vecs, None))
+    assert len(calls) == 1
+    assert fused == dist
+    n_q = sum(i < llm._N_QUERY_VECS for i in ids)
+    assert len(fused) == n_q * min(len(ids) - n_q, llm._TOPK)
+
+
+def test_pq_topk_rejects_embedding_of_wrong_length(spark):
+    """An embedding of 63 or 65 elements must not be reshaped into the
+    M·D grid (together they even fill it): the one kernel task raises a
+    ValueError naming the first such vec_id, and fails exactly once."""
+    from datafusion_parallelism_spark.queries import llm
+
+    width = llm._PQ_M * llm._PQ_D
+    rows = _random_vectors(range(14), width)
+    rows[11] = (11, rows[11][1][:-1])
+    rows[12] = (12, rows[12][1] + [0.5])
+    sc = spark.sparkContext
+    sc.setJobGroup("pq-topk-bad-length", "ann_pq_topk wrong embedding length")
+    try:
+        with pytest.raises(Exception) as err:
+            llm._pq_topk(_pq_vectors(spark, rows), len(rows)).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    msg = str(err.value)
+    assert "ValueError" in msg and "vec_id 11 has 63 elements" in msg, msg
+    tracker = sc.statusTracker()
+    stages = [
+        tracker.getStageInfo(sid)
+        for jid in tracker.getJobIdsForGroup("pq-topk-bad-length")
+        for sid in tracker.getJobInfo(jid).stageIds
+    ]
+    assert sum(st.numFailedTasks for st in stages if st is not None) == 1

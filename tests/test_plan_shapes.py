@@ -283,14 +283,44 @@ def test_pq_codebook_broadcasts_and_scan_prunes(spark, sf_dir):
     assert any("vec_id" in s and "embedding" in s for s in schemas), schemas
 
 
-def test_pq_adc_topk_uses_window_group_limit(spark, sf_dir):
-    """ann_pq_topk's exact top-k must plan with the partial
-    WindowGroupLimit (map-side k-row bound before the final window's
-    exchange) and join the LUT by broadcast — no corpus-side shuffle for
-    the lookup."""
+def test_pq_adc_topk_uses_window_group_limit(spark, sf_dir, monkeypatch):
+    """Above its size gate (ceiling patched to 0) ann_pq_topk's exact
+    top-k must plan with the partial WindowGroupLimit (map-side k-row
+    bound before the final window's exchange) and join the LUT by
+    broadcast — no corpus-side shuffle for the lookup."""
+    from datafusion_parallelism_spark.queries import llm
+
+    monkeypatch.setattr(llm, "_PQ_LOCAL_TRAIN_MAX_SUBV", 0)
     plan = physical_plan_str(REGISTRY["ann_pq_topk"].fn(spark, sf_dir))
     assert "WindowGroupLimit" in plan
     assert "BroadcastHashJoin" in plan
+
+
+def test_pq_adc_topk_below_gate_is_one_arrow_task(spark, sf_dir):
+    """Below the footer-read gate ann_pq_topk builds with zero Spark jobs
+    and plans as exactly one MapInArrow (train, encode, LUT, ADC and
+    top-k fused) over the scan: no broadcast join and no Exchange below
+    the kernel."""
+    import os
+
+    from datafusion_parallelism_spark.queries.llm import (
+        _PQ_LOCAL_TRAIN_MAX_SUBV,
+        _PQ_M,
+    )
+    from datafusion_parallelism_spark.session import parquet_num_rows
+
+    n = parquet_num_rows(os.path.join(sf_dir, "embeddings.parquet"))
+    assert n * _PQ_M <= _PQ_LOCAL_TRAIN_MAX_SUBV
+    # The memoized scan's schema read is table registration, not build.
+    load(spark, sf_dir, "embeddings")
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    jobs = scheduler.numTotalJobs()
+    df = REGISTRY["ann_pq_topk"].fn(spark, sf_dir)
+    assert scheduler.numTotalJobs() == jobs
+    plan = physical_plan_str(df)
+    assert plan.count("MapInArrow") == 1, plan
+    assert "BroadcastHashJoin" not in plan, plan
+    assert "Exchange" not in plan[plan.index("MapInArrow"):], plan
 
 
 def test_pii_redact_is_single_aggregation_no_python(spark, sf_dir):
