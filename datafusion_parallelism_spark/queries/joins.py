@@ -15,8 +15,16 @@ synthetic tables so every scenario is DuckDB-oracle-checkable:
 * left anti via NOT EXISTS (lib.rs:389-437)      → join_left_anti
 * right semi / right anti (lib.rs:515-574)       → join_right_semi / _anti
 
-All Spark sides use the DataFrame API through
-:func:`datafusion_parallelism_spark.operators.equi_join`.
+Entry point: like the reference's tests, each scenario is one SQL text
+that ``spark.sql`` runs over the registered views, and the same constant
+is its DuckDB oracle, so the measured text and the checked text cannot
+drift apart.  Five queries keep a DataFrame builder, each for the reason
+its docstring gives: ``join_inner_chain`` and ``join_left_semi`` are the
+DataFrame-API side of ``tests/test_entrypoint_parity.py``, the two
+null-key joins spread their probe side to session width, and
+``join_salted_hotkey`` runs the manual salted join.
+``tests/test_entrypoint_parity.py`` fails if any other query's plan stops
+being ``spark.sql`` of its oracle.
 """
 
 from __future__ import annotations
@@ -90,21 +98,18 @@ def join_inner_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "join_inner_dup_keys",
-    oracle="""
-    SELECT o_orderkey, o_totalprice, l_linenumber, l_quantity
-    FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-    WHERE o_totalprice > 400000
-    """,
-)
+_INNER_DUP_KEYS_SQL = """
+SELECT o_orderkey, o_totalprice, l_linenumber, l_quantity
+FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+WHERE o_totalprice > 400000
+"""
+
+
+@query("join_inner_dup_keys", oracle=_INNER_DUP_KEYS_SQL)
 def join_inner_dup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate build keys → row multiplication (lib.rs inner-join family:
     one order row fans out to each of its lineitems)."""
-    orders = load(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 400000)
-    lineitem = load(spark, sf_dir, "lineitem")
-    j = equi_join(orders, lineitem, [("o_orderkey", "l_orderkey")])
-    return j.select("o_orderkey", "o_totalprice", "l_linenumber", "l_quantity")
+    return sql(spark, sf_dir, _INNER_DUP_KEYS_SQL)
 
 
 @query(
@@ -129,98 +134,77 @@ def join_inner_null_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     return equi_join(customer, supplier, [("ck", "sk")]).select("c_custkey", "s_name")
 
 
-@query(
-    "join_left_outer",
-    oracle="""
-    SELECT n_nationkey, n_name, s_suppkey, s_name
-    FROM nation LEFT JOIN supplier ON n_nationkey = s_nationkey
-    """,
-)
+_LEFT_OUTER_SQL = """
+SELECT n_nationkey, n_name, s_suppkey, s_name
+FROM nation LEFT JOIN supplier ON n_nationkey = s_nationkey
+"""
+
+
+@query("join_left_outer", oracle=_LEFT_OUTER_SQL)
 def join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT OUTER: unmatched build rows emitted null-padded
-    (left_outer.rs:174-194 finalizer — in Spark, native ``how='left'``)."""
-    nation = load(spark, sf_dir, "nation")
-    supplier = load(spark, sf_dir, "supplier")
-    j = equi_join(nation, supplier, [("n_nationkey", "s_nationkey")], how="left")
-    return j.select("n_nationkey", "n_name", "s_suppkey", "s_name")
+    (left_outer.rs:174-194 finalizer — in Spark, a native LeftOuter join)."""
+    return sql(spark, sf_dir, _LEFT_OUTER_SQL)
 
 
-@query(
-    "join_right_outer",
-    oracle="""
-    SELECT s_suppkey, s_name, n_nationkey, n_name
-    FROM supplier RIGHT JOIN nation ON s_nationkey = n_nationkey
-    """,
-)
+_RIGHT_OUTER_SQL = """
+SELECT s_suppkey, s_name, n_nationkey, n_name
+FROM supplier RIGHT JOIN nation ON s_nationkey = n_nationkey
+"""
+
+
+@query("join_right_outer", oracle=_RIGHT_OUTER_SQL)
 def join_right_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RIGHT OUTER: unmatched probe rows null-padded per batch
-    (right_outer.rs append_right_indices — Spark ``how='right'``)."""
-    supplier = load(spark, sf_dir, "supplier")
-    nation = load(spark, sf_dir, "nation")
-    j = equi_join(supplier, nation, [("s_nationkey", "n_nationkey")], how="right")
-    return j.select("s_suppkey", "s_name", "n_nationkey", "n_name")
+    (right_outer.rs append_right_indices — a native RightOuter join)."""
+    return sql(spark, sf_dir, _RIGHT_OUTER_SQL)
 
 
-@query(
-    "join_full_outer",
-    oracle="""
-    SELECT c.nk AS cust_nation, s.sk AS supp_nation
-    FROM (SELECT DISTINCT c_nationkey AS nk FROM customer) c
-    FULL JOIN (SELECT DISTINCT s_nationkey AS sk FROM supplier) s
-      ON c.nk = s.sk
-    """,
-)
+_FULL_OUTER_SQL = """
+SELECT c.nk AS cust_nation, s.sk AS supp_nation
+FROM (SELECT DISTINCT c_nationkey AS nk FROM customer) c
+FULL JOIN (SELECT DISTINCT s_nationkey AS sk FROM supplier) s
+  ON c.nk = s.sk
+"""
+
+
+@query("join_full_outer", oracle=_FULL_OUTER_SQL)
 def join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL OUTER: unmatched rows from BOTH sides (full.rs:38-201)."""
-    c = load(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nk")).distinct()
-    s = load(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("sk")).distinct()
-    j = equi_join(c, s, [("nk", "sk")], how="full")
-    return j.select(F.col("nk").alias("cust_nation"), F.col("sk").alias("supp_nation"))
+    return sql(spark, sf_dir, _FULL_OUTER_SQL)
 
 
-@query(
-    "join_full_isnotnull",
-    oracle="""
-    SELECT c.nk AS cust_nation, s.sk AS supp_nation
-    FROM (SELECT DISTINCT c_nationkey AS nk FROM customer) c
-    FULL JOIN (SELECT DISTINCT s_nationkey AS sk FROM supplier) s
-      ON c.nk = s.sk
-    WHERE s.sk IS NOT NULL
-    """,
-)
+_FULL_ISNOTNULL_SQL = """
+SELECT c.nk AS cust_nation, s.sk AS supp_nation
+FROM (SELECT DISTINCT c_nationkey AS nk FROM customer) c
+FULL JOIN (SELECT DISTINCT s_nationkey AS sk FROM supplier) s
+  ON c.nk = s.sk
+WHERE s.sk IS NOT NULL
+"""
+
+
+@query("join_full_isnotnull", oracle=_FULL_ISNOTNULL_SQL)
 def join_full_isnotnull(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL + ``WHERE right IS NOT NULL`` — the reference asserts the
     planner simplifies this to a RIGHT join (lib.rs:475-487); Catalyst's
     EliminateOuterJoin does the same (asserted in tests/test_plans.py)."""
-    c = load(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nk")).distinct()
-    s = load(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("sk")).distinct()
-    j = equi_join(c, s, [("nk", "sk")], how="full").filter(F.col("sk").isNotNull())
-    return j.select(F.col("nk").alias("cust_nation"), F.col("sk").alias("supp_nation"))
+    return sql(spark, sf_dir, _FULL_ISNOTNULL_SQL)
 
 
-@query(
-    "join_full_residual",
-    oracle="""
-    SELECT n_name, s_name
-    FROM nation
-    FULL JOIN supplier
-      ON n_nationkey = s_nationkey AND s_acctbal > 1000
-    """,
-)
+_FULL_RESIDUAL_SQL = """
+SELECT n_name, s_name
+FROM nation
+FULL JOIN supplier
+  ON n_nationkey = s_nationkey AND s_acctbal > 1000
+"""
+
+
+@query("join_full_residual", oracle=_FULL_RESIDUAL_SQL)
 def join_full_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL with residual theta condition on the join (lib.rs:651-726:
     ``ON left.id = right.id AND left.value != right.value``) — the residual
     rejects some equi-matches, turning them into null-padded rows."""
-    nation = load(spark, sf_dir, "nation")
-    supplier = load(spark, sf_dir, "supplier")
-    j = equi_join(
-        nation,
-        supplier,
-        [("n_nationkey", "s_nationkey")],
-        how="full",
-        residual=F.col("s_acctbal") > 1000,
-    )
-    return j.select("n_name", "s_name")
+    return sql(spark, sf_dir, _FULL_RESIDUAL_SQL)
 
 
 @query(
@@ -245,108 +229,90 @@ def join_left_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     return j.select("c_custkey", "c_name")
 
 
-@query(
-    "join_left_anti",
-    oracle="""
-    SELECT c_custkey, c_name
-    FROM customer
-    WHERE NOT EXISTS (
-      SELECT 1 FROM orders
-      WHERE o_custkey = c_custkey AND o_totalprice > 300000
-    )
-    """,
+_LEFT_ANTI_SQL = """
+SELECT c_custkey, c_name
+FROM customer
+WHERE NOT EXISTS (
+  SELECT 1 FROM orders
+  WHERE o_custkey = c_custkey AND o_totalprice > 300000
 )
+"""
+
+
+@query("join_left_anti", oracle=_LEFT_ANTI_SQL)
 def join_left_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT ANTI — ``WHERE NOT EXISTS`` → LeftAnti (lib.rs:389-437).
     (Filtered orders side so the result is non-empty at every SF — the
     unfiltered variant is empty because every synthetic customer has
     orders, which would leave the anti path untested.)"""
-    customer = load(spark, sf_dir, "customer")
-    orders = load(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 300000)
-    j = equi_join(customer, orders, [("c_custkey", "o_custkey")], how="left_anti")
-    return j.select("c_custkey", "c_name")
+    return sql(spark, sf_dir, _LEFT_ANTI_SQL)
 
 
-@query(
-    "join_right_semi",
-    oracle="""
-    SELECT o_orderkey, o_totalprice
-    FROM orders
-    WHERE EXISTS (
-      SELECT 1 FROM customer
-      WHERE c_custkey = o_custkey AND c_mktsegment = 'BUILDING'
-    )
-    """,
+_RIGHT_SEMI_SQL = """
+SELECT o_orderkey, o_totalprice
+FROM orders
+WHERE EXISTS (
+  SELECT 1 FROM customer
+  WHERE c_custkey = o_custkey AND c_mktsegment = 'BUILDING'
 )
+"""
+
+
+@query("join_right_semi", oracle=_RIGHT_SEMI_SQL)
 def join_right_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RIGHT SEMI — probe-side rows with ≥1 build match (right_semi.rs:120).
-    Spark has no ``right_semi``; ``equi_join`` swaps inputs → left_semi,
-    matching the reference's role reversal."""
-    customer = load(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    orders = load(spark, sf_dir, "orders")
-    j = equi_join(customer, orders, [("c_custkey", "o_custkey")], how="right_semi")
-    return j.select("o_orderkey", "o_totalprice")
+    Spark has no right semi join; the EXISTS decorrelates to a LeftSemi
+    with orders on the left, matching the reference's role reversal."""
+    return sql(spark, sf_dir, _RIGHT_SEMI_SQL)
 
 
-@query(
-    "join_right_anti",
-    oracle="""
-    SELECT o_orderkey, o_totalprice
-    FROM orders
-    WHERE NOT EXISTS (
-      SELECT 1 FROM customer
-      WHERE c_custkey = o_custkey AND c_mktsegment = 'BUILDING'
-    )
-    """,
+_RIGHT_ANTI_SQL = """
+SELECT o_orderkey, o_totalprice
+FROM orders
+WHERE NOT EXISTS (
+  SELECT 1 FROM customer
+  WHERE c_custkey = o_custkey AND c_mktsegment = 'BUILDING'
 )
+"""
+
+
+@query("join_right_anti", oracle=_RIGHT_ANTI_SQL)
 def join_right_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RIGHT ANTI — probe-side rows with 0 build matches (right_anti.rs:121).
     The reference forces this shape by injecting fake statistics
-    (lib.rs:526-547); in Spark the swap is explicit."""
-    customer = load(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    orders = load(spark, sf_dir, "orders")
-    j = equi_join(customer, orders, [("c_custkey", "o_custkey")], how="right_anti")
-    return j.select("o_orderkey", "o_totalprice")
+    (lib.rs:526-547); in Spark the NOT EXISTS decorrelates to a LeftAnti
+    with orders on the left."""
+    return sql(spark, sf_dir, _RIGHT_ANTI_SQL)
 
 
-@query(
-    "join_theta_inner",
-    oracle="""
-    SELECT o_orderkey, l_linenumber, o_totalprice, l_extendedprice
-    FROM orders JOIN lineitem
-      ON o_orderkey = l_orderkey AND o_totalprice < l_extendedprice * 20
-    """,
-)
+_THETA_INNER_SQL = """
+SELECT o_orderkey, l_linenumber, o_totalprice, l_extendedprice
+FROM orders JOIN lineitem
+  ON o_orderkey = l_orderkey AND o_totalprice < l_extendedprice * 20
+"""
+
+
+@query("join_theta_inner", oracle=_THETA_INNER_SQL)
 def join_theta_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inner equi-join + residual theta condition (lib.rs:672-677 shape).
     Catalyst keeps the non-equi predicate as the hash join's residual filter
     — same execution strategy as the reference's JoinFilter."""
-    orders = load(spark, sf_dir, "orders")
-    lineitem = load(spark, sf_dir, "lineitem")
-    j = equi_join(
-        orders,
-        lineitem,
-        [("o_orderkey", "l_orderkey")],
-        residual=F.col("o_totalprice") < F.col("l_extendedprice") * 20,
-    )
-    return j.select("o_orderkey", "l_linenumber", "o_totalprice", "l_extendedprice")
+    return sql(spark, sf_dir, _THETA_INNER_SQL)
 
 
-@query(
-    "join_cross",
-    oracle="""
-    SELECT n_name, r_name FROM nation CROSS JOIN region
-    """,
-)
+_CROSS_SQL = """
+SELECT n_name, r_name FROM nation CROSS JOIN region
+"""
+
+
+@query("join_cross", oracle=_CROSS_SQL)
 def join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit CROSS JOIN (capability envelope: DataFusion plans cross
     joins for unconstrained table pairs; the reference's custom rule leaves
-    them to the stock planner).  Spark requires the explicit crossJoin()
-    call — accidental cartesian products fail analysis, which is the right
-    guardrail at 100 TB; here both sides are broadcast-small dimensions."""
-    nation = load(spark, sf_dir, "nation")
-    region = load(spark, sf_dir, "region")
-    return nation.crossJoin(F.broadcast(region)).select("n_name", "r_name")
+    them to the stock planner).  Both sides are broadcast-small
+    dimensions, so Spark plans a BroadcastNestedLoopJoin with no shuffle
+    (pinned in tests/test_plan_shapes.py)."""
+    return sql(spark, sf_dir, _CROSS_SQL)
 
 
 @query(
@@ -429,17 +395,17 @@ def join_existence_mark(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sql(spark, sf_dir, _EXISTENCE_MARK_SQL)
 
 
-@query(
-    "join_part_basket",
-    oracle="""
-    SELECT a.l_partkey AS part_a, b.l_partkey AS part_b, COUNT(*) AS n_orders
-    FROM lineitem a
-    JOIN lineitem b
-      ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    GROUP BY 1, 2
-    HAVING COUNT(*) >= 2
-    """,
-)
+_PART_BASKET_SQL = """
+SELECT a.l_partkey AS part_a, b.l_partkey AS part_b, COUNT(*) AS n_orders
+FROM lineitem a
+JOIN lineitem b
+  ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+GROUP BY 1, 2
+HAVING COUNT(*) >= 2
+"""
+
+
+@query("join_part_basket", oracle=_PART_BASKET_SQL)
 def join_part_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket co-occurrence: part pairs appearing together in >= 2
     orders.  The pairwise expansion is BLOCKED by the order key (a
@@ -447,36 +413,23 @@ def join_part_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     once) — per-order fan-out is ~(items per order choose 2), bounded by
     TPC-H's ~7-line orders, so the join scales linearly in orders at any
     SF; the support filter is a post-aggregation HAVING."""
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a, b = li.alias("a"), li.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-        & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-    ).select(
-        F.col("a.l_partkey").alias("part_a"), F.col("b.l_partkey").alias("part_b")
-    )
-    return (
-        pairs.groupBy("part_a", "part_b")
-        .agg(F.count(F.lit(1)).alias("n_orders"))
-        .filter(F.col("n_orders") >= 2)
-    )
+    return sql(spark, sf_dir, _PART_BASKET_SQL)
 
 
-@query(
-    "join_value_bands",
-    oracle="""
-    WITH bands(band, lo, hi) AS (
-      VALUES ('low', 0.0, 50000.0),
-             ('mid', 50000.0, 200000.0),
-             ('high', 200000.0, 1000000.0)
-    )
-    SELECT b.band, COUNT(*) AS n, ROUND(SUM(o_totalprice), 2) AS total
-    FROM orders o
-    JOIN bands b ON o.o_totalprice >= b.lo AND o.o_totalprice < b.hi
-    GROUP BY b.band
-    """,
+_VALUE_BANDS_SQL = """
+WITH bands(band, lo, hi) AS (
+  VALUES ('low', 0.0, 50000.0),
+         ('mid', 50000.0, 200000.0),
+         ('high', 200000.0, 1000000.0)
 )
+SELECT b.band, COUNT(*) AS n, ROUND(SUM(o_totalprice), 2) AS total
+FROM orders o
+JOIN bands b ON o.o_totalprice >= b.lo AND o.o_totalprice < b.hi
+GROUP BY b.band
+"""
+
+
+@query("join_value_bands", oracle=_VALUE_BANDS_SQL)
 def join_value_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Non-equi range join against a tiny banding dimension: each order
     matched to its price band by BETWEEN-style predicates only — no equi
@@ -485,16 +438,4 @@ def join_value_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     general form when bands are DATA (loaded/updated at runtime); when
     bands are static they compile to a CASE expression instead
     (scalar_functions.bucket)."""
-    o = load(spark, sf_dir, "orders")
-    bands = spark.createDataFrame(
-        [("low", 0.0, 50000.0), ("mid", 50000.0, 200000.0), ("high", 200000.0, 1000000.0)],
-        schema="band string, lo double, hi double",
-    )
-    j = o.join(
-        F.broadcast(bands),
-        (F.col("o_totalprice") >= F.col("lo")) & (F.col("o_totalprice") < F.col("hi")),
-    )
-    return j.groupBy("band").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.sum("o_totalprice"), 2).alias("total"),
-    )
+    return sql(spark, sf_dir, _VALUE_BANDS_SQL)

@@ -46,7 +46,7 @@ from ..functions.text import (
 )
 from ..functions.vectors import as_double, cosine, norm
 from ..plans.shaping import kernel_fits
-from ..session import load, parquet_num_rows, spread_for_compute
+from ..session import load, parquet_num_rows, spread_for_compute, sql
 from .registry import query
 
 # --------------------------------------------------------------------------
@@ -1888,66 +1888,46 @@ def corpus_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "text_length_histogram",
-    oracle="""
-    SELECT CAST(floor(n_chars / 100.0) AS BIGINT) * 100 AS bucket_lo,
-           COUNT(*) AS n,
-           MIN(n_chars) AS min_chars,
-           MAX(n_chars) AS max_chars
-    FROM documents
-    GROUP BY 1
-    """,
-)
+_TEXT_LENGTH_HISTOGRAM_SQL = """
+SELECT CAST(floor(n_chars / 100.0) AS BIGINT) * 100 AS bucket_lo,
+       COUNT(*) AS n,
+       MIN(n_chars) AS min_chars,
+       MAX(n_chars) AS max_chars
+FROM documents
+GROUP BY 1
+"""
+
+
+@query("text_length_histogram", oracle=_TEXT_LENGTH_HISTOGRAM_SQL)
 def text_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document-length histogram (100-char buckets) — the distribution a
     truncation/packing policy is tuned against.  Map-side bucketing + one
     tiny aggregation; identical bucket arithmetic on both sides."""
-    d = load(spark, sf_dir, "documents")
-    bucket = (F.floor(F.col("n_chars") / F.lit(100.0)).cast("long") * 100).alias(
-        "bucket_lo"
-    )
-    return d.groupBy(bucket).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("n_chars").alias("min_chars"),
-        F.max("n_chars").alias("max_chars"),
-    )
+    return sql(spark, sf_dir, _TEXT_LENGTH_HISTOGRAM_SQL)
 
 
 _MIX_TEMPERATURE = 0.7  # alpha < 1 upweights small sources (multilingual mixing)
 
 
-@query(
-    "mix_temperature_sampling",
-    oracle=f"""
-    WITH c AS (SELECT source, COUNT(*) AS n FROM documents GROUP BY source)
-    SELECT source, n,
-           ROUND(POWER(n, {_MIX_TEMPERATURE}) / SUM(POWER(n, {_MIX_TEMPERATURE})) OVER (), 6)
-             AS weight,
-           CAST(ROUND(POWER(n, {_MIX_TEMPERATURE}) / SUM(POWER(n, {_MIX_TEMPERATURE})) OVER ()
-                      * SUM(n) OVER (), 0) AS BIGINT) AS target_rows
-    FROM c
-    """,
-)
+_MIX_TEMPERATURE_SAMPLING_SQL = f"""
+WITH c AS (SELECT source, COUNT(*) AS n FROM documents GROUP BY source)
+SELECT source, n,
+       ROUND(POWER(n, {_MIX_TEMPERATURE}) / SUM(POWER(n, {_MIX_TEMPERATURE})) OVER (), 6)
+         AS weight,
+       CAST(ROUND(POWER(n, {_MIX_TEMPERATURE}) / SUM(POWER(n, {_MIX_TEMPERATURE})) OVER ()
+                  * SUM(n) OVER (), 0) AS BIGINT) AS target_rows
+FROM c
+"""
+
+
+@query("mix_temperature_sampling", oracle=_MIX_TEMPERATURE_SAMPLING_SQL)
 def mix_temperature_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-based source re-weighting (w_i ∝ n_i^alpha, alpha=0.7 —
     the standard multilingual/multi-source mixing rule): per-source sampling
     weight and the target row budget at the current corpus size.  One
     aggregation to per-source counts (tiny at any SF), then window totals
     over the counts table — never over the corpus."""
-    from pyspark.sql import Window
-
-    d = load(spark, sf_dir, "documents")
-    c = d.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
-    w = Window.partitionBy()
-    pw = F.pow(F.col("n"), F.lit(_MIX_TEMPERATURE))
-    weight = pw / F.sum(pw).over(w)
-    return c.select(
-        "source",
-        "n",
-        F.round(weight, 6).alias("weight"),
-        F.round(weight * F.sum("n").over(w), 0).cast("long").alias("target_rows"),
-    )
+    return sql(spark, sf_dir, _MIX_TEMPERATURE_SAMPLING_SQL)
 
 
 _BIGRAMS_SQL = (

@@ -29,7 +29,6 @@ class QuerySpec:
     name: str
     fn: QueryFn
     oracle: Optional[str]
-    doc: str = ""
 
 
 REGISTRY: dict[str, QuerySpec] = {}
@@ -41,7 +40,7 @@ def query(name: str, oracle: Optional[str]) -> Callable[[QueryFn], QueryFn]:
     def deco(fn: QueryFn) -> QueryFn:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        REGISTRY[name] = QuerySpec(name=name, fn=fn, oracle=oracle, doc=fn.__doc__ or "")
+        REGISTRY[name] = QuerySpec(name=name, fn=fn, oracle=oracle)
         return fn
 
     return deco

@@ -1,13 +1,18 @@
-"""Property-based check: connected_components vs a union-find reference.
+"""Property-based checks: connected_components vs a union-find reference,
+pagerank vs NumPy power iteration, triangle_counts vs brute force.
 
 Random edge lists (self-loops, duplicate edges, both orientations, chain
-fragments) — the distributed min-label + pointer-jumping implementation
-(operators/graph.py) must produce exactly the min-node-id labeling that a
-sequential union-find derives."""
+fragments) — each operator (operators/graph.py) must produce exactly what
+the sequential reference derives.  Every property runs on both sides of
+the operator's kernel gate: at the default ceiling (these small graphs
+take the single-task Arrow kernel) and with the ceiling patched to 0
+(the distributed plan).  The ceiling-0 side runs fewer examples because
+each example there launches many more Spark jobs."""
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from datafusion_parallelism_spark.operators import graph
 from datafusion_parallelism_spark.operators.graph import connected_components
 
 edges_st = st.lists(
@@ -40,16 +45,31 @@ def _uf(edges):
     return out
 
 
-@given(edges=edges_st)
-@settings(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-def test_connected_components_matches_union_find(spark, edges):
+def _examples(n):
+    return settings(
+        max_examples=n,
+        deadline=None,
+        suppress_health_check=[HealthCheck.function_scoped_fixture],
+    )
+
+
+def _check_cc(spark, edges):
     df = spark.createDataFrame(edges, schema="u long, v long")
     got = {r.node: r.cluster for r in connected_components(df).collect()}
     assert got == _uf(edges)
+
+
+@given(edges=edges_st)
+@_examples(8)
+def test_connected_components_matches_union_find(spark, edges):
+    _check_cc(spark, edges)
+
+
+@given(edges=edges_st)
+@_examples(6)
+def test_connected_components_matches_union_find_at_ceiling_0(spark, monkeypatch, edges):
+    monkeypatch.setattr(graph, "_CC_KERNEL_MAX_EDGES", 0)
+    _check_cc(spark, edges)
 
 
 pr_edges_st = st.lists(
@@ -79,15 +99,9 @@ def _pr_numpy(edges, damping, iterations):
     return {nodes[i]: r[i] for i in range(n)}
 
 
-@given(edges=pr_edges_st)
-@settings(
-    max_examples=6,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-def test_pagerank_matches_numpy_on_random_graphs(spark, edges):
+def _check_pagerank(spark, edges):
     """Random digraphs (self-loops, duplicates, dangling nodes): the
-    distributed power iteration must agree with a sequential NumPy one to
+    power iteration must agree with a sequential NumPy one to
     float-summation-order tolerance, and ranks must stay a distribution."""
     from datafusion_parallelism_spark.operators.graph import pagerank
 
@@ -100,6 +114,19 @@ def test_pagerank_matches_numpy_on_random_graphs(spark, edges):
     assert abs(sum(got.values()) - 1.0) < 1e-10
 
 
+@given(edges=pr_edges_st)
+@_examples(6)
+def test_pagerank_matches_numpy_on_random_graphs(spark, edges):
+    _check_pagerank(spark, edges)
+
+
+@given(edges=pr_edges_st)
+@_examples(4)
+def test_pagerank_matches_numpy_on_random_graphs_at_ceiling_0(spark, monkeypatch, edges):
+    monkeypatch.setattr(graph, "_PAGERANK_KERNEL_MAX_EDGES", 0)
+    _check_pagerank(spark, edges)
+
+
 # ---------------------------------------------------------------------------
 # triangle_counts vs brute-force enumeration
 # ---------------------------------------------------------------------------
@@ -109,13 +136,7 @@ from itertools import combinations
 from datafusion_parallelism_spark.operators.graph import triangle_counts
 
 
-@given(edges_st)
-@settings(
-    max_examples=12,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-def test_triangle_counts_match_bruteforce(spark, edges):
+def _check_triangles(spark, edges):
     # normalize: simple undirected graph, u < v, no self-loops/dups
     simple = sorted({(min(u, v), max(u, v)) for u, v in edges if u != v})
     if not simple:
@@ -130,6 +151,19 @@ def test_triangle_counts_match_bruteforce(spark, edges):
     df = spark.createDataFrame(simple, "u long, v long")
     got = {r["node"]: r["triangles"] for r in triangle_counts(df).collect()}
     assert got == expected
+
+
+@given(edges_st)
+@_examples(12)
+def test_triangle_counts_match_bruteforce(spark, edges):
+    _check_triangles(spark, edges)
+
+
+@given(edges_st)
+@_examples(12)
+def test_triangle_counts_match_bruteforce_at_ceiling_0(spark, monkeypatch, edges):
+    monkeypatch.setattr(graph, "_TRI_KERNEL_MAX_EDGES", 0)
+    _check_triangles(spark, edges)
 
 
 # ---------------------------------------------------------------------------
