@@ -1,10 +1,9 @@
 from .asof import asof_join
 from .graph import connected_components
-from .joins import JOIN_TYPES, equi_join
+from .joins import equi_join
 from .skew import salted_join
 
 __all__ = [
-    "JOIN_TYPES",
     "asof_join",
     "connected_components",
     "equi_join",

@@ -1,28 +1,17 @@
-"""Hash-join surface: all eight join types + residual (theta) conditions.
+"""Equi hash join on a list of key-column pairs.
 
-Parity target: the reference's ``ParallelHashJoin`` operator and its
-per-join-type probe implementations —
+Parity target: the reference's ``ParallelHashJoin`` operator
+(``src/operator/parallel_hash_join.rs:17-167``), whose ``on`` list of
+(left expr, right expr) pairs this mirrors.  The reference's full surface
+— eight join types (``probe_lookup_implementation.rs:32-75``) and residual
+``JoinFilter`` conditions — runs as SQL text in ``queries/joins.py``,
+checked against DuckDB; this builder serves the DataFrame-API queries,
+which use inner and left-semi joins.
 
-* operator + dispatch: ``src/operator/parallel_hash_join.rs:17-167``,
-  ``src/operator/probe_lookup_implementation/probe_lookup_implementation.rs:32-75``
-  (supported set = Inner, Left, Right, Full, LeftSemi, LeftAnti, RightSemi,
-  RightAnti);
-* probe kernels: ``inner.rs:30-129``, ``left_outer.rs:39-194``,
-  ``full.rs:38-201``, ``left_semi.rs:38-179``, ``left_anti.rs:38-179``,
-  ``right_outer.rs``, ``right_semi.rs``, ``right_anti.rs``;
-* residual filter: ``JoinFilter`` applied post-probe
-  (``inner.rs:109-117``); null keys never match
-  (``null_equals_null = false``, ``use_parallel_hash_join_rule.rs:87-89``).
-
-Spark-native mapping: ``DataFrame.join`` already provides Inner/Left/Right/
-Full/LeftSemi/LeftAnti with per-task hash builds (ShuffledHashJoinExec) or
-broadcast builds (BroadcastHashJoinExec) — the build-parallelism the
-reference implements by hand is Spark's stage/task model.  RightSemi and
-RightAnti are not distinct Spark join types; they are the same operator with
-the inputs swapped, which is exactly how we express them (the reference
-derives them the same way: the probe side changes roles,
-``right_semi.rs:120``).  Residual theta conditions become compound join
-conditions that Catalyst keeps as the hash join's non-equi filter.
+Spark-native mapping: ``DataFrame.join`` provides per-task hash builds
+(ShuffledHashJoinExec) or broadcast builds (BroadcastHashJoinExec) — the
+build-parallelism the reference implements by hand is Spark's stage/task
+model.
 
 Null semantics: Spark's ``=`` inside a join condition never matches NULLs —
 identical to the reference.  (Spark's null-safe ``<=>`` exists but is
@@ -31,21 +20,9 @@ deliberately not used: the reference rejects ``null_equals_null=true``.)
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Sequence
 
-from pyspark.sql import Column, DataFrame
-
-#: Join types the reference supports (probe_lookup_implementation.rs:32-43).
-JOIN_TYPES = (
-    "inner",
-    "left",
-    "right",
-    "full",
-    "left_semi",
-    "left_anti",
-    "right_semi",
-    "right_anti",
-)
+from pyspark.sql import DataFrame
 
 
 def equi_join(
@@ -53,35 +30,21 @@ def equi_join(
     right: DataFrame,
     on: Sequence[tuple[str, str]],
     how: str = "inner",
-    residual: Optional[Column] = None,
 ) -> DataFrame:
-    """Equi hash join with optional residual (theta) condition.
+    """Equi hash join of ``left`` and ``right``, ``how`` = ``inner`` or
+    ``left_semi``.
 
     ``on`` is a list of (left_col, right_col) pairs — the reference's
-    ``Vec<(PhysicalExprRef, PhysicalExprRef)>`` (parallel_hash_join.rs:24).
-    ``residual`` is an arbitrary boolean Column over both inputs — the
-    reference's ``JoinFilter`` (parallel_hash_join.rs:25).
-
-    ``right_semi`` / ``right_anti`` swap the inputs and run ``left_semi`` /
-    ``left_anti`` — output columns are the RIGHT input's columns, matching
-    the reference (right_semi.rs emits probe-side rows).
+    ``Vec<(PhysicalExprRef, PhysicalExprRef)>`` (parallel_hash_join.rs:24)
+    — joined as one conjunction of equalities.
 
     Scale note: no hints are applied here — Catalyst picks broadcast vs
     shuffled-hash vs sort-merge from statistics, and AQE can switch strategy
     at runtime.  Callers that know a side is small should wrap it in
     ``F.broadcast`` themselves.
     """
-    if how not in JOIN_TYPES:
-        raise ValueError(f"unsupported join type {how!r}; expected one of {JOIN_TYPES}")
-
-    if how in ("right_semi", "right_anti"):
-        swapped = [(r, l) for l, r in on]
-        return equi_join(right, left, swapped, how.replace("right_", "left_"), residual)
-
     cond = None
     for lcol, rcol in on:
         c = left[lcol] == right[rcol]
         cond = c if cond is None else (cond & c)
-    if residual is not None:
-        cond = residual if cond is None else (cond & residual)
     return left.join(right, cond, how)

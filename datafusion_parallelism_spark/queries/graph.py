@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.graph import pagerank, triangle_counts
+from ..operators.pairs import cap_groups, pair_counts
 from ..session import load
 from .registry import query
 
@@ -175,9 +176,7 @@ _TRI_MIN_SHARED = 2  # orders a part pair must co-occur in to form an edge
 #: counts) and the exclusion is mirrored in the oracle.  64 is ~10x the
 #: largest real basket in the driver data (TPC-H orders have <= 7
 #: lineitems), so the cap is inert on sane data and only disarms
-#: adversarial skew; callers that need drop observability pass
-#: co_purchase_edges an opt-in ``capped_counter`` (the registered query
-#: skips it — the counter costs one extra scalar aggregation).
+#: adversarial skew.
 _TRI_MAX_BASKET = 64
 
 _TRIANGLE_ORACLE = f"""
@@ -258,56 +257,19 @@ def graph_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def co_purchase_edges(
-    pu: DataFrame,
-    max_basket: int = _TRI_MAX_BASKET,
-    min_shared: int = _TRI_MIN_SHARED,
-    capped_counter: list | None = None,
-) -> DataFrame:
+def co_purchase_edges(pu: DataFrame) -> DataFrame:
     """(order, part) pairs -> undirected co-purchase edge list (u < v),
-    keeping pairs that co-occur in >= ``min_shared`` orders.
+    keeping pairs that co-occur in >= _TRI_MIN_SHARED orders.
 
     The per-order pair expansion is quadratic in basket size, so orders
-    with more than ``max_basket`` distinct parts are dropped BEFORE the
+    with more than _TRI_MAX_BASKET distinct parts are dropped BEFORE the
     self-join — the cap bounds the worst single-row fan-out at
-    max_basket^2/2 regardless of input skew.  Not silent: pass
-    ``capped_counter`` (a list) to receive the number of dropped orders;
-    the count costs one scalar aggregation over the per-order sizes.
-
-    Guard mechanics: a window COUNT over the same ``o`` partitioning the
-    pair self-join uses anyway — measured as the cheapest formulation
-    (+0.2 s at sf0.1 vs +0.6 s for a groupBy-sizes + broadcast-anti
-    variant, whose extra aggregation pass over pu costs more than the
-    window's in-partition sort)."""
-    from pyspark.sql import Window
-
-    sized = pu.withColumn(
-        "basket", F.count(F.lit(1)).over(Window.partitionBy("o"))
-    )
-    if capped_counter is not None:
-        capped_counter.append(
-            sized.filter(F.col("basket") > max_basket)
-            .select("o")
-            .distinct()
-            .count()
-        )
-    pruned = sized.filter(F.col("basket") <= max_basket).select("o", "p")
-    a, b = pruned.alias("a"), pruned.alias("b")
-    pairs = a.join(
-        b, (F.col("a.o") == F.col("b.o")) & (F.col("a.p") < F.col("b.p"))
-    ).select(F.col("a.p").alias("u"), F.col("b.p").alias("v"))
-    # STREAM the Σ basket² pair rows through a (u, v) exchange before the
-    # co-occurrence count (round 10) — the same partial-agg fallback class
-    # as the dedup pair counts (queries/llm.py _stream_pairs): a pair
-    # repeats once per SHARED ORDER, i.e. usually 1-2 times spread across
-    # different o-partitions, so the map-side partial aggregate combines
-    # ~nothing while its hash map falls back to sort-based aggregation
-    # and re-sorts the whole pair stream (the 10.4 GB x256 spill in the
-    # triangle setup stage, docs/spill_ledger_r10.jsonl).
+    _TRI_MAX_BASKET²/2 regardless of input skew.  ``pu`` arrives
+    hash-partitioned on ``o``, which the cap window and the pair
+    self-join both ride; operators/pairs.py counts the pairs."""
+    baskets = cap_groups(pu, "o", _TRI_MAX_BASKET)
     return (
-        pairs.repartition("u", "v")
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= min_shared)
+        pair_counts(baskets, "o", "p", ("u", "v"), "w")
+        .filter(F.col("w") >= _TRI_MIN_SHARED)
         .select("u", "v")
     )

@@ -45,6 +45,7 @@ from ..functions.text import (
     word_shingles,
 )
 from ..functions.vectors import as_double, cosine, norm
+from ..operators.pairs import cap_groups, count_pairs, pair_counts, partition_groups
 from ..plans.shaping import kernel_fits
 from ..session import load, parquet_num_rows, spread_for_compute, sql
 from .registry import query
@@ -263,71 +264,6 @@ def _shingle_table(d: DataFrame) -> DataFrame:
     return _doc_shingles(d).select("doc_id", F.explode("shingles").alias("s"))
 
 
-def _pair_parallelism(spark: SparkSession) -> int:
-    """Width for the blocked pair self-joins' explicit key repartitions:
-    max(cores, session shuffle width).  defaultParallelism alone (the
-    pre-round-10 choice) is a FIXED 32 on any corpus — at the x256
-    replica the session's data-proportional width is 128, and pinning
-    the index to 32 starved the join stages to a quarter of the
-    intended parallelism with 4x the per-task aggregate state.  The
-    session conf scales with input bytes (session.auto_shuffle_partitions)
-    and AQE coalesces any excess at small factors; the cores floor keeps
-    the historical fan-out guarantee (shingle explode ~50x the input
-    bytes the conf was sized from)."""
-    return max(
-        spark.sparkContext.defaultParallelism,
-        int(spark.conf.get("spark.sql.shuffle.partitions")),
-    )
-
-
-#: Pair-exchange width over the session width (see _stream_pairs).
-_PAIR_WIDTH_FACTOR = 4
-
-
-def _stream_pairs(pairs: DataFrame) -> DataFrame:
-    """Route a Σ df(key)² candidate-pair stream through a pair-keyed
-    exchange BEFORE its count aggregate (see winnow_pair_counts for the
-    x256 stage-counter evidence: the map-side partial aggregate combines
-    only ~2.5-3x — a pair sharing n keys lands in ~n different key
-    partitions — while its hash map exceeds the task memory share and
-    falls back to sort-based aggregation, re-sorting the whole stream;
-    28.6 GB of memory spill on dedup_ngram_jaccard's pair stage alone).
-    With the exchange below the aggregate, the join stage hash-routes
-    pair rows straight to the shuffle and each reduce task counts its
-    own pairs over an AQE-coalesced input — bounded state at any corpus
-    size.
-
-    The exchange width is EXPLICIT at _PAIR_WIDTH_FACTOR × session width
-    (r10): a column-only repartition inherits spark.sql.shuffle.partitions,
-    which is sized from INPUT bytes — but the pair stream is Σ df²,
-    superlinear in input, so the reduce-side count aggregate's hash map
-    grows per-task with scale (dedup_containment x64 ledger: 35 tasks,
-    30 GB aggregate peak ≈ 0.9 GB/task, 46 GB memory-spill under
-    32-concurrent-task pool contention).  AQE can coalesce an oversized
-    exchange but can never SPLIT an undersized one, so the width must
-    start data-ahead; the ×4 default buys one decade of pair-volume
-    growth and costs only smaller tasks where the stream is small."""
-    width = _PAIR_WIDTH_FACTOR * _pair_parallelism(pairs.sparkSession)
-    return pairs.repartition(width, "doc_a", "doc_b")
-
-
-def _blocked_index_from_arrays(arrays: DataFrame, n_part: int) -> DataFrame:
-    """Pair-join-ready inverted shingle index over a (doc_id, shingles, n)
-    table: repartitioned by shingle (co-partitions both self-join aliases)
-    with stop-shingles above SHINGLE_DF_CEILING removed.  The df filter is
-    a window COUNT over the same s-partitioning the join needs — zero
-    extra exchanges.  Taking the arrays lets callers that ALSO need the
-    per-doc set sizes share one tokenize+shingle pass instead of two."""
-    sh = arrays.select("doc_id", F.explode("shingles").alias("s")).repartition(
-        n_part, "s"
-    )
-    return (
-        sh.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("s")))
-        .filter(F.col("df") <= SHINGLE_DF_CEILING)
-        .select("doc_id", "s")
-    )
-
-
 def _shared_shingle_arrays(d: DataFrame) -> DataFrame:
     """(doc_id, shingles, n), lazily checkpointed for multi-consumer plans.
 
@@ -376,28 +312,15 @@ def _shared_pair_counts(
     (doc_a, doc_b, c) — the count of shingles each doc pair (doc_a <
     doc_b) shares — and ``cnt`` is (doc_id, n), the per-doc set size.
 
-    The index is repartitioned by the join key (co-partitions BOTH
-    aliases, so the join adds no further exchange) at data-proportional
-    width — see _pair_parallelism.  The pair count STREAMS through a
-    pair-keyed exchange (round 10, replacing the r2 map-side-combine
-    posture whose 16x-scale measurement predated the x256 evidence):
-    _stream_pairs."""
+    The inverted shingle index is the shingle arrays exploded to
+    (doc_id, s) rows, grouped on the shingle, with stop-shingles above
+    SHINGLE_DF_CEILING dropped; operators/pairs.py counts the pairs.
+    Taking the arrays lets the per-doc set sizes share the one
+    tokenize+shingle pass."""
     arrays = _shared_shingle_arrays(_docs_spread(spark, sf_dir))
-    sh = _blocked_index_from_arrays(arrays, _pair_parallelism(spark))
-    a, b = sh.alias("a"), sh.alias("b")
-    shared = (
-        _stream_pairs(
-            a.join(
-                b,
-                (F.col("a.s") == F.col("b.s"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            ).select(
-                F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-            )
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
+    sh = arrays.select("doc_id", F.explode("shingles").alias("s"))
+    capped = cap_groups(partition_groups(sh, "s"), "s", SHINGLE_DF_CEILING)
+    shared = pair_counts(capped, "s", "doc_id", ("doc_a", "doc_b"), "c")
     return shared, arrays.select("doc_id", "n")
 
 
@@ -463,7 +386,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     wrappers, chunked re-posts) in corpus curation.
 
     Same inverted-shingle-index plan as ``dedup_ngram_jaccard`` (blocked
-    self-join on the shingle value, map-side-combined pair counts,
+    self-join on the shingle value, operators/pairs.py pair counts,
     SHINGLE_DF_CEILING stop-shingle cap), only the final scoring
     expression differs — at 100 TB both queries share the Σ df(s)² cost
     profile, the stop-shingle ceiling, and the AQE skew-split mitigation
@@ -572,58 +495,17 @@ def winnow_fingerprints(
     )
 
 
-def winnow_capped_fingerprints(
-    fp: DataFrame, n_part: int, ceiling: int = WINNOW_FP_DF_CEILING
-) -> DataFrame:
-    """The pre-checkpoint subtree of ``winnow_pair_counts``: repartition
-    on h, then drop fingerprints with document frequency > ceiling.  The
-    df count is a window COUNT over the same h-partitioning the pair join
-    needs, so the cap costs zero extra exchanges, exactly like
-    ``_blocked_index_from_arrays`` — pinned by the exchange-count assert in
-    tests/test_plan_shapes.py (the executed query plan truncates at the
-    localCheckpoint, so this subtree is what makes the claim auditable;
-    its dump is the second section of docs/plans/dedup_winnow_spans.txt)."""
-    fp = fp.repartition(n_part, "h")
-    return (
-        fp.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("h")))
-        .filter(F.col("df") <= ceiling)
-        .select("doc_id", "h")
-    )
-
-
-def winnow_pair_counts(
-    fp: DataFrame, n_part: int, ceiling: int = WINNOW_FP_DF_CEILING
-) -> DataFrame:
+def winnow_pair_counts(fp: DataFrame, ceiling: int = WINNOW_FP_DF_CEILING) -> DataFrame:
     """(doc_a, doc_b, shared_fps) from a (doc_id, h) fingerprint table,
     pre-threshold.  Fingerprints appearing in more than ``ceiling``
     documents are dropped before the self-join (stop-fingerprint rule —
-    see WINNOW_FP_DF_CEILING and ``winnow_capped_fingerprints``)."""
-    fp = winnow_capped_fingerprints(fp, n_part, ceiling)
+    see WINNOW_FP_DF_CEILING); operators/pairs.py counts the pairs."""
+    fp = cap_groups(partition_groups(fp, "h"), "h", ceiling)
     # The self-join consumes fp twice and Spark has no cross-branch CSE:
     # without a checkpoint the fingerprint-selection stage — the heaviest
     # — would execute twice.  Same pattern as the MinHash band join.
     fp = fp.localCheckpoint(eager=False)
-    a, b = fp.alias("a"), fp.alias("b")
-    pairs = a.join(
-        b, (F.col("a.h") == F.col("b.h")) & (F.col("a.doc_id") < F.col("b.doc_id"))
-    ).select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-    # STREAM the Σ df(h)² pair rows through a pair-keyed exchange and
-    # count on the reduce side (round 10).  A plain groupBy here plans a
-    # map-side partial aggregate in the join stage, and the x256 stage
-    # counters showed what that costs: a pair sharing n fingerprints
-    # lands in ~n DIFFERENT h-partitions, so the partial agg only
-    # combined 2.0G pair rows to 793M (2.5x) while its per-task hash map
-    # exceeded the task's memory share and fell back to sort-based
-    # aggregation — 90.5 GB of memory spill, re-sorting the entire pair
-    # stream (the r9 ledger's #2 item, this round attributed to THIS
-    # stage, not the fingerprint window).  The explicit repartition puts
-    # the exchange BELOW the aggregate instead: the join stage writes
-    # pair rows straight to the shuffle (hash-route, no sort, no map),
-    # and each reduce task counts only its own pairs over an
-    # AQE-coalesced input — bounded state at any corpus size.
-    return pairs.repartition("doc_a", "doc_b").groupBy("doc_a", "doc_b").agg(
-        F.count(F.lit(1)).alias("shared_fps")
-    )
+    return pair_counts(fp, "h", "doc_id", ("doc_a", "doc_b"), "shared_fps")
 
 
 @query(
@@ -684,12 +566,11 @@ def dedup_winnow_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     JVM expressions."""
     d = _docs_spread(spark, sf_dir)
     fp = winnow_fingerprints(d)
-    n_part = _pair_parallelism(spark)
-    return winnow_pair_counts(fp, n_part).filter(F.col("shared_fps") >= WINNOW_T)
+    return winnow_pair_counts(fp).filter(F.col("shared_fps") >= WINNOW_T)
 
 
 def winnow_hot_pair_counts(
-    fp: DataFrame, n_part: int, ceiling: int = WINNOW_FP_DF_CEILING
+    fp: DataFrame, ceiling: int = WINNOW_FP_DF_CEILING
 ) -> DataFrame:
     """(doc_a, doc_b, shared_hot_fps) REPRESENTATIVE pairs for the
     fingerprints ``winnow_pair_counts`` drops (df > ceiling) — the recall
@@ -704,26 +585,21 @@ def winnow_hot_pair_counts(
     keep-one dedup drops the same documents the quadratic join would.
     Both windows (df count, representative min) ride the same
     h-repartitioning; there is no self-join at all."""
-    fp = fp.repartition(n_part, "h")
     w = Window.partitionBy("h")
     hot = (
-        fp.withColumn("df", F.count(F.lit(1)).over(w))
+        partition_groups(fp, "h")
+        .withColumn("df", F.count(F.lit(1)).over(w))
         .withColumn("rep", F.min("doc_id").over(w))
         .filter(F.col("df") > ceiling)
     )
-    # _stream_pairs: a (rep, member) pair repeats once per shared HOT
-    # fingerprint, dispersed across h-partitions — the same no-combine
-    # dispersion as the main pair count, and this path only matters on
-    # exactly the adversarial mass-duplicate inputs where the stream is
-    # large.
-    return (
-        _stream_pairs(
-            hot.filter(F.col("doc_id") > F.col("rep")).select(
-                F.col("rep").alias("doc_a"), F.col("doc_id").alias("doc_b")
-            )
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("shared_hot_fps"))
+    # A (rep, member) pair repeats once per shared HOT fingerprint,
+    # dispersed across h-partitions — the same no-combine dispersion as
+    # the main pair count, so it is counted the same way.
+    return count_pairs(
+        hot.filter(F.col("doc_id") > F.col("rep")).select(
+            F.col("rep").alias("doc_a"), F.col("doc_id").alias("doc_b")
+        ),
+        "shared_hot_fps",
     )
 
 
@@ -771,10 +647,7 @@ def dedup_winnow_hot_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     the semantics regardless."""
     d = _docs_spread(spark, sf_dir)
     fp = winnow_fingerprints(d)
-    n_part = _pair_parallelism(spark)
-    return winnow_hot_pair_counts(fp, n_part).filter(
-        F.col("shared_hot_fps") >= WINNOW_T
-    )
+    return winnow_hot_pair_counts(fp).filter(F.col("shared_hot_fps") >= WINNOW_T)
 
 
 def _minhash_sigs(d: DataFrame) -> DataFrame:
@@ -2765,52 +2638,45 @@ def _normalized_cols(vecs: DataFrame) -> DataFrame:
     ).repartition("vec_id")
 
 
-def _pq_subv(
-    vecs: DataFrame,
-    spark: SparkSession,
-    checkpoint: bool = True,
-    count_into: list | None = None,
-) -> DataFrame:
+def _pq_subv(vecs: DataFrame, spark: SparkSession) -> DataFrame:
     """(vec_id, j, e1, e2): every L2-NORMALIZED vector split into its M
     2-dim subvectors (cosine-PQ: unit vectors make squared-L2 rank like
     cosine).  The norm is computed ONCE per vector (_normalized_cols
     barrier); the M-way explode is a broadcast cross join — a pure map
-    over the corpus."""
+    over the corpus.  Lazy: tests assert scan pruning on this plan (the
+    checkpointed one has no visible file scan)."""
     pre = _normalized_cols(vecs)
     js = spark.range(_PQ_M).select(F.col("id").cast("int").alias("j"))
     idx1 = (F.col("j") * _PQ_D + 1).cast("int")
     idx2 = (F.col("j") * _PQ_D + 2).cast("int")
-    subv = pre.crossJoin(F.broadcast(js)).select(
+    return pre.crossJoin(F.broadcast(js)).select(
         "vec_id",
         "j",
         (F.element_at("v0", idx1) / F.col("nrm")).alias("e1"),
         (F.element_at("v0", idx2) / F.col("nrm")).alias("e2"),
     )
-    # One corpus shuffle total (the barrier repartition): vec_id
-    # partitioning is preserved through the broadcast cross join and
-    # localCheckpoint (same posture as _km_dims).
-    # checkpoint=False exposes the pre-checkpoint plan (tests assert scan
-    # pruning on it; the checkpointed plan has no visible file scan).
-    if not checkpoint:
-        return subv
-    # Pre-SORTED by (vec_id, j) and checkpointed with the metadata
-    # PINNED, so a per-(vec_id, j) aggregate over the table streams with
-    # no Sort and no Exchange even under AQE (a plain localCheckpoint
-    # erases both properties; see plans/shaping.checkpoint_pinned and
-    # test_pq_training_iteration_streams_without_sort_or_exchange).
+
+
+def _pq_subv_pinned(subv: DataFrame) -> tuple[DataFrame, int]:
+    """(checkpointed subv, its row count).
+
+    One corpus shuffle total (the _normalized_cols barrier repartition):
+    vec_id partitioning is preserved through the broadcast cross join and
+    localCheckpoint (same posture as _km_dims).  Pre-SORTED by (vec_id, j)
+    and checkpointed with the metadata PINNED, so a per-(vec_id, j)
+    aggregate over the table streams with no Sort and no Exchange even
+    under AQE (a plain localCheckpoint erases both properties; see
+    plans/shaping.checkpoint_pinned and
+    test_pq_training_iteration_streams_without_sort_or_exchange).  The row
+    count rides the (eager) checkpoint job as an observe metric — the
+    one-task-training gate reads it for free (round 11)."""
     from ..plans.shaping import checkpoint_pinned, presorted
 
-    pre_ckpt = presorted(subv, "vec_id", "j")
-    if count_into is None:
-        return checkpoint_pinned(pre_ckpt)
-    # Row count rides the (eager) checkpoint job as an observe metric —
-    # the one-task-training gate reads it for free (round 11).
     obs = Observation()
     out = checkpoint_pinned(
-        pre_ckpt.observe(obs, F.count(F.lit(1)).alias("m"))
+        presorted(subv, "vec_id", "j").observe(obs, F.count(F.lit(1)).alias("m"))
     )
-    count_into.append(obs.get["m"])
-    return out
+    return out, obs.get["m"]
 
 
 #: Subvector-row ceiling for ONE-TASK Lloyd training (round 11).  The
@@ -3062,9 +2928,8 @@ def _pq_model(spark: SparkSession, vecs: DataFrame):
     broadcast) and as [M,K] arrays for the assignment kernel.  Both
     trainers follow the DuckDB oracle's rule: argmin over the anchors,
     ties to MIN(aid), means rounded to the _PQ_ROUND grid."""
-    counted: list = []
-    subv = _pq_subv(vecs, spark, count_into=counted)
-    if kernel_fits(counted[0], _PQ_LOCAL_TRAIN_MAX_SUBV):
+    subv, n_subv = _pq_subv_pinned(_pq_subv(vecs, spark))
+    if kernel_fits(n_subv, _PQ_LOCAL_TRAIN_MAX_SUBV):
         # One-task fit; collecting the M·K codebook is the same
         # constant-size model-artifact materialization the
         # distributed loop already performs per iteration.

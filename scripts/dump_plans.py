@@ -2,13 +2,16 @@
 
 Writes ``<out_dir>/<query>_<suffix>.txt`` for each query, using the same
 benchmark_session conf as bench.py so the plans match what the bench
-executes.  Run once per commit with different suffixes (for example
-``before`` on the base commit, ``after`` on the change) to get paired
-plan evidence for a change.
+executes.  Expression ids (``#12``), ``plan_id=`` numbers and ``RDD[..]``
+ids are replaced by fixed tokens: they count objects built earlier in the
+process, so they shift between commits without any change of plan.  Run
+once per commit into its own directory (for example ``before/`` on the
+base commit, ``after/`` on the change); ``diff -r before/ after/`` is then
+the plan evidence for the change.
 
 Usage::
 
-    python scripts/dump_plans.py --out-dir plans/r11 --suffix after \
+    python scripts/dump_plans.py --out-dir plans/before --suffix sf0.1 \
         [--data-path /root/testdata/sf0.1] query [query ...]
 """
 
@@ -16,6 +19,7 @@ from __future__ import annotations
 
 import argparse
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -23,6 +27,16 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from datafusion_parallelism_spark.plans.shaping import explain_str  # noqa: E402
 from datafusion_parallelism_spark.queries import REGISTRY  # noqa: E402
 from datafusion_parallelism_spark.session import benchmark_session  # noqa: E402
+
+_IDS = ((re.compile(r"#\d+"), "#_"), (re.compile(r"plan_id=\d+"), "plan_id=_"),
+        (re.compile(r"RDD\[\d+\]"), "RDD[_]"))
+
+
+def strip_ids(plan: str) -> str:
+    """``plan`` with its process-dependent ids replaced by fixed tokens."""
+    for pat, token in _IDS:
+        plan = pat.sub(token, plan)
+    return plan
 
 
 def main() -> None:
@@ -47,7 +61,7 @@ def main() -> None:
         df = REGISTRY[name].fn(spark, args.data_path)
         path = os.path.join(args.out_dir, f"{name}_{args.suffix}.txt")
         with open(path, "w") as fh:
-            fh.write(explain_str(df))
+            fh.write(strip_ids(explain_str(df)))
         print(f"wrote {path}", flush=True)
 
 

@@ -168,24 +168,22 @@ def test_triangle_counts_match_bruteforce_at_ceiling_0(spark, monkeypatch, edges
 
 # ---------------------------------------------------------------------------
 # co_purchase_edges basket cap: a pathological star basket must be excluded
-# before the quadratic pair expansion, and the count must be reported
+# before the quadratic pair expansion
 # ---------------------------------------------------------------------------
 
 
 def test_basket_cap_excludes_star_order(spark):
     """One 10,000-part order (50M pairs if expanded) plus normal baskets:
     the capped derivation must (a) finish fast because the star is dropped
-    pre-join, (b) report exactly one capped order, (c) produce the same
-    edges and triangle counts as the star-free input."""
+    pre-join, (b) produce the same edges and triangle counts as the
+    star-free input."""
     from datafusion_parallelism_spark.queries.graph import co_purchase_edges
 
     normal = [(o, p) for o in range(1, 6) for p in (1, 2, 3)]  # 5 co-triangles
     star = [(999, p) for p in range(10_000)]
     pu = spark.createDataFrame(normal + star, "o long, p long")
-    capped = []
-    edges = co_purchase_edges(pu, capped_counter=capped)
+    edges = co_purchase_edges(pu)
     got = sorted((r.u, r.v) for r in edges.collect())
-    assert capped == [1]
     assert got == [(1, 2), (1, 3), (2, 3)]
     tri = {r.node: r.triangles for r in triangle_counts(edges).collect()}
     assert tri == {1: 1, 2: 1, 3: 1}
@@ -203,8 +201,6 @@ def test_basket_cap_inert_below_threshold(spark):
         + [(2, p) for p in range(_TRI_MAX_BASKET)],
         "o long, p long",
     )
-    capped = []
-    edges = co_purchase_edges(pu, capped_counter=capped)
-    assert capped == [0]
+    edges = co_purchase_edges(pu)
     # every pair co-occurs in both orders -> all C(64,2) edges survive
     assert edges.count() == _TRI_MAX_BASKET * (_TRI_MAX_BASKET - 1) // 2

@@ -2,12 +2,14 @@
 
 Goes beyond the reference's test strategy (SURVEY §5.5 notes it has no
 randomized testing): hypothesis generates key/value tables with nulls,
-duplicates, empty sides and disjoint domains, and every example is checked
-against DuckDB for a randomly chosen join type from the reference's
-supported set (probe_lookup_implementation.rs:32-43).  Null keys must never
-match (null_equals_null=false) and duplicate keys must multiply rows —
-exactly the edge cases the reference pins with hand-built batches
-(src/lib.rs:149-246).
+duplicates, empty sides and disjoint domains, and every example runs one
+SQL text through ``spark.sql`` over temp views ``l`` and ``r`` — the way
+the join corpus (queries/joins.py) runs — and checks it against DuckDB
+running the same text, for a randomly chosen join type from the
+reference's supported set (probe_lookup_implementation.rs:32-43).  Null
+keys must never match (null_equals_null=false) and duplicate keys must
+multiply rows — exactly the edge cases the reference pins with hand-built
+batches (src/lib.rs:149-246).
 """
 
 import duckdb
@@ -15,8 +17,6 @@ import pandas as pd
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-
-from datafusion_parallelism_spark.operators.joins import JOIN_TYPES, equi_join
 
 _ids = st.lists(st.one_of(st.none(), st.integers(0, 5)), min_size=0, max_size=8)
 
@@ -37,6 +37,21 @@ def _canon(rows):
     return sorted(out, key=repr)
 
 
+def _check(spark, lpdf, rpdf, sql, label):
+    """Run ``sql`` over tables ``l`` and ``r`` in Spark and in DuckDB."""
+    lcols = ", ".join(f"{c} long" for c in lpdf.columns)
+    rcols = ", ".join(f"{c} long" for c in rpdf.columns)
+    spark.createDataFrame(lpdf, schema=lcols).createOrReplaceTempView("l")
+    spark.createDataFrame(rpdf, schema=rcols).createOrReplaceTempView("r")
+    got = _canon(tuple(r) for r in spark.sql(sql).collect())
+
+    con = duckdb.connect()
+    con.register("l", lpdf)
+    con.register("r", rpdf)
+    want = _canon(con.execute(sql).fetchall())
+    assert got == want, f"{label}: spark={got} duckdb={want}"
+
+
 @settings(
     max_examples=30,
     deadline=None,
@@ -45,23 +60,14 @@ def _canon(rows):
 @given(
     lids=_ids,
     rids=_ids,
-    how=st.sampled_from(JOIN_TYPES),
+    how=st.sampled_from(tuple(_SQL)),
 )
 def test_equi_join_matches_duckdb(spark, lids, rids, how):
     lpdf = pd.DataFrame({"lid": pd.array(lids, dtype="Int64"),
                          "lv": pd.array(range(len(lids)), dtype="Int64")})
     rpdf = pd.DataFrame({"rid": pd.array(rids, dtype="Int64"),
                          "rv": pd.array(range(len(rids)), dtype="Int64")})
-
-    ldf = spark.createDataFrame(lpdf, schema="lid long, lv long")
-    rdf = spark.createDataFrame(rpdf, schema="rid long, rv long")
-    got = _canon(tuple(r) for r in equi_join(ldf, rdf, [("lid", "rid")], how=how).collect())
-
-    con = duckdb.connect()
-    con.register("l", lpdf)
-    con.register("r", rpdf)
-    want = _canon(con.execute(_SQL[how]).fetchall())
-    assert got == want, f"{how}: spark={got} duckdb={want}"
+    _check(spark, lpdf, rpdf, _SQL[how], how)
 
 
 @settings(max_examples=10, deadline=None,
@@ -74,24 +80,11 @@ def test_residual_filter_matches_duckdb(spark, lids, rids):
                          "lv": pd.array([i % 3 for i in range(len(lids))], dtype="Int64")})
     rpdf = pd.DataFrame({"rid": pd.array(rids, dtype="Int64"),
                          "rv": pd.array([i % 3 for i in range(len(rids))], dtype="Int64")})
-    ldf = spark.createDataFrame(lpdf, schema="lid long, lv long")
-    rdf = spark.createDataFrame(rpdf, schema="rid long, rv long")
-
-    con = duckdb.connect()
-    con.register("l", lpdf)
-    con.register("r", rpdf)
     for how, sql in [
         ("inner", "SELECT l.lid, l.lv, r.rid, r.rv FROM l JOIN r ON l.lid = r.rid AND l.lv != r.rv"),
         ("full", "SELECT l.lid, l.lv, r.rid, r.rv FROM l FULL JOIN r ON l.lid = r.rid AND l.lv != r.rv"),
     ]:
-        got = _canon(
-            tuple(r)
-            for r in equi_join(
-                ldf, rdf, [("lid", "rid")], how=how, residual=ldf["lv"] != rdf["rv"]
-            ).collect()
-        )
-        want = _canon(con.execute(sql).fetchall())
-        assert got == want, f"{how}: spark={got} duckdb={want}"
+        _check(spark, lpdf, rpdf, sql, how)
 
 
 @settings(max_examples=15, deadline=None,
@@ -112,15 +105,6 @@ def test_multi_key_join_matches_duckdb(spark, lids, rids, how):
         "rid2": pd.array([i % 2 for i in range(n_r)], dtype="Int64"),
         "rv": pd.array(range(n_r), dtype="Int64"),
     })
-    ldf = spark.createDataFrame(lpdf, schema="lid long, lid2 long, lv long")
-    rdf = spark.createDataFrame(rpdf, schema="rid long, rid2 long, rv long")
-    got = _canon(
-        tuple(r)
-        for r in equi_join(ldf, rdf, [("lid", "rid"), ("lid2", "rid2")], how=how).collect()
-    )
-    con = duckdb.connect()
-    con.register("l", lpdf)
-    con.register("r", rpdf)
     sql = {
         "inner": "SELECT l.*, r.* FROM l JOIN r ON l.lid = r.rid AND l.lid2 = r.rid2",
         "left": "SELECT l.*, r.* FROM l LEFT JOIN r ON l.lid = r.rid AND l.lid2 = r.rid2",
@@ -128,5 +112,4 @@ def test_multi_key_join_matches_duckdb(spark, lids, rids, how):
         "left_semi": "SELECT l.* FROM l WHERE EXISTS "
         "(SELECT 1 FROM r WHERE r.rid = l.lid AND r.rid2 = l.lid2)",
     }[how]
-    want = _canon(con.execute(sql).fetchall())
-    assert got == want, f"{how}: spark={got} duckdb={want}"
+    _check(spark, lpdf, rpdf, sql, how)

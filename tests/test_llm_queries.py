@@ -30,16 +30,19 @@ def test_stop_shingle_ceiling_prunes_hot_shingles(spark):
     pass through untouched."""
     from pyspark.sql import functions as F
 
+    from datafusion_parallelism_spark.operators.pairs import (
+        cap_groups,
+        partition_groups,
+    )
     from datafusion_parallelism_spark.queries.llm import (
         SHINGLE_DF_CEILING,
-        _blocked_index_from_arrays,
-        _doc_shingles,
+        _shingle_table,
     )
 
     hot = SHINGLE_DF_CEILING + 10
     docs = [(i, "common boiler plate " + f"unique{i} token{i} tail{i}") for i in range(hot)]
     d = spark.createDataFrame(docs, "doc_id long, text string")
-    idx = _blocked_index_from_arrays(_doc_shingles(d), 4)
+    idx = cap_groups(partition_groups(_shingle_table(d), "s"), "s", SHINGLE_DF_CEILING)
     shingles = {r.s for r in idx.select("s").distinct().collect()}
     # 'common boiler plate' appears in every doc (> ceiling) -> pruned;
     # the per-doc unique shingles (df == 1) survive.

@@ -10,6 +10,8 @@ import os
 
 from datafusion_parallelism_spark.session import auto_shuffle_partitions
 
+from conftest import with_conf
+
 MB = 1024 * 1024
 
 
@@ -213,26 +215,41 @@ def test_fanout_join_probe_side_is_spread(spark, sf_dir):
 
 
 def test_pair_exchange_width_is_data_ahead_4x(spark, sf_dir):
-    """Pin the Σdf² pair-width contract (VERDICT r10 item 7, settled as a
-    HARD BOUND rather than a derived estimate): the candidate-pair
-    exchange starts 4× the session width — one decade of pair-volume
+    """Pin the Σn² pair-width rule of operators/pairs.py at all five pair
+    sites, under both AQE settings: the pair-keyed exchange runs at
+    4 × max(cores, session width) with AQE on — one decade of pair-volume
     headroom over the input-sized session conf, measured spill-free
-    through x256 — because AQE can coalesce an oversized exchange but can
-    never split an undersized one.  A derived Σdf² width was considered
+    through x256 — and at 1 × with AQE off, the small-input posture where
+    extra reducers only cost CPU (graph_triangle_counts at sf0.01, 4 cores:
+    median 1.90 s CPU at 1x vs 2.29 s at 4x).  A derived Σn² width was considered
     and rejected twice (r10, r11): the estimate needs an eager
-    materialization of the lazy shingle explode inside every query path.
-    If a deployment outgrows the decade, raise
-    queries/llm.py _PAIR_WIDTH_FACTOR — this test documents that contract."""
-    from pyspark.sql import functions as F
+    materialization of the lazy pair input inside every query path.  If a
+    deployment outgrows the decade, raise operators/pairs.py
+    _PAIR_WIDTH_FACTOR — this test documents that contract."""
+    import re
 
-    from datafusion_parallelism_spark.queries.llm import (
-        _pair_parallelism,
-        _stream_pairs,
-    )
+    from datafusion_parallelism_spark.queries import REGISTRY
+    from datafusion_parallelism_spark.queries.graph import co_purchase_edges
 
-    pairs = spark.range(100).select(
-        F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b")
+    base = max(
+        spark.sparkContext.defaultParallelism,
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
     )
-    width = 4 * _pair_parallelism(spark)
-    plan = _stream_pairs(pairs)._jdf.queryExecution().sparkPlan().toString()
-    assert f"hashpartitioning(doc_a#" in plan and f", {width})" in plan, plan
+    pair_key = re.compile(r"hashpartitioning\((?:doc_a|u)#\d+L?, (?:doc_b|v)#\d+L?, (\d+)\)")
+    for aqe, want in (("true", 4 * base), ("false", base)):
+        with with_conf(spark, {"spark.sql.adaptive.enabled": aqe}):
+            pu = spark.createDataFrame([(1, 1), (1, 2), (2, 1), (2, 2)], "o long, p long")
+            sites = {
+                name: REGISTRY[name].fn(spark, sf_dir)
+                for name in (
+                    "dedup_ngram_jaccard",
+                    "dedup_containment",
+                    "dedup_winnow_spans",
+                    "dedup_winnow_hot_spans",
+                )
+            }
+            sites["co_purchase_edges"] = co_purchase_edges(pu.repartition("o"))
+            for name, df in sites.items():
+                plan = df._jdf.queryExecution().sparkPlan().toString()
+                widths = pair_key.findall(plan)
+                assert widths == [str(want)], (name, aqe, plan)

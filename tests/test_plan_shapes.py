@@ -278,7 +278,7 @@ def test_pq_codebook_broadcasts_and_scan_prunes(spark, sf_dir):
     from datafusion_parallelism_spark.queries.llm import _pq_subv
     from datafusion_parallelism_spark.session import load
 
-    subv = _pq_subv(load(spark, sf_dir, "embeddings"), spark, checkpoint=False)
+    subv = _pq_subv(load(spark, sf_dir, "embeddings"), spark)
     schemas = read_schemas(subv)
     assert any("vec_id" in s and "embedding" in s for s in schemas), schemas
 
@@ -479,19 +479,25 @@ def test_winnow_capped_fingerprints_df_window_rides_join_partitioning(spark):
     what the uncapped pipeline already shuffles: the df-count window runs
     over the same hashpartitioning(h) the pair self-join consumes.  The
     executed query plan truncates at the localCheckpoint, so this pins the
-    pre-checkpoint subtree directly — exactly two exchanges total since
-    the round-10 shuffle-free fingerprint selection: (doc_id, h) for the
-    fingerprint distinct, and h for the repartition the df window and
+    pre-join subtree of the pair primitive (operators/pairs.py
+    partition_groups + cap_groups) directly — exactly two exchanges total
+    since the round-10 shuffle-free fingerprint selection: (doc_id, h) for
+    the fingerprint distinct, and h for the repartition the df window and
     join both ride."""
+    from datafusion_parallelism_spark.operators.pairs import (
+        cap_groups,
+        partition_groups,
+    )
     from datafusion_parallelism_spark.queries.llm import (
-        winnow_capped_fingerprints,
+        WINNOW_FP_DF_CEILING,
         winnow_fingerprints,
     )
 
     d = spark.createDataFrame(
         [(1, "x" * 200), (2, "y" * 500), (3, "x" * 150)], "doc_id long, text string"
     )
-    plan = physical_plan_str(winnow_capped_fingerprints(winnow_fingerprints(d), 32))
+    fp = partition_groups(winnow_fingerprints(d), "h")
+    plan = physical_plan_str(cap_groups(fp, "h", WINNOW_FP_DF_CEILING))
     assert plan.count("Exchange") == 2, plan
     # The df window itself partitions on h and sits above the h-repartition.
     assert "windowspecdefinition(h#" in plan or "windowspecdefinition(h " in plan, plan
@@ -567,7 +573,7 @@ def test_pq_training_iteration_streams_without_sort_or_exchange(spark, sf_dir):
     import re
 
     from datafusion_parallelism_spark.plans import presorted
-    from datafusion_parallelism_spark.queries.llm import _pq_subv
+    from datafusion_parallelism_spark.queries.llm import _pq_subv, _pq_subv_pinned
 
     def train_iter_plan(subv):
         anch_rows = subv.limit(4).select(
@@ -592,12 +598,12 @@ def test_pq_training_iteration_streams_without_sort_or_exchange(spark, sf_dir):
 
     with with_conf(spark, {"spark.sql.adaptive.enabled": "true"}):
         vecs = load(spark, sf_dir, "embeddings")
-        txt = train_iter_plan(_pq_subv(vecs, spark))
+        txt = train_iter_plan(_pq_subv_pinned(_pq_subv(vecs, spark))[0])
         assert not re.search(r"Sort \[vec_id#", txt), txt
         assert not re.search(r"Exchange hashpartitioning\(vec_id#", txt), txt
-        plain = presorted(
-            _pq_subv(vecs, spark, checkpoint=False), "vec_id", "j"
-        ).localCheckpoint(eager=True)
+        plain = presorted(_pq_subv(vecs, spark), "vec_id", "j").localCheckpoint(
+            eager=True
+        )
         txt = train_iter_plan(plain)
         assert re.search(r"Sort \[vec_id#", txt) or re.search(
             r"Exchange hashpartitioning\(vec_id#", txt

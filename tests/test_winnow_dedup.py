@@ -149,11 +149,11 @@ def test_df_ceiling_preserves_guarantee_below_ceiling(spark, seed):
     fp = winnow_fingerprints(_docs_df(spark, texts))
     pairs = {
         (r.doc_a, r.doc_b): r.shared_fps
-        for r in winnow_pair_counts(fp, 4, ceiling=ceiling).collect()
+        for r in winnow_pair_counts(fp, ceiling=ceiling).collect()
     }
     uncapped = {
         (r.doc_a, r.doc_b): r.shared_fps
-        for r in winnow_pair_counts(fp, 4, ceiling=10**9).collect()
+        for r in winnow_pair_counts(fp, ceiling=10**9).collect()
     }
     # The rare span (120 chars >> k+w-1) selects multiple df=2 fingerprints;
     # the (0,1) pair must survive the cap with a healthy count.
@@ -187,11 +187,11 @@ def test_df_ceiling_counts_unchanged_below_ceiling(spark):
     fp = winnow_fingerprints(_docs_df(spark, texts))
     capped = {
         (r.doc_a, r.doc_b): r.shared_fps
-        for r in winnow_pair_counts(fp, 4, ceiling=6).collect()
+        for r in winnow_pair_counts(fp, ceiling=6).collect()
     }
     uncapped = {
         (r.doc_a, r.doc_b): r.shared_fps
-        for r in winnow_pair_counts(fp, 4, ceiling=10**9).collect()
+        for r in winnow_pair_counts(fp, ceiling=10**9).collect()
     }
     assert capped == uncapped and (0, 1) in capped
 
@@ -240,7 +240,7 @@ def test_hot_cluster_recovered_by_representative_pairs(spark):
     fp = winnow_fingerprints(_docs_df(spark, texts))
     hot = {
         (r.doc_a, r.doc_b): r.shared_hot_fps
-        for r in winnow_hot_pair_counts(fp, 4, ceiling=ceiling).collect()
+        for r in winnow_hot_pair_counts(fp, ceiling=ceiling).collect()
     }
     # Every cluster member links to the anchor (min doc_id = 0); the
     # 200-char article selects many identical interior fingerprints, all
@@ -255,7 +255,7 @@ def test_hot_cluster_recovered_by_representative_pairs(spark):
     # the two outputs are complementary, not overlapping.
     main = {
         (r.doc_a, r.doc_b): r.shared_fps
-        for r in winnow_pair_counts(fp, 4, ceiling=ceiling).collect()
+        for r in winnow_pair_counts(fp, ceiling=ceiling).collect()
     }
     for p, n in main.items():
         if p[0] < n_copies and p[1] < n_copies:
@@ -276,4 +276,4 @@ def test_hot_pairs_empty_when_no_fingerprint_exceeds_ceiling(spark):
         for i in range(3)
     ]
     fp = winnow_fingerprints(_docs_df(spark, texts))
-    assert winnow_hot_pair_counts(fp, 4, ceiling=3).count() == 0
+    assert winnow_hot_pair_counts(fp, ceiling=3).count() == 0
