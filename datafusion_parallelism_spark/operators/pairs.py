@@ -60,8 +60,17 @@ def _pair_width(spark: SparkSession) -> int:
     partitions are idle reducers: sending the co-purchase pairs at 4x
     instead of 1x cost a median 1.90 -> 2.29 s of CPU on
     graph_triangle_counts at sf0.01 (4 cores, 16 alternating pairs).
-    The count is explicit, so AQE does not coalesce the exchange
-    (REPARTITION_BY_NUM): this width is what runs."""
+
+    The count is explicit, so the exchange is REPARTITION_BY_NUM, which
+    AQE never coalesces, and this width is what runs.  That is required:
+    AQE coalesces toward a shuffle-BYTES target (16 MB advisory), but the
+    count's hash state is 40-90x its compressed pair bytes (x16 Jaccard:
+    ~550 MB peak per 13 MB partition; x256: ~240 MB per 2.6 MB).  A
+    coalescable exchange, a rebalance or a column-only repartition, falls
+    back to the byte-sized width whatever it starts at.  The x64 ledger's
+    column-only exchange ran 35 tasks of ~0.9 GB state each and spilled
+    46 GB; at x16 (4 cores) a rebalance started at 4x raised the triangle
+    pair count's per-task peak to 671 MB, against 185 MB here."""
     width = _group_width(spark)
     if spark.conf.get("spark.sql.adaptive.enabled").lower() == "true":
         return _PAIR_WIDTH_FACTOR * width

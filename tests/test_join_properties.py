@@ -9,7 +9,9 @@ running the same text, for a randomly chosen join type from the
 reference's supported set (probe_lookup_implementation.rs:32-43).  Null
 keys must never match (null_equals_null=false) and duplicate keys must
 multiply rows — exactly the edge cases the reference pins with hand-built
-batches (src/lib.rs:149-246).
+batches (src/lib.rs:149-246).  The composite-key test also runs
+``operators.joins.equi_join``, the DataFrame-API join of the inner and
+left-semi cases, against the same DuckDB rows.
 """
 
 import duckdb
@@ -17,6 +19,8 @@ import pandas as pd
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+
+from datafusion_parallelism_spark.operators.joins import equi_join
 
 _ids = st.lists(st.one_of(st.none(), st.integers(0, 5)), min_size=0, max_size=8)
 
@@ -38,7 +42,8 @@ def _canon(rows):
 
 
 def _check(spark, lpdf, rpdf, sql, label):
-    """Run ``sql`` over tables ``l`` and ``r`` in Spark and in DuckDB."""
+    """Run ``sql`` over tables ``l`` and ``r`` in Spark and in DuckDB;
+    return the DuckDB rows."""
     lcols = ", ".join(f"{c} long" for c in lpdf.columns)
     rcols = ", ".join(f"{c} long" for c in rpdf.columns)
     spark.createDataFrame(lpdf, schema=lcols).createOrReplaceTempView("l")
@@ -50,6 +55,7 @@ def _check(spark, lpdf, rpdf, sql, label):
     con.register("r", rpdf)
     want = _canon(con.execute(sql).fetchall())
     assert got == want, f"{label}: spark={got} duckdb={want}"
+    return want
 
 
 @settings(
@@ -93,7 +99,8 @@ def test_residual_filter_matches_duckdb(spark, lids, rids):
 def test_multi_key_join_matches_duckdb(spark, lids, rids, how):
     """Composite-key joins (the reference's Vec<(expr, expr)> ``on`` list,
     parallel_hash_join.rs:24): both key columns must match, nulls in either
-    key never match."""
+    key never match.  The inner and left-semi cases also run through
+    ``equi_join``."""
     n_l, n_r = len(lids), len(rids)
     lpdf = pd.DataFrame({
         "lid": pd.array(lids, dtype="Int64"),
@@ -112,4 +119,9 @@ def test_multi_key_join_matches_duckdb(spark, lids, rids, how):
         "left_semi": "SELECT l.* FROM l WHERE EXISTS "
         "(SELECT 1 FROM r WHERE r.rid = l.lid AND r.rid2 = l.lid2)",
     }[how]
-    _check(spark, lpdf, rpdf, sql, how)
+    want = _check(spark, lpdf, rpdf, sql, how)
+    if how in ("inner", "left_semi"):
+        on = [("lid", "rid"), ("lid2", "rid2")]
+        joined = equi_join(spark.table("l"), spark.table("r"), on, how)
+        got = _canon(tuple(r) for r in joined.collect())
+        assert got == want, f"equi_join {how}: spark={got} duckdb={want}"

@@ -221,11 +221,16 @@ def test_pair_exchange_width_is_data_ahead_4x(spark, sf_dir):
     headroom over the input-sized session conf, measured spill-free
     through x256 — and at 1 × with AQE off, the small-input posture where
     extra reducers only cost CPU (graph_triangle_counts at sf0.01, 4 cores:
-    median 1.90 s CPU at 1x vs 2.29 s at 4x).  A derived Σn² width was considered
-    and rejected twice (r10, r11): the estimate needs an eager
-    materialization of the lazy pair input inside every query path.  If a
-    deployment outgrows the decade, raise operators/pairs.py
-    _PAIR_WIDTH_FACTOR — this test documents that contract."""
+    median 1.90 s CPU at 1x vs 2.29 s at 4x).  The origin is pinned too:
+    REPARTITION_BY_NUM is never coalesced, and a coalescable exchange (a
+    rebalance or a column-only repartition) would let AQE shrink the
+    width back to its shuffle-bytes target, which the count's hash state
+    outgrows 40-90x (operators/pairs.py _pair_width).
+    A derived Σn² width was considered and rejected twice (r10, r11): the
+    estimate needs an eager materialization of the lazy pair input inside
+    every query path.  If a deployment outgrows the decade, raise
+    operators/pairs.py _PAIR_WIDTH_FACTOR — this test documents that
+    contract."""
     import re
 
     from datafusion_parallelism_spark.queries import REGISTRY
@@ -235,8 +240,10 @@ def test_pair_exchange_width_is_data_ahead_4x(spark, sf_dir):
         spark.sparkContext.defaultParallelism,
         int(spark.conf.get("spark.sql.shuffle.partitions")),
     )
-    pair_key = re.compile(r"hashpartitioning\((?:doc_a|u)#\d+L?, (?:doc_b|v)#\d+L?, (\d+)\)")
-    for aqe, want in (("true", 4 * base), ("false", base)):
+    pair_key = re.compile(
+        r"hashpartitioning\((?:doc_a|u)#\d+L?, (?:doc_b|v)#\d+L?, (\d+)\), (\w+)"
+    )
+    for aqe, want in (("true", str(4 * base)), ("false", str(base))):
         with with_conf(spark, {"spark.sql.adaptive.enabled": aqe}):
             pu = spark.createDataFrame([(1, 1), (1, 2), (2, 1), (2, 2)], "o long, p long")
             sites = {
@@ -251,5 +258,5 @@ def test_pair_exchange_width_is_data_ahead_4x(spark, sf_dir):
             sites["co_purchase_edges"] = co_purchase_edges(pu.repartition("o"))
             for name, df in sites.items():
                 plan = df._jdf.queryExecution().sparkPlan().toString()
-                widths = pair_key.findall(plan)
-                assert widths == [str(want)], (name, aqe, plan)
+                exchanges = pair_key.findall(plan)
+                assert exchanges == [(want, "REPARTITION_BY_NUM")], (name, aqe, plan)
