@@ -1,9 +1,12 @@
 """LLM training-data pipeline corpus: dedup, similarity search, text analysis.
 
 These operators go beyond the reference's surface (SURVEY §7.6): they are the
-data-processing layer a 100 TB pretraining pipeline needs.  Every query stays
-JVM-side (no Python UDFs in the hot path) and carries a DuckDB oracle so the
-driver hash-matches it like any SQL query.
+data-processing layer a 100 TB pretraining pipeline needs.  Every query
+carries a DuckDB oracle so the driver hash-matches it like any SQL query.
+Most stay JVM-side; the exceptions run Python in Arrow-batched workers,
+where interpreted higher-order expressions would cost more: the MinHash
+signature pandas UDF, and the ``mapInArrow`` kernels of MinHash dedup, PQ
+and k-means (a whole query in one task below each kernel's size gate).
 
 Portability contract with the oracle:
 * 60-bit portable hash: Spark ``conv(substr(md5(x),1,15),16,10)::long`` ==
@@ -650,55 +653,66 @@ def dedup_winnow_hot_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return winnow_hot_pair_counts(fp).filter(F.col("shared_hot_fps") >= WINNOW_T)
 
 
+def _minhash_rows(texts):
+    """(idx, sets, mins) for the non-NULL entries of ``texts``: their
+    positions, their distinct 3-word shingle sets, and the (len(idx),
+    N_PERMS) int64 matrix of MinHash permutation minima.  The one
+    shingle → hash → permutation-min implementation, called by the
+    distributed signature UDF (_minhash_sigs) and the one-task kernel
+    (_minhash_pairs_arrow) alike, so the two sides cannot drift.
+
+    Shingles mirror ``word_shingles`` over a single-space ``split`` (3-token
+    windows; a doc of under 3 tokens, ``''`` included, yields one truncated
+    shingle); a NULL text has no shingle, as in the oracle, so it gets no
+    signature and joins no candidate pair.  Hashes are exact integer math:
+    ``int(md5(s)[:15], 16)`` equals ``conv(substring(md5(s),1,15),16,10)``,
+    and a, b, h < P = 2³¹−1 keeps a·h+b < 2⁶² inside int64.  The
+    permutations are batched in NumPy: one broadcast multiply-mod over the
+    flattened hashes, then a ``minimum.reduceat`` segment-min per doc."""
+    from hashlib import md5
+
+    import numpy as np
+
+    idx, sets, lens, hashes = [], [], [], []
+    for i, text in enumerate(texts):
+        if text is None:
+            continue
+        toks = text.split(" ")
+        s = {" ".join(toks[k : k + 3]) for k in range(max(len(toks) - 2, 1))}
+        idx.append(i)
+        sets.append(s)
+        lens.append(len(s))
+        hashes.extend([int(md5(x.encode()).hexdigest()[:15], 16) for x in s])
+    if not idx:
+        return np.zeros(0, np.int64), sets, np.zeros((0, N_PERMS), np.int64)
+    mul, add = (np.array(c, dtype=np.int64)[:, None] for c in zip(*PERMS))
+    h = np.array(hashes, dtype=np.int64) % P
+    offsets = np.concatenate(([0], np.cumsum(lens)[:-1]))
+    vals = (mul * h[None, :] + add) % P  # (N_PERMS, total)
+    mins = np.minimum.reduceat(vals, offsets, axis=1).T  # (n, N_PERMS)
+    return np.array(idx, dtype=np.int64), sets, mins
+
+
 def _minhash_sigs(d: DataFrame) -> DataFrame:
-    """doc_id + m0..m{N_PERMS-1} MinHash signature columns, computed with
-    ZERO shuffles: ONE Arrow-batched pandas UDF goes text → shingle set →
-    md5 hashes → 16 permutation-mins, with the permutation arithmetic
-    batched in NumPy (broadcast multiply-mod + ``minimum.reduceat``
-    segment-min over the flattened per-doc hash arrays).
+    """doc_id + m0..m{N_PERMS-1} MinHash signature columns of every doc
+    with a non-NULL text, computed by ONE Arrow-batched pandas UDF over
+    _minhash_rows (text → shingle set → md5 hashes → 16
+    permutation-mins).
 
     Why not Catalyst expressions: shingling and per-shingle hashing are
     higher-order ``transform`` lambdas, which Spark evaluates INTERPRETED
     per element (no whole-stage codegen) — measured 4.6 s (shingles)
     + 4.0 s (md5 HOF) + 2.3 s (perm-min HOFs) of the query's 19 s wall at
-    16×sf0.1; this UDF computes identical values in ~1 s.  Identical
-    because every step is exact integer math: ``int(md5(s)[:15], 16)``
-    equals ``conv(substring(md5(s),1,15),16,10)``, and a, b, h < P = 2³¹−1
-    keeps a·h+b < 2⁶² inside int64.  The shingle construction mirrors
-    ``word_shingles`` (3-token windows over a single-space split; short
-    docs yield one truncated shingle)."""
+    16×sf0.1; this UDF computes identical values in ~1 s."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("array<long>")
     def minhash_from_text(texts: pd.Series) -> pd.Series:
-        from hashlib import md5
-
-        import numpy as np
-
-        A = np.array([a for a, _ in PERMS], dtype=np.int64)[:, None]
-        B = np.array([b for _, b in PERMS], dtype=np.int64)[:, None]
-        arrs: list = []
-        for text in texts:
-            toks = text.split(" ")
-            hs = {
-                int(
-                    md5(" ".join(toks[i : i + 3]).encode()).hexdigest()[:15], 16
-                )
-                % P
-                for i in range(max(len(toks) - 2, 1))
-            }
-            arrs.append(np.fromiter(hs, dtype=np.int64, count=len(hs)))
-        lens = np.array([len(x) for x in arrs])
-        out: list = [None] * len(arrs)
-        nonempty = np.nonzero(lens)[0]
-        if len(nonempty):
-            flat = np.concatenate([arrs[i] for i in nonempty])
-            vals = (A * flat[None, :] + B) % P  # (N_PERMS, total)
-            offsets = np.concatenate(([0], np.cumsum(lens[nonempty])[:-1]))
-            mins = np.minimum.reduceat(vals, offsets, axis=1)  # (N_PERMS, n)
-            for k, i in enumerate(nonempty):
-                out[i] = mins[:, k]
-        return pd.Series(out)
+        idx, _, mins = _minhash_rows(texts.tolist())
+        out: list = [None] * len(texts)
+        for i, m in zip(idx, mins):
+            out[i] = m
+        return pd.Series(out, dtype=object)
 
     # The signature UDF is CPU-bound, so its parallelism must come from the
     # cluster, not from the scan's byte-proportional splits (a compressed
@@ -706,8 +720,12 @@ def _minhash_sigs(d: DataFrame) -> DataFrame:
     # benchmark corpus is one 9 MB split = one task).  One round-robin
     # shuffle of (doc_id, text) fans the work out to every core; downstream
     # re-shuffles on (band, sig) anyway, so no partitioning is lost.
-    spread = d.select("doc_id", "text").repartition(
-        d.sparkSession.sparkContext.defaultParallelism
+    # A NULL text has no signature; dropping it before the shuffle keeps
+    # it out of every band bucket.
+    spread = (
+        d.select("doc_id", "text")
+        .filter(F.col("text").isNotNull())
+        .repartition(d.sparkSession.sparkContext.defaultParallelism)
     )
     sigs = spread.select("doc_id", minhash_from_text("text").alias("m"))
     return sigs.select(
@@ -764,14 +782,108 @@ def _band_cols(i: int) -> list[str]:
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash + LSH near-dup detection: shingle → 16-permutation MinHash
-    signature (per-row array expressions, zero shuffles) → 4×4 banding →
-    bucket self-join on (band, signature) → exact-Jaccard verification of
-    candidates only, via ``array_intersect`` on the two docs' shingle sets
-    (narrow, no exploded self-join).  This is the 100 TB path: candidate
-    generation touches each doc once per band; the only shuffles left are
-    the LSH-bucket join and the candidate↔shingle-set lookups, and the
-    quadratic verify step runs only inside LSH buckets."""
-    d = load(spark, sf_dir, "documents")
+    signature → 4×4 banding → candidate pairs sharing a band bucket →
+    exact-Jaccard verification of candidates only.
+
+    One size gate, read from the parquet footer (no Spark job), picks the
+    plan.  Below _MINHASH_KERNEL_MAX_DOCS documents the whole query is ONE
+    ``mapInArrow`` task (_minhash_pairs_arrow): no build-time job, no
+    exchange.  Above it, the distributed plan (_minhash_pairs_distributed)
+    computes signatures in a pandas UDF behind a round-robin repartition,
+    self-joins the band table on (band, signature) and verifies each
+    candidate with ``array_intersect`` on the two docs' shingle sets — the
+    100 TB path, where candidate generation touches each doc once per band
+    and the quadratic step runs only inside LSH buckets.  Both sides give
+    identical rows (tests/test_minhash_property.py)."""
+    n_docs = parquet_num_rows(os.path.join(sf_dir, "documents.parquet"))
+    return _minhash_pairs(load(spark, sf_dir, "documents"), n_docs)
+
+
+#: Documents one task shingles, signs, bands and verifies in
+#: _minhash_pairs_arrow.  Warm wall on an idle 4-core box, kernel vs
+#: distributed, fresh process per side: 0.49 vs 0.95 s at 5k docs (sf0.1),
+#: 0.85 vs 1.07 s at 10k, 1.62 vs 1.49 s at 20k, 3.55 vs 2.95 s at 40k —
+#: a tie near 16k, where the one task's ~0.08 ms/doc of Python catches up
+#: with the distributed plan's fixed cost (cold walls favour the kernel
+#: further: 4.2 vs 6.8 s at 20k).  0 turns the kernel off (tests patch it
+#: to force the distributed plan).
+_MINHASH_KERNEL_MAX_DOCS = 15_000
+
+
+def _minhash_pairs(d: DataFrame, n_docs: int | None) -> DataFrame:
+    """dedup_minhash_lsh's (doc_a, doc_b, jaccard) rows over ``d``
+    (doc_id, text), given an upper bound ``n_docs`` on its row count
+    (``None``: unknown, distributed)."""
+    if kernel_fits(n_docs, _MINHASH_KERNEL_MAX_DOCS):
+        return _minhash_pairs_arrow(d)
+    return _minhash_pairs_distributed(d)
+
+
+def _minhash_pairs_arrow(d: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, jaccard) in ONE ``mapInArrow`` task over (doc_id,
+    text) — the fused form of _minhash_pairs_distributed for inputs under
+    the gate.  Value-identical to it: signatures and shingle sets come
+    from _minhash_rows; a band bucket is keyed on the band's 4-tuple of
+    minima (what the ``concat_ws('-')`` signature string encodes, the
+    minima being non-negative); candidates are the distinct doc_a < doc_b
+    pairs of a bucket; the Jaccard is |A∩B| / (|A| + |B| − |A∩B|) over
+    the same sets, rounded as Spark's ROUND (_round_half_up)."""
+    threshold, n_bands = JACCARD_THRESHOLD, N_PERMS // BAND_ROWS
+
+    def kernel(batches):
+        from itertools import combinations
+
+        import numpy as np
+        import pyarrow as pa
+
+        ids, texts = [], []
+        for b in batches:
+            ids.extend(b.column(0).to_pylist())
+            texts.extend(b.column(1).to_pylist())
+        idx, sets, mins = _minhash_rows(texts)
+        if not sets:
+            return
+        doc = [ids[i] for i in idx]
+        cand = set()
+        for band in range(n_bands):
+            buckets: dict = {}
+            keys = mins[:, band * BAND_ROWS : (band + 1) * BAND_ROWS].tolist()
+            for k, key in enumerate(keys):
+                buckets.setdefault(tuple(key), []).append(k)
+            for members in buckets.values():
+                members.sort(key=doc.__getitem__)
+                cand.update(
+                    (x, y) for x, y in combinations(members, 2) if doc[x] < doc[y]
+                )
+        if not cand:
+            return
+        xs, ys = np.array(sorted(cand), dtype=np.int64).T
+        shared = np.array([len(sets[x] & sets[y]) for x, y in zip(xs, ys)])
+        size = np.array([len(s) for s in sets])
+        jac = _round_half_up(shared / (size[xs] + size[ys] - shared), 4)
+        keep = jac >= threshold
+        ids_np = np.array(doc, dtype=np.int64)
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(ids_np[xs[keep]]),
+                pa.array(ids_np[ys[keep]]),
+                pa.array(jac[keep], type=pa.float64()),
+            ],
+            names=["doc_a", "doc_b", "jaccard"],
+        )
+
+    return (
+        d.select("doc_id", "text")
+        .coalesce(1)
+        .mapInArrow(kernel, schema="doc_a long, doc_b long, jaccard double")
+    )
+
+
+def _minhash_pairs_distributed(d: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, jaccard) above the gate: the signature UDF
+    (_minhash_sigs), the band table self-joined on (band, signature), and
+    exact-Jaccard verification of the distinct candidates against the
+    shingle sets of the docs that appear in one."""
     sigs = _minhash_sigs(d)
     n_bands = N_PERMS // BAND_ROWS
     bands = (

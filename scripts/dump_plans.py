@@ -9,6 +9,12 @@ once per commit into its own directory (for example ``before/`` on the
 base commit, ``after/`` on the change); ``diff -r before/ after/`` is then
 the plan evidence for the change.
 
+A query's plan starts at the ``Scan ExistingRDD`` of any checkpoint taken
+while it was built, so each DataFrame that is ``localCheckpoint``-ed or
+``checkpoint``-ed during the build is written too, as its own section
+after the query's plan, in build order.  For an eager checkpoint that is
+the plan its build-time job executed.
+
 Usage::
 
     python scripts/dump_plans.py --out-dir plans/before --suffix sf0.1 \
@@ -21,6 +27,7 @@ import argparse
 import os
 import re
 import sys
+from contextlib import contextmanager
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -37,6 +44,33 @@ def strip_ids(plan: str) -> str:
     for pat, token in _IDS:
         plan = pat.sub(token, plan)
     return plan
+
+
+@contextmanager
+def checkpointed_plans(spark):
+    """Within the block, record ``(call, plan)`` for every DataFrame that
+    is checkpointed: the call as written (``localCheckpoint(eager=True)``)
+    and the stripped plan of the checkpointed subtree, rendered after the
+    checkpoint returns.  Yields the growing list."""
+    cls = type(spark.range(0))
+    real = {m: getattr(cls, m) for m in ("localCheckpoint", "checkpoint")}
+    sections: list[tuple[str, str]] = []
+
+    def recording(method):
+        def wrapper(self, eager=True, *args, **kwargs):
+            out = real[method](self, eager, *args, **kwargs)
+            sections.append((f"{method}(eager={eager})", strip_ids(explain_str(self))))
+            return out
+
+        return wrapper
+
+    for method in real:
+        setattr(cls, method, recording(method))
+    try:
+        yield sections
+    finally:
+        for method, fn in real.items():
+            setattr(cls, method, fn)
 
 
 def main() -> None:
@@ -58,10 +92,13 @@ def main() -> None:
     spark = benchmark_session(args.data_path, app_name=f"plans-{args.suffix}")
     for name in args.queries:
         spark.sparkContext.setJobDescription(f"plan:{name}")
-        df = REGISTRY[name].fn(spark, args.data_path)
+        with checkpointed_plans(spark) as sections:
+            df = REGISTRY[name].fn(spark, args.data_path)
         path = os.path.join(args.out_dir, f"{name}_{args.suffix}.txt")
         with open(path, "w") as fh:
             fh.write(strip_ids(explain_str(df)))
+            for i, (call, plan) in enumerate(sections, 1):
+                fh.write(f"\n== Checkpointed subtree {i}: {call} ==\n{plan}")
         print(f"wrote {path}", flush=True)
 
 

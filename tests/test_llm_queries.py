@@ -23,6 +23,22 @@ def test_llm_query_matches_oracle(spark, sf_dir_oracle, name):
     assert ok, f"{name}: {detail}"
 
 
+@pytest.mark.parametrize(
+    "name", ["dedup_minhash_lsh", "dedup_near_clusters", "dedup_apply"]
+)
+def test_minhash_distributed_matches_oracle(spark, sf_dir_oracle, monkeypatch, name):
+    """The MinHash queries with the kernel ceiling at 0: the distributed
+    signature UDF + band self-join + verify plan keeps oracle coverage,
+    which the default run no longer reaches at test scale."""
+    from datafusion_parallelism_spark.queries import llm
+
+    monkeypatch.setattr(llm, "_MINHASH_KERNEL_MAX_DOCS", 0)
+    spec = REGISTRY[name]
+    df = spec.fn(spark, sf_dir_oracle)
+    ok, detail = compare_to_oracle(spark, df, spec.oracle, sf_dir_oracle)
+    assert ok, f"{name}: {detail}"
+
+
 def test_stop_shingle_ceiling_prunes_hot_shingles(spark):
     """A shingle present in > SHINGLE_DF_CEILING docs must be excluded
     from pair generation (its df² pair fan-out is the x64 cliff: jaccard

@@ -323,6 +323,30 @@ def test_pq_adc_topk_below_gate_is_one_arrow_task(spark, sf_dir):
     assert "Exchange" not in plan[plan.index("MapInArrow"):], plan
 
 
+def test_minhash_below_gate_is_one_arrow_task(spark, sf_dir):
+    """Below the footer-read gate dedup_minhash_lsh builds with zero Spark
+    jobs and plans as exactly one MapInArrow (shingle, sign, band, pair
+    and verify fused) over the scan: no Python UDF, no join and no
+    Exchange below the kernel."""
+    import os
+
+    from datafusion_parallelism_spark.queries.llm import _MINHASH_KERNEL_MAX_DOCS
+    from datafusion_parallelism_spark.session import parquet_num_rows
+
+    n = parquet_num_rows(os.path.join(sf_dir, "documents.parquet"))
+    assert n <= _MINHASH_KERNEL_MAX_DOCS
+    # The memoized scan's schema read is table registration, not build.
+    load(spark, sf_dir, "documents")
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    jobs = scheduler.numTotalJobs()
+    df = REGISTRY["dedup_minhash_lsh"].fn(spark, sf_dir)
+    assert scheduler.numTotalJobs() == jobs
+    plan = physical_plan_str(df)
+    assert plan.count("MapInArrow") == 1, plan
+    assert "ArrowEvalPython" not in plan and "Join" not in plan, plan
+    assert "Exchange" not in plan[plan.index("MapInArrow"):], plan
+
+
 def test_pii_redact_is_single_aggregation_no_python(spark, sf_dir):
     """corpus_pii_redact: pure JVM regex kernels + ONE hash-partitioned
     exchange (the per-source aggregate) — no Python evaluation anywhere
