@@ -629,15 +629,64 @@ def pagerank(
 _TRI_KERNEL_MAX_EDGES = 200_000
 
 
+def _tri_numpy(u, v):
+    """(nodes, triangles): the per-node triangle counts of an undirected
+    simple graph given as NumPy edge arrays ``u`` < ``v`` (distinct), for
+    the nodes in at least one triangle.  The one compact-forward
+    implementation, called by the edge-table kernel (_tri_arrow) and the
+    fused co-purchase kernel (queries/graph.py) alike: orient by (degree,
+    id), enumerate each apex's out-edge pairs once, check the closing edge
+    undirected — the distributed plan's algorithm in vectorized NumPy.
+    Pure integer math, so counts are exactly the distributed result.
+    Wedges are generated per GAP (pairs of positions g apart inside each
+    apex's dst-sorted out-edge block), keeping memory O(m) regardless of
+    wedge volume."""
+    import numpy as np
+
+    m = len(u)
+    if m == 0:
+        return u[:0], np.zeros(0, dtype=np.int64)
+    nodes = np.unique(np.concatenate([u, v]))
+    n = int(len(nodes))
+    ui = np.searchsorted(nodes, u)
+    vi = np.searchsorted(nodes, v)
+    deg = np.bincount(np.concatenate([ui, vi]), minlength=n)
+    # (degree, id) lexicographic key packed into one int64.
+    ku = deg[ui].astype(np.int64) * n + ui
+    kv = deg[vi].astype(np.int64) * n + vi
+    fwd = ku < kv
+    src = np.where(fwd, ui, vi)
+    dst = np.where(fwd, vi, ui)
+    order = np.lexsort((dst, src))
+    src, dst = src[order], dst[order]
+    c = np.bincount(src, minlength=n)  # outdeg
+    starts = np.zeros(n, dtype=np.int64)
+    np.cumsum(c[:-1], out=starts[1:])
+    within = np.arange(m) - starts[src]
+    cbl = c[src]
+    eset = np.sort(ui.astype(np.int64) * n + vi)  # id-normalized edges
+    tri = np.zeros(n, dtype=np.int64)
+    for g in range(1, int(c.max())):
+        sel = within + g < cbl
+        p = np.nonzero(sel)[0]
+        if len(p) == 0:
+            break
+        ta, tb, tc = src[p], dst[p], dst[p + g]
+        packed = tb.astype(np.int64) * n + tc
+        pos = np.searchsorted(eset, packed)
+        ok = pos < len(eset)
+        ok[ok] = eset[pos[ok]] == packed[ok]
+        if ok.any():
+            tri += np.bincount(ta[ok], minlength=n)
+            tri += np.bincount(tb[ok], minlength=n)
+            tri += np.bincount(tc[ok], minlength=n)
+    nz = tri > 0
+    return nodes[nz], tri[nz]
+
+
 def _tri_arrow(edges: DataFrame) -> DataFrame:
     """Single-task per-node triangle counts over a small (u < v, distinct)
-    edge table: the same compact-forward algorithm as the distributed plan
-    — orient by (degree, id), enumerate each apex's out-edge pairs once,
-    check the closing edge undirected — in vectorized NumPy.  Pure integer
-    math, so counts are exactly the distributed result.  Wedges are
-    generated per GAP (pairs of positions g apart inside each apex's
-    dst-sorted out-edge block), keeping memory O(m) regardless of wedge
-    volume."""
+    edge table: one ``mapInArrow`` task over _tri_numpy."""
     node_t = edges.schema["u"].dataType.simpleString()
 
     def kernel(batches):
@@ -650,50 +699,11 @@ def _tri_arrow(edges: DataFrame) -> DataFrame:
             vs.append(b.column(1).to_numpy(zero_copy_only=False))
         if not us:
             return
-        u = np.concatenate(us)
-        v = np.concatenate(vs)
-        m = len(u)
-        if m == 0:
+        nodes, tri = _tri_numpy(np.concatenate(us), np.concatenate(vs))
+        if len(nodes) == 0:
             return
-        nodes = np.unique(np.concatenate([u, v]))
-        n = int(len(nodes))
-        ui = np.searchsorted(nodes, u)
-        vi = np.searchsorted(nodes, v)
-        deg = np.bincount(np.concatenate([ui, vi]), minlength=n)
-        # (degree, id) lexicographic key packed into one int64.
-        ku = deg[ui].astype(np.int64) * n + ui
-        kv = deg[vi].astype(np.int64) * n + vi
-        fwd = ku < kv
-        src = np.where(fwd, ui, vi)
-        dst = np.where(fwd, vi, ui)
-        order = np.lexsort((dst, src))
-        src, dst = src[order], dst[order]
-        c = np.bincount(src, minlength=n)  # outdeg
-        starts = np.zeros(n, dtype=np.int64)
-        np.cumsum(c[:-1], out=starts[1:])
-        within = np.arange(m) - starts[src]
-        cbl = c[src]
-        eset = np.sort(ui.astype(np.int64) * n + vi)  # id-normalized edges
-        tri = np.zeros(n, dtype=np.int64)
-        cmax = int(c.max()) if n else 0
-        for g in range(1, cmax):
-            sel = within + g < cbl
-            p = np.nonzero(sel)[0]
-            if len(p) == 0:
-                break
-            ta, tb, tc = src[p], dst[p], dst[p + g]
-            packed = tb.astype(np.int64) * n + tc
-            pos = np.searchsorted(eset, packed)
-            ok = pos < len(eset)
-            ok[ok] = eset[pos[ok]] == packed[ok]
-            if ok.any():
-                tri += np.bincount(ta[ok], minlength=n)
-                tri += np.bincount(tb[ok], minlength=n)
-                tri += np.bincount(tc[ok], minlength=n)
-        nz = tri > 0
         yield pa.RecordBatch.from_arrays(
-            [pa.array(nodes[nz]), pa.array(tri[nz])],
-            names=["node", "triangles"],
+            [pa.array(nodes), pa.array(tri)], names=["node", "triangles"]
         )
 
     return edges.coalesce(1).mapInArrow(

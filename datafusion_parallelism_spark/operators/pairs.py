@@ -59,7 +59,9 @@ def _pair_width(spark: SparkSession) -> int:
     factor buys one decade of pair-volume growth.  Below it the extra
     partitions are idle reducers: sending the co-purchase pairs at 4x
     instead of 1x cost a median 1.90 -> 2.29 s of CPU on
-    graph_triangle_counts at sf0.01 (4 cores, 16 alternating pairs).
+    graph_triangle_counts' distributed co-purchase path at sf0.01 (4
+    cores, 16 alternating pairs), measured before that query's fused
+    kernel took sf0.01 below its gate.
 
     The count is explicit, so the exchange is REPARTITION_BY_NUM, which
     AQE never coalesces, and this width is what runs.  That is required:

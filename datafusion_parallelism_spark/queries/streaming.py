@@ -243,15 +243,17 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet merge (streaming/events.py:run_foreachbatch_upsert).  The
     final snapshot must equal the batch answer regardless of micro-batch
     boundaries — which is exactly what the oracle asserts."""
-    import hashlib
     import os
+    import tempfile
 
-    # PID-isolated staging (the io_roundtrip convention: concurrent runs
-    # over the same sf_dir must not race); left in place for the process
-    # lifetime so the returned DataFrame stays readable lazily — no
-    # driver-side collect of the snapshot.
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    base = f"/tmp/spark_graft_upsert/{os.getpid()}_{key}"
+    # A fresh staging directory per call: a reused streaming checkpoint
+    # would resume past every micro-batch and return the previous call's
+    # snapshot.  Directories are left in place for the process lifetime,
+    # so each returned DataFrame stays readable lazily — no driver-side
+    # collect of the snapshot.
+    root = "/tmp/spark_graft_upsert"
+    os.makedirs(root, exist_ok=True)
+    base = tempfile.mkdtemp(prefix=f"{os.getpid()}_", dir=root)
     target = os.path.join(base, "snapshot")
     checkpoint = os.path.join(base, "ckpt")
     run_foreachbatch_upsert(

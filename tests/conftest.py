@@ -44,6 +44,19 @@ def with_conf(spark, pairs):
                 spark.conf.set(k, v)
 
 
+def arrow_frame(spark, rows, **types):
+    """DataFrame of the tuples ``rows``, one column per keyword (name =
+    pyarrow type, in tuple order), built from an Arrow table.  A list of
+    Python rows would instead pass each input partition through a Python
+    worker before the query runs: ~1.1 s per call at 4 cores (~7 s at 32)
+    against ~0.45 s from Arrow, which dominated the property tests."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(
+        pa.table({c: pa.array([r[i] for r in rows], t) for i, (c, t) in enumerate(types.items())})
+    )
+
+
 def spy_calls(monkeypatch, module, name):
     """Wrap ``module.name`` for the test so each call is recorded; returns
     the (growing) list of calls."""

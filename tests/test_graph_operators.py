@@ -125,6 +125,23 @@ def test_graph_queries_match_oracle(spark, sf_dir_oracle):
         assert ok, f"{name}: {detail}"
 
 
+def test_triangle_query_distributed_matches_oracle(spark, sf_dir_oracle, monkeypatch):
+    """graph_triangle_counts with its lineitem-footer ceiling at 0: the
+    distributed co-purchase pair count + triangle plan keeps oracle
+    coverage, which the default run no longer reaches at test scale."""
+    from datafusion_parallelism_spark.queries import REGISTRY
+    from datafusion_parallelism_spark.queries import graph as graph_queries
+    from datafusion_parallelism_spark.testing import compare_to_oracle
+
+    monkeypatch.setattr(graph_queries, "_CO_PURCHASE_KERNEL_MAX_ROWS", 0)
+    calls = spy_calls(monkeypatch, graph_queries, "_co_purchase_triangles_arrow")
+    spec = REGISTRY["graph_triangle_counts"]
+    df = spec.fn(spark, sf_dir_oracle)
+    ok, detail = compare_to_oracle(spark, df, spec.oracle, sf_dir_oracle)
+    assert ok, detail
+    assert not calls
+
+
 def test_pagerank_duplicate_edges_collapsed(spark):
     # Edges are a set: duplicates must not double contributions.
     a = _pr(spark, [(1, 2), (2, 1)], iterations=5)

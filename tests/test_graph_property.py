@@ -9,11 +9,14 @@ take the single-task Arrow kernel) and with the ceiling patched to 0
 (the distributed plan).  The ceiling-0 side runs fewer examples because
 each example there launches many more Spark jobs."""
 
+import pyarrow as pa
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from datafusion_parallelism_spark.operators import graph
 from datafusion_parallelism_spark.operators.graph import connected_components
+
+from conftest import arrow_frame
 
 edges_st = st.lists(
     st.tuples(st.integers(0, 12), st.integers(0, 12)), min_size=1, max_size=20
@@ -54,7 +57,7 @@ def _examples(n):
 
 
 def _check_cc(spark, edges):
-    df = spark.createDataFrame(edges, schema="u long, v long")
+    df = arrow_frame(spark, edges, u=pa.int64(), v=pa.int64())
     got = {r.node: r.cluster for r in connected_components(df).collect()}
     assert got == _uf(edges)
 
@@ -105,7 +108,7 @@ def _check_pagerank(spark, edges):
     float-summation-order tolerance, and ranks must stay a distribution."""
     from datafusion_parallelism_spark.operators.graph import pagerank
 
-    df = spark.createDataFrame(edges, schema="u long, v long")
+    df = arrow_frame(spark, edges, u=pa.int64(), v=pa.int64())
     got = {r.node: r["rank"] for r in pagerank(df, iterations=6).collect()}
     want = _pr_numpy(edges, 0.85, 6)
     assert got.keys() == want.keys()
@@ -148,7 +151,7 @@ def _check_triangles(spark, edges):
         if (a, b) in eset and (a, c) in eset and (b, c) in eset:
             for n in (a, b, c):
                 expected[n] = expected.get(n, 0) + 1
-    df = spark.createDataFrame(simple, "u long, v long")
+    df = arrow_frame(spark, simple, u=pa.int64(), v=pa.int64())
     got = {r["node"]: r["triangles"] for r in triangle_counts(df).collect()}
     assert got == expected
 

@@ -14,12 +14,13 @@ from decimal import ROUND_HALF_UP, Decimal
 from hashlib import md5
 from itertools import combinations
 
+import pyarrow as pa
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from datafusion_parallelism_spark.queries import llm
 
-from conftest import spy_calls
+from conftest import arrow_frame, spy_calls
 
 _DEFAULT_CEILING = llm._MINHASH_KERNEL_MAX_DOCS
 
@@ -93,7 +94,7 @@ def _bruteforce(docs):
 
 
 def _check(spark, monkeypatch, docs, ceiling):
-    d = spark.createDataFrame(docs, "doc_id long, text string")
+    d = arrow_frame(spark, docs, doc_id=pa.int64(), text=pa.string())
     with monkeypatch.context() as m:
         m.setattr(llm, "_MINHASH_KERNEL_MAX_DOCS", ceiling)
         calls = spy_calls(m, llm, "_minhash_pairs_arrow")

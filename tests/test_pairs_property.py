@@ -10,6 +10,7 @@ AQE on (pair exchange at 4x width) and off (1x)."""
 from collections import Counter
 from itertools import combinations
 
+import pyarrow as pa
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
@@ -19,7 +20,7 @@ from datafusion_parallelism_spark.operators.pairs import (
     partition_groups,
 )
 
-from conftest import with_conf
+from conftest import arrow_frame, with_conf
 
 _CAP = 3
 
@@ -46,7 +47,7 @@ def _bruteforce(groups):
 @example({0: {1, 2, 3}, 1: {1, 2, 3, 4}, 2: {2, 3}})
 def test_pair_counts_match_bruteforce(spark, groups):
     rows = [(g, m) for g, members in groups.items() for m in members]
-    df = spark.createDataFrame(rows, "g long, m long")
+    df = arrow_frame(spark, rows, g=pa.int64(), m=pa.int64())
     want = _bruteforce(groups)
     for aqe in ("true", "false"):
         with with_conf(spark, {"spark.sql.adaptive.enabled": aqe}):

@@ -220,8 +220,9 @@ def test_pair_exchange_width_is_data_ahead_4x(spark, sf_dir):
     4 × max(cores, session width) with AQE on — one decade of pair-volume
     headroom over the input-sized session conf, measured spill-free
     through x256 — and at 1 × with AQE off, the small-input posture where
-    extra reducers only cost CPU (graph_triangle_counts at sf0.01, 4 cores:
-    median 1.90 s CPU at 1x vs 2.29 s at 4x).  The origin is pinned too:
+    extra reducers only cost CPU (measured on graph_triangle_counts'
+    distributed co-purchase path at sf0.01, 4 cores: median 1.90 s CPU at
+    1x vs 2.29 s at 4x).  The origin is pinned too:
     REPARTITION_BY_NUM is never coalesced, and a coalescable exchange (a
     rebalance or a column-only repartition) would let AQE shrink the
     width back to its shuffle-bytes target, which the count's hash state

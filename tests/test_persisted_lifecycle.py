@@ -34,7 +34,7 @@ from datafusion_parallelism_spark.session import (
 #: sweep at sf0.001, re-derived 2026-10-18).  Count per query varies with
 #: iteration depth, so only names are pinned here.  Queries whose
 #: single-task kernel runs at this scale (ann_pq_topk, dedup_minhash_lsh,
-#: graph_pagerank) leave none.
+#: graph_pagerank, graph_triangle_counts) leave none.
 CHECKPOINT_BEARING = [
     "dedup_ngram_jaccard",
     "dedup_containment",
@@ -46,7 +46,6 @@ CHECKPOINT_BEARING = [
     "vec_kmeans_clusters",
     "mix_cluster_balanced_sample",
     "stream_foreachbatch_upsert",
-    "graph_triangle_counts",
 ]
 
 

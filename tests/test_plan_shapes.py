@@ -409,9 +409,13 @@ def test_triangle_corners_single_generator_pass(spark, monkeypatch, sf_dir):
     wedge-join subtree three times (ReusedExchange dedupes the shuffle
     writes but each copy re-reads and re-joins; measured 22-exchange plan
     vs 10).  Pin: exactly one LeftSemi (the closing-edge check), exactly
-    one Generate (the corner explode), no BroadcastNestedLoop/cartesian."""
+    one Generate (the corner explode), no BroadcastNestedLoop/cartesian.
+    Both gates are patched to 0: the query's lineitem-footer gate (else
+    the fused kernel runs) and the edge-count gate."""
     from datafusion_parallelism_spark.operators import graph
+    from datafusion_parallelism_spark.queries import graph as graph_queries
 
+    monkeypatch.setattr(graph_queries, "_CO_PURCHASE_KERNEL_MAX_ROWS", 0)
     with monkeypatch.context() as m:
         m.setattr(graph, "_TRI_KERNEL_MAX_EDGES", 0)
         plan = physical_plan_str(
@@ -421,11 +425,38 @@ def test_triangle_corners_single_generator_pass(spark, monkeypatch, sf_dir):
     assert plan.count("Generate") == 1, plan
     assert "BroadcastNestedLoopJoin" not in plan and "CartesianProduct" not in plan
     assert plan.count("Exchange") <= 12, plan
-    # Default (r11): a small measured edge count routes the whole count
-    # into the single-task NumPy kernel — no joins at all.
+    # Edge gate at its default (r11): a small measured edge count routes
+    # the count into the single-task NumPy kernel — no joins at all.
     plan = physical_plan_str(REGISTRY["graph_triangle_counts"].fn(spark, sf_dir))
     assert "MapInArrow" in plan, plan
     assert "Join" not in plan, plan
+
+
+def test_triangle_query_below_gate_is_one_arrow_task(spark, sf_dir):
+    """Below the lineitem-footer gate graph_triangle_counts builds with
+    zero Spark jobs (no co-purchase pair-count checkpoint) and plans as
+    exactly one MapInArrow (distinct, basket cap, pair count and
+    compact-forward triangles fused) over the scan: no join and no
+    Exchange below the kernel."""
+    import os
+
+    from datafusion_parallelism_spark.queries.graph import (
+        _CO_PURCHASE_KERNEL_MAX_ROWS,
+    )
+    from datafusion_parallelism_spark.session import parquet_num_rows
+
+    n = parquet_num_rows(os.path.join(sf_dir, "lineitem.parquet"))
+    assert n <= _CO_PURCHASE_KERNEL_MAX_ROWS
+    # The memoized scan's schema read is table registration, not build.
+    load(spark, sf_dir, "lineitem")
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    jobs = scheduler.numTotalJobs()
+    df = REGISTRY["graph_triangle_counts"].fn(spark, sf_dir)
+    assert scheduler.numTotalJobs() == jobs
+    plan = physical_plan_str(df)
+    assert plan.count("MapInArrow") == 1, plan
+    assert "Join" not in plan and "Scan ExistingRDD" not in plan, plan
+    assert "Exchange" not in plan[plan.index("MapInArrow"):], plan
 
 
 def test_triangle_wedge_table_never_sorted(spark, monkeypatch):
