@@ -92,6 +92,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from datafusion_parallelism_spark.queries import REGISTRY  # noqa: E402
 from datafusion_parallelism_spark.session import (  # noqa: E402
     benchmark_session,
+    default_cpus,
     force_execute as _force,
     persistent_rdd_ids as _persistent_ids,
     release_persisted as _release_persisted,
@@ -187,7 +188,7 @@ def main() -> None:
         sf_val = float(sf)
     except ValueError:
         sf_val = sf
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     spark = benchmark_session(
         sf_dir,
         app_name="bench",

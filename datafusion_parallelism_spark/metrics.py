@@ -19,10 +19,12 @@ metric that flipped between the factors (BASELINE.md §Round 9,
 docs/decomp_chain_r9.jsonl).  Wall clocks on a shared box drift ±20-70%;
 task-time and byte counters do not.
 
-Requires a session built with ``spark.ui.enabled=true`` (the measurement
-harnesses pass it; the default session keeps the UI off to avoid the
-listener-bus overhead on MB-scale runs).  Returns ``{}`` when the UI is
-off rather than failing, so callers can attach metrics opportunistically.
+The stage reader requires a session built with ``spark.ui.enabled=true``
+(the measurement harnesses pass it; the default session keeps the UI off
+to avoid the listener-bus overhead on MB-scale runs).  It returns ``{}``
+when the UI is off rather than failing, so callers can attach metrics
+opportunistically.  :func:`codegen_compiles` reads a JVM counter instead
+and works in any session.
 """
 
 from __future__ import annotations
@@ -114,3 +116,16 @@ def totals(rows: dict[int, dict] | list[dict]) -> dict[str, float]:
     vals = rows.values() if isinstance(rows, dict) else rows
     vals = list(vals)
     return {m: round(sum(v[m] for v in vals), 3) for m in SUMMABLE}
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes Janino has compiled in this JVM so far.
+
+    The count of Spark's ``CodegenMetrics`` compilation-time histogram,
+    read over py4j: a static JVM counter, so it works with the UI off,
+    unlike :func:`stage_metrics`.  A class served from the compiled-class
+    cache does not count, so the delta over a warm pass is the number of
+    recompiles that pass paid.
+    """
+    source = spark.sparkContext._jvm.org.apache.spark.metrics.source
+    return int(source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount())

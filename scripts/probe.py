@@ -6,7 +6,10 @@ benchmark_session), one cold pass + optional warm passes, releasing
 localCheckpoint blocks between queries off the clock (the consistent-harness
 protocol of docs/scale_sweep_r5.jsonl's revalidation-v2 rows).  Each pass's
 wall is plan-build + execution, bench.py's headline protocol, with the
-plan/exec split reported alongside.  Prints one JSON line per query.
+plan/exec split reported alongside, and so is the number of generated
+classes Janino compiled during the pass (``metrics.codegen_compiles``; a
+warm pass that recompiles is paying codegen again).  Prints one JSON line
+per query.
 
 Paired mode (``--paired A_DIR B_DIR``) is the round-8 protocol answer to
 this VM's ±20–70% cross-window drift (VERDICT r7 item 2): for each query it
@@ -97,6 +100,7 @@ def plan_signature(df) -> list[str]:
 
 
 def run_single(sf_dir: str, names: list[str]) -> int:
+    from datafusion_parallelism_spark.metrics import codegen_compiles
     from datafusion_parallelism_spark.queries import REGISTRY
     from datafusion_parallelism_spark.session import (
         benchmark_session,
@@ -131,6 +135,7 @@ def run_single(sf_dir: str, names: list[str]) -> int:
         want_plan = os.environ.get("PROBE_PLAN", "") == "1"
 
         def one_pass():
+            c0 = codegen_compiles(spark)
             t0 = time.perf_counter()
             df = REGISTRY[name].fn(spark, sf_dir)
             t1 = time.perf_counter()
@@ -139,6 +144,7 @@ def run_single(sf_dir: str, names: list[str]) -> int:
             else:
                 force_execute(df)
             t2 = time.perf_counter()
+            compiles = codegen_compiles(spark) - c0
             sig = plan_signature(df) if want_plan else None
             metrics = None
             if want_metrics:
@@ -167,9 +173,10 @@ def run_single(sf_dir: str, names: list[str]) -> int:
                 round(t2 - t1, 3),
                 sig,
                 metrics,
+                compiles,
             )
 
-        cold_wall, cold_plan, cold_exec, cold_sig, cold_metrics = one_pass()
+        cold_wall, cold_plan, cold_exec, cold_sig, cold_metrics, cold_compiles = one_pass()
         warms = []
         for _ in range(warm_passes):
             release_persisted(spark, keep_ids)
@@ -182,6 +189,8 @@ def run_single(sf_dir: str, names: list[str]) -> int:
             "cold_split_s": {"plan": cold_plan, "exec": cold_exec},
             "warm_s": [w[0] for w in warms],
             "warm_split_s": [{"plan": w[1], "exec": w[2]} for w in warms],
+            "cold_codegen_compiles": cold_compiles,
+            "warm_codegen_compiles": [w[5] for w in warms],
             "conf": extra_conf,
         }
         if want_plan:

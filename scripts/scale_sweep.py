@@ -222,13 +222,14 @@ def duckdb_wall(sf_dir: str, names: list[str]) -> dict[str, float]:
     adding information.  Skipped names are absent from the returned dict,
     so totals stay comparable only across the same skip set."""
     from datafusion_parallelism_spark.queries import REGISTRY
+    from datafusion_parallelism_spark.session import default_cpus
 
     passes = int(os.environ.get("SWEEP_DUCKDB_PASSES", "2"))
     skip = {
         s for s in os.environ.get("SWEEP_DUCKDB_SKIP", "").split(",") if s
     }
     con = duckdb.connect()
-    con.sql(f"SET threads = {os.environ.get('SPARK_GRAFT_CPUS', '32')}")
+    con.sql(f"SET threads = {default_cpus()}")
     # Cap DuckDB's spill: an oracle whose intermediate explodes at a GB
     # factor must fail ITS measurement (recorded as an error), not fill
     # the disk and kill the whole sweep (observed: 78 GB of temp from one
