@@ -129,3 +129,13 @@ def codegen_compiles(spark: SparkSession) -> int:
     """
     source = spark.sparkContext._jvm.org.apache.spark.metrics.source
     return int(source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount())
+
+
+def jobs_submitted(spark: SparkSession) -> int:
+    """Spark jobs this context has submitted so far (the next job id).
+
+    The DAG scheduler's ``numTotalJobs`` high-water mark, read over py4j,
+    so like :func:`codegen_compiles` it works with the UI off; the delta
+    over a pass is the jobs that pass launched.
+    """
+    return int(spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs())

@@ -23,6 +23,7 @@ from __future__ import annotations
 import os
 from typing import Iterable, Iterator, Tuple
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -135,10 +136,14 @@ def _update_user_totals(
 
 #: Bucketized state: parallel arrays of per-user accumulators plus two
 #: scalar slots for the (defensive) null-user_id group, which pandas
-#: groupby cannot key through an int64 index.
+#: groupby cannot key through an int64 index.  The arrays are stored as
+#: little-endian int64/float64 bytes, not ``array<...>`` columns: Spark's
+#: state encoder serializes an array field through ``MapObjects``, whose
+#: generated variable names come from a JVM-wide counter, so every run of
+#: the stream would compile a new serializer class; the serializer of a
+#: binary field is the same code on every run.
 _BUCKET_STATE_SCHEMA = (
-    "users array<long>, ns array<long>, totals array<double>, "
-    "null_n long, null_total double"
+    "users binary, ns binary, totals binary, null_n long, null_total double"
 )
 
 
@@ -157,10 +162,10 @@ def _update_bucket_totals(
     if state.exists:
         users, ns, totals, null_n, null_total = state.get
     else:
-        users, ns, totals, null_n, null_total = [], [], [], 0, 0.0
+        users, ns, totals, null_n, null_total = b"", b"", b"", 0, 0.0
     prev = pd.DataFrame(
-        {"n": pd.Series(ns, dtype="int64"), "t": pd.Series(totals, dtype="float64")},
-        index=pd.Index(pd.Series(users, dtype="int64")),
+        {"n": np.frombuffer(ns, "<i8"), "t": np.frombuffer(totals, "<f8")},
+        index=pd.Index(np.frombuffer(users, "<i8")),
     )
     null_mask = batch["user_id"].isna()
     nb = batch[~null_mask]
@@ -175,9 +180,9 @@ def _update_bucket_totals(
         null_total = (null_total or 0.0) + float(batch.loc[null_mask, "value"].sum())
     state.update(
         (
-            new_n.index.tolist(),
-            new_n.tolist(),
-            new_t.tolist(),
+            new_n.index.to_numpy(dtype="<i8").tobytes(),
+            new_n.to_numpy(dtype="<i8").tobytes(),
+            new_t.to_numpy(dtype="<f8").tobytes(),
             null_n,
             null_total,
         )

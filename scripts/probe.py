@@ -6,10 +6,12 @@ benchmark_session), one cold pass + optional warm passes, releasing
 localCheckpoint blocks between queries off the clock (the consistent-harness
 protocol of docs/scale_sweep_r5.jsonl's revalidation-v2 rows).  Each pass's
 wall is plan-build + execution, bench.py's headline protocol, with the
-plan/exec split reported alongside, and so is the number of generated
+plan/exec split reported alongside, and so are the number of generated
 classes Janino compiled during the pass (``metrics.codegen_compiles``; a
-warm pass that recompiles is paying codegen again).  Prints one JSON line
-per query.
+warm pass that recompiles is paying codegen again) and the number of Spark
+jobs it launched (``metrics.jobs_submitted``).  Each row also records the
+session's ``spark.sql.shuffle.partitions``.  Prints one JSON line per
+query.
 
 Paired mode (``--paired A_DIR B_DIR``) is the round-8 protocol answer to
 this VM's ±20–70% cross-window drift (VERDICT r7 item 2): for each query it
@@ -100,7 +102,7 @@ def plan_signature(df) -> list[str]:
 
 
 def run_single(sf_dir: str, names: list[str]) -> int:
-    from datafusion_parallelism_spark.metrics import codegen_compiles
+    from datafusion_parallelism_spark.metrics import codegen_compiles, jobs_submitted
     from datafusion_parallelism_spark.queries import REGISTRY
     from datafusion_parallelism_spark.session import (
         benchmark_session,
@@ -115,6 +117,7 @@ def run_single(sf_dir: str, names: list[str]) -> int:
     if want_metrics:
         extra_conf.setdefault("spark.ui.enabled", "true")
     spark = benchmark_session(sf_dir, app_name="probe", extra_conf=extra_conf)
+    shuffle_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     keep_ids = frozenset(persistent_rdd_ids(spark))
     seen_stage_ids: set[int] = set()
     for name in names:
@@ -136,6 +139,7 @@ def run_single(sf_dir: str, names: list[str]) -> int:
 
         def one_pass():
             c0 = codegen_compiles(spark)
+            j0 = jobs_submitted(spark)
             t0 = time.perf_counter()
             df = REGISTRY[name].fn(spark, sf_dir)
             t1 = time.perf_counter()
@@ -145,6 +149,7 @@ def run_single(sf_dir: str, names: list[str]) -> int:
                 force_execute(df)
             t2 = time.perf_counter()
             compiles = codegen_compiles(spark) - c0
+            jobs = jobs_submitted(spark) - j0
             sig = plan_signature(df) if want_plan else None
             metrics = None
             if want_metrics:
@@ -174,9 +179,13 @@ def run_single(sf_dir: str, names: list[str]) -> int:
                 sig,
                 metrics,
                 compiles,
+                jobs,
             )
 
-        cold_wall, cold_plan, cold_exec, cold_sig, cold_metrics, cold_compiles = one_pass()
+        (
+            cold_wall, cold_plan, cold_exec, cold_sig, cold_metrics,
+            cold_compiles, cold_jobs,
+        ) = one_pass()
         warms = []
         for _ in range(warm_passes):
             release_persisted(spark, keep_ids)
@@ -191,6 +200,9 @@ def run_single(sf_dir: str, names: list[str]) -> int:
             "warm_split_s": [{"plan": w[1], "exec": w[2]} for w in warms],
             "cold_codegen_compiles": cold_compiles,
             "warm_codegen_compiles": [w[5] for w in warms],
+            "cold_jobs": cold_jobs,
+            "warm_jobs": [w[6] for w in warms],
+            "shuffle_partitions": shuffle_partitions,
             "conf": extra_conf,
         }
         if want_plan:

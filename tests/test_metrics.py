@@ -12,7 +12,13 @@ import os
 import subprocess
 import sys
 
-from datafusion_parallelism_spark.metrics import SUMMABLE, stage_metrics, totals
+from conftest import with_conf
+from datafusion_parallelism_spark.metrics import (
+    SUMMABLE,
+    jobs_submitted,
+    stage_metrics,
+    totals,
+)
 
 _CHILD = r"""
 import json, sys
@@ -59,6 +65,15 @@ def test_stage_metrics_live_read(sf_dir):
 def test_stage_metrics_empty_when_ui_disabled(spark):
     assert spark.sparkContext.uiWebUrl is None  # default session posture
     assert stage_metrics(spark) == {}
+
+
+def test_jobs_submitted_counts_with_ui_disabled(spark):
+    """The job count needs no UI: with AQE off (which would run the count's
+    shuffle as a job of its own), one ``count`` launches exactly one job."""
+    with with_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
+        before = jobs_submitted(spark)
+        spark.range(10).count()
+        assert jobs_submitted(spark) - before == 1
 
 
 def test_totals_sums_additive_fields_only():

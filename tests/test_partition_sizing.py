@@ -1,12 +1,14 @@
 """Pin the shuffle-partition sizing rule (session.auto_shuffle_partitions).
 
-The rule must hold across five orders of magnitude: tiny correctness runs
-stay at the minimum (scheduling cost dominates), mid-range inputs keep
-every core busy (the measured 2-4x mid-scale cliff when 73 MB got 3
-reducers on 32 cores), and huge inputs hit the 4x-cores cap that bounds
-task-scheduling overhead at cluster scale."""
+The rule must hold across five orders of magnitude: tiny inputs get one
+reducer per 4 MB, down to one (scheduling cost dominates), mid-range
+inputs keep every core busy (the measured 2-4x mid-scale cliff when 73 MB
+got 3 reducers on 32 cores), and huge inputs hit the 4x-cores cap that
+bounds task-scheduling overhead at cluster scale."""
 
 import os
+
+import pytest
 
 from datafusion_parallelism_spark.session import auto_shuffle_partitions
 
@@ -23,7 +25,23 @@ def _dir_of_size(tmp_path, n_bytes):
 
 
 def test_tiny_input_stays_at_minimum(tmp_path):
-    assert auto_shuffle_partitions(_dir_of_size(tmp_path, 2 * MB), cpus=32) == 4
+    """2 MB gets one reducer, whatever the core count: at sf0.01 (1.9 MB)
+    on 4 cores, 1 reducer instead of the former fixed floor of 4 cut a
+    traced sql_sf0.01 pass from 82 to 38 tasks and its summed stage run
+    time from 1005 to 512 ms, with the same 24 jobs."""
+    assert auto_shuffle_partitions(_dir_of_size(tmp_path, 2 * MB), cpus=32) == 1
+
+
+@pytest.mark.parametrize(
+    "n_bytes, want",
+    [
+        (int(1.9 * MB), 1),  # sf0.01
+        (12 * MB, 3),  # below 4 MB x cores: ceil(12 / 4)
+        (17 * MB, 4),  # sf0.1: one reducer per core
+    ],
+)
+def test_small_inputs_get_one_reducer_per_4mb_on_4_cores(tmp_path, n_bytes, want):
+    assert auto_shuffle_partitions(_dir_of_size(tmp_path, n_bytes), cpus=4) == want
 
 
 def test_midrange_input_keeps_cores_busy(tmp_path):

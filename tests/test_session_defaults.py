@@ -1,11 +1,15 @@
 """Session defaults that must hold outside the measurement harnesses:
 compiled-class reuse across a query loop, the core count when
 ``SPARK_GRAFT_CPUS`` is unset, and kernel imports from a driver started
-outside the repository root."""
+outside the repository root; and the benchmark queries' results in the
+posture ``benchmark_session`` takes at sf0.01."""
 
 import os
+import re
 import subprocess
 import sys
+
+import pytest
 
 from conftest import with_conf
 from datafusion_parallelism_spark.metrics import codegen_compiles
@@ -15,6 +19,7 @@ from datafusion_parallelism_spark.session import (
     default_cpus,
     force_execute,
 )
+from datafusion_parallelism_spark.testing import compare_to_oracle
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -46,6 +51,23 @@ def test_warm_pass_over_query_loop_compiles_nothing(spark, sf_dir):
     with with_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
         one_pass()
         assert one_pass() == 0
+
+
+@pytest.mark.parametrize("name", _SQL_LOOP)
+def test_sql_loop_matches_oracle_at_one_reducer_without_aqe(spark, sf_dir_oracle, name):
+    """``benchmark_session`` runs sf0.01 (1.9 MB) with one shuffle
+    partition and AQE off; the shared test session runs core-wide shuffles
+    with AQE on, so without this the posture the benchmarks measure would
+    have no result check of its own."""
+    posture = {"spark.sql.shuffle.partitions": "1", "spark.sql.adaptive.enabled": "false"}
+    with with_conf(spark, posture):
+        spec = REGISTRY[name]
+        df = spec.fn(spark, sf_dir_oracle)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        widths = re.findall(r"hashpartitioning\(.*, (\d+)\), \w+", plan)
+        assert widths and set(widths) == {"1"}, (name, plan)
+        ok, detail = compare_to_oracle(spark, df, spec.oracle, sf_dir_oracle)
+    assert ok, f"{name}: {detail}"
 
 
 def test_unset_cpus_default_to_affinity(monkeypatch, tmp_path):

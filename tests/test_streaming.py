@@ -382,3 +382,66 @@ def test_foreachbatch_upsert_batch_boundary_independent(spark, sf_dir, tmp_path)
     got2 = spark.read.parquet(target)
     n_tot = got2.agg(F.sum("n_events")).collect()[0][0]
     assert n_tot == e.count() * 4
+
+
+def test_bucketized_totals_carry_state_across_micro_batches(spark, sf_dir, tmp_path):
+    """Three staged copies of the events with maxFilesPerTrigger=1 run three
+    micro-batches, so every bucket's state is written, read back and merged
+    twice: each user's last emission must be 3x its batch count and sum,
+    and equal the per-user operator's."""
+    import os
+    import shutil
+
+    src = os.path.join(sf_dir, "events.parquet")
+    stage = tmp_path / "in"
+    stage.mkdir()
+    for i in range(3):
+        shutil.copy(src, stage / f"events-{i}.parquet")
+    batch_schema = spark.read.parquet(src).schema
+
+    def final_totals(buckets, name):
+        s = (
+            spark.readStream.schema(batch_schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(stage))
+        )
+        out = run_to_table(
+            user_running_totals_stream(s, buckets=buckets), name, output_mode="update"
+        )
+        # event counts only grow, so a user's last emission has the largest
+        last = out.groupBy("user_id").agg(
+            F.max(F.struct("n_events", "value_total")).alias("m")
+        )
+        return {r.user_id: (r.m.n_events, round(r.m.value_total, 6)) for r in last.collect()}
+
+    bucketed = final_totals(16, "bt_multi_bucketed")
+    batch = {
+        r.user_id: (3 * r.n, round(3 * r.v, 6))
+        for r in load(spark, sf_dir, "events")
+        .groupBy("user_id")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("v"))
+        .collect()
+    }
+    assert bucketed == batch
+    assert bucketed == final_totals(0, "bt_multi_per_user")
+
+
+def test_running_totals_rerun_compiles_no_class(spark, sf_dir):
+    """A second run of the stateful stream must reuse every generated class.
+    With ``array<...>`` state columns the state encoder's serializer named
+    its variables from a JVM-wide counter, so each run compiled one new
+    class.  AQE off, as ``benchmark_session`` runs small inputs (with AQE on
+    the final plan of a query can vary between runs)."""
+    from conftest import with_conf
+    from datafusion_parallelism_spark.metrics import codegen_compiles
+    from datafusion_parallelism_spark.queries import REGISTRY
+    from datafusion_parallelism_spark.session import force_execute
+
+    def one_run():
+        before = codegen_compiles(spark)
+        force_execute(REGISTRY["stream_user_running_totals"].fn(spark, sf_dir))
+        return codegen_compiles(spark) - before
+
+    with with_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
+        one_run()
+        assert one_run() == 0
