@@ -23,13 +23,15 @@ The stage reader requires a session built with ``spark.ui.enabled=true``
 (the measurement harnesses pass it; the default session keeps the UI off
 to avoid the listener-bus overhead on MB-scale runs).  It returns ``{}``
 when the UI is off rather than failing, so callers can attach metrics
-opportunistically.  :func:`codegen_compiles` reads a JVM counter instead
-and works in any session.
+opportunistically.  :func:`codegen_compiles` and :func:`jobs_submitted`
+read JVM counters instead, and :func:`python_worker_cpu_s` reads ``/proc``;
+they work in any session.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import urllib.request
 
 from pyspark.sql import SparkSession
@@ -139,3 +141,46 @@ def jobs_submitted(spark: SparkSession) -> int:
     over a pass is the jobs that pass launched.
     """
     return int(spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs())
+
+
+def _proc_stats() -> dict[int, tuple[int, int]]:
+    """``pid -> (ppid, CPU ticks)`` of every live process, the ticks being
+    its own user + system time plus that of the children it waited for."""
+    out = {}
+    for name in os.listdir("/proc"):
+        if not name.isdigit():
+            continue
+        try:
+            with open(f"/proc/{name}/stat") as f:
+                line = f.read()
+        except OSError:  # exited between the listing and the read
+            continue
+        # The command name may hold spaces and parentheses: split after
+        # its last ")", where field 3 (state) is index 0.
+        fields = line.rpartition(")")[2].split()
+        out[int(name)] = (int(fields[1]), sum(int(f) for f in fields[11:15]))
+    return out
+
+
+def python_worker_cpu_s(spark: SparkSession) -> float:
+    """CPU seconds the JVM's descendant processes have used so far: the
+    Python worker daemon and the workers it forks.
+
+    Read from ``/proc`` as ``perfbench/proc.py`` reads its process tree, so
+    it works with the UI off; the delta over a pass is the Python worker
+    CPU that pass cost.  The daemon ignores ``SIGCHLD``, so the kernel
+    reaps an exited worker without adding its time to the daemon's: a
+    worker that exits (Spark stops one idle for a minute) drops out of the
+    figure, which therefore suits deltas over short spans.
+    """
+    jvm = int(spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid())
+    stats = _proc_stats()
+    children: dict[int, list[int]] = {}
+    for pid, (ppid, _) in stats.items():
+        children.setdefault(ppid, []).append(pid)
+    ticks, todo = 0, list(children.get(jvm, ()))
+    while todo:
+        pid = todo.pop()
+        ticks += stats[pid][1]
+        todo.extend(children.get(pid, ()))
+    return ticks / os.sysconf("SC_CLK_TCK")

@@ -175,6 +175,10 @@ def get_spark(
             "spark.executorEnv.PYTHONPATH",
             os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         )
+        # Found through that same path: the stock daemon, except that its
+        # workers stop re-reading pyspark.zip at every task (~0.15 s of CPU
+        # per warm task; see worker_daemon).
+        .config("spark.python.daemon.module", "datafusion_parallelism_spark.worker_daemon")
         # In local mode the driver heap IS the whole cluster's memory: all
         # 32 executor threads share it for partial-agg hash maps, joins and
         # broadcasts.  8g on this 128 GiB box under-provisioned exactly the

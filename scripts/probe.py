@@ -8,8 +8,9 @@ protocol of docs/scale_sweep_r5.jsonl's revalidation-v2 rows).  Each pass's
 wall is plan-build + execution, bench.py's headline protocol, with the
 plan/exec split reported alongside, and so are the number of generated
 classes Janino compiled during the pass (``metrics.codegen_compiles``; a
-warm pass that recompiles is paying codegen again) and the number of Spark
-jobs it launched (``metrics.jobs_submitted``).  Each row also records the
+warm pass that recompiles is paying codegen again), the number of Spark
+jobs it launched (``metrics.jobs_submitted``) and the CPU seconds its Python
+workers used (``metrics.python_worker_cpu_s``).  Each row also records the
 session's ``spark.sql.shuffle.partitions``.  Prints one JSON line per
 query.
 
@@ -102,7 +103,11 @@ def plan_signature(df) -> list[str]:
 
 
 def run_single(sf_dir: str, names: list[str]) -> int:
-    from datafusion_parallelism_spark.metrics import codegen_compiles, jobs_submitted
+    from datafusion_parallelism_spark.metrics import (
+        codegen_compiles,
+        jobs_submitted,
+        python_worker_cpu_s,
+    )
     from datafusion_parallelism_spark.queries import REGISTRY
     from datafusion_parallelism_spark.session import (
         benchmark_session,
@@ -140,6 +145,7 @@ def run_single(sf_dir: str, names: list[str]) -> int:
         def one_pass():
             c0 = codegen_compiles(spark)
             j0 = jobs_submitted(spark)
+            p0 = python_worker_cpu_s(spark)
             t0 = time.perf_counter()
             df = REGISTRY[name].fn(spark, sf_dir)
             t1 = time.perf_counter()
@@ -150,6 +156,7 @@ def run_single(sf_dir: str, names: list[str]) -> int:
             t2 = time.perf_counter()
             compiles = codegen_compiles(spark) - c0
             jobs = jobs_submitted(spark) - j0
+            python_cpu = round(python_worker_cpu_s(spark) - p0, 3)
             sig = plan_signature(df) if want_plan else None
             metrics = None
             if want_metrics:
@@ -180,11 +187,12 @@ def run_single(sf_dir: str, names: list[str]) -> int:
                 metrics,
                 compiles,
                 jobs,
+                python_cpu,
             )
 
         (
             cold_wall, cold_plan, cold_exec, cold_sig, cold_metrics,
-            cold_compiles, cold_jobs,
+            cold_compiles, cold_jobs, cold_python_cpu,
         ) = one_pass()
         warms = []
         for _ in range(warm_passes):
@@ -202,6 +210,8 @@ def run_single(sf_dir: str, names: list[str]) -> int:
             "warm_codegen_compiles": [w[5] for w in warms],
             "cold_jobs": cold_jobs,
             "warm_jobs": [w[6] for w in warms],
+            "cold_python_cpu_s": cold_python_cpu,
+            "warm_python_cpu_s": [w[7] for w in warms],
             "shuffle_partitions": shuffle_partitions,
             "conf": extra_conf,
         }

@@ -11,11 +11,13 @@ import json
 import os
 import subprocess
 import sys
+import time
 
 from conftest import with_conf
 from datafusion_parallelism_spark.metrics import (
     SUMMABLE,
     jobs_submitted,
+    python_worker_cpu_s,
     stage_metrics,
     totals,
 )
@@ -74,6 +76,32 @@ def test_jobs_submitted_counts_with_ui_disabled(spark):
         before = jobs_submitted(spark)
         spark.range(10).count()
         assert jobs_submitted(spark) - before == 1
+
+
+def test_python_worker_cpu_counts_python_tasks_only(spark):
+    """A Python task raises the worker CPU figure; a pure-SQL query, which
+    starts no Python worker, leaves it as it was, with the UI off."""
+
+    def burn(batches):  # nested, so it is pickled by value
+        start = time.process_time()
+        while time.process_time() - start < 0.3:
+            pass
+        yield from batches
+
+    def python_task():
+        spark.range(1).coalesce(1).mapInArrow(burn, "id long").collect()
+
+    python_task()  # a worker exists from here on
+    # The worker collects garbage after it answers a task, and the daemon
+    # polls its socket once a second: let the first settle, and allow the
+    # second a tick of slack.
+    time.sleep(1)
+    before = python_worker_cpu_s(spark)
+    spark.range(1000).selectExpr("sum(id)").collect()
+    assert python_worker_cpu_s(spark) - before <= 0.02
+    before = python_worker_cpu_s(spark)
+    python_task()
+    assert python_worker_cpu_s(spark) - before >= 0.25
 
 
 def test_totals_sums_additive_fields_only():

@@ -44,10 +44,12 @@ def test_warm_pass_over_query_loop_compiles_nothing(spark, sf_dir):
         return codegen_compiles(spark) - before
 
     # AQE off, as benchmark_session runs inputs this small: with AQE on,
-    # the order in which concurrent query stages finish picks among
-    # several final plans, so a later run can generate a class variant
-    # no earlier run did (agg_count_distinct compiled 6, 4, 2 classes on
-    # three runs), which is new code, not a cache miss.
+    # query stages take their whole-stage-codegen ids in the order earlier
+    # stages finish, and each generated class's name carries its id.  The
+    # final plans of agg_count_distinct differ only in those ids (its
+    # distinct-count branches swap them from run to run), yet a later run
+    # compiles classes under names no earlier run used (24, 4, 0, 0, 2 on
+    # five runs): new source text, not a cache miss.
     with with_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
         one_pass()
         assert one_pass() == 0
