@@ -30,7 +30,7 @@ import os
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import (
@@ -48,7 +48,9 @@ from ..functions.text import (
     word_shingles,
 )
 from ..functions.vectors import as_double, cosine, norm
+from ..operators import vectors
 from ..operators.pairs import cap_groups, count_pairs, pair_counts, partition_groups
+from ..operators.vectors import KMEANS, PQ
 from ..plans.shaping import kernel_fits
 from ..session import load, parquet_num_rows, spread_for_compute, sql
 from .registry import query
@@ -827,7 +829,7 @@ def _minhash_pairs_arrow(d: DataFrame) -> DataFrame:
     minima (what the ``concat_ws('-')`` signature string encodes, the
     minima being non-negative); candidates are the distinct doc_a < doc_b
     pairs of a bucket; the Jaccard is |A∩B| / (|A| + |B| − |A∩B|) over
-    the same sets, rounded as Spark's ROUND (_round_half_up)."""
+    the same sets, rounded as Spark's ROUND (vectors.round_half_up)."""
     threshold, n_bands = JACCARD_THRESHOLD, N_PERMS // BAND_ROWS
 
     def kernel(batches):
@@ -860,7 +862,7 @@ def _minhash_pairs_arrow(d: DataFrame) -> DataFrame:
         xs, ys = np.array(sorted(cand), dtype=np.int64).T
         shared = np.array([len(sets[x] & sets[y]) for x, y in zip(xs, ys)])
         size = np.array([len(s) for s in sets])
-        jac = _round_half_up(shared / (size[xs] + size[ys] - shared), 4)
+        jac = vectors.round_half_up(shared / (size[xs] + size[ys] - shared), 4)
         keep = jac >= threshold
         ids_np = np.array(doc, dtype=np.int64)
         yield pa.RecordBatch.from_arrays(
@@ -1452,6 +1454,25 @@ def dedup_near_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 _IVF_K = 8  # deterministic centroids: vec_id < 8 (stand-in for k-means)
 
 
+def _ivf_cells(vecs: DataFrame) -> DataFrame:
+    """(vec_id, v, cid): every vector as doubles with its IVF cell, the
+    centroid (vec_id < _IVF_K) of highest cosine rounded to 1e-6, ties to
+    the smallest cid — a broadcast cross-score and a per-vector rank."""
+    ed = vecs.select("vec_id", as_double(F.col("embedding")).alias("v"))
+    cents = ed.filter(F.col("vec_id") < _IVF_K).select(
+        F.col("vec_id").alias("cid"), F.col("v").alias("cv")
+    )
+    scored = ed.crossJoin(F.broadcast(cents)).select(
+        "vec_id", "v", "cid", F.round(cosine(F.col("v"), F.col("cv")), 6).alias("s")
+    )
+    wa = Window.partitionBy("vec_id").orderBy(F.desc("s"), F.asc("cid"))
+    return (
+        scored.withColumn("rn", F.row_number().over(wa))
+        .filter(F.col("rn") == 1)
+        .select("vec_id", "v", "cid")
+    )
+
+
 @query(
     "ann_ivf_topk",
     oracle=f"""
@@ -1494,26 +1515,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     each query probes exactly its own cell (nprobe=1).  Scale path: the
     cell id is the shuffle key; adding centroids shrinks cells, and the
     centroid table stays broadcast-sized by construction."""
-    from pyspark.sql import Window
-
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
-    )
-    cents = e.filter(F.col("vec_id") < _IVF_K).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("cv")
-    )
-    scored_cells = e.crossJoin(F.broadcast(cents)).select(
-        "vec_id",
-        "v",
-        "cid",
-        F.round(cosine(F.col("v"), F.col("cv")), 6).alias("s"),
-    )
-    wa = Window.partitionBy("vec_id").orderBy(F.desc("s"), F.asc("cid"))
-    assign = (
-        scored_cells.withColumn("rn", F.row_number().over(wa))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "v", "cid")
-    )
+    assign = _ivf_cells(load(spark, sf_dir, "embeddings"))
     q = assign.filter(F.col("vec_id") < _N_QUERY_VECS).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), "cid"
     )
@@ -2641,36 +2643,28 @@ def corpus_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Product quantization (vector compression + ADC similarity search)
 # ==========================================================================
 
-#: Codebook geometry, sized for the toy corpus: 32 subspaces × 2 dims ×
-#: 64 anchors ≈ 0.66 recall@5 vs the exact cosine baseline (measured,
-#: pinned in tests/test_ann_quality.py).  Production PQ uses wider
-#: subspaces and a trained codebook (D=8, K=256 over a corpus sample);
-#: the PLAN — broadcast codebook, map-side assignment, LUT-join ADC —
-#: is identical at any (M, D, K).
-_PQ_M = 32    # subspaces
-_PQ_D = 2     # dims per subspace (embedding dim 64 / 32)
-_PQ_K = 64    # codebook size per subspace
-
-#: Shared oracle CTE chain: vectors are L2-NORMALIZED first (cosine-PQ:
-#: on unit vectors, squared-L2 ordering == cosine ordering, so ADC ranks
-#: by the same metric the exact baseline uses); the codebook is seeded
-#: from the _PQ_K smallest vec_ids and then TRAINED with _PQ_ITERS
-#: deterministic Lloyd iterations (rounded centroids for cross-engine fp
-#: reproducibility) before the final subvector↔anchor distance table.
-_PQ_ITERS = 2   # Lloyd iterations (recall@5 0.66 untrained → 0.74 trained)
-_PQ_ROUND = 5   # centroids rounded per update: sum-association fp noise
-                # (~1e-14) cannot survive a 1e-5 grid, so both engines'
-                # codebooks are value-identical and every downstream
-                # distance/argmin is bit-reproducible cross-engine.
+#: Codebook geometry (operators/vectors.PQ), sized for the toy corpus:
+#: 32 subspaces × 2 dims × 64 anchors ≈ 0.66 recall@5 vs the exact cosine
+#: baseline untrained, 0.74 after 2 Lloyd iterations (measured, pinned in
+#: tests/test_ann_quality.py).  Production PQ uses wider subspaces and a
+#: trained codebook (D=8, K=256 over a corpus sample); the PLAN — codebook
+#: in the task closure, map-side assignment, LUT-join ADC — is identical
+#: at any (M, D, K).  Centroids are rounded to 1e-5 per update: sum-
+#: association fp noise (~1e-14) cannot survive that grid, so both
+#: engines' codebooks are value-identical and every downstream
+#: distance/argmin is bit-reproducible cross-engine.
 
 
 def _pq_train_sql() -> str:
     """Oracle CTE chain: normalize → subvector table → sampled codebook →
-    _PQ_ITERS unrolled Lloyd iterations (assign to nearest anchor, average
+    PQ.iters unrolled Lloyd iterations (assign to nearest anchor, average
     members per (subspace, code), rounded; empty clusters keep their
-    previous anchor) → final ``dists`` (vec_id, j, aid, d2).  Generated
-    programmatically so the iteration count is one constant."""
-    d, m, k, rnd = _PQ_D, _PQ_M, _PQ_K, _PQ_ROUND
+    previous anchor) → final ``dists`` (vec_id, j, aid, d2).  Vectors are
+    L2-NORMALIZED first (cosine-PQ: on unit vectors, squared-L2 ordering
+    == cosine ordering, so ADC ranks by the same metric the exact
+    baseline uses).  Generated programmatically so the iteration count is
+    one constant."""
+    d, m, k, rnd = PQ.dims, PQ.groups, PQ.k, PQ.mean_scale
     sql = f"""
     normed AS (
       SELECT vec_id, list_transform(dv, x -> x / nrm) AS emb
@@ -2692,7 +2686,7 @@ def _pq_train_sql() -> str:
       CROSS JOIN (SELECT unnest(range({m})) AS j) js
     )"""
     prev = "anch0"
-    for t in range(_PQ_ITERS):
+    for t in range(PQ.iters):
         sql += f""",
     d{t} AS (
       SELECT s.vec_id, s.j, a.aid,
@@ -2731,6 +2725,11 @@ def _pq_train_sql() -> str:
 _PQ_DISTS_SQL = _pq_train_sql()
 
 
+def _n_vecs(sf_dir: str) -> int | None:
+    """Embeddings footer row count: the vector gate's bound, no Spark job."""
+    return parquet_num_rows(os.path.join(sf_dir, "embeddings.parquet"))
+
+
 def _normalized_cols(vecs: DataFrame) -> DataFrame:
     """(vec_id, v0, nrm): raw double vector + its L2 norm, with the
     repartition acting as an OPTIMIZER BARRIER as well as the vec_id
@@ -2758,9 +2757,9 @@ def _pq_subv(vecs: DataFrame, spark: SparkSession) -> DataFrame:
     over the corpus.  Lazy: tests assert scan pruning on this plan (the
     checkpointed one has no visible file scan)."""
     pre = _normalized_cols(vecs)
-    js = spark.range(_PQ_M).select(F.col("id").cast("int").alias("j"))
-    idx1 = (F.col("j") * _PQ_D + 1).cast("int")
-    idx2 = (F.col("j") * _PQ_D + 2).cast("int")
+    js = spark.range(PQ.groups).select(F.col("id").cast("int").alias("j"))
+    idx1 = (F.col("j") * PQ.dims + 1).cast("int")
+    idx2 = (F.col("j") * PQ.dims + 2).cast("int")
     return pre.crossJoin(F.broadcast(js)).select(
         "vec_id",
         "j",
@@ -2769,8 +2768,8 @@ def _pq_subv(vecs: DataFrame, spark: SparkSession) -> DataFrame:
     )
 
 
-def _pq_subv_pinned(subv: DataFrame) -> tuple[DataFrame, int]:
-    """(checkpointed subv, its row count).
+def _pq_subv_pinned(subv: DataFrame) -> DataFrame:
+    """The subvector table, checkpointed for the distributed trainer.
 
     One corpus shuffle total (the _normalized_cols barrier repartition):
     vec_id partitioning is preserved through the broadcast cross join and
@@ -2779,189 +2778,34 @@ def _pq_subv_pinned(subv: DataFrame) -> tuple[DataFrame, int]:
     aggregate over the table streams with no Sort and no Exchange even
     under AQE (a plain localCheckpoint erases both properties; see
     plans/shaping.checkpoint_pinned and
-    test_pq_training_iteration_streams_without_sort_or_exchange).  The row
-    count rides the (eager) checkpoint job as an observe metric — the
-    one-task-training gate reads it for free (round 11)."""
+    test_pq_training_iteration_streams_without_sort_or_exchange)."""
     from ..plans.shaping import checkpoint_pinned, presorted
 
-    obs = Observation()
-    out = checkpoint_pinned(
-        presorted(subv, "vec_id", "j").observe(obs, F.count(F.lit(1)).alias("m"))
-    )
-    return out, obs.get["m"]
+    return checkpoint_pinned(presorted(subv, "vec_id", "j"))
 
 
-#: Subvector-row ceiling for ONE-TASK Lloyd training (round 11).  The
-#: training loop is sequential by nature (each iteration's assignment
-#: needs the previous codebook), so the distributed form costs one
-#: driver-synced job per iteration plus a seed job — ~0.3 s of scheduling
-#: floor each at any toy/mid scale while the actual math is microseconds.
-#: Below this ceiling the whole fit runs inside one executor task
-#: (~24 B/row of NumPy arrays, ≈100 MB at the ceiling) and ships back
-#: only the M·K codebook; above it the per-iteration distributed jobs
-#: remain (the 100 TB posture — at that scale each job does real work).
-#: 0 turns the one-task fit off (tests patch it to force the distributed
-#: trainer).
-_PQ_LOCAL_TRAIN_MAX_SUBV = 4_000_000
-
-
-def _round_half_up(x, scale: int):
-    """Exact replica of Spark's ROUND(double) for a NumPy array.  Spark
-    rounds HALF_UP the SHORTEST decimal that reads back as the double
-    (``Double.toString``, Python's ``repr``), not its exact binary value:
-    ROUND(2.675, 2) is 2.68 although the double is 2.67499999....
-    Vectorized half-away-from-zero fast path, with a Decimal fallback for
-    values within 1e-9 of a rounding boundary, where the ``x * 10^scale``
-    product's own rounding could disagree with the decimal."""
+def _subspace_rows(batches):
+    """(batch, [(j, row mask, subvectors [rows, 1, D])] per subspace
+    present) for each Arrow batch of subvector rows (vec_id, j, e1, e2)."""
     import numpy as np
 
-    p = 10.0 ** scale
-    y = x * p
-    ay = np.abs(y)
-    fl = np.floor(ay)
-    out = np.sign(y) * np.floor(ay + 0.5) / p
-    near = np.abs(ay - fl - 0.5) < 1e-9
-    if near.any():
-        from decimal import ROUND_HALF_UP, Decimal
-
-        q = Decimal(1).scaleb(-scale)
-        for i in np.nonzero(near)[0]:
-            out[i] = float(
-                Decimal(repr(float(x[i]))).quantize(q, rounding=ROUND_HALF_UP)
-            )
-    return out
-
-
-#: Subvector rows per argmin chunk: the (rows × K) distance block stays
-#: ~130 MB at K=64 however many rows a kernel holds, where a whole
-#: (vectors × M × K) tensor at the _PQ_LOCAL_TRAIN_MAX_SUBV ceiling
-#: would take GBs.
-_PQ_CHUNK_ROWS = 1 << 18
-
-
-def _pq_nearest(j, e1, e2, a1, a2):
-    """Nearest anchor of each subvector row, in row chunks: (k, dmin)
-    with ``k`` a column index into the [M, k_eff] anchor arrays of row
-    ``j``.  Distances are the IEEE (e−a)·(e−a) sums the oracle SQL and
-    _pq_dists_from run (no power()); anchors are aid-sorted per subspace,
-    so argmin's first minimum IS the smallest aid — the oracle's
-    MIN(aid)-among-minima tie rule."""
-    import numpy as np
-
-    k = np.empty(len(j), np.int64)
-    dmin = np.empty(len(j), np.float64)
-    for lo in range(0, len(j), _PQ_CHUNK_ROWS):
-        sl = slice(lo, lo + _PQ_CHUNK_ROWS)
-        d = e1[sl, None] - a1[j[sl]]
-        d *= d
-        t = e2[sl, None] - a2[j[sl]]
-        t *= t
-        d += t
-        k[sl] = np.argmin(d, axis=1)
-        dmin[sl] = d[np.arange(len(d)), k[sl]]
-    return k, dmin
-
-
-def _pq_lloyd(vec, j, e1, e2):
-    """Seed + _PQ_ITERS Lloyd iterations over subvector rows (vec_id, j,
-    e1, e2) in NumPy; returns the aid-sorted [M, k_eff] arrays (aid, a1,
-    a2).  Value-identical to the distributed loop: the seed is the
-    subvectors of the k_eff = min(_PQ_K, #vectors) smallest vec_ids,
-    assignment is _pq_nearest, means are sum/count doubles rounded with
-    the exact HALF_UP replica (_round_half_up) and an empty cluster keeps
-    its anchor; the only difference is summation ORDER, which the
-    _PQ_ROUND grid absorbs by design (the same tolerance the oracle
-    comparison already rests on)."""
-    import numpy as np
-
-    m_sub = _PQ_M
-    uids = np.unique(vec)
-    k_eff = min(_PQ_K, len(uids))
-    smask = np.isin(vec, uids[:k_eff])
-    order = np.lexsort((vec[smask], j[smask]))
-    aid = vec[smask][order].reshape(m_sub, k_eff)
-    a1 = e1[smask][order].reshape(m_sub, k_eff).copy()
-    a2 = e2[smask][order].reshape(m_sub, k_eff).copy()
-    for _ in range(_PQ_ITERS):
-        jk = j * k_eff + _pq_nearest(j, e1, e2, a1, a2)[0]
-        cnt = np.bincount(jk, minlength=m_sub * k_eff)
-        s1 = np.bincount(jk, weights=e1, minlength=m_sub * k_eff)
-        s2 = np.bincount(jk, weights=e2, minlength=m_sub * k_eff)
-        nz = cnt > 0
-        a1.ravel()[nz] = _round_half_up(s1[nz] / cnt[nz], _PQ_ROUND)
-        a2.ravel()[nz] = _round_half_up(s2[nz] / cnt[nz], _PQ_ROUND)
-    return aid, a1, a2
-
-
-def _pq_train_local(subv: DataFrame) -> DataFrame:
-    """ONE-task Lloyd training: _pq_lloyd inside a single ``mapInArrow``
-    task over the checkpointed subvector table; emits the trained
-    codebook (M·K rows)."""
-    m_sub = _PQ_M
-
-    def kernel(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        cols: list = [[], [], [], []]
-        for b in batches:
-            for i in range(4):
-                cols[i].append(b.column(i).to_numpy(zero_copy_only=False))
-        if not cols[0]:
-            return
-        vec, j, e1, e2 = map(np.concatenate, cols)
-        aid, a1, a2 = _pq_lloyd(vec, j.astype(np.int64), e1, e2)
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(
-                    np.repeat(np.arange(m_sub, dtype=np.int32), aid.shape[1])
-                ),
-                pa.array(aid.ravel()),
-                pa.array(a1.ravel(), type=pa.float64()),
-                pa.array(a2.ravel(), type=pa.float64()),
-            ],
-            names=["j", "aid", "a1", "a2"],
+    for b in batches:
+        j = b.column(1).to_numpy(zero_copy_only=False)
+        e = np.stack(
+            [b.column(2).to_numpy(zero_copy_only=False),
+             b.column(3).to_numpy(zero_copy_only=False)],
+            axis=1,
         )
-
-    return (
-        subv.select("vec_id", "j", "e1", "e2")
-        .coalesce(1)
-        .mapInArrow(kernel, schema="j int, aid long, a1 double, a2 double")
-    )
-
-
-def _pq_anchor_arrays(rows):
-    """Codebook rows (j, aid, a1, a2) → three [M, k_eff] NumPy arrays with
-    the anchors of each subspace COLUMN-SORTED BY aid, so ``np.argmin``'s
-    first-minimum tie rule coincides with the oracle's MIN(aid)-among-
-    minima tie rule.  k_eff is the real anchor count per subspace (fewer
-    than _PQ_K on a corpus with fewer vectors), so no padding anchor can
-    win an argmin."""
-    import numpy as np
-
-    per_j: dict[int, list] = {}
-    for r in rows:
-        per_j.setdefault(r[0], []).append((r[1], r[2], r[3]))
-    k_eff = max(map(len, per_j.values()), default=0)
-    aid = np.zeros((_PQ_M, k_eff), dtype=np.int64)
-    a1 = np.zeros((_PQ_M, k_eff), dtype=np.float64)
-    a2 = np.zeros((_PQ_M, k_eff), dtype=np.float64)
-    for j, lst in per_j.items():
-        lst.sort()
-        for k, (i, x1, x2) in enumerate(lst):
-            aid[j, k] = i
-            a1[j, k] = x1
-            a2[j, k] = x2
-    return aid, a1, a2
+        yield b, [(g, j == g, e[j == g][:, None, :]) for g in np.unique(j)]
 
 
 def _pq_assign_arrow(
-    subv: DataFrame, aid, a1, a2, include_coords: bool
+    subv: DataFrame, ids, anchors, include_coords: bool
 ) -> DataFrame:
-    """Nearest-anchor assignment as ONE vectorized Arrow pass (guide §4.2):
-    _pq_nearest per batch, in-cache NumPy instead of a broadcast join's
-    K-way row expansion (|corpus|·M·K intermediate rows); the codebook
-    ([M,K] arrays, ~50 KB) rides the task closure.  Emits (vec_id, j,
+    """Nearest-anchor assignment of subvector rows as ONE vectorized Arrow
+    pass (vectors.nearest per subspace): in-cache NumPy instead of a
+    broadcast join's K-way row expansion (|corpus|·M·K intermediate rows);
+    the codebook (~50 KB) rides the task closure.  Emits (vec_id, j,
     code, dmin[, e1, e2]) in input row order."""
     out_schema = "vec_id long, j int, code long, dmin double"
     names = ["vec_id", "j", "code", "dmin"]
@@ -2970,23 +2814,17 @@ def _pq_assign_arrow(
         names += ["e1", "e2"]
 
     def kernel(batches):
+        import numpy as np
         import pyarrow as pa
 
-        for b in batches:
-            j = b.column(1).to_numpy(zero_copy_only=False)
-            k, dmin = _pq_nearest(
-                j,
-                b.column(2).to_numpy(zero_copy_only=False),
-                b.column(3).to_numpy(zero_copy_only=False),
-                a1,
-                a2,
-            )
-            cols = [
-                b.column(0),
-                b.column(1),
-                pa.array(aid[j, k]),
-                pa.array(dmin, type=pa.float64()),
-            ]
+        for b, groups in _subspace_rows(batches):
+            code = np.empty(b.num_rows, np.int64)
+            dmin = np.empty(b.num_rows)
+            for g, m, e in groups:
+                k, d = vectors.nearest(e, anchors[g : g + 1])
+                code[m] = ids[k[:, 0]]
+                dmin[m] = d[:, 0]
+            cols = [b.column(0), b.column(1), pa.array(code), pa.array(dmin)]
             if include_coords:
                 cols += [b.column(2), b.column(3)]
             yield pa.RecordBatch.from_arrays(cols, names=names)
@@ -2996,91 +2834,93 @@ def _pq_assign_arrow(
     )
 
 
-def _pq_train_distributed(subv: DataFrame):
-    """Distributed Lloyd training above the one-task gate: _PQ_ITERS
-    deterministic iterations, each ONE job (the means collect; the
-    assignment kernel runs inside it).  Every subvector goes to its
-    nearest anchor (ties → smallest aid), every anchor becomes the
-    rounded member mean and an empty cluster keeps its anchor, applied
-    driver-side to the [M,K] codebook arrays — the computation the
-    oracle's unrolled CTE chain performs.  The codebook is a model
-    artifact of constant size (M·K rows ≈ 2k), so collecting it per
-    iteration is the one legitimate driver materialization.  Returns
-    (codebook rows, anchor arrays)."""
-    rows = [(r[0], r[1], r[2], r[3]) for r in _pq_seed(subv).collect()]
-    aid, a1, a2 = _pq_anchor_arrays(rows)
-    for _ in range(_PQ_ITERS):
-        assign = _pq_assign_arrow(subv, aid, a1, a2, include_coords=True)
+def _pq_lut_arrow(subv: DataFrame, ids, anchors) -> DataFrame:
+    """(qid, lj, aid, d2): the ADC lookup table — every subvector row's
+    squared distance (vectors.distances) to each anchor of its subspace,
+    K rows per input row."""
+
+    def kernel(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        for b, groups in _subspace_rows(batches):
+            vid = b.column(0).to_numpy(zero_copy_only=False)
+            for g, m, e in groups:
+                d = vectors.distances(e, anchors[g : g + 1])[:, 0, :]
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.array(np.repeat(vid[m], len(ids))),
+                        pa.array(np.full(d.size, g, np.int32)),
+                        pa.array(np.tile(ids, len(d))),
+                        pa.array(d.ravel()),
+                    ],
+                    names=["qid", "lj", "aid", "d2"],
+                )
+
+    return subv.select("vec_id", "j", "e1", "e2").mapInArrow(
+        kernel, schema="qid long, lj int, aid long, d2 double"
+    )
+
+
+def _pq_model(vecs: DataFrame):
+    """(subv, ids, anchors) above the vector gate: the checkpointed
+    subvector table and the codebook trained by PQ.iters distributed
+    Lloyd iterations, each ONE job (the means collect; the assignment
+    kernel runs inside it).  Seeded from the subvectors of the PQ.k
+    smallest vec_ids; every subvector goes to its nearest anchor (ties →
+    smallest aid), every anchor becomes the rounded member mean and an
+    empty cluster keeps its anchor — the computation the oracle's
+    unrolled CTE chain performs.  The codebook is a model artifact of
+    constant size (M·K rows ≈ 2k), so collecting it per iteration is the
+    one legitimate driver materialization."""
+    subv = _pq_subv_pinned(_pq_subv(vecs, vecs.sparkSession))
+    seed_ids = subv.select("vec_id").distinct().orderBy("vec_id").limit(PQ.k)
+    seed = subv.join(F.broadcast(seed_ids), "vec_id").collect()
+    ids, anchors = vectors.codebook(
+        ((r.vec_id, r.j, t, (r.e1, r.e2)[t]) for r in seed for t in range(2)), PQ
+    )
+    for _ in range(PQ.iters):
         means = (
-            assign.groupBy("j", F.col("code").alias("aid"))
+            _pq_assign_arrow(subv, ids, anchors, include_coords=True)
+            .groupBy("code", "j")
             .agg(
-                F.round(F.avg("e1"), _PQ_ROUND).alias("m1"),
-                F.round(F.avg("e2"), _PQ_ROUND).alias("m2"),
+                F.round(F.avg("e1"), PQ.mean_scale),
+                F.round(F.avg("e2"), PQ.mean_scale),
             )
             .collect()
         )
-        upd = {(r[0], r[1]): (r[2], r[3]) for r in means}
-        for j in range(_PQ_M):
-            for k in range(aid.shape[1]):
-                m = upd.get((j, int(aid[j, k])))
-                if m is not None:
-                    a1[j, k] = m[0]
-                    a2[j, k] = m[1]
-    rows = [
-        (j, int(aid[j, k]), float(a1[j, k]), float(a2[j, k]))
-        for j in range(_PQ_M)
-        for k in range(aid.shape[1])
-    ]
-    return rows, (aid, a1, a2)
+        vectors.update(ids, anchors, ((r[0], r[1], t, r[2 + t]) for r in means for t in range(2)))
+    return subv, ids, anchors
 
 
-def _pq_model(spark: SparkSession, vecs: DataFrame):
-    """(subv, anch_df, anch_arrays): the checkpointed subvector table plus
-    the TRAINED codebook as a local DataFrame (for the query-side LUT
-    broadcast) and as [M,K] arrays for the assignment kernel.  Both
-    trainers follow the DuckDB oracle's rule: argmin over the anchors,
-    ties to MIN(aid), means rounded to the _PQ_ROUND grid."""
-    subv, n_subv = _pq_subv_pinned(_pq_subv(vecs, spark))
-    if kernel_fits(n_subv, _PQ_LOCAL_TRAIN_MAX_SUBV):
-        # One-task fit; collecting the M·K codebook is the same
-        # constant-size model-artifact materialization the
-        # distributed loop already performs per iteration.
-        rows = [tuple(r) for r in _pq_train_local(subv).collect()]
-        arrays = _pq_anchor_arrays(rows)
-    else:
-        rows, arrays = _pq_train_distributed(subv)
-    anch_df = spark.createDataFrame(
-        rows, schema="j int, aid long, a1 double, a2 double"
-    )
-    return subv, anch_df, arrays
+def _pq_codes_arrow(vecs: DataFrame) -> DataFrame:
+    """(vec_id, j, code, dmin) of every vector, in ONE ``mapInArrow``
+    task over (vec_id, v0, nrm): vectors.lloyd fits the codebook and
+    vectors.nearest encodes the corpus with it — below the gate, the
+    whole of _pq_model + _pq_assign_arrow with no build-time job.  Rows
+    leave in (vec_id, j) order, the order the distributed assignment
+    reads the pinned subvector table in."""
 
+    def kernel(batches):
+        import numpy as np
+        import pyarrow as pa
 
-def _pq_seed(subv: DataFrame) -> DataFrame:
-    """Seed codebook: the subvectors of the _PQ_K smallest vec_ids, read
-    straight from the materialized subvector table (no second
-    scan/normalize pass; the values are identical by construction)."""
-    seed_ids = subv.select("vec_id").distinct().orderBy("vec_id").limit(_PQ_K)
-    return subv.join(F.broadcast(seed_ids), "vec_id").select(
-        "j",
-        F.col("vec_id").alias("aid"),
-        F.col("e1").alias("a1"),
-        F.col("e2").alias("a2"),
-    )
+        vid, v, nrm = vectors.decode(batches, PQ.width, "vec_pq_codes")
+        if not len(vid):
+            return
+        x = vectors.unit(v, nrm, PQ)
+        k, dmin = vectors.nearest(x, vectors.lloyd(x, PQ))
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(np.repeat(vid, PQ.groups)),
+                pa.array(np.tile(np.arange(PQ.groups, dtype=np.int32), len(vid))),
+                pa.array(vid[k].ravel()),
+                pa.array(dmin.ravel()),
+            ],
+            names=["vec_id", "j", "code", "dmin"],
+        )
 
-
-def _pq_dists_from(subv: DataFrame, anch: DataFrame) -> DataFrame:
-    """(vec_id, j, aid, d2): squared L2 between each normalized subvector
-    and every TRAINED codebook anchor — the Spark mirror of
-    _PQ_DISTS_SQL's final CTE.  The codebook (M·K rows) broadcasts; the
-    vector side never shuffles.  Differences are squared by
-    multiplication (not power()) so both engines run the identical fp
-    ops."""
-    d2 = (F.col("e1") - F.col("a1")) * (F.col("e1") - F.col("a1")) + (
-        F.col("e2") - F.col("a2")
-    ) * (F.col("e2") - F.col("a2"))
-    return subv.join(F.broadcast(anch), "j").select(
-        "vec_id", "j", "aid", d2.alias("d2")
-    )
+    return vectors.one_task(vecs, kernel, "vec_id long, j int, code long, dmin double")
 
 
 @query(
@@ -3108,15 +2948,25 @@ def vec_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 64-float vector to M small ints (here 32×6 bits) — the storage
     layer every billion-vector ANN index needs.
 
-    Scale shape: the codebook (K·M subvectors — KBs even at K=256) rides
-    the task closure of the vectorized Arrow assignment kernel
-    (_pq_assign_arrow), a per-row map over the corpus with no |corpus|·M·K
-    row expansion and no shuffle; the per-vector code array is one
-    grouped aggregation keyed by vec_id.  The kernel follows the DuckDB
-    oracle's rule: argmin of the squared distance, ties to MIN(aid)."""
-    e = load(spark, sf_dir, "embeddings")
-    subv, _, arrays = _pq_model(spark, e)
-    codes = _pq_assign_arrow(subv, *arrays, include_coords=False)
+    Scale shape: one size gate on the embeddings footer row count
+    (operators/vectors).  Below it, fit and encode are one Arrow task
+    (_pq_codes_arrow); above it the codebook is trained by distributed
+    Lloyd iterations and rides the task closure of the vectorized
+    assignment kernel (_pq_assign_arrow), a per-row map over the corpus
+    with no |corpus|·M·K row expansion and no shuffle.  Either side feeds
+    the same per-vector aggregation keyed by vec_id.  Both follow the
+    DuckDB oracle's rule: argmin of the squared distance, ties to
+    MIN(aid)."""
+    return _pq_codes(load(spark, sf_dir, "embeddings"), _n_vecs(sf_dir))
+
+
+def _pq_codes(vecs: DataFrame, n_vecs: int | None) -> DataFrame:
+    """vec_pq_codes over ``vecs`` (vec_id, embedding), given an upper
+    bound ``n_vecs`` on its row count (``None``: unknown, distributed)."""
+    if vectors.fits(n_vecs):
+        codes = _pq_codes_arrow(vecs)
+    else:
+        codes = _pq_assign_arrow(*_pq_model(vecs), include_coords=False)
     return codes.groupBy("vec_id").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("j", "code"))),
@@ -3159,34 +3009,29 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     lookups summed — no corpus floats are touched at query time.
 
     Scale shape: one size gate, read from the parquet footer (no Spark
-    job), picks the plan.  Below _PQ_LOCAL_TRAIN_MAX_SUBV subvectors the
-    whole pipeline — normalize, Lloyd training, corpus encoding, the
-    (Q, M, K) LUT, ADC and each query's top _TOPK — is ONE ``mapInArrow``
-    task over (vec_id, v0, nrm) (_pq_topk_arrow): no build-time job, no
-    broadcast, no corpus-side row expansion; at most Q·_TOPK rows reach
-    Spark's final rank window (docs/plans/ann_pq_topk.txt, one
-    MapInArrow and no Exchange below it).  Above the gate the corpus
+    job), picks the plan (_pq_topk).  In a production index this ADC
+    scan runs per IVF cell (ann_ivfpq_topk is that composition); flat
+    ADC is the recall-1.0 baseline of it: IVF-PQ with one cell."""
+    return _pq_topk(load(spark, sf_dir, "embeddings"), _n_vecs(sf_dir))
+
+
+def _pq_topk(vecs: DataFrame, n_vecs: int | None, ivf: bool = False) -> DataFrame:
+    """ann_pq_topk (``ivf``: ann_ivfpq_topk) over ``vecs`` (vec_id,
+    embedding), given an upper bound ``n_vecs`` on its row count
+    (``None``: unknown, distributed).  Below the vector gate the whole
+    pipeline — normalize, Lloyd training, corpus encoding, the (Q, M, K)
+    LUT, IVF cells, ADC and each query's top _TOPK — is ONE
+    ``mapInArrow`` task (_pq_adc_arrow): no build-time job, no broadcast,
+    no corpus-side row expansion; at most Q·_TOPK rows reach Spark's
+    final rank window (docs/plans/ann_pq_topk.txt).  Above it the corpus
     side joins its codes against the broadcast LUT map-side and the exact
     top-k rides Spark's partial WindowGroupLimit (_pq_adc_distributed).
-    Both sides give identical rows (tests/test_ann_quality.py).  In a
-    production index this ADC scan runs per IVF cell (ann_ivf_topk is
-    the cell-pruning layer); flat ADC is the recall-1.0 baseline of that
-    composition."""
-    n_vecs = parquet_num_rows(os.path.join(sf_dir, "embeddings.parquet"))
-    return _pq_topk(load(spark, sf_dir, "embeddings"), n_vecs)
-
-
-def _pq_topk(vecs: DataFrame, n_vecs: int | None) -> DataFrame:
-    """ann_pq_topk over ``vecs`` (vec_id, embedding), given an upper
-    bound ``n_vecs`` on its row count (``None``: unknown, distributed).
-    The gate is _PQ_LOCAL_TRAIN_MAX_SUBV on the n_vecs·M subvector rows
-    that one-task training already holds; only the candidate stage
-    differs between the two sides, the rank window is shared."""
-    bound = None if n_vecs is None else n_vecs * _PQ_M
-    if kernel_fits(bound, _PQ_LOCAL_TRAIN_MAX_SUBV):
-        adc = _pq_topk_arrow(vecs)
+    Both sides give identical rows (tests/test_ann_quality.py)."""
+    if vectors.fits(n_vecs):
+        adc = _pq_adc_arrow(vecs, ivf)
     else:
-        adc = _pq_adc_distributed(vecs)
+        cell = _ivf_cells(vecs).select("vec_id", "cid") if ivf else None
+        adc = _pq_adc_distributed(vecs, cell)
     wg = Window.partitionBy("qid").orderBy("adist", "vid")
     return (
         adc.withColumn("rk", F.row_number().over(wg))
@@ -3195,103 +3040,77 @@ def _pq_topk(vecs: DataFrame, n_vecs: int | None) -> DataFrame:
     )
 
 
-def _pq_adc_distributed(vecs: DataFrame) -> DataFrame:
-    """(qid, vid, adist) for every query × corpus pair above the gate:
-    the trained model (_pq_model), corpus codes from the Arrow assignment
-    kernel, and a map-side join of the codes against the broadcast
-    |Q|·M·K-row LUT summed per (qid, vid)."""
-    subv, anch_df, arrays = _pq_model(vecs.sparkSession, vecs)
+def _pq_adc_distributed(vecs: DataFrame, cell: DataFrame | None) -> DataFrame:
+    """(qid, vid, adist) above the gate: the trained model (_pq_model),
+    corpus codes from the Arrow assignment kernel, and a map-side join of
+    the codes against the broadcast |Q|·M·K-row LUT summed per (qid,
+    vid).  With IVF cells (vec_id, cid) the join also matches the query's
+    cell, so only same-cell pairs reach the sum."""
+    subv, ids, anchors = _pq_model(vecs)
+    q = F.col("vec_id") < _N_QUERY_VECS
     codes = _pq_assign_arrow(
-        subv.filter(F.col("vec_id") >= _N_QUERY_VECS),
-        *arrays,
-        include_coords=False,
+        subv.filter(~q), ids, anchors, include_coords=False
     ).select("vec_id", "j", "code")
-    dists_q = _pq_dists_from(
-        subv.filter(F.col("vec_id") < _N_QUERY_VECS), anch_df
-    )
-    lut = dists_q.select(F.col("vec_id").alias("qid"), "j", "aid", "d2")
+    lut = _pq_lut_arrow(subv.filter(q), ids, anchors)
+    on = (F.col("j") == F.col("lj")) & (F.col("code") == F.col("aid"))
+    if cell is not None:
+        codes = codes.join(cell, "vec_id")
+        qcell = cell.filter(q).select(
+            F.col("vec_id").alias("qid"), F.col("cid").alias("qcid")
+        )
+        lut = lut.join(F.broadcast(qcell), "qid")
+        on = on & (F.col("cid") == F.col("qcid"))
     return (
-        codes.join(F.broadcast(lut), (codes["j"] == lut["j"]) & (codes["code"] == lut["aid"]))
-        .groupBy(F.col("qid"), F.col("vec_id").alias("vid"))
+        codes.join(F.broadcast(lut), on)
+        .groupBy("qid", F.col("vec_id").alias("vid"))
         .agg(F.sum("d2").alias("adist"))
     )
 
 
-def _pq_topk_arrow(vecs: DataFrame) -> DataFrame:
+def _pq_adc_arrow(vecs: DataFrame, ivf: bool) -> DataFrame:
     """(qid, vid, adist): each query's _TOPK nearest corpus vectors by
     (adist, vid), computed in ONE ``mapInArrow`` task over (vec_id, v0,
     nrm) — the fused form of _pq_adc_distributed for inputs under the
     gate.  Value-identical to it: elements are divided by the same
-    Spark-computed norm, training is _pq_lloyd, encoding is _pq_nearest
-    with the trained anchors, LUT entries are the same (e−a)·(e−a) sums,
-    and ADC adds the M lookups in j order, as Spark's SUM does over the
-    join rows.  An embedding whose length is not M·D raises ValueError
-    naming its vec_id."""
-    m_sub, width, n_q, topk = _PQ_M, _PQ_M * _PQ_D, _N_QUERY_VECS, _TOPK
+    Spark-computed norm, training is vectors.lloyd, encoding is
+    vectors.nearest with the trained anchors, LUT entries are the same
+    vectors.distances, and ADC adds the M lookups in j order, as Spark's
+    SUM does over the join rows.  Without ``ivf`` every vector is in one
+    cell; with it, vectors.cells reproduces _ivf_cells and each query
+    ranks only its own cell."""
+    n_q, topk, query = _N_QUERY_VECS, _TOPK, "ann_ivfpq_topk" if ivf else "ann_pq_topk"
 
     def kernel(batches):
         import numpy as np
         import pyarrow as pa
-        import pyarrow.compute as pc
 
-        ids, rows, nrms = [], [], []
-        for b in batches:
-            vid = b.column(0).to_numpy(zero_copy_only=False)
-            v0 = b.column(1)
-            lens = pc.list_value_length(v0).fill_null(0).to_numpy()
-            bad = np.nonzero(lens != width)[0]
-            if len(bad):
-                i = bad[0]
-                raise ValueError(
-                    f"ann_pq_topk: embedding of vec_id {vid[i]} has "
-                    f"{lens[i]} elements, expected {width} "
-                    f"({m_sub} subspaces x {_PQ_D} dims)"
-                )
-            ids.append(vid)
-            rows.append(
-                v0.flatten().to_numpy(zero_copy_only=False).reshape(-1, width)
-            )
-            nrms.append(b.column(2).to_numpy(zero_copy_only=False))
-        if not ids:
+        vid, v, nrm = vectors.decode(batches, PQ.width, query)
+        if not len(vid):
             return
-        vid = np.concatenate(ids)
-        order = np.argsort(vid, kind="stable")
-        vid = vid[order]
-        x = (np.concatenate(rows) / np.concatenate(nrms)[:, None])[order]
-        e1, e2 = x[:, 0::2], x[:, 1::2]
-        j = np.tile(np.arange(m_sub), len(vid))
-        aid, a1, a2 = _pq_lloyd(
-            np.repeat(vid, m_sub), j, e1.ravel(), e2.ravel()
-        )
-        corpus, query = vid >= n_q, vid < n_q
-        n_c = int(corpus.sum())
-        code = _pq_nearest(
-            j[: n_c * m_sub], e1[corpus].ravel(), e2[corpus].ravel(), a1, a2
-        )[0].reshape(n_c, m_sub)
-        d1 = e1[query][:, :, None] - a1
-        d2 = e2[query][:, :, None] - a2
-        lut = d1 * d1 + d2 * d2
-        adist = np.zeros((len(lut), n_c))
-        for jj in range(m_sub):
-            adist += lut[:, jj, code[:, jj]]
-        cid = vid[corpus]
-        for qid, row in zip(vid[query], adist):
-            top = np.lexsort((cid, row))[:topk]
+        cell = vectors.cells(vid, v, nrm, _IVF_K, 6) if ivf else np.zeros(len(vid))
+        if not len(cell):
+            return
+        x = vectors.unit(v, nrm, PQ)
+        anchors = vectors.lloyd(x, PQ)
+        code = vectors.nearest(x, anchors)[0]
+        corpus = vid >= n_q
+        for i in np.nonzero(~corpus)[0]:
+            lut = vectors.distances(x[i : i + 1], anchors)[0]
+            cand = np.nonzero(corpus & (cell == cell[i]))[0]
+            adist = np.zeros(len(cand))
+            for j in range(PQ.groups):
+                adist += lut[j, code[cand, j]]
+            top = np.lexsort((vid[cand], adist))[:topk]
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(np.full(len(top), qid)),
-                    pa.array(cid[top]),
-                    pa.array(row[top], type=pa.float64()),
+                    pa.array(np.full(len(top), vid[i])),
+                    pa.array(vid[cand][top]),
+                    pa.array(adist[top]),
                 ],
                 names=["qid", "vid", "adist"],
             )
 
-    vd = as_double(F.col("embedding"))
-    return (
-        vecs.select("vec_id", vd.alias("v0"), norm(vd).alias("nrm"))
-        .coalesce(1)
-        .mapInArrow(kernel, schema="qid long, vid long, adist double")
-    )
+    return vectors.one_task(vecs, kernel, "qid long, vid long, adist double")
 
 
 @query(
@@ -3346,61 +3165,14 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus contributes only its cell id and M code bytes at query
     time; no corpus floats are read.
 
-    Scale shape: centroids and the per-query LUT both broadcast; the
-    corpus-side work is one map (cell assign) + one map (code assign) +
-    a same-cell join that touches only 1/K of the candidate space per
-    query; the exact per-query top-k again rides Spark's partial
-    WindowGroupLimit.  Recall compounds both approximations (cell-pruning
-    miss × quantization noise) — measured and pinned in
+    Scale shape: ann_pq_topk's ADC restricted to same-cell (query,
+    corpus) pairs, on both sides of the same gate (_pq_topk).  Above it
+    the centroids and the per-query LUT both broadcast, and the cell
+    match is a join key of the LUT join, so only 1/K of the candidate
+    space per query is summed.  Recall compounds both approximations
+    (cell-pruning miss × quantization noise) — measured and pinned in
     tests/test_ann_quality.py."""
-    e = load(spark, sf_dir, "embeddings")
-    ed = e.select("vec_id", as_double(F.col("embedding")).alias("v"))
-    cents = ed.filter(F.col("vec_id") < _IVF_K).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("cv")
-    )
-    scored_cells = ed.crossJoin(F.broadcast(cents)).select(
-        "vec_id", "cid", F.round(cosine(F.col("v"), F.col("cv")), 6).alias("s")
-    )
-    wa = Window.partitionBy("vec_id").orderBy(F.desc("s"), F.asc("cid"))
-    cell = (
-        scored_cells.withColumn("rn", F.row_number().over(wa))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "cid")
-    )
-    subv, anch_df, arrays = _pq_model(spark, e)
-    codes = _pq_assign_arrow(
-        subv.filter(F.col("vec_id") >= _N_QUERY_VECS),
-        *arrays,
-        include_coords=False,
-    ).select("vec_id", "j", "code")
-    dists_q = _pq_dists_from(
-        subv.filter(F.col("vec_id") < _N_QUERY_VECS), anch_df
-    )
-    lut = dists_q.select(
-        F.col("vec_id").alias("qid"), F.col("j").alias("lj"),
-        F.col("aid").alias("laid"), "d2",
-    )
-    qcell = cell.filter(F.col("vec_id") < _N_QUERY_VECS).select(
-        F.col("vec_id").alias("qid"), "cid"
-    )
-    adc = (
-        codes.join(cell, "vec_id")
-        .join(F.broadcast(qcell), "cid")
-        .join(
-            F.broadcast(lut),
-            (F.col("lj") == F.col("j"))
-            & (F.col("laid") == F.col("code"))
-            & (lut["qid"] == qcell["qid"]),
-        )
-        .groupBy(qcell["qid"].alias("qid"), F.col("vec_id").alias("vid"))
-        .agg(F.sum("d2").alias("adist"))
-    )
-    wg = Window.partitionBy("qid").orderBy("adist", "vid")
-    return (
-        adc.withColumn("rk", F.row_number().over(wg))
-        .filter(F.col("rk") <= _TOPK)
-        .select("qid", "vid", F.round("adist", 6).alias("adist"), "rk")
-    )
+    return _pq_topk(load(spark, sf_dir, "embeddings"), _n_vecs(sf_dir), ivf=True)
 
 
 # ---------------------------------------------------------------------------
@@ -3465,19 +3237,16 @@ def corpus_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Semantic k-means clustering (SemDeDup-style corpus organization)
 # --------------------------------------------------------------------------
 
-_KM_K = 8      # clusters
-_KM_ITERS = 2  # deterministic Lloyd iterations
-_KM_RND = 5    # centroid rounding grid (cross-engine fp reproducibility)
-_KM_DIM = 64   # embedding dimensionality (driver corpus)
-
 
 def _kmeans_oracle() -> str:
     """Unrolled-CTE Lloyd chain (same recipe as the PQ codebook trainer,
     but over FULL vectors in long (vec_id, i, x) format): normalize, seed
-    centroids from the _KM_K smallest vec_ids, then per iteration assign
-    every vector to its nearest centroid (squared L2 rounded to 1e-4
-    before the argmin, ties to smallest cid) and replace each centroid
-    with the rounded member mean (empty clusters keep their centroid)."""
+    centroids from the KMEANS.k smallest vec_ids, then per iteration
+    assign every vector to its nearest centroid (squared L2 rounded to
+    1e-4 before the argmin, ties to smallest cid) and replace each
+    centroid with the rounded member mean (empty clusters keep their
+    centroid)."""
+    dist_rnd, rnd = KMEANS.dist_scale, KMEANS.mean_scale
     sql = f"""
     WITH normed AS (
       SELECT vec_id, list_transform(dv, x -> x / nrm) AS emb
@@ -3488,18 +3257,18 @@ def _kmeans_oracle() -> str:
     ),
     dims AS (
       SELECT vec_id, i, emb[i] AS x
-      FROM normed, unnest(generate_series(1, {_KM_DIM})) t(i)
+      FROM normed, unnest(generate_series(1, {KMEANS.width})) t(i)
     ),
     cent0 AS (
       SELECT t.vec_id AS cid, d.i, d.x AS c
-      FROM (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT {_KM_K}) t
+      FROM (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT {KMEANS.k}) t
       JOIN dims d ON d.vec_id = t.vec_id
     )"""
     prev = "cent0"
-    for t in range(_KM_ITERS):
+    for t in range(KMEANS.iters):
         sql += f""",
     a{t} AS (
-      SELECT d.vec_id, c.cid, ROUND(SUM((d.x - c.c) * (d.x - c.c)), 4) AS d2
+      SELECT d.vec_id, c.cid, ROUND(SUM((d.x - c.c) * (d.x - c.c)), {dist_rnd}) AS d2
       FROM dims d JOIN {prev} c ON d.i = c.i
       GROUP BY 1, 2
     ),
@@ -3509,7 +3278,7 @@ def _kmeans_oracle() -> str:
     ),
     asg{t} AS (SELECT vec_id, (m).cid AS cid FROM g{t}),
     m{t} AS (
-      SELECT s.cid, d.i, ROUND(AVG(d.x), {_KM_RND}) AS c
+      SELECT s.cid, d.i, ROUND(AVG(d.x), {rnd}) AS c
       FROM asg{t} s JOIN dims d ON d.vec_id = s.vec_id
       GROUP BY 1, 2
     ),
@@ -3520,7 +3289,7 @@ def _kmeans_oracle() -> str:
         prev = f"cent{t + 1}"
     sql += f""",
     fin AS (
-      SELECT d.vec_id, c.cid, ROUND(SUM((d.x - c.c) * (d.x - c.c)), 4) AS d2
+      SELECT d.vec_id, c.cid, ROUND(SUM((d.x - c.c) * (d.x - c.c)), {dist_rnd}) AS d2
       FROM dims d JOIN {prev} c ON d.i = c.i
       GROUP BY 1, 2
     ),
@@ -3535,21 +3304,18 @@ def _kmeans_oracle() -> str:
 _KM_ORACLE_CTE = _kmeans_oracle()
 
 
-def _km_dims(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
-    """((vec_id, i, x), row count): every L2-normalized vector in long
-    format — the shape that lets centroid updates be plain
-    partial-aggregated GROUP BYs keyed by (cid, i), as in the oracle's
-    CTE chain.
+def _km_dims(vecs: DataFrame) -> DataFrame:
+    """(vec_id, i, x): every L2-normalized vector in long format — the
+    shape that lets centroid updates be plain partial-aggregated GROUP
+    BYs keyed by (cid, i), as in the oracle's CTE chain.
 
     The table is repartitioned by vec_id and lineage-truncated ONCE with
     the partitioning metadata pinned (checkpoint_pinned), so each
     vector's D rows sit in one partition for the assignment kernel
     (_km_assign_arrow) — the corpus is read, normalized and shuffled
     exactly one time no matter how many Lloyd iterations follow (the
-    standard cache-the-training-set posture of iterative ML on Spark).
-    The row count rides the eager checkpoint as an observe metric, so
-    the one-task-training gate reads it without another job."""
-    pre = _normalized_cols(load(spark, sf_dir, "embeddings"))
+    standard cache-the-training-set posture of iterative ML on Spark)."""
+    pre = _normalized_cols(vecs)
     dims = pre.select("vec_id", "nrm", F.posexplode("v0").alias("i0", "x")).select(
         "vec_id",
         (F.col("i0") + 1).alias("i"),
@@ -3562,50 +3328,22 @@ def _km_dims(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
     # re-exchanging the corpus at the replicas.
     from ..plans.shaping import checkpoint_pinned
 
-    obs = Observation()
-    out = checkpoint_pinned(dims.observe(obs, F.count(F.lit(1)).alias("m")))
-    return out, obs.get["m"]
+    return checkpoint_pinned(dims)
 
 
-#: Dims-row ceiling for one-task Lloyd training — same rationale and
-#: arithmetic as _PQ_LOCAL_TRAIN_MAX_SUBV (sequential driver-synced jobs
-#: whose scheduling floor dwarfs the math below this size).
-_KM_LOCAL_TRAIN_MAX_DIMS = 4_000_000
-
-
-def _km_cent_arrays(rows):
-    """Centroid rows (cid, i, c) with i in 1..D → (cids int64[K] sorted,
-    C float64[K, D]) — cid-sorted so argmin's first minimum reproduces
-    the MIN(d2, cid) struct tie rule."""
-    import numpy as np
-
-    per: dict[int, dict[int, float]] = {}
-    for cid, i, c in rows:
-        per.setdefault(cid, {})[i] = c
-    cids = np.array(sorted(per), dtype=np.int64)
-    d = max((max(m) for m in per.values()), default=0)
-    mat = np.zeros((len(cids), d), dtype=np.float64)
-    for k, cid in enumerate(cids):
-        for i, c in per[cid].items():
-            mat[k, i - 1] = c
-    return cids, mat
-
-
-def _km_assign_arrow(dims: DataFrame, cids, cent) -> DataFrame:
+def _km_assign_arrow(dims: DataFrame, ids, anchors) -> DataFrame:
     """Nearest-centroid assignment as one Arrow pass over the long-format
-    dims table: per partition, rows are regrouped [n_vec, D] and the
-    (vec × K) squared-L2 matrix computed in NumPy with the identical
-    (x−c)·(x−c) IEEE ops, each distance rounded to the oracle's 1e-4
-    grid with the exact HALF_UP replica BEFORE the argmin, ties to the
-    smallest cid — the DuckDB oracle's round-then-argmin / MIN(cid) rule
-    (its MIN(struct_pack(d2, cid))).  In-cache matrix math instead of a
-    K-way broadcast-join expansion (K·D rows per vector; guide §4.2).
+    dims table: per partition, rows are regrouped [n_vec, 1, D] and
+    vectors.nearest ranks the distances rounded to KMEANS.dist_scale,
+    ties to the smallest cid — the DuckDB oracle's round-then-argmin /
+    MIN(cid) rule (its MIN(struct_pack(d2, cid))).  In-cache matrix math
+    instead of a K-way broadcast-join expansion (K·D rows per vector).
     Emits (vec_id, cid, d2).
 
     Each vector's D rows must sit in one partition (the vec_id
     partitioning of _km_dims' checkpoint); a vector whose rows are not
     exactly i = 1..D there raises instead of being misassigned."""
-    n_dim = cent.shape[1]
+    n_dim = anchors.shape[2]
 
     def kernel(batches):
         import numpy as np
@@ -3634,20 +3372,11 @@ def _km_assign_arrow(dims: DataFrame, cids, cent) -> DataFrame:
                 "rows i = 1..D in one partition; got a vector split "
                 "across partitions or with missing/duplicate dims"
             )
-        mat = x.reshape(nv, n_dim)
-        out_cid = np.empty(nv, dtype=np.int64)
-        out_d2 = np.empty(nv, dtype=np.float64)
-        step = 1 << 16
-        for lo in range(0, nv, step):
-            sl = slice(lo, min(lo + step, nv))
-            diff = mat[sl][:, None, :] - cent[None, :, :]
-            d2 = _round_half_up((diff * diff).sum(axis=2).ravel(), 4)
-            d2 = d2.reshape(-1, len(cids))
-            k = np.argmin(d2, axis=1)
-            out_cid[sl] = cids[k]
-            out_d2[sl] = d2[np.arange(len(k)), k]
+        k, d2 = vectors.nearest(
+            x.reshape(nv, 1, n_dim), anchors, KMEANS.dist_scale
+        )
         yield pa.RecordBatch.from_arrays(
-            [pa.array(vids), pa.array(out_cid), pa.array(out_d2)],
+            [pa.array(vids), pa.array(ids[k[:, 0]]), pa.array(d2[:, 0])],
             names=["vec_id", "cid", "d2"],
         )
 
@@ -3656,107 +3385,55 @@ def _km_assign_arrow(dims: DataFrame, cids, cent) -> DataFrame:
     )
 
 
-def _km_train_local(dims: DataFrame) -> DataFrame:
-    """ONE-task Lloyd training over the checkpointed dims table (same
-    collapse as _pq_train_local: the loop is sequential, so below the
-    gate its per-iteration distributed jobs are pure scheduling floor).
-    Seeds from the _KM_K smallest vec_ids, assigns on the 1e-4-rounded
-    grid, updates centroids with exact-HALF_UP-rounded means; emits the
-    K·D centroid table."""
-    k_c, iters, rnd = _KM_K, _KM_ITERS, _KM_RND
-
-    def kernel(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        cols: list = [[], [], []]
-        for b in batches:
-            for i in range(3):
-                cols[i].append(b.column(i).to_numpy(zero_copy_only=False))
-        if not cols[0]:
-            return
-        vec = np.concatenate(cols[0])
-        ii = np.concatenate(cols[1])
-        x = np.concatenate(cols[2])
-        n_dim = int(ii.max())
-        order = np.lexsort((ii, vec))
-        vec, x = vec[order], x[order]
-        nv = len(vec) // n_dim
-        mat = x.reshape(nv, n_dim)
-        vids = vec[::n_dim]
-        k_eff = min(k_c, nv)
-        cids = vids[:k_eff].astype(np.int64)
-        cent = mat[:k_eff].copy()
-        step = 1 << 16
-        for _ in range(iters):
-            asg = np.empty(nv, dtype=np.int64)
-            for lo in range(0, nv, step):
-                sl = slice(lo, min(lo + step, nv))
-                diff = mat[sl][:, None, :] - cent[None, :, :]
-                d2 = _round_half_up((diff * diff).sum(axis=2).ravel(), 4)
-                asg[sl] = np.argmin(d2.reshape(-1, k_eff), axis=1)
-            for k in range(k_eff):
-                members = mat[asg == k]
-                if len(members):
-                    cent[k] = _round_half_up(
-                        members.sum(axis=0) / len(members), rnd
-                    )
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(np.repeat(cids, n_dim)),
-                pa.array(
-                    np.tile(np.arange(1, n_dim + 1, dtype=np.int32), k_eff)
-                ),
-                pa.array(cent.ravel(), type=pa.float64()),
-            ],
-            names=["cid", "i", "c"],
-        )
-
-    return (
-        dims.select("vec_id", "i", "x")
-        .coalesce(1)
-        .mapInArrow(kernel, schema="cid long, i int, c double")
+def _km_model(vecs: DataFrame):
+    """(dims, ids, anchors) above the vector gate: the checkpointed dims
+    table plus the centroids trained by KMEANS.iters distributed Lloyd
+    iterations — one means-collect job each, with the Arrow assignment
+    kernel inside it — as cid-sorted int64[K] ids and [1, K, D] anchors.
+    Same rule as the oracle: distances rounded to 1e-4, then argmin with
+    ties to MIN(cid); means rounded to the KMEANS.mean_scale grid; an
+    empty cluster keeps its centroid.  The centroid table is a
+    constant-size model artifact (K·D = 512 rows), so each update is
+    applied driver-side.  An empty corpus has no centroids (K = 0), so
+    assignment emits no rows."""
+    dims = _km_dims(vecs)
+    seed_ids = dims.select("vec_id").distinct().orderBy("vec_id").limit(KMEANS.k)
+    seed = dims.join(F.broadcast(seed_ids), "vec_id").collect()
+    ids, anchors = vectors.codebook(
+        ((r.vec_id, 0, r.i - 1, r.x) for r in seed), KMEANS
     )
-
-
-def _km_model(spark: SparkSession, sf_dir: str):
-    """(dims, (cids, cent)): the checkpointed dims table plus the TRAINED
-    centroids as (cid-sorted int64[K], float64[K, D]) arrays for the
-    assignment kernel.  Both trainers follow the DuckDB oracle's rule:
-    distances rounded to 1e-4, then argmin with ties to MIN(cid); means
-    rounded to the _KM_RND grid; an empty cluster keeps its centroid.
-    An empty corpus has no centroids (K = 0), so assignment emits no
-    rows."""
-    dims, n_rows = _km_dims(spark, sf_dir)
-    if not n_rows:
-        return dims, _km_cent_arrays([])
-    if kernel_fits(n_rows, _KM_LOCAL_TRAIN_MAX_DIMS):
-        rows = [tuple(r) for r in _km_train_local(dims).collect()]
-        return dims, _km_cent_arrays(rows)
-    # Distributed training: one means-collect job per iteration, with
-    # the Arrow assignment kernel inside it.  The centroid table is a
-    # constant-size model artifact (K·D = 512 rows), so each update is
-    # applied driver-side.
-    seed_ids = dims.select("vec_id").distinct().orderBy("vec_id").limit(_KM_K)
-    seed = dims.join(F.broadcast(seed_ids), "vec_id").select(
-        F.col("vec_id").alias("cid"), "i", F.col("x").alias("c")
-    )
-    cids, cent = _km_cent_arrays([tuple(r) for r in seed.collect()])
-    for _ in range(_KM_ITERS):
-        asg = _km_assign_arrow(dims, cids, cent).select("vec_id", "cid")
+    for _ in range(KMEANS.iters):
+        asg = _km_assign_arrow(dims, ids, anchors).select("vec_id", "cid")
         means = (
             asg.join(dims, "vec_id")
             .groupBy("cid", "i")
-            .agg(F.round(F.avg("x"), _KM_RND).alias("mc"))
+            .agg(F.round(F.avg("x"), KMEANS.mean_scale))
             .collect()
         )
-        upd = {(r[0], r[1]): r[2] for r in means}
-        for k, cid in enumerate(cids):
-            for i in range(cent.shape[1]):
-                m = upd.get((int(cid), i + 1))
-                if m is not None:
-                    cent[k, i] = m
-    return dims, (cids, cent)
+        vectors.update(ids, anchors, ((r[0], 0, r[1] - 1, r[2]) for r in means))
+    return dims, ids, anchors
+
+
+def _km_arrow(vecs: DataFrame) -> DataFrame:
+    """(vec_id, cluster_id, d2) in ONE ``mapInArrow`` task over (vec_id,
+    v0, nrm) below the vector gate: vectors.lloyd fits the centroids and
+    vectors.nearest assigns every vector — the whole of _km_model +
+    _km_assign_arrow with no build-time job."""
+
+    def kernel(batches):
+        import pyarrow as pa
+
+        vid, v, nrm = vectors.decode(batches, KMEANS.width, "vec_kmeans_clusters")
+        if not len(vid):
+            return
+        x = vectors.unit(v, nrm, KMEANS)
+        k, d2 = vectors.nearest(x, vectors.lloyd(x, KMEANS), KMEANS.dist_scale)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(vid), pa.array(vid[k[:, 0]]), pa.array(d2[:, 0])],
+            names=["vec_id", "cluster_id", "d2"],
+        )
+
+    return vectors.one_task(vecs, kernel, "vec_id long, cluster_id long, d2 double")
 
 
 @query(
@@ -3776,14 +3453,25 @@ def vec_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the PQ codebook).  Returns every vector's cluster and its squared L2
     distance to the trained centroid.
 
-    Scale: the centroid table (K·D rows) rides the task closure of the
-    vectorized Arrow assignment kernel (_km_assign_arrow), a map over the
-    vec_id-partitioned dims table with no K-way row expansion — the
-    corpus never shuffles on anything wider than vec_id.  Driver traffic
-    is K·D scalars per iteration (model artifact, not data); small
-    corpora train in one task (_km_train_local)."""
-    dims, arrays = _km_model(spark, sf_dir)
-    return _km_assign_arrow(dims, *arrays).select(
+    Scale: one size gate on the embeddings footer row count
+    (operators/vectors).  Below it the fit and the assignment are one
+    Arrow task (_km_arrow).  Above it the centroid table (K·D rows) rides
+    the task closure of the vectorized Arrow assignment kernel
+    (_km_assign_arrow), a map over the vec_id-partitioned dims table with
+    no K-way row expansion — the corpus never shuffles on anything wider
+    than vec_id, and driver traffic is K·D scalars per iteration (model
+    artifact, not data)."""
+    return _km_clusters(load(spark, sf_dir, "embeddings"), _n_vecs(sf_dir))
+
+
+def _km_clusters(vecs: DataFrame, n_vecs: int | None) -> DataFrame:
+    """vec_kmeans_clusters over ``vecs`` (vec_id, embedding), given an
+    upper bound ``n_vecs`` on its row count (``None``: unknown,
+    distributed)."""
+    if vectors.fits(n_vecs):
+        return _km_arrow(vecs)
+    dims, ids, anchors = _km_model(vecs)
+    return _km_assign_arrow(dims, ids, anchors).select(
         "vec_id", F.col("cid").alias("cluster_id"), "d2"
     )
 

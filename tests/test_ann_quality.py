@@ -4,6 +4,7 @@ exactness is checked separately by each query's own oracle)."""
 
 import pytest
 
+from datafusion_parallelism_spark.operators.vectors import PQ
 from datafusion_parallelism_spark.queries import REGISTRY
 
 from conftest import spy_calls
@@ -37,13 +38,11 @@ def test_pq_codes_properties(spark, sf_dir_oracle):
     this non-degenerate corpus); and the corpus-mean error beats the
     untrained sampled codebook's measured 0.113 by a wide margin (the
     training actually trained — measured 0.030)."""
-    from datafusion_parallelism_spark.queries.llm import _PQ_K, _PQ_M
-
     rows = REGISTRY["vec_pq_codes"].fn(spark, sf_dir_oracle).collect()
     assert rows
     for r in rows:
-        assert len(r.codes) == _PQ_M
-        assert all(0 <= c < _PQ_K for c in r.codes)
+        assert len(r.codes) == PQ.groups
+        assert all(0 <= c < PQ.k for c in r.codes)
         assert r.recon_err > 0
     mean_err = sum(r.recon_err for r in rows) / len(rows)
     assert mean_err < 0.05, f"trained codebook regressed: mean err {mean_err}"
@@ -87,36 +86,36 @@ def _rows_set(df):
     }
 
 
-def _local_vs_distributed(spark, monkeypatch, sf_dir, name, kernel, ceiling):
+def _local_vs_distributed(spark, monkeypatch, sf_dir, name, kernel):
     """Rows of query ``name`` with the one-task ``kernel`` (default below
-    its gate), then with the gate constant ``ceiling`` patched to 0 (the
+    the vector gate), then with the gate constant patched to 0 (the
     distributed side); the spy proves each side ran."""
+    from datafusion_parallelism_spark.operators import vectors
     from datafusion_parallelism_spark.queries import llm
 
     calls = spy_calls(monkeypatch, llm, kernel)
     local = _rows_set(REGISTRY[name].fn(spark, sf_dir))
     assert calls
     calls.clear()
-    monkeypatch.setattr(llm, ceiling, 0)
+    monkeypatch.setattr(vectors, "_VECTOR_KERNEL_MAX_VECS", 0)
     dist = _rows_set(REGISTRY[name].fn(spark, sf_dir))
     assert not calls
     return local, dist
 
 
 def test_pq_distributed_training_matches_local(spark, monkeypatch, sf_dir_oracle):
-    """The one-task trainer and the distributed per-iteration trainer
-    must produce the identical codebook, hence identical codes."""
+    """The one-task fit-and-encode kernel and the distributed
+    per-iteration trainer must produce the identical codebook, hence
+    identical codes."""
     local, dist = _local_vs_distributed(
-        spark, monkeypatch, sf_dir_oracle, "vec_pq_codes",
-        "_pq_train_local", "_PQ_LOCAL_TRAIN_MAX_SUBV",
+        spark, monkeypatch, sf_dir_oracle, "vec_pq_codes", "_pq_codes_arrow"
     )
     assert local == dist
 
 
 def test_km_distributed_training_matches_local(spark, monkeypatch, sf_dir_oracle):
     local, dist = _local_vs_distributed(
-        spark, monkeypatch, sf_dir_oracle, "vec_kmeans_clusters",
-        "_km_train_local", "_KM_LOCAL_TRAIN_MAX_DIMS",
+        spark, monkeypatch, sf_dir_oracle, "vec_kmeans_clusters", "_km_arrow"
     )
     assert local == dist
 
@@ -126,8 +125,18 @@ def test_pq_topk_fused_kernel_matches_distributed(spark, monkeypatch, sf_dir_ora
     gate at 0 it is the distributed model and broadcast-LUT join.  Both
     must return identical rows."""
     fused, dist = _local_vs_distributed(
-        spark, monkeypatch, sf_dir_oracle, "ann_pq_topk",
-        "_pq_topk_arrow", "_PQ_LOCAL_TRAIN_MAX_SUBV",
+        spark, monkeypatch, sf_dir_oracle, "ann_pq_topk", "_pq_adc_arrow"
+    )
+    assert fused == dist
+
+
+def test_ivfpq_fused_kernel_matches_distributed(spark, monkeypatch, sf_dir_oracle):
+    """ann_ivfpq_topk is ann_pq_topk's ADC restricted to same-cell pairs
+    on both sides of the gate: the fused kernel (cells computed in the
+    task) and the distributed cell-keyed LUT join return identical
+    rows."""
+    fused, dist = _local_vs_distributed(
+        spark, monkeypatch, sf_dir_oracle, "ann_ivfpq_topk", "_pq_adc_arrow"
     )
     assert fused == dist
 
@@ -160,8 +169,8 @@ def test_pq_topk_degenerate_inputs_match_distributed(spark, monkeypatch, ids):
     the gate); an empty table returns no rows and does not raise."""
     from datafusion_parallelism_spark.queries import llm
 
-    calls = spy_calls(monkeypatch, llm, "_pq_topk_arrow")
-    vecs = _pq_vectors(spark, _random_vectors(ids, llm._PQ_M * llm._PQ_D))
+    calls = spy_calls(monkeypatch, llm, "_pq_adc_arrow")
+    vecs = _pq_vectors(spark, _random_vectors(ids, PQ.width))
     fused = _rows_set(llm._pq_topk(vecs, len(ids)))
     assert calls
     dist = _rows_set(llm._pq_topk(vecs, None))
@@ -171,21 +180,35 @@ def test_pq_topk_degenerate_inputs_match_distributed(spark, monkeypatch, ids):
     assert len(fused) == n_q * min(len(ids) - n_q, llm._TOPK)
 
 
-def test_pq_topk_rejects_embedding_of_wrong_length(spark):
+@pytest.mark.parametrize(
+    "name", ["ann_pq_topk", "vec_pq_codes", "ann_ivfpq_topk", "vec_kmeans_clusters"]
+)
+def test_pq_topk_rejects_embedding_of_wrong_length(spark, tmp_path, name):
     """An embedding of 63 or 65 elements must not be reshaped into the
-    M·D grid (together they even fill it): the one kernel task raises a
-    ValueError naming the first such vec_id, and fails exactly once."""
-    from datafusion_parallelism_spark.queries import llm
+    64-wide grid (together they even fill it): below the vector gate,
+    every PQ and k-means kernel raises a ValueError naming the first such
+    vec_id, and its one task fails exactly once."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    width = llm._PQ_M * llm._PQ_D
-    rows = _random_vectors(range(14), width)
+    rows = _random_vectors(range(14), PQ.width)
     rows[11] = (11, rows[11][1][:-1])
     rows[12] = (12, rows[12][1] + [0.5])
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array([r[0] for r in rows], pa.int64()),
+                "embedding": pa.array([r[1] for r in rows], pa.list_(pa.float32())),
+            }
+        ),
+        tmp_path / "embeddings.parquet",
+    )
     sc = spark.sparkContext
-    sc.setJobGroup("pq-topk-bad-length", "ann_pq_topk wrong embedding length")
+    group = f"bad-length-{name}"
+    sc.setJobGroup(group, f"{name} wrong embedding length")
     try:
         with pytest.raises(Exception) as err:
-            llm._pq_topk(_pq_vectors(spark, rows), len(rows)).collect()
+            REGISTRY[name].fn(spark, str(tmp_path)).collect()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     msg = str(err.value)
@@ -193,7 +216,7 @@ def test_pq_topk_rejects_embedding_of_wrong_length(spark):
     tracker = sc.statusTracker()
     stages = [
         tracker.getStageInfo(sid)
-        for jid in tracker.getJobIdsForGroup("pq-topk-bad-length")
+        for jid in tracker.getJobIdsForGroup(group)
         for sid in tracker.getJobInfo(jid).stageIds
     ]
     assert sum(st.numFailedTasks for st in stages if st is not None) == 1

@@ -263,24 +263,27 @@ def test_empty_graph_on_both_sides_of_the_gate(
 
 @pytest.mark.parametrize("ceiling", [0, None])
 @pytest.mark.parametrize(
-    "name, const",
+    "name",
     [
-        ("vec_kmeans_clusters", "_KM_LOCAL_TRAIN_MAX_DIMS"),
-        ("vec_pq_codes", "_PQ_LOCAL_TRAIN_MAX_SUBV"),
-        ("ann_pq_topk", "_PQ_LOCAL_TRAIN_MAX_SUBV"),
+        "vec_kmeans_clusters",
+        "vec_pq_codes",
+        "ann_pq_topk",
+        "ann_ivfpq_topk",
+        "mix_cluster_balanced_sample",
     ],
-    ids=["kmeans", "pq_codes", "pq_topk"],
+    ids=["kmeans", "pq_codes", "pq_topk", "ivfpq_topk", "cluster_sample"],
 )
 def test_empty_corpus_on_both_sides_of_the_gate(
-    spark, monkeypatch, tmp_path, name, const, ceiling
+    spark, monkeypatch, tmp_path, name, ceiling
 ):
-    """A 0-row embeddings table yields zero rows from k-means and PQ with
-    the one-task trainer (default ceiling) and with the distributed one
-    (ceiling 0), as the DuckDB oracle does."""
+    """A 0-row embeddings table yields zero rows from every PQ and k-means
+    query with the one-task kernel (default ceiling) and with the
+    distributed trainer (ceiling 0), as the DuckDB oracle does."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from datafusion_parallelism_spark.queries import REGISTRY, llm
+    from datafusion_parallelism_spark.operators import vectors
+    from datafusion_parallelism_spark.queries import REGISTRY
 
     schema = pa.schema(
         [
@@ -291,5 +294,5 @@ def test_empty_corpus_on_both_sides_of_the_gate(
     )
     pq.write_table(schema.empty_table(), tmp_path / "embeddings.parquet")
     if ceiling is not None:
-        monkeypatch.setattr(llm, const, ceiling)
+        monkeypatch.setattr(vectors, "_VECTOR_KERNEL_MAX_VECS", ceiling)
     assert REGISTRY[name].fn(spark, str(tmp_path)).count() == 0

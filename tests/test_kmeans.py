@@ -12,30 +12,25 @@ per cluster.
 
 import pyspark.sql.functions as F
 
-from datafusion_parallelism_spark.queries.llm import (
-    _KM_K,
-    _km_assign_arrow,
-    _km_cent_arrays,
-    _km_model,
-)
+from datafusion_parallelism_spark.operators.vectors import KMEANS, codebook
+from datafusion_parallelism_spark.queries.llm import _km_assign_arrow, _km_model
 from datafusion_parallelism_spark.queries import REGISTRY
+from datafusion_parallelism_spark.session import load
 
 
-def _inertia(dims, cids, cent):
+def _inertia(dims, ids, anchors):
     return (
-        _km_assign_arrow(dims, cids, cent)
+        _km_assign_arrow(dims, ids, anchors)
         .agg(F.sum("d2").alias("s"))
         .collect()[0]["s"]
     )
 
 
 def test_lloyd_iterations_monotonically_reduce_inertia(spark, sf_dir):
-    dims, trained = _km_model(spark, sf_dir)
-    seed_ids = dims.select("vec_id").distinct().orderBy("vec_id").limit(_KM_K)
-    seed = dims.join(F.broadcast(seed_ids), "vec_id").select(
-        F.col("vec_id").alias("cid"), "i", F.col("x").alias("c")
-    )
-    i_seed = _inertia(dims, *_km_cent_arrays([tuple(r) for r in seed.collect()]))
+    dims, *trained = _km_model(load(spark, sf_dir, "embeddings"))
+    seed_ids = dims.select("vec_id").distinct().orderBy("vec_id").limit(KMEANS.k)
+    seed = dims.join(F.broadcast(seed_ids), "vec_id").collect()
+    i_seed = _inertia(dims, *codebook(((r.vec_id, 0, r.i - 1, r.x) for r in seed), KMEANS))
     i_trained = _inertia(dims, *trained)
     # 2 Lloyd iterations from arbitrary seeds must strictly help on this
     # corpus (seed inertia ~2x trained in practice; assert a safe margin).
@@ -47,7 +42,7 @@ def test_every_vector_assigned_exactly_one_cluster(spark, sf_dir):
     n_vec = df.count()
     assert df.select("vec_id").distinct().count() == n_vec
     k_used = df.select("cluster_id").distinct().count()
-    assert 1 <= k_used <= _KM_K
+    assert 1 <= k_used <= KMEANS.k
 
 
 def test_balanced_sample_quota_per_cluster(spark, sf_dir):

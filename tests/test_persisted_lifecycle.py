@@ -2,9 +2,10 @@
 
 Several queries truncate lineage with ``localCheckpoint`` (directly or via
 helpers: the shared shingle subtree, winnow fingerprints, MinHash signature
-table, PQ sub-vectors, k-means dims, graph iteration state).  Checkpoint
-blocks are MEMORY_AND_DISK-persisted RDDs that Spark only releases through
-the slow finalizer → ContextCleaner path — a consumer who calls these
+table, graph iteration state; above their size gates also PQ sub-vectors
+and k-means dims).  Checkpoint blocks are MEMORY_AND_DISK-persisted RDDs
+that Spark only releases through the slow finalizer → ContextCleaner
+path — a consumer who calls these
 queries repeatedly in ONE session accumulates blocks until
 ``session.release_persisted`` is called (VERDICT r8 "what's wrong" #4: only
 the bench/probe harnesses did so).  This test is the library-level
@@ -31,20 +32,16 @@ from datafusion_parallelism_spark.session import (
 )
 
 #: Queries observed to leave persisted RDDs after execution (full-registry
-#: sweep at sf0.001, re-derived 2026-10-18).  Count per query varies with
+#: sweep at sf0.001, re-derived 2026-10-19).  Count per query varies with
 #: iteration depth, so only names are pinned here.  Queries whose
-#: single-task kernel runs at this scale (ann_pq_topk, dedup_minhash_lsh,
-#: graph_pagerank, graph_triangle_counts) leave none.
+#: single-task kernel runs at this scale (the five PQ and k-means queries,
+#: dedup_minhash_lsh, graph_pagerank, graph_triangle_counts) leave none.
 CHECKPOINT_BEARING = [
     "dedup_ngram_jaccard",
     "dedup_containment",
     "dedup_winnow_spans",
     "dedup_near_clusters",
     "dedup_apply",
-    "vec_pq_codes",
-    "ann_ivfpq_topk",
-    "vec_kmeans_clusters",
-    "mix_cluster_balanced_sample",
     "stream_foreachbatch_upsert",
 ]
 

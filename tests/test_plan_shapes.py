@@ -288,39 +288,44 @@ def test_pq_adc_topk_uses_window_group_limit(spark, sf_dir, monkeypatch):
     top-k must plan with the partial WindowGroupLimit (map-side k-row
     bound before the final window's exchange) and join the LUT by
     broadcast — no corpus-side shuffle for the lookup."""
-    from datafusion_parallelism_spark.queries import llm
+    from datafusion_parallelism_spark.operators import vectors
 
-    monkeypatch.setattr(llm, "_PQ_LOCAL_TRAIN_MAX_SUBV", 0)
+    monkeypatch.setattr(vectors, "_VECTOR_KERNEL_MAX_VECS", 0)
     plan = physical_plan_str(REGISTRY["ann_pq_topk"].fn(spark, sf_dir))
     assert "WindowGroupLimit" in plan
     assert "BroadcastHashJoin" in plan
 
 
-def test_pq_adc_topk_below_gate_is_one_arrow_task(spark, sf_dir):
-    """Below the footer-read gate ann_pq_topk builds with zero Spark jobs
-    and plans as exactly one MapInArrow (train, encode, LUT, ADC and
-    top-k fused) over the scan: no broadcast join and no Exchange below
-    the kernel."""
+def test_pq_adc_topk_below_gate_is_one_arrow_task(spark, sf_dir_oracle):
+    """Below the footer-read vector gate every PQ and k-means query builds
+    with zero Spark jobs and plans as exactly one MapInArrow (fit,
+    encode or assign, and for the ADC queries LUT, cells and top-k,
+    fused) over the scan: no broadcast join and no Exchange below the
+    kernel."""
     import os
 
-    from datafusion_parallelism_spark.queries.llm import (
-        _PQ_LOCAL_TRAIN_MAX_SUBV,
-        _PQ_M,
-    )
+    from datafusion_parallelism_spark.operators import vectors
     from datafusion_parallelism_spark.session import parquet_num_rows
 
-    n = parquet_num_rows(os.path.join(sf_dir, "embeddings.parquet"))
-    assert n * _PQ_M <= _PQ_LOCAL_TRAIN_MAX_SUBV
+    n = parquet_num_rows(os.path.join(sf_dir_oracle, "embeddings.parquet"))
+    assert vectors.fits(n)
     # The memoized scan's schema read is table registration, not build.
-    load(spark, sf_dir, "embeddings")
+    load(spark, sf_dir_oracle, "embeddings")
     scheduler = spark.sparkContext._jsc.sc().dagScheduler()
-    jobs = scheduler.numTotalJobs()
-    df = REGISTRY["ann_pq_topk"].fn(spark, sf_dir)
-    assert scheduler.numTotalJobs() == jobs
-    plan = physical_plan_str(df)
-    assert plan.count("MapInArrow") == 1, plan
-    assert "BroadcastHashJoin" not in plan, plan
-    assert "Exchange" not in plan[plan.index("MapInArrow"):], plan
+    for name in (
+        "ann_pq_topk",
+        "vec_pq_codes",
+        "ann_ivfpq_topk",
+        "vec_kmeans_clusters",
+        "mix_cluster_balanced_sample",
+    ):
+        jobs = scheduler.numTotalJobs()
+        df = REGISTRY[name].fn(spark, sf_dir_oracle)
+        assert scheduler.numTotalJobs() == jobs, name
+        plan = physical_plan_str(df)
+        assert plan.count("MapInArrow") == 1, (name, plan)
+        assert "BroadcastHashJoin" not in plan, (name, plan)
+        assert "Exchange" not in plan[plan.index("MapInArrow"):], (name, plan)
 
 
 def test_minhash_below_gate_is_one_arrow_task(spark, sf_dir):
@@ -559,10 +564,10 @@ def test_winnow_capped_fingerprints_df_window_rides_join_partitioning(spark):
 
 
 def test_kmeans_final_plan_broadcast_assign_two_exchanges(spark, sf_dir):
-    """vec_kmeans_clusters' final assignment must never shuffle the
-    corpus side: the centroids ride the Arrow kernel's task closure
-    (MapInArrow over the checkpointed dims — zero joins, zero exchanges),
-    which applies the DuckDB oracle's round-then-argmin / MIN(cid) rule."""
+    """vec_kmeans_clusters' assignment must never shuffle the corpus
+    side: below the vector gate fit and assignment are one Arrow task
+    over the scan (MapInArrow — zero joins, zero exchanges), which
+    applies the DuckDB oracle's round-then-argmin / MIN(cid) rule."""
     plan = physical_plan_str(REGISTRY["vec_kmeans_clusters"].fn(spark, sf_dir))
     assert "MapInArrow" in plan, plan
     assert "Exchange" not in plan, plan
@@ -653,7 +658,7 @@ def test_pq_training_iteration_streams_without_sort_or_exchange(spark, sf_dir):
 
     with with_conf(spark, {"spark.sql.adaptive.enabled": "true"}):
         vecs = load(spark, sf_dir, "embeddings")
-        txt = train_iter_plan(_pq_subv_pinned(_pq_subv(vecs, spark))[0])
+        txt = train_iter_plan(_pq_subv_pinned(_pq_subv(vecs, spark)))
         assert not re.search(r"Sort \[vec_id#", txt), txt
         assert not re.search(r"Exchange hashpartitioning\(vec_id#", txt), txt
         plain = presorted(_pq_subv(vecs, spark), "vec_id", "j").localCheckpoint(

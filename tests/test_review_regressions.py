@@ -96,7 +96,7 @@ def test_round_half_up_matches_spark_round(spark):
     (2.675 -> 2.68), not the exact binary value (2.67499...)."""
     import numpy as np
 
-    from datafusion_parallelism_spark.queries.llm import _round_half_up
+    from datafusion_parallelism_spark.operators.vectors import round_half_up
 
     probes = [
         (2.675, 2, 2.68),
@@ -111,54 +111,51 @@ def test_round_half_up_matches_spark_round(spark):
     ).collect()
     for (x, scale, want), row in zip(probes, spark_rounded):
         assert row[f"r{scale}"] == want, (x, scale, row)
-        got = _round_half_up(np.array([x]), scale)[0]
+        got = round_half_up(np.array([x]), scale)[0]
         assert got == want, (x, scale, got)
 
 
 def test_pq_kernel_matches_numpy_argmin_with_fewer_vectors_than_k(spark):
-    """With fewer vectors than _PQ_K the codebook has k_eff < K anchors
-    per subspace.  The kernel's anchor arrays must hold exactly those, so
-    a subvector near the origin is coded to its nearest REAL anchor: the
-    oracle's argmin over the codebook rows, ties to the smallest aid."""
+    """With fewer vectors than PQ.k the distributed codebook has k_eff < K
+    anchors per subspace.  The kernel's anchor arrays must hold exactly
+    those, so a subvector near the origin is coded to its nearest REAL
+    anchor: the oracle's argmin over the codebook rows, ties to the
+    smallest aid."""
     import numpy as np
 
+    from datafusion_parallelism_spark.operators.vectors import PQ
     from datafusion_parallelism_spark.queries.llm import (
-        _PQ_K,
-        _PQ_M,
         _pq_assign_arrow,
         _pq_model,
     )
 
     n = 5
-    assert n < _PQ_K
+    assert n < PQ.k
     rng = np.random.default_rng(7)
     vecs = spark.createDataFrame(
-        [(i + 1, rng.normal(size=2 * _PQ_M).tolist()) for i in range(n)],
+        [(i + 1, rng.normal(size=PQ.width).tolist()) for i in range(n)],
         "vec_id long, embedding array<float>",
     )
     probes = spark.createDataFrame(
-        [(0, j, 1e-3, 0.0) for j in range(_PQ_M)],
+        [(0, j, 1e-3, 0.0) for j in range(PQ.groups)],
         "vec_id long, j int, e1 double, e2 double",
     )
 
-    subv, anch_df, arrays = _pq_model(spark, vecs)
-    assert arrays[0].shape == (_PQ_M, n)
+    subv, ids, anchors = _pq_model(vecs)
+    assert anchors.shape == (PQ.groups, n, PQ.dims)
     points = subv.unionByName(probes)
     kernel = {
         (r.vec_id, r.j): r.code
         for r in _pq_assign_arrow(
-            points, *arrays, include_coords=False
+            points, ids, anchors, include_coords=False
         ).collect()
     }
-    book: dict = {}
-    for r in anch_df.collect():
-        book.setdefault(r.j, []).append((r.aid, r.a1, r.a2))
     want = {}
     for r in points.collect():
-        aid, a1, a2 = np.array(book[r.j]).T
+        a1, a2 = anchors[r.j].T
         d2 = (r.e1 - a1) * (r.e1 - a1) + (r.e2 - a2) * (r.e2 - a2)
-        want[(r.vec_id, r.j)] = int(aid[np.lexsort((aid, d2))[0]])
-    assert len(kernel) == (n + 1) * _PQ_M
+        want[(r.vec_id, r.j)] = int(ids[np.lexsort((ids, d2))[0]])
+    assert len(kernel) == (n + 1) * PQ.groups
     assert kernel == want
 
 
@@ -172,7 +169,7 @@ def test_km_assign_kernel_rejects_vector_split_across_partitions(spark):
 
     d = 4
     cids = np.array([0, 1], dtype=np.int64)
-    cent = np.array([[0.0] * d, [1.0] * d])
+    cent = np.array([[[0.0] * d, [1.0] * d]])
     # i-major order: parallelize's two slices each get dims 1-2 or 3-4 of
     # BOTH vectors.
     rows = [(v, i, float(v)) for i in range(1, d + 1) for v in range(2)]
