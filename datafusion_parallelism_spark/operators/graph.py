@@ -56,7 +56,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from ..plans.shaping import checkpoint_pinned, kernel_fits, presorted
+from ..plans.shaping import checkpoint_pinned, kernel_fits
 
 #: One shuffle partition per this many iteration-state rows (floor 4,
 #: ceiling the session conf) — the same sizing rule the round-4 conf flip
@@ -334,7 +334,7 @@ def connected_components(
     # what makes both properties real at scale: a plain localCheckpoint
     # under AQE stores Unknown/Nil and every iteration re-exchanges AND
     # re-sorts the |E|-row side (round-10 finding).
-    und = checkpoint_pinned(presorted(und.repartition(parts, "dst"), "dst"))
+    und = checkpoint_pinned(und.repartition(parts, "dst").sortWithinPartitions("dst"))
 
     labels = (
         _sized(und.select(F.col("src").alias("node")), parts, conf_parts, "node")
@@ -535,12 +535,9 @@ def pagerank(
     )
     obs_m = Observation()
     e_loop = checkpoint_pinned(
-        presorted(
-            e_loop.observe(
-                obs_m, F.coalesce(F.sum(F.size("dsts")), F.lit(0)).alias("m")
-            ),
-            "src",
-        )
+        e_loop.observe(
+            obs_m, F.coalesce(F.sum(F.size("dsts")), F.lit(0)).alias("m")
+        ).sortWithinPartitions("src")
     )
     m = obs_m.get["m"]
     # Small-graph fast path (round 11): once the edge count is measured
@@ -565,7 +562,7 @@ def pagerank(
         # join output is already hashpartitioning(src, conf-width) from
         # the materialized exchange — nothing to re-pin.
         e_loop = checkpoint_pinned(
-            presorted(e_loop.repartition(parts, "src"), "src")
+            e_loop.repartition(parts, "src").sortWithinPartitions("src")
         )
 
     nodes = (
@@ -581,7 +578,7 @@ def pagerank(
     )
     obs_n = Observation()
     nodes = checkpoint_pinned(
-        presorted(nodes.observe(obs_n, F.count(F.lit(1)).alias("n")), "node")
+        nodes.observe(obs_n, F.count(F.lit(1)).alias("n")).sortWithinPartitions("node")
     )
     n = obs_n.get["n"]
 

@@ -1,4 +1,4 @@
-"""Vector-model rules: the one NumPy core of PQ and k-means.
+"""Vector-model rules: the one core of PQ and k-means.
 
 Product quantization and k-means are the same model seen at two shapes:
 a seeded Lloyd fit over an ``[n, groups, dims]`` array of unit vectors,
@@ -7,25 +7,30 @@ into 32 groups of 2 dims and ranks raw squared distances; k-means keeps
 1 group of 64 dims and rounds every distance to 1e-4 before its argmin.
 Both round each updated anchor to 1e-5.  This module owns those rules —
 the vec_id-sorted decode, the HALF_UP rounding replica, the chunked
-nearest-anchor search (ties to the smallest anchor id) and the Lloyd
-loop — and every PQ and k-means kernel calls it: the one-task kernels
-below the size gate and the assignment kernels of the distributed
-trainers above it.
+nearest-anchor search (ties to the smallest anchor id), the per-block
+member sums and the mean step — and the one gate, fit loop and map
+kernel every PQ and k-means query runs through (apply).
 
 The arithmetic is the DuckDB oracle's: squared differences are products,
-not ``power()``; a centroid is the member sum in vec_id order over the
-member count, rounded HALF_UP on the shortest decimal as Spark's ROUND
-does.  The rounding grids absorb summation-order noise, so the one-task
-fit and the distributed fit (Spark's AVG) give value-identical models.
+not ``power()``; a centroid is the member sum over the member count,
+rounded HALF_UP on the shortest decimal as Spark's ROUND does.  The
+rounding grids absorb summation-order noise, so the one-task fit and the
+distributed fit give value-identical models.
 
-Size gate: below ``_VECTOR_KERNEL_MAX_VECS`` vectors (the embeddings
-footer row count, read without a Spark job) a whole PQ or k-means query
-is one ``mapInArrow`` task over ``(vec_id, v0, nrm)``.  The fit is
-sequential by nature (each iteration's assignment needs the previous
-model), so a distributed fit pays one driver-synced job per iteration —
-~0.3 s of scheduling each at any toy or mid scale — while the math is
-milliseconds.  62,500 vectors hold ~32 MB of vector doubles in the task;
-above the gate the distributed trainers remain.
+Both sides of the size gate read the same whole-vector rows ``(vec_id,
+v0, nrm)`` (rows()).  Below ``_VECTOR_KERNEL_MAX_VECS`` vectors (the
+embeddings footer row count, read without a Spark job) a whole query is
+one ``mapInArrow`` task: lloyd fits, then the query's emitter maps every
+vector.  The fit is sequential by nature (each iteration's assignment
+needs the previous model), so a distributed fit pays one driver-synced
+job per iteration — ~0.3 s of scheduling each at any toy or mid scale —
+while the math is milliseconds; 62,500 vectors hold ~32 MB of vector
+doubles in the task.  Above the gate fit() runs the same Lloyd rule over
+the rows as they are partitioned: a seed job, then per iteration one job
+of the map kernel emitting per-task partial member sums, which the
+driver adds up and turns into means with lloyd's own step.  The
+emitter then runs in the same map kernel with the model in its closure:
+no corpus shuffle, no row expansion and no checkpoint.
 """
 
 from __future__ import annotations
@@ -76,27 +81,44 @@ def fits(n_vecs: int | None) -> bool:
     return kernel_fits(n_vecs, _VECTOR_KERNEL_MAX_VECS)
 
 
-def one_task(vecs: DataFrame, kernel, schema: str) -> DataFrame:
-    """``kernel`` as one ``mapInArrow`` task over (vec_id, v0, nrm): the
-    raw double vector and its Spark-computed L2 norm, so the kernel's
-    unit vectors divide by the same norm the distributed side uses."""
+#: Schema of rows(), and of the seed job's per-task k smallest vectors.
+ROWS = "vec_id long, v0 array<double>, nrm double"
+#: One anchor's partial member count and per-dim sums from one task.
+_PARTIALS = "grp int, anchor int, cnt long, sums array<double>"
+
+
+def rows(vecs: DataFrame) -> DataFrame:
+    """(vec_id, v0, nrm): every vector of ``vecs`` (vec_id, embedding) as
+    one row — the raw double vector and its Spark-computed L2 norm, so
+    every kernel's unit vectors divide by the same norm.  The input of
+    every PQ and k-means kernel on both sides of the gate."""
     vd = as_double(F.col("embedding"))
-    return (
-        vecs.select("vec_id", vd.alias("v0"), norm(vd).alias("nrm"))
-        .coalesce(1)
-        .mapInArrow(kernel, schema=schema)
-    )
+    return vecs.select("vec_id", vd.alias("v0"), norm(vd).alias("nrm"))
+
+
+def mapped(rows: DataFrame, model: Lloyd, query: str, fn, schema: str) -> DataFrame:
+    """``rows.mapInArrow``: each task decodes all its rows as one
+    vec_id-sorted block (decode, which rejects a wrong-length embedding
+    inside the task) and ``fn(vid, v, nrm)`` returns its output batches
+    of ``schema``; a task without rows returns none."""
+
+    def kernel(batches):
+        vid, v, nrm = decode(batches, model.width, query)
+        if len(vid):
+            yield from fn(vid, v, nrm)
+
+    return rows.mapInArrow(kernel, schema=schema)
 
 
 def decode(batches, width: int, query: str):
-    """(vid, v, nrm) from one_task's Arrow batches, sorted by vec_id: ids
+    """(vid, v, nrm) from Arrow batches of rows(), sorted by vec_id: ids
     int64[n], raw vectors float64[n, width] and norms float64[n]; the
     unit vectors are ``v / nrm[:, None]``.  An embedding that is not
     ``width`` elements long raises ValueError naming its vec_id."""
     import numpy as np
     import pyarrow.compute as pc
 
-    ids, rows, nrms = [], [], []
+    ids, vs, nrms = [], [], []
     for b in batches:
         vid = b.column(0).to_numpy(zero_copy_only=False)
         v0 = b.column(1)
@@ -109,13 +131,13 @@ def decode(batches, width: int, query: str):
                 f"elements, expected {width}"
             )
         ids.append(vid)
-        rows.append(v0.flatten().to_numpy(zero_copy_only=False).reshape(-1, width))
+        vs.append(v0.flatten().to_numpy(zero_copy_only=False).reshape(-1, width))
         nrms.append(b.column(2).to_numpy(zero_copy_only=False))
     if not ids:
         return np.empty(0, np.int64), np.empty((0, width)), np.empty(0)
     vid = np.concatenate(ids)
     order = np.argsort(vid, kind="stable")
-    return vid[order], np.concatenate(rows)[order], np.concatenate(nrms)[order]
+    return vid[order], np.concatenate(vs)[order], np.concatenate(nrms)[order]
 
 
 def unit(v, nrm, model: Lloyd):
@@ -191,66 +213,199 @@ def nearest(x, anchors, scale: int | None = None):
     return k, dmin
 
 
-def lloyd(x, model: Lloyd):
-    """Anchors ``[groups, k_eff, dims]`` after ``model.iters`` Lloyd
-    iterations over ``x`` ``[n, groups, dims]`` (rows in vec_id order).
-    The seed is the first k_eff = min(k, n) rows, so anchor ids are the
-    k_eff smallest vec_ids.  Each iteration assigns every row to its
-    nearest anchor and replaces each anchor by its members' mean (sum in
-    row order over count, rounded HALF_UP); an empty cluster keeps its
-    anchor."""
+def seed_of(x, model: Lloyd):
+    """Seed anchors ``[groups, k_eff, dims]`` of ``x`` (rows in vec_id
+    order): the first k_eff = min(k, n) rows, so anchor ids are the k_eff
+    smallest vec_ids."""
+    return x[: model.k].transpose(1, 0, 2).copy()
+
+
+def sums(x, code, n_anchors: int):
+    """(count int64[groups · n_anchors], sums ``[groups · n_anchors,
+    dims]``): the members of each anchor — flat index group · n_anchors +
+    anchor — in one block, added in row order."""
     import numpy as np
 
     n, g, dims = x.shape
-    k_eff = min(model.k, n)
-    anchors = x[:k_eff].transpose(1, 0, 2).copy()
-    flat = anchors.reshape(g * k_eff, dims)
-    offset = np.arange(g) * k_eff
+    idx = (code + np.arange(g) * n_anchors).ravel()
+    cnt = np.bincount(idx, minlength=g * n_anchors)
+    s = np.empty((g * n_anchors, dims))
+    for t in range(dims):
+        s[:, t] = np.bincount(idx, weights=x[:, :, t].ravel(), minlength=g * n_anchors)
+    return cnt, s
+
+
+def step(anchors, cnt, s, model: Lloyd) -> None:
+    """Replace every anchor with members (``cnt`` > 0 in sums()' flat
+    index) by their mean, rounded HALF_UP to ``model.mean_scale``; an
+    empty cluster keeps its anchor."""
+    import numpy as np
+
+    nz = np.nonzero(cnt)[0]
+    mean = s[nz] / cnt[nz, None]
+    grp, anchor = np.divmod(nz, anchors.shape[1])
+    anchors[grp, anchor] = round_half_up(mean.ravel(), model.mean_scale).reshape(mean.shape)
+
+
+def lloyd(x, model: Lloyd):
+    """Anchors ``[groups, k_eff, dims]`` after ``model.iters`` Lloyd
+    iterations over ``x`` ``[n, groups, dims]`` (rows in vec_id order),
+    seeded by seed_of.  Each iteration assigns every row to its nearest
+    anchor and replaces each anchor by its members' mean (sums in row
+    order, step)."""
+    anchors = seed_of(x, model)
     for _ in range(model.iters):
-        idx = (nearest(x, anchors, model.dist_scale)[0] + offset).ravel()
-        cnt = np.bincount(idx, minlength=g * k_eff)
-        nz = cnt > 0
-        for t in range(dims):
-            s = np.bincount(idx, weights=x[:, :, t].ravel(), minlength=g * k_eff)
-            flat[nz, t] = round_half_up(s[nz] / cnt[nz], model.mean_scale)
+        code = nearest(x, anchors, model.dist_scale)[0]
+        step(anchors, *sums(x, code, anchors.shape[1]), model)
     return anchors
 
 
-def codebook(entries, model: Lloyd):
-    """(ids int64[K] sorted, anchors ``[groups, K, dims]``) from
-    ``(id, group, dim, value)`` entries: a collected model."""
+@dataclass(frozen=True)
+class Assigned:
+    """One block of vectors under a fitted model, as an emitter sees it:
+    the decoded rows (``vid`` sorted, raw ``v``, ``nrm``), their unit
+    vectors ``x``, the model (anchor ids ``ids``, ``anchors``) and each
+    row's nearest anchor index ``code`` and distance ``dmin`` per group
+    (both ``[n, groups]``)."""
+
+    vid: object
+    v: object
+    nrm: object
+    x: object
+    ids: object
+    anchors: object
+    code: object
+    dmin: object
+
+
+def _assigned(vid, v, nrm, x, ids, anchors, model: Lloyd) -> Assigned:
+    return Assigned(vid, v, nrm, x, ids, anchors, *nearest(x, anchors, model.dist_scale))
+
+
+def assign(rows, model: Lloyd, ids, anchors, emit, schema: str, query: str, side=None):
+    """The map kernel above the gate: per task decode → unit → nearest
+    against the model in the closure, then ``emit(assigned, side)``
+    returns the task's batches of ``schema``."""
+    return mapped(
+        rows, model, query,
+        lambda vid, v, nrm: emit(
+            _assigned(vid, v, nrm, unit(v, nrm, model), ids, anchors, model), side
+        ),
+        schema,
+    )
+
+
+def lists(a):
+    """The rows of the 2-D NumPy array ``a`` as an Arrow list array."""
+    import numpy as np
+    import pyarrow as pa
+
+    n, w = a.shape
+    offsets = np.arange(n + 1, dtype=np.int32) * w
+    return pa.ListArray.from_arrays(pa.array(offsets), pa.array(a.ravel()))
+
+
+def _partials(a: Assigned, side):
+    """The task's partial of one Lloyd iteration: a (grp, anchor, cnt,
+    sums) row per anchor with members in the block."""
+    import numpy as np
+    import pyarrow as pa
+
+    k_eff = len(a.ids)
+    cnt, s = sums(a.x, a.code, k_eff)
+    nz = np.nonzero(cnt)[0]
+    grp, anchor = np.divmod(nz, k_eff)
+    yield pa.RecordBatch.from_arrays(
+        [pa.array(grp.astype(np.int32)), pa.array(anchor.astype(np.int32)),
+         pa.array(cnt[nz]), lists(s[nz])],
+        names=["grp", "anchor", "cnt", "sums"],
+    )
+
+
+def seed(rows: DataFrame, model: Lloyd, query: str):
+    """(ids int64[k_eff], anchors): lloyd's seed over distributed
+    ``rows`` in one job — each task returns its k smallest vec_ids, the
+    driver keeps the k smallest of them."""
+    import pyarrow as pa
+
+    def first_k(vid, v, nrm):
+        k = model.k
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(vid[:k]), lists(v[:k]), pa.array(nrm[:k])],
+            names=["vec_id", "v0", "nrm"],
+        )
+
+    got = mapped(rows, model, query, first_k, ROWS).toArrow()
+    vid, v, nrm = decode(got.to_batches(), model.width, query)
+    return vid[: model.k], seed_of(unit(v, nrm, model), model)
+
+
+def fit(rows: DataFrame, model: Lloyd, query: str):
+    """(ids, anchors): lloyd's model trained over distributed ``rows`` in
+    1 + ``model.iters`` jobs and no shuffle.  After the seed job each
+    iteration is one job of the map kernel (assign) emitting per-task
+    partial sums; the driver adds them up in task order and applies
+    lloyd's step.  Only the order of additions across tasks differs from
+    lloyd's, and the mean_scale grid absorbs it."""
     import numpy as np
 
-    entries = list(entries)
-    ids = np.unique(np.array([e[0] for e in entries], dtype=np.int64))
-    anchors = np.zeros((model.groups, len(ids), model.dims))
-    update(ids, anchors, entries)
+    ids, anchors = seed(rows, model, query)
+    n = model.groups * len(ids)
+    for _ in range(model.iters):
+        t = assign(rows, model, ids, anchors, _partials, _PARTIALS, query).toArrow()
+        idx = t.column("grp").to_numpy() * len(ids) + t.column("anchor").to_numpy()
+        cnt, s = np.zeros(n, np.int64), np.zeros((n, model.dims))
+        np.add.at(cnt, idx, t.column("cnt").to_numpy())
+        part = t.column("sums").combine_chunks().flatten().to_numpy()
+        np.add.at(s, idx, part.reshape(-1, model.dims))
+        step(anchors, cnt, s, model)
     return ids, anchors
 
 
-def update(ids, anchors, entries) -> None:
-    """Set ``anchors[group, position of id, dim] = value`` per entry."""
-    pos = {int(i): k for k, i in enumerate(ids)}
-    for i, g, t, val in entries:
-        anchors[g, pos[int(i)], t] = val
+def apply(vecs: DataFrame, n_vecs: int | None, model: Lloyd, query: str, emit,
+          schema: str, side: int | None = None) -> DataFrame:
+    """Every vector of ``vecs`` (vec_id, embedding) under ``model`` fitted
+    on all of them: ``emit(assigned, side_rows)`` returns each block's
+    batches of ``schema``.  ``side_rows`` is the decoded (vid, v, nrm) of
+    the vectors with vec_id < ``side`` (None: no side rows) — the queries
+    and centroids an ADC emitter ranks against.  ``query`` names the
+    query in a wrong-length error.
+
+    The one PQ/k-means gate, on ``n_vecs`` (an upper bound on the row
+    count; None never fits).  Below it the fit (lloyd) and the emitter
+    run in ONE task with no build-time job.  Above it fit() trains the
+    model and assign() runs the emitter per task, the model and the side
+    rows (collected once) in its closure."""
+    r = rows(vecs)
+    if fits(n_vecs):
+        def local(vid, v, nrm):
+            x = unit(v, nrm, model)
+            anchors = lloyd(x, model)
+            a = _assigned(vid, v, nrm, x, vid[: anchors.shape[1]], anchors, model)
+            s = None if side is None else vid < side
+            return emit(a, None if s is None else (vid[s], v[s], nrm[s]))
+
+        return mapped(r.coalesce(1), model, query, local, schema)
+    ids, anchors = fit(r, model, query)
+    side_rows = None
+    if side is not None:
+        got = r.filter(F.col("vec_id") < side).toArrow()
+        side_rows = decode(got.to_batches(), model.width, query)
+    return assign(r, model, ids, anchors, emit, schema, query, side_rows)
 
 
-def cells(vid, v, nrm, n_cells: int, scale: int):
-    """IVF cell of every vector: the id of its most similar centroid, the
-    centroids being the vectors with vec_id < n_cells.  Similarity is
-    Spark's ``cosine`` — the dot product summed in index order from 0.0,
-    over the product of the norms — rounded to ``scale`` decimals; ties go
-    to the smallest centroid id.  An empty array when there is no
-    centroid."""
+def cells(v, nrm, cid, cv, c_nrm, scale: int):
+    """IVF cell of every vector (raw ``v``, norms ``nrm``): the id (from
+    ``cid``, sorted) of its most similar centroid (raw ``cv``, norms
+    ``c_nrm``; at least one).  Similarity is Spark's ``cosine`` — the dot
+    product summed in index order from 0.0, over the product of the
+    norms — rounded to ``scale`` decimals; ties go to the smallest
+    centroid id."""
     import numpy as np
 
-    cent = vid < n_cells
-    if not cent.any():
-        return np.empty(0, np.int64)
-    c, c_nrm = v[cent], nrm[cent]
-    dot = np.zeros((len(v), len(c)))
+    dot = np.zeros((len(v), len(cv)))
     for i in range(v.shape[1]):
-        dot += v[:, i, None] * c[:, i]
+        dot += v[:, i, None] * cv[:, i]
     s = dot / (nrm[:, None] * c_nrm)
     s = round_half_up(s.ravel(), scale).reshape(s.shape)
-    return vid[cent][np.argmax(s, axis=1)]
+    return cid[np.argmax(s, axis=1)]

@@ -8,7 +8,6 @@ from .shaping import (  # noqa: F401
     join_kinds,
     kernel_fits,
     physical_plan_str,
-    presorted,
     pushed_filters,
     read_schemas,
 )

@@ -116,24 +116,6 @@ def forced_join_strategy(spark: SparkSession, strategy: str):
             conf.set(k, v)
 
 
-def presorted(df: DataFrame, *keys: str) -> DataFrame:
-    """Sort within partitions by a loop join/group key BEFORE a
-    localCheckpoint, so downstream iterations read the table already
-    ordered.
-
-    LogicalRDD preserves the checkpointed plan's outputPartitioning AND
-    outputOrdering ONLY when the checkpoint job is planned non-adaptively
-    — under AQE both read back Unknown/Nil (round-10 finding; r9's
-    elision evidence came from AQE-off sessions and did not transfer to
-    the at-scale AQE-on posture).  Pair this with
-    :func:`checkpoint_pinned`, which scopes AQE off around the eager
-    checkpoint so the metadata is captured; EnsureRequirements then
-    elides the per-iteration Sort (and Exchange) under SortMergeJoin /
-    SortAggregate consumers of the loop-INVARIANT table at every scale.
-    """
-    return df.sortWithinPartitions(*keys)
-
-
 def checkpoint_pinned(df: DataFrame) -> DataFrame:
     """Eager localCheckpoint that actually PRESERVES the checkpointed
     plan's partitioning/ordering metadata at every scale.
@@ -146,9 +128,10 @@ def checkpoint_pinned(df: DataFrame) -> DataFrame:
     the checkpointed table.  Round 10 measured the consequence: pagerank
     re-shuffled and re-sorted its loop-invariant |E|-row edge table every
     iteration at the x256 replica (139 GB of sort spill, 45% of the
-    corpus wall), and the PQ-training Sort that plain ``presorted`` was
-    believed to elide was also back under AQE — the r9 elision evidence
-    was gathered on AQE-off sessions and silently did not transfer.
+    corpus wall), and the PQ-training Sort that a sort before a plain
+    localCheckpoint was believed to elide was also back under AQE — the
+    r9 elision evidence was gathered on AQE-off sessions and silently did
+    not transfer.
 
     Fix: plan this ONE checkpoint job non-adaptively.  Dataset planning
     is lazy — it happens at the first action, which for an eager
@@ -161,6 +144,12 @@ def checkpoint_pinned(df: DataFrame) -> DataFrame:
     subtree it materializes) — callers with a heavy derivation upstream
     checkpoint twice: once ambient to truncate lineage, then pin the
     cheap scan-repartition-sort job.
+
+    Sort within partitions by the loop's join/group key (after any
+    repartition) BEFORE this call: the pinned ordering then makes every
+    downstream iteration's Sort a planner no-op — EnsureRequirements
+    elides the per-iteration Sort (and Exchange) of SortMergeJoin /
+    SortAggregate consumers of the loop-invariant table at every scale.
 
     The flip is session-global for the duration of the job; engine
     sessions run one query at a time (driver/bench), and a concurrent

@@ -47,7 +47,7 @@ from ..functions.text import (
     tokens,
     word_shingles,
 )
-from ..functions.vectors import as_double, cosine, norm
+from ..functions.vectors import as_double, cosine
 from ..operators import vectors
 from ..operators.pairs import cap_groups, count_pairs, pair_counts, partition_groups
 from ..operators.vectors import KMEANS, PQ
@@ -2648,7 +2648,7 @@ def corpus_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: baseline untrained, 0.74 after 2 Lloyd iterations (measured, pinned in
 #: tests/test_ann_quality.py).  Production PQ uses wider subspaces and a
 #: trained codebook (D=8, K=256 over a corpus sample); the PLAN — codebook
-#: in the task closure, map-side assignment, LUT-join ADC — is identical
+#: and LUT in the task closure, map-side assignment and ADC — is identical
 #: at any (M, D, K).  Centroids are rounded to 1e-5 per update: sum-
 #: association fp noise (~1e-14) cannot survive that grid, so both
 #: engines' codebooks are value-identical and every downstream
@@ -2730,197 +2730,28 @@ def _n_vecs(sf_dir: str) -> int | None:
     return parquet_num_rows(os.path.join(sf_dir, "embeddings.parquet"))
 
 
-def _normalized_cols(vecs: DataFrame) -> DataFrame:
-    """(vec_id, v0, nrm): raw double vector + its L2 norm, with the
-    repartition acting as an OPTIMIZER BARRIER as well as the vec_id
-    partitioning the training loops need.
-
-    The barrier is load-bearing: without it, CollapseProject merges the
-    norm projection into whatever downstream per-element expression
-    references it (``transform(v0, x -> x/nrm)``), and the D-element
-    interpreted fold re-evaluates PER ELEMENT — O(D²) per row instead of
-    O(D), measured 10x on the embeddings normalize (0.74 s -> 0.08 s at
-    sf0.1).  Post-exchange, ``nrm`` is a plain attribute.  Downstream
-    code divides individual elements (element_at(v0, i) / nrm), which is
-    the identical IEEE value transform would produce."""
-    vd = as_double(F.col("embedding"))
-    return vecs.select(
-        "vec_id", vd.alias("v0"), norm(vd).alias("nrm")
-    ).repartition("vec_id")
-
-
-def _pq_subv(vecs: DataFrame, spark: SparkSession) -> DataFrame:
-    """(vec_id, j, e1, e2): every L2-NORMALIZED vector split into its M
-    2-dim subvectors (cosine-PQ: unit vectors make squared-L2 rank like
-    cosine).  The norm is computed ONCE per vector (_normalized_cols
-    barrier); the M-way explode is a broadcast cross join — a pure map
-    over the corpus.  Lazy: tests assert scan pruning on this plan (the
-    checkpointed one has no visible file scan)."""
-    pre = _normalized_cols(vecs)
-    js = spark.range(PQ.groups).select(F.col("id").cast("int").alias("j"))
-    idx1 = (F.col("j") * PQ.dims + 1).cast("int")
-    idx2 = (F.col("j") * PQ.dims + 2).cast("int")
-    return pre.crossJoin(F.broadcast(js)).select(
-        "vec_id",
-        "j",
-        (F.element_at("v0", idx1) / F.col("nrm")).alias("e1"),
-        (F.element_at("v0", idx2) / F.col("nrm")).alias("e2"),
-    )
-
-
-def _pq_subv_pinned(subv: DataFrame) -> DataFrame:
-    """The subvector table, checkpointed for the distributed trainer.
-
-    One corpus shuffle total (the _normalized_cols barrier repartition):
-    vec_id partitioning is preserved through the broadcast cross join and
-    localCheckpoint (same posture as _km_dims).  Pre-SORTED by (vec_id, j)
-    and checkpointed with the metadata PINNED, so a per-(vec_id, j)
-    aggregate over the table streams with no Sort and no Exchange even
-    under AQE (a plain localCheckpoint erases both properties; see
-    plans/shaping.checkpoint_pinned and
-    test_pq_training_iteration_streams_without_sort_or_exchange)."""
-    from ..plans.shaping import checkpoint_pinned, presorted
-
-    return checkpoint_pinned(presorted(subv, "vec_id", "j"))
-
-
-def _subspace_rows(batches):
-    """(batch, [(j, row mask, subvectors [rows, 1, D])] per subspace
-    present) for each Arrow batch of subvector rows (vec_id, j, e1, e2)."""
+def _pq_code_rows(a, side):
+    """vec_pq_codes' emitter (vectors.apply): each vector's anchor ids in
+    subspace order and its reconstruction error — the M nearest-anchor
+    distances added in subspace order from 0.0, as Spark's SUM adds the
+    code rows, then ROUND(·, 6) (vectors.round_half_up)."""
     import numpy as np
+    import pyarrow as pa
 
-    for b in batches:
-        j = b.column(1).to_numpy(zero_copy_only=False)
-        e = np.stack(
-            [b.column(2).to_numpy(zero_copy_only=False),
-             b.column(3).to_numpy(zero_copy_only=False)],
-            axis=1,
-        )
-        yield b, [(g, j == g, e[j == g][:, None, :]) for g in np.unique(j)]
-
-
-def _pq_assign_arrow(
-    subv: DataFrame, ids, anchors, include_coords: bool
-) -> DataFrame:
-    """Nearest-anchor assignment of subvector rows as ONE vectorized Arrow
-    pass (vectors.nearest per subspace): in-cache NumPy instead of a
-    broadcast join's K-way row expansion (|corpus|·M·K intermediate rows);
-    the codebook (~50 KB) rides the task closure.  Emits (vec_id, j,
-    code, dmin[, e1, e2]) in input row order."""
-    out_schema = "vec_id long, j int, code long, dmin double"
-    names = ["vec_id", "j", "code", "dmin"]
-    if include_coords:
-        out_schema += ", e1 double, e2 double"
-        names += ["e1", "e2"]
-
-    def kernel(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        for b, groups in _subspace_rows(batches):
-            code = np.empty(b.num_rows, np.int64)
-            dmin = np.empty(b.num_rows)
-            for g, m, e in groups:
-                k, d = vectors.nearest(e, anchors[g : g + 1])
-                code[m] = ids[k[:, 0]]
-                dmin[m] = d[:, 0]
-            cols = [b.column(0), b.column(1), pa.array(code), pa.array(dmin)]
-            if include_coords:
-                cols += [b.column(2), b.column(3)]
-            yield pa.RecordBatch.from_arrays(cols, names=names)
-
-    return subv.select("vec_id", "j", "e1", "e2").mapInArrow(
-        kernel, schema=out_schema
+    err = np.zeros(len(a.vid))
+    for j in range(PQ.groups):
+        err += a.dmin[:, j]
+    yield pa.RecordBatch.from_arrays(
+        [
+            pa.array(a.vid),
+            vectors.lists(a.ids[a.code]),
+            pa.array(vectors.round_half_up(err, 6)),
+        ],
+        names=["vec_id", "codes", "recon_err"],
     )
 
 
-def _pq_lut_arrow(subv: DataFrame, ids, anchors) -> DataFrame:
-    """(qid, lj, aid, d2): the ADC lookup table — every subvector row's
-    squared distance (vectors.distances) to each anchor of its subspace,
-    K rows per input row."""
-
-    def kernel(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        for b, groups in _subspace_rows(batches):
-            vid = b.column(0).to_numpy(zero_copy_only=False)
-            for g, m, e in groups:
-                d = vectors.distances(e, anchors[g : g + 1])[:, 0, :]
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(np.repeat(vid[m], len(ids))),
-                        pa.array(np.full(d.size, g, np.int32)),
-                        pa.array(np.tile(ids, len(d))),
-                        pa.array(d.ravel()),
-                    ],
-                    names=["qid", "lj", "aid", "d2"],
-                )
-
-    return subv.select("vec_id", "j", "e1", "e2").mapInArrow(
-        kernel, schema="qid long, lj int, aid long, d2 double"
-    )
-
-
-def _pq_model(vecs: DataFrame):
-    """(subv, ids, anchors) above the vector gate: the checkpointed
-    subvector table and the codebook trained by PQ.iters distributed
-    Lloyd iterations, each ONE job (the means collect; the assignment
-    kernel runs inside it).  Seeded from the subvectors of the PQ.k
-    smallest vec_ids; every subvector goes to its nearest anchor (ties →
-    smallest aid), every anchor becomes the rounded member mean and an
-    empty cluster keeps its anchor — the computation the oracle's
-    unrolled CTE chain performs.  The codebook is a model artifact of
-    constant size (M·K rows ≈ 2k), so collecting it per iteration is the
-    one legitimate driver materialization."""
-    subv = _pq_subv_pinned(_pq_subv(vecs, vecs.sparkSession))
-    seed_ids = subv.select("vec_id").distinct().orderBy("vec_id").limit(PQ.k)
-    seed = subv.join(F.broadcast(seed_ids), "vec_id").collect()
-    ids, anchors = vectors.codebook(
-        ((r.vec_id, r.j, t, (r.e1, r.e2)[t]) for r in seed for t in range(2)), PQ
-    )
-    for _ in range(PQ.iters):
-        means = (
-            _pq_assign_arrow(subv, ids, anchors, include_coords=True)
-            .groupBy("code", "j")
-            .agg(
-                F.round(F.avg("e1"), PQ.mean_scale),
-                F.round(F.avg("e2"), PQ.mean_scale),
-            )
-            .collect()
-        )
-        vectors.update(ids, anchors, ((r[0], r[1], t, r[2 + t]) for r in means for t in range(2)))
-    return subv, ids, anchors
-
-
-def _pq_codes_arrow(vecs: DataFrame) -> DataFrame:
-    """(vec_id, j, code, dmin) of every vector, in ONE ``mapInArrow``
-    task over (vec_id, v0, nrm): vectors.lloyd fits the codebook and
-    vectors.nearest encodes the corpus with it — below the gate, the
-    whole of _pq_model + _pq_assign_arrow with no build-time job.  Rows
-    leave in (vec_id, j) order, the order the distributed assignment
-    reads the pinned subvector table in."""
-
-    def kernel(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        vid, v, nrm = vectors.decode(batches, PQ.width, "vec_pq_codes")
-        if not len(vid):
-            return
-        x = vectors.unit(v, nrm, PQ)
-        k, dmin = vectors.nearest(x, vectors.lloyd(x, PQ))
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(np.repeat(vid, PQ.groups)),
-                pa.array(np.tile(np.arange(PQ.groups, dtype=np.int32), len(vid))),
-                pa.array(vid[k].ravel()),
-                pa.array(dmin.ravel()),
-            ],
-            names=["vec_id", "j", "code", "dmin"],
-        )
-
-    return vectors.one_task(vecs, kernel, "vec_id long, j int, code long, dmin double")
+_PQ_CODES_SCHEMA = "vec_id long, codes array<long>, recon_err double"
 
 
 @query(
@@ -2948,32 +2779,20 @@ def vec_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 64-float vector to M small ints (here 32×6 bits) — the storage
     layer every billion-vector ANN index needs.
 
-    Scale shape: one size gate on the embeddings footer row count
-    (operators/vectors).  Below it, fit and encode are one Arrow task
-    (_pq_codes_arrow); above it the codebook is trained by distributed
-    Lloyd iterations and rides the task closure of the vectorized
-    assignment kernel (_pq_assign_arrow), a per-row map over the corpus
-    with no |corpus|·M·K row expansion and no shuffle.  Either side feeds
-    the same per-vector aggregation keyed by vec_id.  Both follow the
-    DuckDB oracle's rule: argmin of the squared distance, ties to
-    MIN(aid)."""
+    Scale shape: vectors.apply — one size gate on the embeddings footer
+    row count.  Below it, fit and encode are one Arrow task; above it the
+    codebook is trained by distributed Lloyd iterations and rides the
+    task closure of the same map kernel, which emits each vector's codes
+    and error directly: no |corpus|·M·K row expansion, no shuffle and no
+    aggregation.  Both follow the DuckDB oracle's rule: argmin of the
+    squared distance, ties to MIN(aid)."""
     return _pq_codes(load(spark, sf_dir, "embeddings"), _n_vecs(sf_dir))
 
 
 def _pq_codes(vecs: DataFrame, n_vecs: int | None) -> DataFrame:
     """vec_pq_codes over ``vecs`` (vec_id, embedding), given an upper
     bound ``n_vecs`` on its row count (``None``: unknown, distributed)."""
-    if vectors.fits(n_vecs):
-        codes = _pq_codes_arrow(vecs)
-    else:
-        codes = _pq_assign_arrow(*_pq_model(vecs), include_coords=False)
-    return codes.groupBy("vec_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("j", "code"))),
-            lambda s: s["code"],
-        ).alias("codes"),
-        F.round(F.sum("dmin"), 6).alias("recon_err"),
-    )
+    return vectors.apply(vecs, n_vecs, PQ, "vec_pq_codes", _pq_code_rows, _PQ_CODES_SCHEMA)
 
 
 @query(
@@ -3018,20 +2837,21 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pq_topk(vecs: DataFrame, n_vecs: int | None, ivf: bool = False) -> DataFrame:
     """ann_pq_topk (``ivf``: ann_ivfpq_topk) over ``vecs`` (vec_id,
     embedding), given an upper bound ``n_vecs`` on its row count
-    (``None``: unknown, distributed).  Below the vector gate the whole
-    pipeline — normalize, Lloyd training, corpus encoding, the (Q, M, K)
-    LUT, IVF cells, ADC and each query's top _TOPK — is ONE
-    ``mapInArrow`` task (_pq_adc_arrow): no build-time job, no broadcast,
-    no corpus-side row expansion; at most Q·_TOPK rows reach Spark's
-    final rank window (docs/plans/ann_pq_topk.txt).  Above it the corpus
-    side joins its codes against the broadcast LUT map-side and the exact
-    top-k rides Spark's partial WindowGroupLimit (_pq_adc_distributed).
-    Both sides give identical rows (tests/test_ann_quality.py)."""
-    if vectors.fits(n_vecs):
-        adc = _pq_adc_arrow(vecs, ivf)
-    else:
-        cell = _ivf_cells(vecs).select("vec_id", "cid") if ivf else None
-        adc = _pq_adc_distributed(vecs, cell)
+    (``None``: unknown, distributed).  vectors.apply runs the model and
+    the ADC emitter (_adc_rows): below the vector gate the whole pipeline
+    — normalize, Lloyd training, corpus encoding, the (Q, M, K) LUT, IVF
+    cells, ADC and each query's top _TOPK — is ONE ``mapInArrow`` task
+    with no build-time job (docs/plans/ann_pq_topk.txt).  Above it the
+    trained codebook and the query and centroid vectors (collected once)
+    ride the closure of the map kernel, which ranks its task's corpus
+    vectors: at most Q·_TOPK rows per task reach Spark's rank window, and
+    no corpus row is joined or shuffled.  Both sides give identical rows
+    (tests/test_ann_quality.py)."""
+    query = "ann_ivfpq_topk" if ivf else "ann_pq_topk"
+    side = max(_N_QUERY_VECS, _IVF_K) if ivf else _N_QUERY_VECS
+    adc = vectors.apply(
+        vecs, n_vecs, PQ, query, _adc_rows(ivf), "qid long, vid long, adist double", side
+    )
     wg = Window.partitionBy("qid").orderBy("adist", "vid")
     return (
         adc.withColumn("rk", F.row_number().over(wg))
@@ -3040,77 +2860,49 @@ def _pq_topk(vecs: DataFrame, n_vecs: int | None, ivf: bool = False) -> DataFram
     )
 
 
-def _pq_adc_distributed(vecs: DataFrame, cell: DataFrame | None) -> DataFrame:
-    """(qid, vid, adist) above the gate: the trained model (_pq_model),
-    corpus codes from the Arrow assignment kernel, and a map-side join of
-    the codes against the broadcast |Q|·M·K-row LUT summed per (qid,
-    vid).  With IVF cells (vec_id, cid) the join also matches the query's
-    cell, so only same-cell pairs reach the sum."""
-    subv, ids, anchors = _pq_model(vecs)
-    q = F.col("vec_id") < _N_QUERY_VECS
-    codes = _pq_assign_arrow(
-        subv.filter(~q), ids, anchors, include_coords=False
-    ).select("vec_id", "j", "code")
-    lut = _pq_lut_arrow(subv.filter(q), ids, anchors)
-    on = (F.col("j") == F.col("lj")) & (F.col("code") == F.col("aid"))
-    if cell is not None:
-        codes = codes.join(cell, "vec_id")
-        qcell = cell.filter(q).select(
-            F.col("vec_id").alias("qid"), F.col("cid").alias("qcid")
-        )
-        lut = lut.join(F.broadcast(qcell), "qid")
-        on = on & (F.col("cid") == F.col("qcid"))
-    return (
-        codes.join(F.broadcast(lut), on)
-        .groupBy("qid", F.col("vec_id").alias("vid"))
-        .agg(F.sum("d2").alias("adist"))
-    )
+def _adc_rows(ivf: bool):
+    """The ADC emitter (vectors.apply): for each query vector (vec_id <
+    _N_QUERY_VECS among the side rows) the block's _TOPK nearest corpus
+    vectors by (adist, vid).  A query's LUT is vectors.distances of its
+    unit subvectors to every anchor, and a corpus vector's adist adds its
+    M lookups in subspace order from 0.0.
+    Without ``ivf`` every vector is in one cell; with it vectors.cells
+    gives every vector its _ivf_cells cell (the centroids are the side
+    rows with vec_id < _IVF_K; none: no rows) and a query ranks only its
+    own cell."""
 
-
-def _pq_adc_arrow(vecs: DataFrame, ivf: bool) -> DataFrame:
-    """(qid, vid, adist): each query's _TOPK nearest corpus vectors by
-    (adist, vid), computed in ONE ``mapInArrow`` task over (vec_id, v0,
-    nrm) — the fused form of _pq_adc_distributed for inputs under the
-    gate.  Value-identical to it: elements are divided by the same
-    Spark-computed norm, training is vectors.lloyd, encoding is
-    vectors.nearest with the trained anchors, LUT entries are the same
-    vectors.distances, and ADC adds the M lookups in j order, as Spark's
-    SUM does over the join rows.  Without ``ivf`` every vector is in one
-    cell; with it, vectors.cells reproduces _ivf_cells and each query
-    ranks only its own cell."""
-    n_q, topk, query = _N_QUERY_VECS, _TOPK, "ann_ivfpq_topk" if ivf else "ann_pq_topk"
-
-    def kernel(batches):
+    def emit(a, side):
         import numpy as np
         import pyarrow as pa
 
-        vid, v, nrm = vectors.decode(batches, PQ.width, query)
-        if not len(vid):
-            return
-        cell = vectors.cells(vid, v, nrm, _IVF_K, 6) if ivf else np.zeros(len(vid))
-        if not len(cell):
-            return
-        x = vectors.unit(v, nrm, PQ)
-        anchors = vectors.lloyd(x, PQ)
-        code = vectors.nearest(x, anchors)[0]
-        corpus = vid >= n_q
-        for i in np.nonzero(~corpus)[0]:
-            lut = vectors.distances(x[i : i + 1], anchors)[0]
-            cand = np.nonzero(corpus & (cell == cell[i]))[0]
+        svid, sv, snrm = side
+        q = svid < _N_QUERY_VECS
+        if ivf:
+            c = svid < _IVF_K
+            if not c.any():
+                return
+            cell = vectors.cells(a.v, a.nrm, svid[c], sv[c], snrm[c], 6)
+            qcell = vectors.cells(sv[q], snrm[q], svid[c], sv[c], snrm[c], 6)
+        else:
+            cell, qcell = np.zeros(len(a.vid)), np.zeros(q.sum())
+        corpus = a.vid >= _N_QUERY_VECS
+        luts = vectors.distances(vectors.unit(sv[q], snrm[q], PQ), a.anchors)
+        for qid, lut, qc in zip(svid[q], luts, qcell):
+            cand = np.nonzero(corpus & (cell == qc))[0]
             adist = np.zeros(len(cand))
             for j in range(PQ.groups):
-                adist += lut[j, code[cand, j]]
-            top = np.lexsort((vid[cand], adist))[:topk]
+                adist += lut[j, a.code[cand, j]]
+            top = np.lexsort((a.vid[cand], adist))[:_TOPK]
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(np.full(len(top), vid[i])),
-                    pa.array(vid[cand][top]),
+                    pa.array(np.full(len(top), qid)),
+                    pa.array(a.vid[cand][top]),
                     pa.array(adist[top]),
                 ],
                 names=["qid", "vid", "adist"],
             )
 
-    return vectors.one_task(vecs, kernel, "qid long, vid long, adist double")
+    return emit
 
 
 @query(
@@ -3166,11 +2958,11 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     time; no corpus floats are read.
 
     Scale shape: ann_pq_topk's ADC restricted to same-cell (query,
-    corpus) pairs, on both sides of the same gate (_pq_topk).  Above it
-    the centroids and the per-query LUT both broadcast, and the cell
-    match is a join key of the LUT join, so only 1/K of the candidate
-    space per query is summed.  Recall compounds both approximations
-    (cell-pruning miss × quantization noise) — measured and pinned in
+    corpus) pairs, on both sides of the same gate (_pq_topk): the cells
+    are computed in the map kernel from the centroid vectors in its
+    closure, so only 1/K of the candidate space per query is summed.
+    Recall compounds both approximations (cell-pruning miss ×
+    quantization noise) — measured and pinned in
     tests/test_ann_quality.py."""
     return _pq_topk(load(spark, sf_dir, "embeddings"), _n_vecs(sf_dir), ivf=True)
 
@@ -3304,136 +3096,18 @@ def _kmeans_oracle() -> str:
 _KM_ORACLE_CTE = _kmeans_oracle()
 
 
-def _km_dims(vecs: DataFrame) -> DataFrame:
-    """(vec_id, i, x): every L2-normalized vector in long format — the
-    shape that lets centroid updates be plain partial-aggregated GROUP
-    BYs keyed by (cid, i), as in the oracle's CTE chain.
+def _km_rows(a, side):
+    """vec_kmeans_clusters' emitter (vectors.apply): each vector's
+    nearest centroid id and its distance rounded to KMEANS.dist_scale."""
+    import pyarrow as pa
 
-    The table is repartitioned by vec_id and lineage-truncated ONCE with
-    the partitioning metadata pinned (checkpoint_pinned), so each
-    vector's D rows sit in one partition for the assignment kernel
-    (_km_assign_arrow) — the corpus is read, normalized and shuffled
-    exactly one time no matter how many Lloyd iterations follow (the
-    standard cache-the-training-set posture of iterative ML on Spark)."""
-    pre = _normalized_cols(vecs)
-    dims = pre.select("vec_id", "nrm", F.posexplode("v0").alias("i0", "x")).select(
-        "vec_id",
-        (F.col("i0") + 1).alias("i"),
-        (F.col("x") / F.col("nrm")).alias("x"),
-    )
-    # vec_id partitioning flows from _normalized_cols' barrier through the
-    # (narrow) generator into the checkpoint — no second shuffle.  Pinned
-    # so the partitioning survives AQE (plans/shaping.checkpoint_pinned);
-    # a plain localCheckpoint would leave every Lloyd iteration
-    # re-exchanging the corpus at the replicas.
-    from ..plans.shaping import checkpoint_pinned
-
-    return checkpoint_pinned(dims)
-
-
-def _km_assign_arrow(dims: DataFrame, ids, anchors) -> DataFrame:
-    """Nearest-centroid assignment as one Arrow pass over the long-format
-    dims table: per partition, rows are regrouped [n_vec, 1, D] and
-    vectors.nearest ranks the distances rounded to KMEANS.dist_scale,
-    ties to the smallest cid — the DuckDB oracle's round-then-argmin /
-    MIN(cid) rule (its MIN(struct_pack(d2, cid))).  In-cache matrix math
-    instead of a K-way broadcast-join expansion (K·D rows per vector).
-    Emits (vec_id, cid, d2).
-
-    Each vector's D rows must sit in one partition (the vec_id
-    partitioning of _km_dims' checkpoint); a vector whose rows are not
-    exactly i = 1..D there raises instead of being misassigned."""
-    n_dim = anchors.shape[2]
-
-    def kernel(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        cols: list = [[], [], []]
-        for b in batches:
-            for i in range(3):
-                cols[i].append(b.column(i).to_numpy(zero_copy_only=False))
-        if not cols[0]:
-            return
-        vec = np.concatenate(cols[0])
-        ii = np.concatenate(cols[1])
-        x = np.concatenate(cols[2])
-        order = np.lexsort((ii, vec))
-        vec, ii, x = vec[order], ii[order], x[order]
-        nv = len(vec) // n_dim
-        vids = vec[::n_dim]
-        if (
-            len(vec) % n_dim
-            or (vec.reshape(nv, n_dim) != vids[:, None]).any()
-            or (ii.reshape(nv, n_dim) != np.arange(1, n_dim + 1)).any()
-        ):
-            raise ValueError(
-                f"k-means assignment needs each vector's {n_dim} dims "
-                "rows i = 1..D in one partition; got a vector split "
-                "across partitions or with missing/duplicate dims"
-            )
-        k, d2 = vectors.nearest(
-            x.reshape(nv, 1, n_dim), anchors, KMEANS.dist_scale
-        )
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(vids), pa.array(ids[k[:, 0]]), pa.array(d2[:, 0])],
-            names=["vec_id", "cid", "d2"],
-        )
-
-    return dims.select("vec_id", "i", "x").mapInArrow(
-        kernel, schema="vec_id long, cid long, d2 double"
+    yield pa.RecordBatch.from_arrays(
+        [pa.array(a.vid), pa.array(a.ids[a.code[:, 0]]), pa.array(a.dmin[:, 0])],
+        names=["vec_id", "cluster_id", "d2"],
     )
 
 
-def _km_model(vecs: DataFrame):
-    """(dims, ids, anchors) above the vector gate: the checkpointed dims
-    table plus the centroids trained by KMEANS.iters distributed Lloyd
-    iterations — one means-collect job each, with the Arrow assignment
-    kernel inside it — as cid-sorted int64[K] ids and [1, K, D] anchors.
-    Same rule as the oracle: distances rounded to 1e-4, then argmin with
-    ties to MIN(cid); means rounded to the KMEANS.mean_scale grid; an
-    empty cluster keeps its centroid.  The centroid table is a
-    constant-size model artifact (K·D = 512 rows), so each update is
-    applied driver-side.  An empty corpus has no centroids (K = 0), so
-    assignment emits no rows."""
-    dims = _km_dims(vecs)
-    seed_ids = dims.select("vec_id").distinct().orderBy("vec_id").limit(KMEANS.k)
-    seed = dims.join(F.broadcast(seed_ids), "vec_id").collect()
-    ids, anchors = vectors.codebook(
-        ((r.vec_id, 0, r.i - 1, r.x) for r in seed), KMEANS
-    )
-    for _ in range(KMEANS.iters):
-        asg = _km_assign_arrow(dims, ids, anchors).select("vec_id", "cid")
-        means = (
-            asg.join(dims, "vec_id")
-            .groupBy("cid", "i")
-            .agg(F.round(F.avg("x"), KMEANS.mean_scale))
-            .collect()
-        )
-        vectors.update(ids, anchors, ((r[0], 0, r[1] - 1, r[2]) for r in means))
-    return dims, ids, anchors
-
-
-def _km_arrow(vecs: DataFrame) -> DataFrame:
-    """(vec_id, cluster_id, d2) in ONE ``mapInArrow`` task over (vec_id,
-    v0, nrm) below the vector gate: vectors.lloyd fits the centroids and
-    vectors.nearest assigns every vector — the whole of _km_model +
-    _km_assign_arrow with no build-time job."""
-
-    def kernel(batches):
-        import pyarrow as pa
-
-        vid, v, nrm = vectors.decode(batches, KMEANS.width, "vec_kmeans_clusters")
-        if not len(vid):
-            return
-        x = vectors.unit(v, nrm, KMEANS)
-        k, d2 = vectors.nearest(x, vectors.lloyd(x, KMEANS), KMEANS.dist_scale)
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(vid), pa.array(vid[k[:, 0]]), pa.array(d2[:, 0])],
-            names=["vec_id", "cluster_id", "d2"],
-        )
-
-    return vectors.one_task(vecs, kernel, "vec_id long, cluster_id long, d2 double")
+_KM_SCHEMA = "vec_id long, cluster_id long, d2 double"
 
 
 @query(
@@ -3453,14 +3127,12 @@ def vec_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the PQ codebook).  Returns every vector's cluster and its squared L2
     distance to the trained centroid.
 
-    Scale: one size gate on the embeddings footer row count
-    (operators/vectors).  Below it the fit and the assignment are one
-    Arrow task (_km_arrow).  Above it the centroid table (K·D rows) rides
-    the task closure of the vectorized Arrow assignment kernel
-    (_km_assign_arrow), a map over the vec_id-partitioned dims table with
-    no K-way row expansion — the corpus never shuffles on anything wider
-    than vec_id, and driver traffic is K·D scalars per iteration (model
-    artifact, not data)."""
+    Scale: vectors.apply — one size gate on the embeddings footer row
+    count.  Below it the fit and the assignment are one Arrow task.
+    Above it the centroids are trained by distributed Lloyd iterations
+    and ride the task closure of the same map kernel over whole-vector
+    rows: the corpus never shuffles, and driver traffic is each task's
+    K·D partial sums per iteration (model artifact, not data)."""
     return _km_clusters(load(spark, sf_dir, "embeddings"), _n_vecs(sf_dir))
 
 
@@ -3468,12 +3140,7 @@ def _km_clusters(vecs: DataFrame, n_vecs: int | None) -> DataFrame:
     """vec_kmeans_clusters over ``vecs`` (vec_id, embedding), given an
     upper bound ``n_vecs`` on its row count (``None``: unknown,
     distributed)."""
-    if vectors.fits(n_vecs):
-        return _km_arrow(vecs)
-    dims, ids, anchors = _km_model(vecs)
-    return _km_assign_arrow(dims, ids, anchors).select(
-        "vec_id", F.col("cid").alias("cluster_id"), "d2"
-    )
+    return vectors.apply(vecs, n_vecs, KMEANS, "vec_kmeans_clusters", _km_rows, _KM_SCHEMA)
 
 
 @query(

@@ -86,20 +86,18 @@ def _rows_set(df):
     }
 
 
-def _local_vs_distributed(spark, monkeypatch, sf_dir, name, kernel):
-    """Rows of query ``name`` with the one-task ``kernel`` (default below
-    the vector gate), then with the gate constant patched to 0 (the
-    distributed side); the spy proves each side ran."""
+def _local_vs_distributed(spark, monkeypatch, sf_dir, name):
+    """Rows of query ``name`` below the vector gate (the one-task
+    kernel), then with the gate constant patched to 0 (the distributed
+    side); a spy on the distributed trainer proves each side ran."""
     from datafusion_parallelism_spark.operators import vectors
-    from datafusion_parallelism_spark.queries import llm
 
-    calls = spy_calls(monkeypatch, llm, kernel)
+    calls = spy_calls(monkeypatch, vectors, "fit")
     local = _rows_set(REGISTRY[name].fn(spark, sf_dir))
-    assert calls
-    calls.clear()
+    assert not calls
     monkeypatch.setattr(vectors, "_VECTOR_KERNEL_MAX_VECS", 0)
     dist = _rows_set(REGISTRY[name].fn(spark, sf_dir))
-    assert not calls
+    assert calls
     return local, dist
 
 
@@ -108,24 +106,25 @@ def test_pq_distributed_training_matches_local(spark, monkeypatch, sf_dir_oracle
     per-iteration trainer must produce the identical codebook, hence
     identical codes."""
     local, dist = _local_vs_distributed(
-        spark, monkeypatch, sf_dir_oracle, "vec_pq_codes", "_pq_codes_arrow"
+        spark, monkeypatch, sf_dir_oracle, "vec_pq_codes"
     )
     assert local == dist
 
 
 def test_km_distributed_training_matches_local(spark, monkeypatch, sf_dir_oracle):
     local, dist = _local_vs_distributed(
-        spark, monkeypatch, sf_dir_oracle, "vec_kmeans_clusters", "_km_arrow"
+        spark, monkeypatch, sf_dir_oracle, "vec_kmeans_clusters"
     )
     assert local == dist
 
 
 def test_pq_topk_fused_kernel_matches_distributed(spark, monkeypatch, sf_dir_oracle):
     """Below the footer gate ann_pq_topk is one fused Arrow task; with the
-    gate at 0 it is the distributed model and broadcast-LUT join.  Both
-    must return identical rows."""
+    gate at 0 it is the distributed model and the map kernel ranking
+    each task's corpus against the LUT in its closure.  Both must return
+    identical rows."""
     fused, dist = _local_vs_distributed(
-        spark, monkeypatch, sf_dir_oracle, "ann_pq_topk", "_pq_adc_arrow"
+        spark, monkeypatch, sf_dir_oracle, "ann_pq_topk"
     )
     assert fused == dist
 
@@ -133,10 +132,10 @@ def test_pq_topk_fused_kernel_matches_distributed(spark, monkeypatch, sf_dir_ora
 def test_ivfpq_fused_kernel_matches_distributed(spark, monkeypatch, sf_dir_oracle):
     """ann_ivfpq_topk is ann_pq_topk's ADC restricted to same-cell pairs
     on both sides of the gate: the fused kernel (cells computed in the
-    task) and the distributed cell-keyed LUT join return identical
-    rows."""
+    task) and the distributed map kernel (cells from the centroids in
+    its closure) return identical rows."""
     fused, dist = _local_vs_distributed(
-        spark, monkeypatch, sf_dir_oracle, "ann_ivfpq_topk", "_pq_adc_arrow"
+        spark, monkeypatch, sf_dir_oracle, "ann_ivfpq_topk"
     )
     assert fused == dist
 
@@ -167,12 +166,13 @@ def test_pq_topk_degenerate_inputs_match_distributed(spark, monkeypatch, ids):
     fewer corpus vectors than _TOPK, no query vectors, and no rows at all.
     Each gives the distributed side's rows (an unknown bound never fits
     the gate); an empty table returns no rows and does not raise."""
+    from datafusion_parallelism_spark.operators import vectors
     from datafusion_parallelism_spark.queries import llm
 
-    calls = spy_calls(monkeypatch, llm, "_pq_adc_arrow")
+    calls = spy_calls(monkeypatch, vectors, "fit")
     vecs = _pq_vectors(spark, _random_vectors(ids, PQ.width))
     fused = _rows_set(llm._pq_topk(vecs, len(ids)))
-    assert calls
+    assert not calls
     dist = _rows_set(llm._pq_topk(vecs, None))
     assert len(calls) == 1
     assert fused == dist
@@ -180,16 +180,28 @@ def test_pq_topk_degenerate_inputs_match_distributed(spark, monkeypatch, ids):
     assert len(fused) == n_q * min(len(ids) - n_q, llm._TOPK)
 
 
+_VECTOR_QUERIES = ["ann_pq_topk", "vec_pq_codes", "ann_ivfpq_topk", "vec_kmeans_clusters"]
+
+
 @pytest.mark.parametrize(
-    "name", ["ann_pq_topk", "vec_pq_codes", "ann_ivfpq_topk", "vec_kmeans_clusters"]
+    "name, ceiling",
+    [pytest.param(n, None, id=n) for n in _VECTOR_QUERIES]
+    + [pytest.param(n, 0, id=f"{n}-ceiling_0") for n in _VECTOR_QUERIES],
 )
-def test_pq_topk_rejects_embedding_of_wrong_length(spark, tmp_path, name):
+def test_pq_topk_rejects_embedding_of_wrong_length(spark, monkeypatch, tmp_path, name, ceiling):
     """An embedding of 63 or 65 elements must not be reshaped into the
-    64-wide grid (together they even fill it): below the vector gate,
-    every PQ and k-means kernel raises a ValueError naming the first such
-    vec_id, and its one task fails exactly once."""
+    64-wide grid (together they even fill it), nor enter a norm: on both
+    sides of the vector gate (the default ceiling: the one-task kernel;
+    0: the distributed trainer's first map job), every PQ and k-means
+    query raises a ValueError naming the first such vec_id, and its task
+    fails exactly once."""
     import pyarrow as pa
     import pyarrow.parquet as pq
+
+    from datafusion_parallelism_spark.operators import vectors
+
+    if ceiling is not None:
+        monkeypatch.setattr(vectors, "_VECTOR_KERNEL_MAX_VECS", ceiling)
 
     rows = _random_vectors(range(14), PQ.width)
     rows[11] = (11, rows[11][1][:-1])
@@ -204,7 +216,7 @@ def test_pq_topk_rejects_embedding_of_wrong_length(spark, tmp_path, name):
         tmp_path / "embeddings.parquet",
     )
     sc = spark.sparkContext
-    group = f"bad-length-{name}"
+    group = f"bad-length-{name}-{ceiling}"
     sc.setJobGroup(group, f"{name} wrong embedding length")
     try:
         with pytest.raises(Exception) as err:

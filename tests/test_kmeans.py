@@ -12,26 +12,26 @@ per cluster.
 
 import pyspark.sql.functions as F
 
-from datafusion_parallelism_spark.operators.vectors import KMEANS, codebook
-from datafusion_parallelism_spark.queries.llm import _km_assign_arrow, _km_model
+from datafusion_parallelism_spark.operators import vectors
+from datafusion_parallelism_spark.operators.vectors import KMEANS
+from datafusion_parallelism_spark.queries.llm import _KM_SCHEMA, _km_rows
 from datafusion_parallelism_spark.queries import REGISTRY
 from datafusion_parallelism_spark.session import load
 
 
-def _inertia(dims, ids, anchors):
+def _inertia(rows, ids, anchors):
     return (
-        _km_assign_arrow(dims, ids, anchors)
+        vectors.assign(rows, KMEANS, ids, anchors, _km_rows, _KM_SCHEMA, "vec_kmeans_clusters")
         .agg(F.sum("d2").alias("s"))
         .collect()[0]["s"]
     )
 
 
 def test_lloyd_iterations_monotonically_reduce_inertia(spark, sf_dir):
-    dims, *trained = _km_model(load(spark, sf_dir, "embeddings"))
-    seed_ids = dims.select("vec_id").distinct().orderBy("vec_id").limit(KMEANS.k)
-    seed = dims.join(F.broadcast(seed_ids), "vec_id").collect()
-    i_seed = _inertia(dims, *codebook(((r.vec_id, 0, r.i - 1, r.x) for r in seed), KMEANS))
-    i_trained = _inertia(dims, *trained)
+    rows = vectors.rows(load(spark, sf_dir, "embeddings"))
+    trained = vectors.fit(rows, KMEANS, "vec_kmeans_clusters")
+    i_seed = _inertia(rows, *vectors.seed(rows, KMEANS, "vec_kmeans_clusters"))
+    i_trained = _inertia(rows, *trained)
     # 2 Lloyd iterations from arbitrary seeds must strictly help on this
     # corpus (seed inertia ~2x trained in practice; assert a safe margin).
     assert i_trained < i_seed * 0.95, (i_seed, i_trained)

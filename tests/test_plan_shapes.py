@@ -270,30 +270,31 @@ def test_pq_codebook_broadcasts_and_scan_prunes(spark, sf_dir):
     the task-closure Arrow kernel (MapInArrow, codebook in the closure,
     no join at all), which applies the DuckDB oracle's argmin / MIN(aid)
     rule.  The embeddings scan must read only the two used columns
-    (asserted on the pre-checkpoint subvector plan, where the file scan
-    is still visible)."""
+    (asserted on the whole-vector rows every PQ and k-means kernel
+    reads)."""
     plan = physical_plan_str(REGISTRY["vec_pq_codes"].fn(spark, sf_dir))
     assert "MapInArrow" in plan, plan
     assert "SortMergeJoin" not in plan, plan
-    from datafusion_parallelism_spark.queries.llm import _pq_subv
+    from datafusion_parallelism_spark.operators import vectors
     from datafusion_parallelism_spark.session import load
 
-    subv = _pq_subv(load(spark, sf_dir, "embeddings"), spark)
-    schemas = read_schemas(subv)
+    schemas = read_schemas(vectors.rows(load(spark, sf_dir, "embeddings")))
     assert any("vec_id" in s and "embedding" in s for s in schemas), schemas
 
 
 def test_pq_adc_topk_uses_window_group_limit(spark, sf_dir, monkeypatch):
     """Above its size gate (ceiling patched to 0) ann_pq_topk's exact
     top-k must plan with the partial WindowGroupLimit (map-side k-row
-    bound before the final window's exchange) and join the LUT by
-    broadcast — no corpus-side shuffle for the lookup."""
+    bound before the final window's exchange) and rank the corpus in the
+    map kernel with the LUT in its closure — no corpus-side Exchange
+    below the partial WindowGroupLimit."""
     from datafusion_parallelism_spark.operators import vectors
 
     monkeypatch.setattr(vectors, "_VECTOR_KERNEL_MAX_VECS", 0)
     plan = physical_plan_str(REGISTRY["ann_pq_topk"].fn(spark, sf_dir))
     assert "WindowGroupLimit" in plan
-    assert "BroadcastHashJoin" in plan
+    partial = plan[plan.index("Partial"):]
+    assert "MapInArrow" in partial and "Exchange" not in partial, plan
 
 
 def test_pq_adc_topk_below_gate_is_one_arrow_task(spark, sf_dir_oracle):
@@ -619,55 +620,6 @@ def test_checkpoint_pinned_preserves_metadata_under_aqe(spark):
         base2 = df.repartition(8, "k").sortWithinPartitions("k")
         exch, sorts = smj_counts(base2.localCheckpoint(eager=True))
         assert (exch, sorts) == (2, 2), (exch, sorts)
-
-
-def test_pq_training_iteration_streams_without_sort_or_exchange(spark, sf_dir):
-    """VERDICT r9 item 3, upgraded by the round-10 finding: the PQ
-    training iteration must aggregate the checkpointed subvector table
-    with NO Sort and NO Exchange — under AQE-ON (the at-scale posture),
-    not just the AQE-off session where r9 originally verified it.  The
-    subvector checkpoint is pinned (vec_id partitioning + (vec_id, j)
-    ordering), so the per-iteration SortAggregate streams.  Negative
-    control: a plain eager localCheckpoint of the same presorted table
-    brings the Sort or Exchange back."""
-    import re
-
-    from datafusion_parallelism_spark.plans import presorted
-    from datafusion_parallelism_spark.queries.llm import _pq_subv, _pq_subv_pinned
-
-    def train_iter_plan(subv):
-        anch_rows = subv.limit(4).select(
-            "j",
-            F.col("vec_id").alias("aid"),
-            F.col("e1").alias("a1"),
-            F.col("e2").alias("a2"),
-        ).collect()
-        anch = spark.createDataFrame(
-            anch_rows, schema="j int, aid long, a1 double, a2 double"
-        )
-        d2 = (F.col("e1") - F.col("a1")) * (F.col("e1") - F.col("a1")) + (
-            F.col("e2") - F.col("a2")
-        ) * (F.col("e2") - F.col("a2"))
-        assign = (
-            subv.join(F.broadcast(anch), "j")
-            .select("vec_id", "j", "aid", d2.alias("d2"), "e1", "e2")
-            .groupBy("vec_id", "j")
-            .agg(F.min(F.struct("d2", "aid", "e1", "e2")).alias("s"))
-        )
-        return physical_plan_str(assign).split("== Initial Plan ==")[0]
-
-    with with_conf(spark, {"spark.sql.adaptive.enabled": "true"}):
-        vecs = load(spark, sf_dir, "embeddings")
-        txt = train_iter_plan(_pq_subv_pinned(_pq_subv(vecs, spark)))
-        assert not re.search(r"Sort \[vec_id#", txt), txt
-        assert not re.search(r"Exchange hashpartitioning\(vec_id#", txt), txt
-        plain = presorted(_pq_subv(vecs, spark), "vec_id", "j").localCheckpoint(
-            eager=True
-        )
-        txt = train_iter_plan(plain)
-        assert re.search(r"Sort \[vec_id#", txt) or re.search(
-            r"Exchange hashpartitioning\(vec_id#", txt
-        ), txt
 
 
 def test_pagerank_pinned_nodes_side_no_exchange_under_aqe(spark, monkeypatch):

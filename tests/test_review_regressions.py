@@ -123,11 +123,9 @@ def test_pq_kernel_matches_numpy_argmin_with_fewer_vectors_than_k(spark):
     smallest aid."""
     import numpy as np
 
+    from datafusion_parallelism_spark.operators import vectors
     from datafusion_parallelism_spark.operators.vectors import PQ
-    from datafusion_parallelism_spark.queries.llm import (
-        _pq_assign_arrow,
-        _pq_model,
-    )
+    from datafusion_parallelism_spark.queries.llm import _PQ_CODES_SCHEMA, _pq_code_rows
 
     n = 5
     assert n < PQ.k
@@ -136,47 +134,29 @@ def test_pq_kernel_matches_numpy_argmin_with_fewer_vectors_than_k(spark):
         [(i + 1, rng.normal(size=PQ.width).tolist()) for i in range(n)],
         "vec_id long, embedding array<float>",
     )
+    # A unit-norm row whose every subvector is (1e-3, 0): near the origin.
     probes = spark.createDataFrame(
-        [(0, j, 1e-3, 0.0) for j in range(PQ.groups)],
-        "vec_id long, j int, e1 double, e2 double",
+        [(0, [1e-3, 0.0] * PQ.groups, 1.0)], vectors.ROWS
     )
 
-    subv, ids, anchors = _pq_model(vecs)
+    rows = vectors.rows(vecs)
+    ids, anchors = vectors.fit(rows, PQ, "vec_pq_codes")
     assert anchors.shape == (PQ.groups, n, PQ.dims)
-    points = subv.unionByName(probes)
+    points = rows.unionByName(probes)
     kernel = {
-        (r.vec_id, r.j): r.code
-        for r in _pq_assign_arrow(
-            points, ids, anchors, include_coords=False
+        (r.vec_id, j): code
+        for r in vectors.assign(
+            points, PQ, ids, anchors, _pq_code_rows, _PQ_CODES_SCHEMA, "vec_pq_codes"
         ).collect()
+        for j, code in enumerate(r.codes)
     }
     want = {}
     for r in points.collect():
-        a1, a2 = anchors[r.j].T
-        d2 = (r.e1 - a1) * (r.e1 - a1) + (r.e2 - a2) * (r.e2 - a2)
-        want[(r.vec_id, r.j)] = int(ids[np.lexsort((ids, d2))[0]])
+        e = np.array(r.v0) / r.nrm
+        for j in range(PQ.groups):
+            a1, a2 = anchors[j].T
+            e1, e2 = e[2 * j], e[2 * j + 1]
+            d2 = (e1 - a1) * (e1 - a1) + (e2 - a2) * (e2 - a2)
+            want[(r.vec_id, j)] = int(ids[np.lexsort((ids, d2))[0]])
     assert len(kernel) == (n + 1) * PQ.groups
     assert kernel == want
-
-
-def test_km_assign_kernel_rejects_vector_split_across_partitions(spark):
-    """The k-means assignment kernel regroups each partition's rows into
-    [vectors, D]; a vector whose dims rows sit in two partitions must
-    raise, not be silently misassigned."""
-    import numpy as np
-
-    from datafusion_parallelism_spark.queries.llm import _km_assign_arrow
-
-    d = 4
-    cids = np.array([0, 1], dtype=np.int64)
-    cent = np.array([[[0.0] * d, [1.0] * d]])
-    # i-major order: parallelize's two slices each get dims 1-2 or 3-4 of
-    # BOTH vectors.
-    rows = [(v, i, float(v)) for i in range(1, d + 1) for v in range(2)]
-    schema = "vec_id long, i int, x double"
-    whole = spark.createDataFrame(rows, schema).coalesce(1)
-    got = {r.vec_id: r.cid for r in _km_assign_arrow(whole, cids, cent).collect()}
-    assert got == {0: 0, 1: 1}
-    split = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
-    with pytest.raises(Exception, match="in one partition"):
-        _km_assign_arrow(split, cids, cent).collect()

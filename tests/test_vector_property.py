@@ -130,12 +130,11 @@ def _frame(spark, rows):
 
 def _check_model(spark, rows, model, distributed):
     """The fitted model — the one-task fit (vectors.lloyd, as the kernel
-    runs it) or the distributed trainer — equals the reference's anchors
+    runs it) or the distributed trainer (vectors.fit) — equals the reference's anchors
     to the bit, rounding-boundary means included."""
     aids, anchors, final = _lloyd_reference(rows, model)
     if distributed:
-        train = llm._pq_model if model is PQ else llm._km_model
-        ids, got = train(_frame(spark, rows))[1:]
+        ids, got = vectors.fit(vectors.rows(_frame(spark, rows)), model, "test")
     else:
         x = np.array([v for _, v in sorted(rows)]).reshape(len(rows), model.groups, model.dims)
         ids, got = np.array(sorted(r[0] for r in rows)[: model.k]), vectors.lloyd(x, model)
