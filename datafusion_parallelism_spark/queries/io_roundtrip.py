@@ -180,20 +180,17 @@ def source_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     orders = load(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
     customer = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse").replace(
-        "file:", ""
-    )
-    # PID-suffixed table names: concurrent processes sharing the warehouse
-    # dir must not rmtree/overwrite each other's bucketed tables mid-read.
+    # PID-suffixed table names: concurrent processes sharing one catalog
+    # must not drop or overwrite each other's bucketed tables mid-read.  The
+    # tables are external, with their files in this run's staging dir, so
+    # nothing is left in the working directory's spark-warehouse.
     t_orders = f"rt_b_orders_p{os.getpid()}"
     t_customer = f"rt_b_customer_p{os.getpid()}"
-    for t in (t_orders, t_customer):
-        # A fresh session doesn't know last run's managed table, but its
-        # LOCATION persists — saveAsTable refuses to reuse it. Drop both.
+    for t, side, key in ((t_orders, orders, "o_custkey"), (t_customer, customer, "c_custkey")):
+        path = _stage(f"bucketed_{key}", sf_dir)
         spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(os.path.join(warehouse, t), ignore_errors=True)
-    orders.write.bucketBy(8, "o_custkey").mode("overwrite").saveAsTable(t_orders)
-    customer.write.bucketBy(8, "c_custkey").mode("overwrite").saveAsTable(t_customer)
+        shutil.rmtree(path, ignore_errors=True)
+        side.write.bucketBy(8, key).mode("overwrite").option("path", path).saveAsTable(t)
     o = spark.table(t_orders)
     c = spark.table(t_customer)
     # merge hint: at toy SF the optimizer would broadcast (also fine, but

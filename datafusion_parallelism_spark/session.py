@@ -55,6 +55,60 @@ def default_cpus() -> int:
     return int(env) if env else len(os.sched_getaffinity(0))
 
 
+#: Driver heap when the machine has room for it; see :func:`default_driver_mem`.
+DRIVER_MEM_MAX_MB = 24 * 1024
+
+
+def _cgroup_memory_max() -> int | None:
+    """The lowest memory limit, in bytes, of this process's cgroup: v2's
+    ``memory.max`` or v1's ``memory.limit_in_bytes``, in its own cgroup
+    directory or at the mount root (what a container sees).  None when no
+    limit is set or readable.  Only reads."""
+    candidates = []
+    try:
+        with open("/proc/self/cgroup") as f:
+            for line in f:
+                _, controllers, rel = line.rstrip("\n").split(":", 2)
+                if controllers == "":
+                    root, name = "/sys/fs/cgroup", "memory.max"
+                elif "memory" in controllers.split(","):
+                    root, name = "/sys/fs/cgroup/memory", "memory.limit_in_bytes"
+                else:
+                    continue
+                for d in (os.path.join(root, rel.lstrip("/")), root):
+                    candidates.append(os.path.join(d, name))
+    except (OSError, ValueError):
+        return None
+    limits = []
+    for path in candidates:
+        try:
+            with open(path) as f:
+                limits.append(int(f.read()))
+        except (OSError, ValueError):  # absent, or "max": no limit there
+            continue
+    return min(limits, default=None)
+
+
+def default_driver_mem() -> str:
+    """``spark.driver.memory`` of a local session: ``SPARK_GRAFT_DRIVER_MEM``
+    if set, else 24g capped at half of what the machine gives this process
+    (physical memory, or its cgroup's memory limit when lower).
+
+    In local mode the driver heap is the whole engine's memory, and the
+    other half is left to the JVM's off-heap use, the Python workers and the
+    OS.  A fixed 24g on a 15 GB box let an x64 loop grow the JVM to 15.4 GB
+    and be killed by the kernel; under the cap it spills or raises a Java
+    ``OutOfMemoryError`` instead."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    limit = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    cgroup = _cgroup_memory_max()
+    if cgroup:
+        limit = min(limit, cgroup)
+    return f"{min(DRIVER_MEM_MAX_MB, limit // 2 // 2**20)}m"
+
+
 def dir_size(sf_dir: str) -> int:
     """Total bytes of the data files under ``sf_dir`` (1 level deep)."""
     total = 0
@@ -186,8 +240,9 @@ def get_spark(
         # replica) the Expand-doubled COUNT(DISTINCT) partial maps spilled
         # and agg_count_distinct went 2.6 s → 82.6 s (32× for 2× data,
         # docs/scale_sweep_r3.jsonl).  24g restores linear scaling; on a
-        # real cluster this is executor memory scaling with cores/task.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        # real cluster this is executor memory scaling with cores/task.  On
+        # a smaller machine it is capped at half its memory (default_driver_mem).
+        .config("spark.driver.memory", default_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "10485760")
         # Static size estimates for file relations are COMPRESSED bytes

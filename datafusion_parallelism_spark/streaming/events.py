@@ -420,85 +420,6 @@ def static_enrich_stream(events: DataFrame, dim: DataFrame) -> DataFrame:
     )
 
 
-_TWS_OUT_SCHEMA = (
-    "user_id long, n_events long, n_types long, max_value double"
-)
-
-
-class _UserStatsProcessor:
-    """transformWithStateInPandas processor: per-user event count, distinct
-    event-type count (MapState — one entry per type, NOT per event), and
-    max value (ValueState).  The typed-state API is Spark 4's successor to
-    applyInPandasWithState: state variables are declared individually, so
-    the store evolves per variable and timers/TTL attach per state.  State
-    size per key is O(#event types) — bounded at any event volume."""
-
-    def init(self, handle) -> None:
-        self._totals = handle.getValueState("totals", "n LONG, maxv DOUBLE")
-        self._types = handle.getMapState("types", "t STRING", "c LONG")
-
-    def handleInputRows(self, key, rows, timerValues):
-        import pandas as pd
-
-        n, maxv = 0, None
-        if self._totals.exists():
-            n, maxv = self._totals.get()
-        for pdf in rows:
-            n += len(pdf)
-            m = float(pdf["value"].max())
-            maxv = m if maxv is None else max(maxv, m)
-            for t, c in pdf.groupby("event_type").size().items():
-                prev = (
-                    self._types.getValue((t,))[0]
-                    if self._types.containsKey((t,))
-                    else 0
-                )
-                self._types.updateValue((t,), (prev + int(c),))
-        self._totals.update((n, maxv))
-        n_types = sum(1 for _ in self._types.keys())
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "n_types": [n_types],
-                "max_value": [maxv],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def user_stats_tws_stream(events: DataFrame) -> DataFrame:
-    """Typed-state custom operator via transformWithStateInPandas (the
-    arbitrary-stateful-processing API): per-user count / distinct-type
-    count / max value, emitted in update mode.
-
-    GATED on protobuf: the transformWithState Python worker speaks a
-    protobuf state protocol (pyspark/sql/streaming/proto); environments
-    without ``google.protobuf`` (like this container) raise ImportError
-    here rather than crashing the streaming runner mid-query.  The
-    applyInPandasWithState operator above covers the same capability on
-    the older, dependency-free API."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as ex:  # pragma: no cover - environment-dependent
-        raise ImportError(
-            "transformWithStateInPandas requires the protobuf package "
-            "(pyspark's typed-state protocol); use "
-            "user_running_totals_stream (applyInPandasWithState) instead"
-        ) from ex
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    cls = type("UserStatsProcessor", (_UserStatsProcessor, StatefulProcessor), {})
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=cls(),
-        outputStructType=_TWS_OUT_SCHEMA,
-        outputMode="update",
-        timeMode="none",
-    )
-
-
 def run_foreachbatch_upsert(
     spark: SparkSession, events: DataFrame, target_path: str, checkpoint: str
 ) -> None:

@@ -1,46 +1,49 @@
-"""Python worker daemon that keeps Spark's own zip archives out of the
-per-task import-cache invalidation.
+"""Python worker daemon that takes two fixed costs out of every reused
+worker's task.
 
 ``get_spark`` names this module as ``spark.python.daemon.module``.  It
-changes one thing and then runs the stock ``pyspark.daemon.manager``,
-whose forked workers inherit the change.
+changes two things and then runs the stock ``pyspark.daemon.manager``,
+whose forked workers inherit both.
 
-The cost it removes, measured on a 4-core box with CPython 3.11.7 and
+The costs it removes, measured on a 4-core box with CPython 3.11.7 and
 Spark 4.1.2:
 
-* The workers import PySpark from ``$SPARK_HOME/python/lib/pyspark.zip``:
-  Spark puts that zip and the py4j zip first on their path.
-* At every task ``pyspark.worker_util.setup_spark_files`` calls
-  ``importlib.invalidate_caches()``.
-* In CPython 3.11, ``zipimporter.invalidate_caches()`` eagerly re-reads its
-  archive's whole central directory, once per cached importer, and a
-  reused worker caches 14–16 of them: one per package directory it has
-  imported from the zip.  One re-read of pyspark.zip (1,328 entries) takes
-  8–11 ms, so each task paid ~0.15 s of CPU before its own code ran.
-* On a warm, reused worker, a no-op ``mapInArrow`` task over 60k rows
-  cost 0.20–0.25 s of worker CPU and costs 0.06–0.07 s with this daemon;
-  a stage of four such tasks over one row each went from 0.89–0.95 s to
-  0.26–0.27 s (medians of 10 warm runs, two runs per side).
+* **Archive re-reads.**  Spark launches the daemon with its own archives
+  first on the path: ``pyspark.zip``, the py4j zip and the spark-core jar
+  (``PythonUtils.sparkPythonPath``; the jar holds 5,359 entries, 15 MB and
+  no ``.py`` file).  At every task ``pyspark.worker_util.setup_spark_files``
+  calls ``importlib.invalidate_caches()``, and in CPython 3.11
+  ``zipimporter.invalidate_caches()`` eagerly re-reads its archive's whole
+  central directory, once per cached importer.  A reused worker caches
+  14–16 importers of pyspark.zip (8–11 ms a re-read) and one of the jar
+  (25–45 ms a re-read).
+* **Import-time heap in every collection.**  ``pyspark.daemon`` runs
+  ``gc.collect()`` after each task of a reused worker.  That collection
+  traversed the ~73k objects the imports left (PySpark, pandas, pyarrow)
+  and took 25–36 ms.
 
-The importer installed here skips the re-read only for the archives that
-``pyspark`` and ``py4j`` were imported from, which do not change while a
-context runs.  Every other zip keeps full invalidation, so an ``addPyFile``
-archive still becomes visible to a reused worker.
+The archives Spark put on the path do not change while a context runs, so
+the importer installed here keeps their directories.  Every other zip keeps
+full invalidation: an ``addPyFile`` archive is put on a worker's path by the
+task, not at launch, so it still becomes visible to a reused worker.  The
+daemon also imports the Arrow stack every Arrow task loads and freezes its
+heap before the first fork (the prefork pattern of ``gc.freeze``), so a
+worker's collections scan only what its own tasks allocated.
+
+A warm no-op ``mapInArrow`` task cost 62–76 ms of worker CPU with only the
+pyspark/py4j archives cached and costs 2.0–2.3 ms with both changes (mean of
+30, ``metrics.python_worker_cpu_s``); the per-task collection fell to
+0.2–0.3 ms over ~700 objects.  The stock daemon's task cost 0.20–0.25 s.
 """
 
+import gc
+import os
 import sys
 import zipimport
 
-import py4j
-import pyspark
-
-#: The archives ``pyspark`` and ``py4j`` were imported from (none when they
-#: come from a plain directory, e.g. a pip install).
-SPARK_ARCHIVES = frozenset(
-    archive
-    for module in (pyspark, py4j)
-    if (archive := getattr(module.__loader__, "archive", None))
-)
+#: Every archive on the path the daemon was launched with.  Spark builds that
+#: path, so these are its own archives; a plain directory is not one.
+SPARK_ARCHIVES = frozenset(path for path in sys.path if os.path.isfile(path))
 
 
 class SparkArchiveImporter(zipimport.zipimporter):
@@ -63,8 +66,19 @@ def install() -> None:
             del sys.path_importer_cache[path]
 
 
+def preload() -> None:
+    """Import what every Arrow task imports, then move the whole heap to
+    the permanent generation so forked workers never traverse it."""
+    import pandas  # noqa: F401
+    import pyarrow  # noqa: F401
+
+    gc.collect()
+    gc.freeze()
+
+
 if __name__ == "__main__":
     install()
     from pyspark import daemon
 
+    preload()
     daemon.manager()

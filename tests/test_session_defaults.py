@@ -1,6 +1,7 @@
 """Session defaults that must hold outside the measurement harnesses:
 compiled-class reuse across a query loop, the core count when
-``SPARK_GRAFT_CPUS`` is unset, and kernel imports from a driver started
+``SPARK_GRAFT_CPUS`` is unset, a driver heap that fits the machine when
+``SPARK_GRAFT_DRIVER_MEM`` is unset, and kernel imports from a driver started
 outside the repository root; and the benchmark queries' results in the
 posture ``benchmark_session`` takes at sf0.01."""
 
@@ -12,11 +13,13 @@ import sys
 import pytest
 
 from conftest import with_conf
+from datafusion_parallelism_spark import session
 from datafusion_parallelism_spark.metrics import codegen_compiles
 from datafusion_parallelism_spark.queries import REGISTRY
 from datafusion_parallelism_spark.session import (
     auto_shuffle_partitions,
     default_cpus,
+    default_driver_mem,
     force_execute,
 )
 from datafusion_parallelism_spark.testing import compare_to_oracle
@@ -83,6 +86,30 @@ def test_unset_cpus_default_to_affinity(monkeypatch, tmp_path):
 def test_cpus_env_overrides_affinity(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
     assert default_cpus() == 3
+
+
+def _heap_bytes(mem: str) -> int:
+    """Bytes of a JVM memory string such as ``8046m`` or ``24g``."""
+    return int(mem[:-1]) * 2 ** {"k": 10, "m": 20, "g": 30}[mem[-1].lower()]
+
+
+def test_unset_driver_mem_is_below_physical_memory(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    physical = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    heap = _heap_bytes(default_driver_mem())
+    assert heap < physical, (default_driver_mem(), physical)
+    assert heap <= 24 * 2**30
+
+
+def test_driver_mem_follows_a_cgroup_limit_below_physical_memory(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    monkeypatch.setattr(session, "_cgroup_memory_max", lambda: 4 * 2**30)
+    assert default_driver_mem() == "2048m"
+
+
+def test_driver_mem_env_overrides_the_machine(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert default_driver_mem() == "3g"
 
 
 _CHILD = r"""

@@ -228,39 +228,6 @@ def test_checkpoint_incremental_exactly_once(spark, sf_dir, tmp_path):
     assert bad == 0
 
 
-def test_typed_state_operator_matches_batch_or_skips(spark, sf_dir):
-    """transformWithStateInPandas (typed-state API) — per-user counts,
-    distinct-type counts, and max value must equal the batch aggregate.
-    Skips where the protobuf state protocol isn't installed (the operator
-    raises a clear ImportError instead of crashing the streaming runner)."""
-    import pytest as _pytest
-
-    from datafusion_parallelism_spark.streaming.events import user_stats_tws_stream
-
-    try:
-        stream = user_stats_tws_stream(read_events_stream(spark, sf_dir))
-    except ImportError as ex:
-        _pytest.skip(f"typed-state protocol unavailable: {ex}")
-    run_to_memory(stream, "tws_mem", output_mode="update")
-    mem = spark.table("tws_mem")
-    got = {r.user_id: (r.n_events, r.n_types, r.max_value) for r in mem.collect()}
-
-    batch = (
-        load(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.countDistinct("event_type").alias("t"),
-            F.max("value").alias("mx"),
-        )
-    )
-    expected = {r.user_id: (r.n, r.t, r.mx) for r in batch.collect()}
-    assert set(got) == set(expected)
-    for uid, (n, t, mx) in expected.items():
-        assert got[uid][0] == n and got[uid][1] == t
-        assert got[uid][2] == _pytest.approx(mx, abs=1e-9)
-
-
 def test_watermark_drops_late_data_across_restarts(spark, tmp_path):
     """Event-time watermark semantics: run 1 processes fresh rows and
     persists its watermark (max ts - 2 h) in the checkpoint; run 2 (same
