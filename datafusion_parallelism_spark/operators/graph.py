@@ -31,24 +31,11 @@ iteration's single materialization job via ``DataFrame.observe`` — each
 iteration is exactly ONE Spark job, no separate collect/broadcast jobs.
 Lineage is truncated with localCheckpoint every iteration so plans stay
 O(1) deep regardless of iteration count (the standard Spark iterative-
-algorithm hygiene).
-
-Iteration-state width (round 5, replacing the round-4 session-conf flip):
-the loop-state tables are O(nodes) rows, often far smaller than the
-session's shuffle width is tuned for (which follows the INPUT size), and
-the bench session disables AQE coalescing below 256 MB — so without
-sizing, every iteration schedules conf-width near-empty tasks (measured
-2x the whole pagerank wall at sf0.1).  Instead of mutating the session-
-global ``spark.sql.shuffle.partitions`` (unsafe under concurrency: any
-query planned on the shared session inside the window inherits the
-narrowed width — and the final lazy ``ranks`` plan used to execute AFTER
-the conf was restored, defeating the sizing), every state-side shuffle
-point is now explicitly ``repartition(parts, key)``.  The pre-shuffle
-repartition bypasses map-side partial aggregation, so it is applied ONLY
-in the small-state regime (``parts < conf``) where scheduling overhead
-dominates and combine volume is irrelevant; in the big regime
-(``parts == conf``, i.e. real scale) the planner's own conf-width
-exchange with map-side combine is kept.
+algorithm hygiene).  The loops shuffle at the session's width
+(``spark.sql.shuffle.partitions``: the planner's own exchanges, with
+map-side combine).  They run only above the 4M-edge kernel ceilings, where
+a session width of at most 4 × cores leaves thousands of edges in every
+partition, so no loop stage schedules near-empty tasks.
 """
 
 from __future__ import annotations
@@ -57,11 +44,6 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..plans.shaping import checkpoint_pinned, kernel_fits
-
-#: One shuffle partition per this many iteration-state rows (floor 4,
-#: ceiling the session conf) — the same sizing rule the round-4 conf flip
-#: used, now applied per-shuffle-point.
-_STATE_ROWS_PER_PARTITION = 50_000
 
 #: Edge-count ceiling for the single-task PageRank kernel (round 11).
 #: Below it, the whole power iteration runs inside ONE ``mapInArrow``
@@ -80,90 +62,52 @@ _STATE_ROWS_PER_PARTITION = 50_000
 _PAGERANK_KERNEL_MAX_EDGES = 4_000_000
 
 
-def _state_parts(m: int, conf_parts: int) -> int:
-    return max(4, min(conf_parts, -(-m // _STATE_ROWS_PER_PARTITION)))
+def _pagerank_arrow(edges: DataFrame, damping: float, iterations: int) -> DataFrame:
+    """Single-task PageRank over a small (src, dst) edge table.
 
-
-def _sized(df: DataFrame, parts: int, conf_parts: int, *keys: str) -> DataFrame:
-    """Pre-size the NEXT shuffle of ``df`` on ``keys``.
-
-    parts < conf (small-state regime): explicit ``repartition(parts,
-    keys)`` — the downstream groupBy/join sees its clustering requirement
-    already satisfied and inserts no further exchange, so the whole stage
-    runs at ``parts`` width instead of session width.  parts == conf (real
-    scale): no-op — the planner's own exchange is the same width AND keeps
-    map-side partial aggregation, which the explicit repartition would
-    bypass.
-    """
-    if parts < conf_parts:
-        return df.repartition(parts, *keys)
-    return df
-
-
-def _pagerank_arrow(
-    edges: DataFrame,
-    damping: float,
-    iterations: int,
-    normalized: bool,
-    single_partition: bool = False,
-    dedup: bool = False,
-) -> DataFrame:
-    """Single-task PageRank over a small edge table.
-
-    ``edges``: (src, dst, w) with w = 1/outdeg(src) when ``normalized``,
-    else (src, dst) — the kernel then computes 1/outdeg itself with the
-    identical IEEE division.  Duplicates must already be collapsed.  All
-    ``iterations`` power-iteration steps run inside one ``mapInArrow``
-    task: contributions via ``np.bincount`` (the exact rank·w products
-    the distributed plan computes, summed per dst in index order — a
+    Duplicate edges collapse inside the kernel (a NumPy unique on the
+    packed index pair, saving the caller a distributed distinct
+    exchange), and the kernel computes w = 1/outdeg(src) itself, the
+    same IEEE division the distributed loop does.  All ``iterations``
+    power-iteration steps run inside one ``mapInArrow`` task:
+    contributions via ``np.bincount`` (the exact rank·w products the
+    distributed plan computes, summed per dst in index order — a
     reordering of the same IEEE doubles, the tolerance every oracle
     already grants the distributed SUM), dangling mass by the same
     conservation identity D = 1 − Σ contrib the observe-based loop uses.
 
-    ``single_partition=False`` (post-materialization callers): the edges
-    are an already-checkpointed table, fetched into the one task by a
-    narrow ``coalesce(1)``.  ``single_partition=True`` (bounded-ahead
-    callers): the derivation has NOT been materialized, so a narrow
-    coalesce would collapse its upstream stages to one task too — a
-    keyless ``repartition(1)`` keeps the derivation parallel and moves
-    only the final |E| rows to the kernel task."""
+    The edges are fetched into the one task by a keyless
+    ``repartition(1)``: their derivation has not been materialized, and
+    a narrow ``coalesce(1)`` would collapse its upstream stages to one
+    task too.  The exchange keeps the derivation parallel and moves only
+    the final |E| rows to the kernel task."""
     node_t = edges.schema["src"].dataType.simpleString()
-    cols = ["src", "dst", "w"] if normalized else ["src", "dst"]
 
     def kernel(batches):
         import numpy as np
         import pyarrow as pa
 
-        parts: list = [[] for _ in cols]
+        srcs, dsts = [], []
         for b in batches:
-            for i in range(len(cols)):
-                parts[i].append(b.column(i).to_numpy(zero_copy_only=False))
-        if not parts[0]:
+            srcs.append(b.column(0).to_numpy(zero_copy_only=False))
+            dsts.append(b.column(1).to_numpy(zero_copy_only=False))
+        if not srcs:
             return
-        src = np.concatenate(parts[0])
-        dst = np.concatenate(parts[1])
+        src = np.concatenate(srcs)
+        dst = np.concatenate(dsts)
         nodes, idx = np.unique(np.concatenate([src, dst]), return_inverse=True)
         n = int(len(nodes))
         if n == 0:
             return
-        si = idx[: len(src)]
-        di = idx[len(src):]
-        if dedup:
-            # In-kernel edge dedup (duplicates collapse, unweighted
-            # graph): unique on the packed (si, di) index pair — saves
-            # the caller a distributed distinct exchange when the kernel
-            # consumes every edge anyway.  si, di < n and n·n fits int64
-            # under the kernel's edge ceiling.
-            packed = np.unique(si.astype(np.int64) * n + di)
-            si = packed // n
-            di = packed % n
-        if normalized:
-            w = np.concatenate(parts[2])
-        else:
-            outdeg = np.bincount(si, minlength=n).astype(np.float64)
-            with np.errstate(divide="ignore"):
-                winv = 1.0 / outdeg  # dangling nodes have no src rows
-            w = winv[si]
+        # Edge dedup on the packed (si, di) index pair: si, di < n, and
+        # n·n fits int64 under the kernel's edge ceiling.
+        packed = np.unique(idx[: len(src)].astype(np.int64) * n + idx[len(src):])
+        si = packed // n
+        di = packed % n
+        outdeg = np.bincount(si, minlength=n).astype(np.float64)
+        with np.errstate(divide="ignore"):
+            winv = 1.0 / outdeg  # dangling nodes have no src rows
+        w = winv[si]
         rank = np.full(n, 1.0 / n)
         for _ in range(iterations):
             contrib = np.bincount(di, weights=rank[si] * w, minlength=n)
@@ -174,12 +118,11 @@ def _pagerank_arrow(
             names=["node", "rank"],
         )
 
-    one = (
-        edges.select(*cols).repartition(1)
-        if single_partition
-        else edges.select(*cols).coalesce(1)
+    return (
+        edges.select("src", "dst")
+        .repartition(1)
+        .mapInArrow(kernel, schema=f"node {node_t}, rank double")
     )
-    return one.mapInArrow(kernel, schema=f"node {node_t}, rank double")
 
 
 def _cc_arrow(und: DataFrame, max_iter: int) -> DataFrame:
@@ -269,13 +212,14 @@ def connected_components(
     Raises ``RuntimeError`` on the driver when the labels have not
     converged within ``max_iter`` iterations, on either path.
 
-    Job budget: setup = 2 jobs (edge checkpoint+count, label
-    checkpoint), then exactly 1 job per iteration — the label
-    checkpoint, whose ``observe`` carries the convergence sum.
+    Job budget: the edge checkpoint, whose ``observe`` carries the edge
+    count, then either the kernel's checkpoint (2 jobs in all) or the
+    loop: the dst-pinned edge and label checkpoints, then exactly 1 job
+    per iteration — the label checkpoint, whose ``observe`` carries the
+    convergence sum (``stats["iterations"]`` + 1 of them, counting the
+    convergence check).
     """
     u, v = edges.columns[:2]
-    spark = edges.sparkSession
-    conf_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # Symmetrize with ONE generator pass, not union-of-projections: union
     # would inline the caller's edge-producing subtree twice, and unless
     # its top happens to be a reusable exchange, both copies execute
@@ -297,9 +241,13 @@ def connected_components(
     # The edge list is re-joined every iteration; without truncating its
     # lineage here, the WHOLE upstream pipeline that produced the edges
     # (e.g. MinHash-LSH candidate generation) re-executes per iteration.
-    und = und.localCheckpoint(eager=True)
-    m = und.count()
-    # Small-graph fast path (round 11, mirroring pagerank's): below the
+    # The edge count rides the checkpoint job.
+    obs_m = Observation()
+    und = und.observe(obs_m, F.count(F.lit(1)).alias("m")).localCheckpoint(
+        eager=True
+    )
+    m = obs_m.get["m"]
+    # Small-graph fast path (round 11): below the
     # kernel ceiling the whole label-propagation loop (up to max_iter + 1
     # driver-synced jobs of pure scheduling floor on a near-dup candidate
     # graph) runs inside ONE Arrow task with the identical integer
@@ -326,18 +274,17 @@ def connected_components(
         if stats is not None:
             stats["iterations"] = obs_k.get["iters"] or 0
         return labeled.select("node", "cluster")
-    parts = _state_parts(m, conf_parts)
-    # Pin the (large) edge side on dst at state width once; the per-
-    # iteration join und⋈labels is then co-partitioned and exchange-free
-    # and pre-SORTED on dst so the per-iteration SortMergeJoin skips
-    # re-sorting the loop-invariant edge side too.  checkpoint_pinned is
-    # what makes both properties real at scale: a plain localCheckpoint
-    # under AQE stores Unknown/Nil and every iteration re-exchanges AND
-    # re-sorts the |E|-row side (round-10 finding).
-    und = checkpoint_pinned(und.repartition(parts, "dst").sortWithinPartitions("dst"))
+    # Pin the (large) edge side on dst once; the per-iteration join
+    # und⋈labels is then co-partitioned and exchange-free and pre-SORTED
+    # on dst so the per-iteration SortMergeJoin skips re-sorting the
+    # loop-invariant edge side too.  checkpoint_pinned is what makes both
+    # properties real at scale: a plain localCheckpoint under AQE stores
+    # Unknown/Nil and every iteration re-exchanges AND re-sorts the
+    # |E|-row side (round-10 finding).
+    und = checkpoint_pinned(und.repartition("dst").sortWithinPartitions("dst"))
 
     labels = (
-        _sized(und.select(F.col("src").alias("node")), parts, conf_parts, "node")
+        und.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("cluster", F.col("node"))
     )
@@ -351,14 +298,8 @@ def connected_components(
     # iteration, so the usable propagation budget stays a full max_iter.
     for _ in range(max_iter + 1):
         neighbor_min = (
-            _sized(
-                und.join(labels, und["dst"] == labels["node"]).select(
-                    "src", "cluster"
-                ),
-                parts,
-                conf_parts,
-                "src",
-            )
+            und.join(labels, und["dst"] == labels["node"])
+            .select("src", "cluster")
             .groupBy("src")
             .agg(F.min("cluster").alias("nmin"))
         )
@@ -378,23 +319,14 @@ def connected_components(
         # anyway.  l(l(u)) <= l(u) because l is monotone (<= identity),
         # so the sum still decreases monotonically and equality remains a
         # fixpoint test.  Two jumps per round ~4x chain compression at
-        # the cost of two cheap state-width joins — the jumps are LAZY
+        # the cost of two cheap label-table joins — the jumps are LAZY
         # plan nodes inside the iteration's single job, not extra jobs.
-        for j in range(2):
-            # Jump 1's parents side inherits node-partitioning from the
-            # labels⋈nmin left join — repartitioning it again would be a
-            # redundant exchange; jump 2's input comes out of the previous
-            # jump join partitioned on the (consumed) cluster key, so its
-            # parents side genuinely needs the node re-pin.
-            p_src = new_labels if j == 0 else _sized(
-                new_labels, parts, conf_parts, "node"
-            )
-            parents = p_src.select(
+        for _ in range(2):
+            parents = new_labels.select(
                 F.col("node").alias("p_node"), F.col("cluster").alias("p_cluster")
             )
             new_labels = (
-                _sized(new_labels, parts, conf_parts, "cluster")
-                .join(parents, F.col("cluster") == parents["p_node"], "left")
+                new_labels.join(parents, F.col("cluster") == parents["p_node"], "left")
                 .select(
                     "node",
                     F.coalesce(F.col("p_cluster"), F.col("cluster")).alias("cluster"),
@@ -441,10 +373,18 @@ def pagerank(
 
     ``edges``: DataFrame whose first two columns are (src, dst); duplicate
     edges are collapsed (unweighted graph) unless the caller guarantees
-    distinctness with ``assume_distinct=True``, which skips a full edge-
-    sized dedup exchange (graph_pagerank's pairs are distinct-then-
-    symmetrized over a disjoint odd/even node encoding, so its union can
-    never introduce duplicates).  Nodes appear iff they occur in an edge.
+    distinctness with ``assume_distinct=True``, which skips the loop's
+    full edge-sized dedup exchange (the kernel dedups in NumPy either
+    way; graph_pagerank's pairs are distinct-then-symmetrized over a
+    disjoint odd/even node encoding, so its union can never introduce
+    duplicates).  Nodes appear iff they occur in an edge.
+
+    ``approx_edge_bound``: the caller's UPPER bound on the edge count,
+    read from metadata, and the only kernel gate: at most
+    ``_PAGERANK_KERNEL_MAX_EDGES`` runs the whole power iteration as the
+    one-task kernel (:func:`_pagerank_arrow`); no bound (``None``) runs
+    the distributed loop.
+
     Returns (node, rank) with sum(rank) == 1 (no rows for an empty edge
     table): per iteration,
 
@@ -476,37 +416,21 @@ def pagerank(
     required), plus a |V|-sized contrib re-exchange in the lazy ranks
     view (the contrib checkpoint deliberately stays un-pinned so the
     heavy aggregation job keeps AQE's advisory-size coalescing).  Job
-    budget: 2 setup jobs at real scale (normalized-edge and node
-    checkpoints, with the edge/node counts riding them as observe
-    metrics; +1 cheap state-width re-pin job in the small regime), then
-    exactly 1 job per iteration.  The only driver state is three scalars
-    (m, n, and D per iteration).
+    budget: the kernel path launches no job at build; the loop takes 2
+    setup jobs (normalized-edge and node checkpoints, with the edge/node
+    counts riding them as observe metrics), then exactly 1 job per
+    iteration.  The only driver state is three scalars (m, n, and D per
+    iteration).
     """
     u, v = edges.columns[:2]
-    spark = edges.sparkSession
-    conf_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     e = edges.select(F.col(u).alias("src"), F.col(v).alias("dst"))
-    # Bounded-ahead kernel path (round 11): when the caller can bound the
-    # edge count from metadata (an UPPER bound, so the "small" decision is
-    # never wrong on a big graph), skip the distributed loop's whole setup
-    # — src-repartition, outdeg normalization join, presort, node
-    # checkpoint — and run the entire power iteration as ONE job: the
-    # derivation's stages feed a keyless single-partition exchange into
-    # the Arrow kernel, which computes 1/outdeg itself (the identical
-    # IEEE division).  See _PAGERANK_KERNEL_MAX_EDGES for the sizing
-    # argument.
+    # Bounded-ahead kernel path (round 11): an UPPER bound, so the "small"
+    # decision is never wrong on a big graph.  It skips the distributed
+    # loop's whole setup — src-repartition, normalization, presort, node
+    # checkpoint — and runs the entire power iteration as ONE job.  See
+    # _PAGERANK_KERNEL_MAX_EDGES for the sizing argument.
     if kernel_fits(approx_edge_bound, _PAGERANK_KERNEL_MAX_EDGES):
-        # Duplicate edges (if any) collapse INSIDE the kernel — a NumPy
-        # unique on index pairs instead of a distributed distinct
-        # exchange the kernel would make redundant.
-        return _pagerank_arrow(
-            e,
-            damping,
-            iterations,
-            normalized=False,
-            single_partition=True,
-            dedup=not assume_distinct,
-        )
+        return _pagerank_arrow(e, damping, iterations)
     if not assume_distinct:
         e = e.distinct()
     # Pre-normalized edge weights: contribution of u to v is rank(u) * w
@@ -539,41 +463,13 @@ def pagerank(
             obs_m, F.coalesce(F.sum(F.size("dsts")), F.lit(0)).alias("m")
         ).sortWithinPartitions("src")
     )
-    m = obs_m.get["m"]
-    # Small-graph fast path (round 11): once the edge count is measured
-    # (it rides the checkpoint job either way), a graph under the kernel
-    # ceiling runs every iteration inside one Arrow task — no node
-    # checkpoint, no per-iteration jobs, identical math (see
-    # _pagerank_arrow).  The distributed loop below stays the at-scale
-    # path.
-    if kernel_fits(m, _PAGERANK_KERNEL_MAX_EDGES):
-        rows = e_loop.select("src", F.explode("dsts").alias("dst"), "w")
-        return _pagerank_arrow(rows, damping, iterations, normalized=True)
-    if m == 0:
+    if obs_m.get["m"] == 0:
         # No nodes: the loop's 1/n teleport term is undefined.
         return e_loop.select(F.col("src").alias("node"), F.lit(0.0).alias("rank"))
-    # Iteration-state width: see module docstring (_sized) — one partition
-    # per ~50k state rows, floor 4, ceiling the session conf (no-op at real
-    # scale), applied per shuffle point instead of the r4 session-conf flip.
-    parts = _state_parts(m, conf_parts)
-    if parts < conf_parts:
-        # Small-state regime: re-pin the (small) normalized edges at state
-        # width so every loop stage runs at `parts`; at real scale the
-        # join output is already hashpartitioning(src, conf-width) from
-        # the materialized exchange — nothing to re-pin.
-        e_loop = checkpoint_pinned(
-            e_loop.repartition(parts, "src").sortWithinPartitions("src")
-        )
 
     nodes = (
-        _sized(
-            e_loop.select(F.col("src").alias("node")).union(
-                e_loop.select(F.explode("dsts").alias("node"))
-            ),
-            parts,
-            conf_parts,
-            "node",
-        )
+        e_loop.select(F.col("src").alias("node"))
+        .union(e_loop.select(F.explode("dsts").alias("node")))
         .distinct()
     )
     obs_n = Observation()
@@ -586,7 +482,7 @@ def pagerank(
     # contribution table (eager checkpoint = one job), whose observe
     # metric delivers the dangling mass to the driver as a scalar.  The
     # rank vector itself stays a SHALLOW LAZY view over the materialized
-    # contribs (nodes ⋈ contrib, both checkpoint-partitioned at state
+    # contribs (nodes ⋈ contrib, both checkpoint-partitioned at session
     # width → co-partitioned, exchange-free; D enters as a literal): it
     # is consumed exactly once (next iteration's contribution join), so
     # nothing in the loop is ever computed twice and plans stay O(1)
@@ -599,8 +495,7 @@ def pagerank(
         )
         obs = Observation()
         contrib = (
-            _sized(rows, parts, conf_parts, "dst")
-            .groupBy("dst")
+            rows.groupBy("dst")
             .agg(F.sum("c").alias("contrib"))
             .observe(obs, F.coalesce(F.sum("contrib"), F.lit(0.0)).alias("s"))
             .localCheckpoint(eager=True)

@@ -142,14 +142,12 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("e.u", "e.v")
     # assume_distinct (distributed path): pairs is distinct and the
     # odd/even node encoding makes the symmetrized union disjoint, so
-    # pagerank's dedup exchange would be a full |E|-sized no-op.  On the
-    # small path assume_distinct=False routes dedup into the kernel.
+    # pagerank's dedup exchange would be a full |E|-sized no-op.  The
+    # kernel dedups in NumPy either way.
     #
-    # approx_edge_bound (round 11): the metadata bound above lets
-    # pagerank() take its single-task Arrow kernel path without first
-    # materializing the distributed loop's normalized/partitioned edge
-    # table.  On a big corpus the bound exceeds the kernel ceiling and
-    # the distributed loop runs exactly as before.
+    # approx_edge_bound: the metadata bound above is pagerank()'s only
+    # kernel gate.  On a big corpus (or an unreadable footer: no bound)
+    # the distributed loop runs.
     ranks = pagerank(
         edges,
         damping=_DAMPING,

@@ -12,7 +12,8 @@ Scale posture: writes are distributed (one file per partition — the only
 shape at 100 TB); reads use an EXPLICIT schema, never inference (schema
 inference is a full extra pass over the data).  Staging lives under /tmp,
 keyed by (format, data dir, PID) so concurrent runs — different SFs or the
-driver gate racing a local pytest over the SAME dir — never collide.
+driver gate racing a local pytest over the SAME dir — never collide; each
+process removes its own staging dirs when it exits.
 """
 
 from __future__ import annotations
@@ -24,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import load
-from ..sinks.files import write_csv, write_json
+from ..sinks.files import remove_at_exit, write_csv, write_json
 from .registry import query
 
 
@@ -32,7 +33,9 @@ def _stage(kind: str, sf_dir: str) -> str:
     # PID discriminator: two concurrent runs over the same data dir (driver
     # gate + local pytest) must not overwrite each other's staging files.
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    return os.path.join("/tmp/spark_graft_io", f"{kind}-{tag}-p{os.getpid()}")
+    return remove_at_exit(
+        os.path.join("/tmp/spark_graft_io", f"{kind}-{tag}-p{os.getpid()}")
+    )
 
 
 #: CSV cannot natively distinguish NULL from '' — pin explicit sentinels on

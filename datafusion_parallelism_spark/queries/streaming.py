@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sinks.files import remove_at_exit
 from ..streaming.events import (
     hourly_counts_stream,
     read_events_stream,
@@ -248,12 +249,12 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # A fresh staging directory per call: a reused streaming checkpoint
     # would resume past every micro-batch and return the previous call's
-    # snapshot.  Directories are left in place for the process lifetime,
-    # so each returned DataFrame stays readable lazily — no driver-side
-    # collect of the snapshot.
+    # snapshot.  Directories are removed when the process exits, so each
+    # returned DataFrame stays readable lazily — no driver-side collect of
+    # the snapshot.
     root = "/tmp/spark_graft_upsert"
     os.makedirs(root, exist_ok=True)
-    base = tempfile.mkdtemp(prefix=f"{os.getpid()}_", dir=root)
+    base = remove_at_exit(tempfile.mkdtemp(prefix=f"{os.getpid()}_", dir=root))
     target = os.path.join(base, "snapshot")
     checkpoint = os.path.join(base, "ckpt")
     run_foreachbatch_upsert(

@@ -12,7 +12,37 @@ results of big queries should never set it.
 
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
+
 from pyspark.sql import DataFrame
+
+#: pid -> the staging dirs that process registered with remove_at_exit.
+_STAGED: dict[int, set[str]] = {}
+
+
+def remove_at_exit(path: str) -> str:
+    """Register ``path``, a staging directory this process writes, for
+    removal when the process exits, and return it.
+
+    A query that writes a staged table returns a DataFrame that reads it
+    lazily, so the directory must outlive the call that wrote it; exit is
+    the first point at which no such DataFrame can still run.  One hook
+    per process removes only that process's directories: a forked child
+    inherits the parent's hook, which does nothing there."""
+    pid = os.getpid()
+    if pid not in _STAGED:
+        _STAGED[pid] = set()
+        atexit.register(_remove_staged, pid)
+    _STAGED[pid].add(path)
+    return path
+
+
+def _remove_staged(pid: int) -> None:
+    if os.getpid() == pid:
+        for path in _STAGED[pid]:
+            shutil.rmtree(path, ignore_errors=True)
 
 
 def _prep(df: DataFrame, single_file: bool) -> DataFrame:

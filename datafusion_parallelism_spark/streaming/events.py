@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..sinks.files import remove_at_exit
 from ..sources.parquet import _nanos_timestamp_columns, nanos_to_timestamp
 
 WATERMARK = "2 hours"
@@ -311,7 +312,9 @@ def run_to_table(
     if driver_bounded:
         run_to_memory(stream_df, name, output_mode)
         return spark.table(name)
-    base = os.path.join("/tmp/spark_graft_stream_out", f"{os.getpid()}_{name}")
+    base = remove_at_exit(
+        os.path.join("/tmp/spark_graft_stream_out", f"{os.getpid()}_{name}")
+    )
     shutil.rmtree(base, ignore_errors=True)
     out = os.path.join(base, "data")
     write_mode = "overwrite" if output_mode == "complete" else "append"

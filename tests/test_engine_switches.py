@@ -65,3 +65,46 @@ def test_package_reads_no_engine_switch():
         if name not in _DEPLOYMENT_ENV
     }
     assert env == set(), env
+
+
+#: A row of README's "Kernel gates" table: `module.CONSTANT` | default |.
+_GATE_ROW = re.compile(r"\| `([\w.]+)` \| ([\d,]+) \|")
+
+
+def _readme_gates():
+    """``{dotted constant: default}`` from README's "Kernel gates" table."""
+    text = (ROOT / "README.md").read_text()
+    section = text.split("### Kernel gates", 1)[1].split("\n#", 1)[0]
+    rows = [line for line in section.splitlines() if line.startswith("| `")]
+    gates = {}
+    for line in rows:
+        m = _GATE_ROW.match(line)
+        assert m, f"unparsed Kernel gates row: {line[:80]}"
+        gates[m.group(1)] = int(m.group(2).replace(",", ""))
+    return gates
+
+
+def test_readme_kernel_gates_match_the_code():
+    """Each constant in README's "Kernel gates" table resolves to a module
+    attribute equal to its listed default, and every ceiling the package
+    passes to ``kernel_fits`` has a row."""
+    import importlib
+
+    gates = _readme_gates()
+    assert gates
+    for dotted, default in gates.items():
+        module, _, attr = dotted.rpartition(".")
+        mod = importlib.import_module(f"datafusion_parallelism_spark.{module}")
+        assert getattr(mod, attr) == default, dotted
+    ceilings = {
+        node.args[1].id
+        for _, tree in _package_trees()
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Name)
+        and node.func.id == "kernel_fits"
+        and len(node.args) == 2
+        and isinstance(node.args[1], ast.Name)
+    }
+    assert ceilings, "no kernel_fits call found"
+    assert ceilings <= {g.rpartition(".")[2] for g in gates}, ceilings

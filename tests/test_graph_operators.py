@@ -9,7 +9,7 @@ from datafusion_parallelism_spark.operators.graph import (
     triangle_counts,
 )
 
-from conftest import spy_calls
+from conftest import spy_calls, with_conf
 
 
 def _cc(spark, edges):
@@ -75,8 +75,11 @@ def _pr_reference(edges, damping, iterations):
 
 
 def _pr(spark, edges, **kw):
+    """Ranks of ``edges``, with their count as pagerank's edge bound: the
+    one-task kernel unless the test patches its ceiling to 0."""
     df = spark.createDataFrame(edges, schema="u long, v long")
-    return {r.node: r["rank"] for r in pagerank(df, **kw).collect()}
+    ranks = pagerank(df, approx_edge_bound=len(edges), **kw)
+    return {r.node: r["rank"] for r in ranks.collect()}
 
 
 def test_pagerank_matches_numpy_reference(spark):
@@ -142,6 +145,24 @@ def test_triangle_query_distributed_matches_oracle(spark, sf_dir_oracle, monkeyp
     assert not calls
 
 
+def test_pagerank_query_distributed_matches_oracle(spark, sf_dir_oracle, monkeypatch):
+    """graph_pagerank with its kernel ceiling at 0: the distributed power
+    iteration keeps oracle coverage at query level, which the default
+    run (the footer bound admits the kernel) does not reach at test
+    scale."""
+    from datafusion_parallelism_spark.operators import graph
+    from datafusion_parallelism_spark.queries import REGISTRY
+    from datafusion_parallelism_spark.testing import compare_to_oracle
+
+    monkeypatch.setattr(graph, "_PAGERANK_KERNEL_MAX_EDGES", 0)
+    calls = spy_calls(monkeypatch, graph, "_pagerank_arrow")
+    spec = REGISTRY["graph_pagerank"]
+    df = spec.fn(spark, sf_dir_oracle)
+    ok, detail = compare_to_oracle(spark, df, spec.oracle, sf_dir_oracle)
+    assert ok, detail
+    assert not calls
+
+
 def test_pagerank_duplicate_edges_collapsed(spark):
     # Edges are a set: duplicates must not double contributions.
     a = _pr(spark, [(1, 2), (2, 1)], iterations=5)
@@ -151,10 +172,12 @@ def test_pagerank_duplicate_edges_collapsed(spark):
 
 
 def test_pagerank_kernel_matches_distributed_loop(spark, monkeypatch):
-    """The r11 single-task Arrow kernel (default below
+    """The r11 single-task Arrow kernel (an edge bound below
     _PAGERANK_KERNEL_MAX_EDGES) must emit the same ranks as the
     distributed join+aggregate loop — including dangling-mass handling
-    (node 7 has no out-edges) and hub asymmetry."""
+    (node 7 has no out-edges) and hub asymmetry.  The loop runs with the
+    ceiling at 0, and with no bound at the default ceiling: the caller's
+    bound is the only gate."""
     from datafusion_parallelism_spark.operators import graph
 
     edges = [
@@ -164,24 +187,28 @@ def test_pagerank_kernel_matches_distributed_loop(spark, monkeypatch):
     kernel = _pr(spark, edges, damping=0.85, iterations=10)
     assert calls
     calls.clear()
+    df = spark.createDataFrame(edges, schema="u long, v long")
+    unbounded = {r.node: r["rank"] for r in pagerank(df, iterations=10).collect()}
+    assert not calls
     monkeypatch.setattr(graph, "_PAGERANK_KERNEL_MAX_EDGES", 0)
     dist = _pr(spark, edges, damping=0.85, iterations=10)
     assert not calls
-    assert kernel.keys() == dist.keys()
+    assert kernel.keys() == dist.keys() == unbounded.keys()
     for k in dist:
         assert abs(kernel[k] - dist[k]) < 1e-12
+        assert abs(unbounded[k] - dist[k]) < 1e-12
     assert abs(sum(kernel.values()) - 1.0) < 1e-12
 
 
 def test_pagerank_kernel_plan_is_single_arrow_pass(spark):
-    """Below the edge ceiling the plan must be the one-task Arrow kernel:
-    a MapInArrow over the checkpointed edges, no joins at all."""
+    """With an edge bound below the ceiling the plan must be the one-task
+    Arrow kernel: a MapInArrow over the edges, no joins at all."""
     from datafusion_parallelism_spark.plans.shaping import physical_plan_str
 
     edges = spark.createDataFrame(
         [(i, (i + 1) % 6) for i in range(6)], schema="u long, v long"
     )
-    plan = physical_plan_str(pagerank(edges, iterations=4))
+    plan = physical_plan_str(pagerank(edges, iterations=4, approx_edge_bound=6))
     assert "MapInArrow" in plan, plan
     assert "Join" not in plan, plan
 
@@ -210,6 +237,33 @@ def test_cc_kernel_matches_distributed_loop(spark, monkeypatch):
     assert not calls
     assert kernel == dist
     assert k_stats["iterations"] == d_stats["iterations"]
+
+
+@pytest.mark.parametrize("ceiling", [None, 0], ids=["kernel", "ceiling_0"])
+def test_cc_build_job_budget(spark, monkeypatch, ceiling):
+    """connected_components' build launches the jobs its docstring
+    budgets: the edge checkpoint, whose observe carries the edge count,
+    then the kernel's checkpoint, or the loop's two setup checkpoints and
+    one job per iteration plus the convergence check.  No separate count
+    job.  AQE is off, as in the benchmark session at small inputs: with
+    it on, each shuffle map stage is submitted as a job of its own."""
+    from datafusion_parallelism_spark.metrics import jobs_submitted
+    from datafusion_parallelism_spark.operators import graph
+
+    if ceiling is not None:
+        monkeypatch.setattr(graph, "_CC_KERNEL_MAX_EDGES", ceiling)
+    df = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (10, 11)], schema="u long, v long"
+    )
+    stats = {}
+    with with_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
+        before = jobs_submitted(spark)
+        connected_components(df, stats=stats)
+        jobs = jobs_submitted(spark) - before
+    if ceiling is None:
+        assert jobs == 2
+    else:
+        assert jobs == 3 + stats["iterations"] + 1, (jobs, stats)
 
 
 def test_triangle_kernel_matches_distributed(spark, monkeypatch):
@@ -245,7 +299,8 @@ def test_empty_graph_on_both_sides_of_the_gate(
 ):
     """An empty edge table yields zero rows on the kernel (default ceiling)
     and on the distributed side (ceiling 0).  Ceiling 0 means kernel off
-    even for an input of 0 edges."""
+    even for an input of 0 edges.  pagerank gets the bound 0, since only
+    a caller's bound admits its kernel."""
     from datafusion_parallelism_spark.operators import graph
     from datafusion_parallelism_spark.plans.shaping import physical_plan_str
 
@@ -253,7 +308,7 @@ def test_empty_graph_on_both_sides_of_the_gate(
     if ceiling is not None:
         monkeypatch.setattr(graph, const, ceiling)
     edges = spark.createDataFrame([], schema="u long, v long")
-    out = op(edges)
+    out = op(edges, approx_edge_bound=0) if op is pagerank else op(edges)
     plan = physical_plan_str(out)
     assert out.count() == 0
     assert bool(calls) == (ceiling is None), calls

@@ -7,16 +7,22 @@ the sequential reference derives.  Every property runs on both sides of
 the operator's kernel gate: at the default ceiling (these small graphs
 take the single-task Arrow kernel) and with the ceiling patched to 0
 (the distributed plan).  The ceiling-0 side runs fewer examples because
-each example there launches many more Spark jobs."""
+each example there launches many more Spark jobs.  The ceiling-0 PageRank
+and connected-components loops also draw the shuffle width: the session's,
+or 16, wider than these graphs' state."""
 
 import pyarrow as pa
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from datafusion_parallelism_spark.operators import graph
 from datafusion_parallelism_spark.operators.graph import connected_components
 
-from conftest import arrow_frame
+from conftest import arrow_frame, with_conf
+
+#: Confs for a ceiling-0 loop: the session's own shuffle width, or 16.
+WIDE = {"spark.sql.shuffle.partitions": "16"}
+conf_st = st.sampled_from([{}, WIDE])
 
 edges_st = st.lists(
     st.tuples(st.integers(0, 12), st.integers(0, 12)), min_size=1, max_size=20
@@ -68,11 +74,15 @@ def test_connected_components_matches_union_find(spark, edges):
     _check_cc(spark, edges)
 
 
-@given(edges=edges_st)
+@given(edges=edges_st, conf=conf_st)
+@example(edges=[(0, 1), (1, 2), (2, 3), (5, 6), (7, 7)], conf=WIDE)
 @_examples(6)
-def test_connected_components_matches_union_find_at_ceiling_0(spark, monkeypatch, edges):
+def test_connected_components_matches_union_find_at_ceiling_0(
+    spark, monkeypatch, edges, conf
+):
     monkeypatch.setattr(graph, "_CC_KERNEL_MAX_EDGES", 0)
-    _check_cc(spark, edges)
+    with with_conf(spark, conf):
+        _check_cc(spark, edges)
 
 
 pr_edges_st = st.lists(
@@ -105,11 +115,14 @@ def _pr_numpy(edges, damping, iterations):
 def _check_pagerank(spark, edges):
     """Random digraphs (self-loops, duplicates, dangling nodes): the
     power iteration must agree with a sequential NumPy one to
-    float-summation-order tolerance, and ranks must stay a distribution."""
+    float-summation-order tolerance, and ranks must stay a distribution.
+    The edge count is pagerank's edge bound, so its ceiling picks the
+    side."""
     from datafusion_parallelism_spark.operators.graph import pagerank
 
     df = arrow_frame(spark, edges, u=pa.int64(), v=pa.int64())
-    got = {r.node: r["rank"] for r in pagerank(df, iterations=6).collect()}
+    ranks = pagerank(df, iterations=6, approx_edge_bound=len(edges))
+    got = {r.node: r["rank"] for r in ranks.collect()}
     want = _pr_numpy(edges, 0.85, 6)
     assert got.keys() == want.keys()
     for k in want:
@@ -123,11 +136,15 @@ def test_pagerank_matches_numpy_on_random_graphs(spark, edges):
     _check_pagerank(spark, edges)
 
 
-@given(edges=pr_edges_st)
+@given(edges=pr_edges_st, conf=conf_st)
+@example(edges=[(0, 1), (1, 2), (2, 0), (2, 3), (3, 3), (4, 1)], conf=WIDE)
 @_examples(4)
-def test_pagerank_matches_numpy_on_random_graphs_at_ceiling_0(spark, monkeypatch, edges):
+def test_pagerank_matches_numpy_on_random_graphs_at_ceiling_0(
+    spark, monkeypatch, edges, conf
+):
     monkeypatch.setattr(graph, "_PAGERANK_KERNEL_MAX_EDGES", 0)
-    _check_pagerank(spark, edges)
+    with with_conf(spark, conf):
+        _check_pagerank(spark, edges)
 
 
 # ---------------------------------------------------------------------------

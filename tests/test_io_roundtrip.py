@@ -1,6 +1,11 @@
 """CSV/JSON source round-trip queries vs DuckDB oracle on the original
 parquet — a hash match proves the write→read cycle is lossless."""
 
+import json
+import os
+import subprocess
+import sys
+
 import pytest
 
 from datafusion_parallelism_spark.queries import REGISTRY
@@ -53,3 +58,65 @@ def test_bucketed_join_query_has_no_exchange(spark, sf_dir_oracle):
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
     assert "Exchange hashpartitioning(o_custkey" not in plan
     assert "Exchange hashpartitioning(c_custkey" not in plan
+
+
+_STAGING_CHILD = """
+import glob, json, os, sys
+sys.path.insert(0, %(repo)r)
+from datafusion_parallelism_spark.queries import REGISTRY
+from datafusion_parallelism_spark.session import get_spark
+spark = get_spark(app_name="staging-test")
+spark.sparkContext.setLogLevel("ERROR")
+for name in (
+    "source_csv_roundtrip", "stream_foreachbatch_upsert", "stream_session_windows"
+):
+    REGISTRY[name].fn(spark, %(sf)r).collect()
+pid = os.getpid()
+staged = [
+    d
+    for pattern in ("spark_graft_io/*-p{}", "spark_graft_upsert/{}_*",
+                    "spark_graft_stream_out/{}_*")
+    for d in glob.glob("/tmp/" + pattern.format(pid))
+]
+print("STAGED " + json.dumps({"pid": pid, "dirs": staged}))
+"""
+
+
+_STAGING_ROOTS = {
+    "/tmp/spark_graft_io": lambda name, pid: name.endswith(f"-p{pid}"),
+    "/tmp/spark_graft_upsert": lambda name, pid: name.startswith(f"{pid}_"),
+    "/tmp/spark_graft_stream_out": lambda name, pid: name.startswith(f"{pid}_"),
+}
+
+
+def _own_dirs(pid):
+    return [
+        name
+        for root, owned in _STAGING_ROOTS.items()
+        if os.path.isdir(root)
+        for name in os.listdir(root)
+        if owned(name, pid)
+    ]
+
+
+def test_process_removes_its_staging_dirs_at_exit(sf_dir):
+    """The CSV round-trip, the foreachBatch upsert and the streaming
+    parquet sink stage files under /tmp, keyed by the process id, that
+    their lazily read DataFrames need while the process lives; once it
+    exits, none of its dirs is left."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", _STAGING_CHILD % {"repo": repo, "sf": sf_dir}],
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    line = next(
+        (l for l in proc.stdout.splitlines() if l.startswith("STAGED ")), None
+    )
+    assert line is not None, f"no STAGED line; stderr: {proc.stderr[-2000:]}"
+    staged = json.loads(line[len("STAGED "):])
+    roots = {os.path.dirname(d) for d in staged["dirs"]}
+    assert roots == set(_STAGING_ROOTS), staged
+    assert _own_dirs(staged["pid"]) == []

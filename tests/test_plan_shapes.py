@@ -496,7 +496,7 @@ def test_triangle_wedge_table_never_sorted(spark, monkeypatch):
 
 def test_pagerank_final_plan_is_copartitioned_no_exchange(spark, monkeypatch):
     """The returned ranks view (nodes ⋈ final contribs, both checkpoint-
-    partitioned at state width) must plan exchange-free: losing the
+    partitioned at session width) must plan exchange-free: losing the
     src/node partitioning reuse would show up here as a new Exchange."""
     from datafusion_parallelism_spark.operators import graph
 
