@@ -217,7 +217,9 @@ def connected_components(
     loop: the dst-pinned edge and label checkpoints, then exactly 1 job
     per iteration — the label checkpoint, whose ``observe`` carries the
     convergence sum (``stats["iterations"]`` + 1 of them, counting the
-    convergence check).
+    convergence check).  These counts assume AQE is off: with AQE on,
+    ``metrics.jobs_submitted`` also counts each shuffle map stage as a job
+    of its own.
     """
     u, v = edges.columns[:2]
     # Symmetrize with ONE generator pass, not union-of-projections: union
@@ -419,7 +421,9 @@ def pagerank(
     budget: the kernel path launches no job at build; the loop takes 2
     setup jobs (normalized-edge and node checkpoints, with the edge/node
     counts riding them as observe metrics), then exactly 1 job per
-    iteration.  The only driver state is three scalars (m, n, and D per
+    iteration.  These counts assume AQE is off: with AQE on,
+    ``metrics.jobs_submitted`` also counts each shuffle map stage as a job
+    of its own.  The only driver state is three scalars (m, n, and D per
     iteration).
     """
     u, v = edges.columns[:2]

@@ -1,7 +1,15 @@
 """Blocked pair co-occurrence counting: how many groups each member pair shares.
 
-Every "which documents share shingles / fingerprints, which parts share
-orders" query is the same pipeline over (group, member) rows:
+Every "which documents share a group" query is the same pipeline over
+(group, member) rows.  The callers, with their group and member:
+
+* shingle Jaccard and containment (queries/llm.py): shingle, doc_id;
+* winnowing spans, exact and hot: fingerprint, doc_id;
+* MinHash LSH above its kernel gate: packed (band, 4 minima) bucket, doc_id;
+* SimHash pairs: packed (block index, block value), struct(doc_id, simhash);
+* co-purchase edges (queries/graph.py): order, part.
+
+The steps:
 
 1. ``partition_groups`` — hash-partition the rows on the group key;
 2. ``cap_groups`` — drop groups with more than ``max_group`` members, by a
@@ -15,8 +23,8 @@ A group of n members expands to n(n-1)/2 pair rows, so the pair stream is
 Σ n² over groups: superlinear in the input, and one boilerplate group alone
 can dominate it.  The cap bounds the worst group at max_group²/2 rows and
 is exact, not sampled (a partial group would fabricate counts); the
-callers' oracles mirror it.  The steps are separate functions so callers
-keep their own input derivation and checkpoints between them.
+capping callers' oracles mirror it.  The steps are separate functions so
+callers keep their own input derivation and checkpoints between them.
 
 Reference analog: the parallel hash join's build/probe split
 (``src/operator/parallel_hash_join.rs``) with its work-stealing repartition

@@ -4,9 +4,11 @@ These operators go beyond the reference's surface (SURVEY §7.6): they are the
 data-processing layer a 100 TB pretraining pipeline needs.  Every query
 carries a DuckDB oracle so the driver hash-matches it like any SQL query.
 Most stay JVM-side; the exceptions run Python in Arrow-batched workers,
-where interpreted higher-order expressions would cost more: the MinHash
-signature pandas UDF, and the ``mapInArrow`` kernels of MinHash dedup, PQ
-and k-means (a whole query in one task below each kernel's size gate).
+where interpreted higher-order expressions would cost more: the
+``mapInArrow`` MinHash band emitter above its size gate, the
+``applyInPandas`` block tiles of embedding-cosine dedup and brute-force
+ANN, and the ``mapInArrow`` kernels of MinHash dedup, PQ and k-means (a
+whole query in one task below each kernel's size gate).
 
 Portability contract with the oracle:
 * 60-bit portable hash: Spark ``conv(substr(md5(x),1,15),16,10)::long`` ==
@@ -27,8 +29,6 @@ query set so the big side is never shuffled.
 from __future__ import annotations
 
 import os
-
-import pandas as pd
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -276,7 +276,7 @@ def _shared_shingle_arrays(d: DataFrame) -> DataFrame:
     once exploded into the pair self-join, once as per-doc set sizes for
     the denominator — and Spark has no cross-branch CSE, so without a
     checkpoint the scan+tokenize+shingle pass runs twice (same reasoning
-    as the winnowing fingerprint checkpoint above).  The round-8 x256
+    as the winnowing fingerprint checkpoint below).  The round-8 x256
     stage decomposition (docs/scale_sweep_r8.jsonl decomp rows) put that
     pass at ~23 s of the 90 s total; sharing it through a lazy
     localCheckpoint saves the second execution at the cost of
@@ -660,7 +660,7 @@ def _minhash_rows(texts):
     positions, their distinct 3-word shingle sets, and the (len(idx),
     N_PERMS) int64 matrix of MinHash permutation minima.  The one
     shingle → hash → permutation-min implementation, called by the
-    distributed signature UDF (_minhash_sigs) and the one-task kernel
+    distributed band emitter (_minhash_candidates) and the one-task kernel
     (_minhash_pairs_arrow) alike, so the two sides cannot drift.
 
     Shingles mirror ``word_shingles`` over a single-space ``split`` (3-token
@@ -693,46 +693,6 @@ def _minhash_rows(texts):
     vals = (mul * h[None, :] + add) % P  # (N_PERMS, total)
     mins = np.minimum.reduceat(vals, offsets, axis=1).T  # (n, N_PERMS)
     return np.array(idx, dtype=np.int64), sets, mins
-
-
-def _minhash_sigs(d: DataFrame) -> DataFrame:
-    """doc_id + m0..m{N_PERMS-1} MinHash signature columns of every doc
-    with a non-NULL text, computed by ONE Arrow-batched pandas UDF over
-    _minhash_rows (text → shingle set → md5 hashes → 16
-    permutation-mins).
-
-    Why not Catalyst expressions: shingling and per-shingle hashing are
-    higher-order ``transform`` lambdas, which Spark evaluates INTERPRETED
-    per element (no whole-stage codegen) — measured 4.6 s (shingles)
-    + 4.0 s (md5 HOF) + 2.3 s (perm-min HOFs) of the query's 19 s wall at
-    16×sf0.1; this UDF computes identical values in ~1 s."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<long>")
-    def minhash_from_text(texts: pd.Series) -> pd.Series:
-        idx, _, mins = _minhash_rows(texts.tolist())
-        out: list = [None] * len(texts)
-        for i, m in zip(idx, mins):
-            out[i] = m
-        return pd.Series(out, dtype=object)
-
-    # The signature UDF is CPU-bound, so its parallelism must come from the
-    # cluster, not from the scan's byte-proportional splits (a compressed
-    # text corpus is tiny on disk relative to its compute: the whole 16×
-    # benchmark corpus is one 9 MB split = one task).  One round-robin
-    # shuffle of (doc_id, text) fans the work out to every core; downstream
-    # re-shuffles on (band, sig) anyway, so no partitioning is lost.
-    # A NULL text has no signature; dropping it before the shuffle keeps
-    # it out of every band bucket.
-    spread = (
-        d.select("doc_id", "text")
-        .filter(F.col("text").isNotNull())
-        .repartition(d.sparkSession.sparkContext.defaultParallelism)
-    )
-    sigs = spread.select("doc_id", minhash_from_text("text").alias("m"))
-    return sigs.select(
-        "doc_id", *[F.col("m").getItem(i).alias(f"m{i}") for i in range(N_PERMS)]
-    )
 
 
 def _minhash_sigs_sql() -> str:
@@ -791,11 +751,12 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan.  Below _MINHASH_KERNEL_MAX_DOCS documents the whole query is ONE
     ``mapInArrow`` task (_minhash_pairs_arrow): no build-time job, no
     exchange.  Above it, the distributed plan (_minhash_pairs_distributed)
-    computes signatures in a pandas UDF behind a round-robin repartition,
-    self-joins the band table on (band, signature) and verifies each
-    candidate with ``array_intersect`` on the two docs' shingle sets — the
-    100 TB path, where candidate generation touches each doc once per band
-    and the quadratic step runs only inside LSH buckets.  Both sides give
+    emits one (bucket, doc) row per band from a ``mapInArrow`` behind a
+    round-robin repartition, pairs the docs of each bucket through
+    operators/pairs.py and verifies each candidate with
+    ``array_intersect`` on the two docs' shingle sets — the 100 TB path,
+    where candidate generation touches each doc once per band and the
+    quadratic step runs only inside LSH buckets.  Both sides give
     identical rows (tests/test_minhash_property.py)."""
     n_docs = parquet_num_rows(os.path.join(sf_dir, "documents.parquet"))
     return _minhash_pairs(load(spark, sf_dir, "documents"), n_docs)
@@ -826,10 +787,11 @@ def _minhash_pairs_arrow(d: DataFrame) -> DataFrame:
     text) — the fused form of _minhash_pairs_distributed for inputs under
     the gate.  Value-identical to it: signatures and shingle sets come
     from _minhash_rows; a band bucket is keyed on the band's 4-tuple of
-    minima (what the ``concat_ws('-')`` signature string encodes, the
-    minima being non-negative); candidates are the distinct doc_a < doc_b
-    pairs of a bucket; the Jaccard is |A∩B| / (|A| + |B| − |A∩B|) over
-    the same sets, rounded as Spark's ROUND (vectors.round_half_up)."""
+    minima (what the distributed side's packed bucket and the oracle's
+    ``concat_ws('-')`` string encode, the minima being non-negative);
+    candidates are the distinct doc_a < doc_b pairs of a bucket; the
+    Jaccard is |A∩B| / (|A| + |B| − |A∩B|) over the same sets, rounded as
+    Spark's ROUND (vectors.round_half_up)."""
     threshold, n_bands = JACCARD_THRESHOLD, N_PERMS // BAND_ROWS
 
     def kernel(batches):
@@ -881,54 +843,76 @@ def _minhash_pairs_arrow(d: DataFrame) -> DataFrame:
     )
 
 
+def _minhash_candidates(d: DataFrame) -> DataFrame:
+    """(doc_a, doc_b): the distinct pairs doc_a < doc_b of docs with a
+    non-NULL text that share a band bucket.
+
+    ONE ``mapInArrow`` over _minhash_rows emits a (bucket, doc_id) row per
+    band, and operators/pairs.py counts the bucket pairs.  ``bucket`` is
+    the band index and its BAND_ROWS minima packed as big-endian int32
+    bytes: exact, since every minimum is below P = 2³¹−1.  A hashed key
+    could put two different bands in one bucket and add a pair that then
+    verifies at >= JACCARD_THRESHOLD.  The packed keys are cast from Arrow's
+    fixed-size binary, which Spark's Arrow reader rejects, to ``binary``.
+
+    Why not Catalyst expressions: shingling and per-shingle hashing are
+    higher-order ``transform`` lambdas, which Spark evaluates INTERPRETED
+    per element (no whole-stage codegen) — measured 4.6 s (shingles)
+    + 4.0 s (md5 HOF) + 2.3 s (perm-min HOFs) of the query's 19 s wall at
+    16×sf0.1; the same _minhash_rows computed identical values in ~1 s
+    (measured as a pandas UDF, before this map replaced it).
+
+    The map is CPU-bound, so its parallelism must come from the cluster,
+    not from the scan's byte-proportional splits (a compressed text
+    corpus is tiny on disk relative to its compute: the whole 16×
+    benchmark corpus is one 9 MB split = one task).  One round-robin
+    shuffle of (doc_id, text) fans the work out to every core; the bucket
+    exchange re-shuffles anyway, so no partitioning is lost.  A NULL text
+    has no signature; dropping it before the shuffle keeps it out of every
+    bucket.  Both sides of the bucket self-join read one exchange: unlike
+    the ArrowEvalPython of a pandas UDF, a MapInArrow subtree is merged by
+    ReuseExchange, so the map runs once per build."""
+    n_bands, width = N_PERMS // BAND_ROWS, 1 + BAND_ROWS
+
+    def emit(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        for b in batches:
+            idx, _, mins = _minhash_rows(b.column(1).to_pylist())
+            keys = np.empty((len(idx), n_bands, width), dtype=">i4")
+            keys[:, :, 0] = np.arange(n_bands)
+            keys[:, :, 1:] = mins.reshape(len(idx), n_bands, BAND_ROWS)
+            bucket = pa.FixedSizeBinaryArray.from_buffers(
+                pa.binary(4 * width),
+                len(idx) * n_bands,
+                [None, pa.py_buffer(keys.tobytes())],
+            ).cast(pa.binary())
+            doc = b.column(0).take(pa.array(np.repeat(idx, n_bands)))
+            yield pa.RecordBatch.from_arrays([bucket, doc], names=["bucket", "doc_id"])
+
+    spread = (
+        d.select("doc_id", "text")
+        .filter(F.col("text").isNotNull())
+        .repartition(d.sparkSession.sparkContext.defaultParallelism)
+    )
+    bands = spread.mapInArrow(emit, schema="bucket binary, doc_id long")
+    groups = partition_groups(bands, "bucket")
+    return pair_counts(groups, "bucket", "doc_id", ("doc_a", "doc_b"), "n").select(
+        "doc_a", "doc_b"
+    )
+
+
 def _minhash_pairs_distributed(d: DataFrame) -> DataFrame:
-    """(doc_a, doc_b, jaccard) above the gate: the signature UDF
-    (_minhash_sigs), the band table self-joined on (band, signature), and
-    exact-Jaccard verification of the distinct candidates against the
-    shingle sets of the docs that appear in one."""
-    sigs = _minhash_sigs(d)
-    n_bands = N_PERMS // BAND_ROWS
-    bands = (
-        sigs.select(
-            "doc_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(i).alias("band"),
-                            F.concat_ws("-", *_band_cols(i)).alias("sig"),
-                        )
-                        for i in range(n_bands)
-                    ]
-                )
-            ).alias("bs"),
-        )
-        .select("doc_id", "bs.band", "bs.sig")
-        # Materialized once: BOTH sides of the bucket self-join read this
-        # table, and ReuseExchange does NOT unify the two exchange subtrees
-        # when each contains its own copy of the ArrowEvalPython signature
-        # stage (measured: the UDF pass executed twice) — checkpointing the
-        # band table makes the one Arrow signature pass the only UDF
-        # execution at any scale (sf0.1: exec 0.75 s -> 0.37 s).
-        .localCheckpoint(eager=False)
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-        # Materialized once: the candidate list feeds THREE consumers below
-        # (two sides of the needed-docs union + the verify join), and Spark
-        # has no cross-branch CSE — without this the whole sig+band+join
-        # pipeline would re-execute per consumer.  The list is tiny (only
-        # banding collisions), same pattern as connected_components.
-        .localCheckpoint(eager=False)
-    )
+    """(doc_a, doc_b, jaccard) above the gate: the band-bucket candidates
+    (_minhash_candidates), then exact-Jaccard verification of each against
+    the shingle sets of the docs that appear in one."""
+    # Materialized once: the candidate list feeds THREE consumers below
+    # (two sides of the needed-docs union + the verify join), and Spark
+    # has no cross-branch CSE — without this the whole sign+band+pair
+    # pipeline would re-execute per consumer.  The list is tiny (only
+    # banding collisions), same pattern as connected_components.
+    cand = _minhash_candidates(d).localCheckpoint(eager=False)
     # Shingle only docs that appear in some candidate pair (a small
     # fraction of the corpus at any scale): exact-Jaccard verification
     # needs shingle sets, but computing them for every document would cost
@@ -1039,45 +1023,41 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     generation O(n²/64) — measured 70 s at x64 (1.3M docs) with the
     quadratic stream dominating.  15-bit blocks cut random collisions
     128x while keeping the same no-missed-pairs guarantee."""
-    sigs = _simhash(_docs_spread(spark, sf_dir))
+    return _simhash_pairs(_simhash(_docs_spread(spark, sf_dir)))
+
+
+def _simhash_pairs(sigs: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, hamming) for the pairs doc_a < doc_b of ``sigs``
+    (doc_id, simhash) whose signatures differ in at most SIMHASH_HAMMING
+    bits, blocked through operators/pairs.py.
+
+    The group is (block index, block value) packed as one exact long,
+    index << SIMHASH_BLOCK_BITS | value.  The member is struct(doc_id,
+    simhash): structs order by their first field, so ``a < b`` is
+    doc_a < doc_b, and the pair rows carry both signatures to the Hamming
+    filter with no join back to the signature table.  A pair that shares
+    several blocks meets in each; the pair count makes it one row.  The
+    filter reads only the pair, so Catalyst pushes it below the count into
+    the join condition: only pairs within the threshold are shuffled."""
     mask = (1 << SIMHASH_BLOCK_BITS) - 1
-    blocks_df = sigs.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(k).alias("bk"),
-                        F.shiftright(F.col("simhash"), SIMHASH_BLOCK_BITS * k)
-                        .bitwiseAND(mask)
-                        .alias("bv"),
-                    )
-                    for k in range(SIMHASH_HAMMING + 1)
-                ]
-            )
-        ).alias("b"),
-    ).select("doc_id", "simhash", "b.bk", "b.bv")
-    a, b = blocks_df.alias("a"), blocks_df.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.bk") == F.col("b.bk"))
-            & (F.col("a.bv") == F.col("b.bv"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("a.simhash").alias("sim_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("b.simhash").alias("sim_b"),
-        )
-        .distinct()
+    groups = [
+        F.shiftright(F.col("simhash"), SIMHASH_BLOCK_BITS * k).bitwiseAND(mask)
+        + F.lit(k << SIMHASH_BLOCK_BITS)
+        for k in range(SIMHASH_HAMMING + 1)
+    ]
+    blocks = sigs.select(
+        F.explode(F.array(*groups)).alias("block"),
+        F.struct("doc_id", "simhash").alias("sig"),
     )
-    hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
-    return cand.select("doc_a", "doc_b", hamming.alias("hamming")).filter(
-        F.col("hamming") <= SIMHASH_HAMMING
+    pairs = pair_counts(
+        partition_groups(blocks, "block"), "block", "sig", ("doc_a", "doc_b"), "n"
     )
+    hamming = F.bit_count(F.col("doc_a.simhash").bitwiseXOR(F.col("doc_b.simhash")))
+    return pairs.select(
+        F.col("doc_a.doc_id").alias("doc_a"),
+        F.col("doc_b.doc_id").alias("doc_b"),
+        hamming.alias("hamming"),
+    ).filter(F.col("hamming") <= SIMHASH_HAMMING)
 
 
 @query(

@@ -4,7 +4,12 @@ Writes ``<out_dir>/<query>_<suffix>.txt`` for each query, using the same
 benchmark_session conf as bench.py so the plans match what the bench
 executes.  Expression ids (``#12``), ``plan_id=`` numbers and ``RDD[..]``
 ids are replaced by fixed tokens: they count objects built earlier in the
-process, so they shift between commits without any change of plan.  Run
+process, so they shift between commits without any change of plan.  So is
+the random UUID that names each ``observe`` (``CollectMetrics``'s first
+argument).  One value still varies from run to run and is NOT normalized:
+a driver-observed literal folded into a later plan, such as the
+dangling-mass sum PageRank's lazy ranks view adds (``+ 2.08E-20``), whose
+summation order varies.  Run
 once per commit into its own directory (for example ``before/`` on the
 base commit, ``after/`` on the change); ``diff -r before/ after/`` is then
 the plan evidence for the change.
@@ -36,7 +41,9 @@ from datafusion_parallelism_spark.queries import REGISTRY  # noqa: E402
 from datafusion_parallelism_spark.session import benchmark_session  # noqa: E402
 
 _IDS = ((re.compile(r"#\d+"), "#_"), (re.compile(r"plan_id=\d+"), "plan_id=_"),
-        (re.compile(r"RDD\[\d+\]"), "RDD[_]"))
+        (re.compile(r"RDD\[\d+\]"), "RDD[_]"),
+        (re.compile(r"\b[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}\b"),
+         "<uuid>"))
 
 
 def strip_ids(plan: str) -> str:

@@ -58,14 +58,15 @@ def arrow_frame(spark, rows, **types):
 
 
 def spy_calls(monkeypatch, module, name):
-    """Wrap ``module.name`` for the test so each call is recorded; returns
-    the (growing) list of calls."""
+    """Wrap ``module.name`` for the test so each call's return value is
+    recorded; returns the (growing) list of them."""
     calls = []
     real = getattr(module, name)
 
     def spy(*args, **kwargs):
-        calls.append(name)
-        return real(*args, **kwargs)
+        out = real(*args, **kwargs)
+        calls.append(out)
+        return out
 
     monkeypatch.setattr(module, name, spy)
     return calls

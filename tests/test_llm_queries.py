@@ -28,8 +28,9 @@ def test_llm_query_matches_oracle(spark, sf_dir_oracle, name):
 )
 def test_minhash_distributed_matches_oracle(spark, sf_dir_oracle, monkeypatch, name):
     """The MinHash queries with the kernel ceiling at 0: the distributed
-    signature UDF + band self-join + verify plan keeps oracle coverage,
-    which the default run no longer reaches at test scale."""
+    plan (the band emitter's MapInArrow, the operators/pairs.py bucket
+    pairs and the verify join) keeps oracle coverage, which the default
+    run no longer reaches at test scale."""
     from datafusion_parallelism_spark.queries import llm
 
     monkeypatch.setattr(llm, "_MINHASH_KERNEL_MAX_DOCS", 0)

@@ -12,7 +12,7 @@ import pytest
 
 from datafusion_parallelism_spark.session import auto_shuffle_partitions
 
-from conftest import with_conf
+from conftest import spy_calls, with_conf
 
 MB = 1024 * 1024
 
@@ -232,9 +232,11 @@ def test_fanout_join_probe_side_is_spread(spark, sf_dir):
         assert f"RoundRobinPartitioning({target})" in plan, (name, plan)
 
 
-def test_pair_exchange_width_is_data_ahead_4x(spark, sf_dir):
-    """Pin the Σn² pair-width rule of operators/pairs.py at all five pair
-    sites, under both AQE settings: the pair-keyed exchange runs at
+def test_pair_exchange_width_is_data_ahead_4x(spark, sf_dir, monkeypatch):
+    """Pin the Σn² pair-width rule of operators/pairs.py at all seven pair
+    sites, under both AQE settings (MinHash at ceiling 0, where its band
+    candidates go through the operator; the stream is taken before its
+    lazy checkpoint): the pair-keyed exchange runs at
     4 × max(cores, session width) with AQE on — one decade of pair-volume
     headroom over the input-sized session conf, measured spill-free
     through x256 — and at 1 × with AQE off, the small-input posture where
@@ -252,7 +254,7 @@ def test_pair_exchange_width_is_data_ahead_4x(spark, sf_dir):
     contract."""
     import re
 
-    from datafusion_parallelism_spark.queries import REGISTRY
+    from datafusion_parallelism_spark.queries import REGISTRY, llm
     from datafusion_parallelism_spark.queries.graph import co_purchase_edges
 
     base = max(
@@ -272,9 +274,15 @@ def test_pair_exchange_width_is_data_ahead_4x(spark, sf_dir):
                     "dedup_containment",
                     "dedup_winnow_spans",
                     "dedup_winnow_hot_spans",
+                    "dedup_simhash_pairs",
                 )
             }
             sites["co_purchase_edges"] = co_purchase_edges(pu.repartition("o"))
+            with monkeypatch.context() as m:
+                m.setattr(llm, "_MINHASH_KERNEL_MAX_DOCS", 0)
+                cands = spy_calls(m, llm, "_minhash_candidates")
+                REGISTRY["dedup_minhash_lsh"].fn(spark, sf_dir)
+            (sites["minhash_candidates"],) = cands
             for name, df in sites.items():
                 plan = df._jdf.queryExecution().sparkPlan().toString()
                 exchanges = pair_key.findall(plan)

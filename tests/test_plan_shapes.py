@@ -21,7 +21,7 @@ from datafusion_parallelism_spark.plans import (
 from datafusion_parallelism_spark.queries import REGISTRY
 from datafusion_parallelism_spark.session import load, register_tables
 
-from conftest import with_conf
+from conftest import spy_calls, with_conf
 
 
 def test_exists_decorrelates_to_left_semi(spark, sf_dir):
@@ -351,6 +351,30 @@ def test_minhash_below_gate_is_one_arrow_task(spark, sf_dir):
     assert plan.count("MapInArrow") == 1, plan
     assert "ArrowEvalPython" not in plan and "Join" not in plan, plan
     assert "Exchange" not in plan[plan.index("MapInArrow"):], plan
+
+
+@pytest.mark.parametrize("aqe", ["false", "true"])
+def test_minhash_above_gate_runs_one_arrow_map(spark, sf_dir, monkeypatch, aqe):
+    """At ceiling 0 the MinHash build's one Python node is the band
+    emitter's MapInArrow, and it runs once per build: both sides of the
+    bucket self-join read one exchange, the second as a ReusedExchange
+    (with AQE on, once its stages have run).  A pandas UDF's
+    ArrowEvalPython subtree was never merged that way, so its band table
+    needed a checkpoint of its own.  The final plan reads the lazily
+    checkpointed candidates and verifies them with no Python node."""
+    from datafusion_parallelism_spark.queries import llm
+
+    monkeypatch.setattr(llm, "_MINHASH_KERNEL_MAX_DOCS", 0)
+    cands = spy_calls(monkeypatch, llm, "_minhash_candidates")
+    with with_conf(spark, {"spark.sql.adaptive.enabled": aqe}):
+        df = REGISTRY["dedup_minhash_lsh"].fn(spark, sf_dir)
+        (cand,) = cands
+        cand.collect()
+        plan = physical_plan_str(cand).split("== Initial Plan ==")[0]
+        final = physical_plan_str(df)
+    assert plan.count("MapInArrow") == 1 and "ReusedExchange" in plan, plan
+    assert "ArrowEvalPython" not in plan + final, plan + final
+    assert "MapInArrow" not in final, final
 
 
 def test_pii_redact_is_single_aggregation_no_python(spark, sf_dir):
