@@ -24,7 +24,7 @@ The stage reader requires a session built with ``spark.ui.enabled=true``
 to avoid the listener-bus overhead on MB-scale runs).  It returns ``{}``
 when the UI is off rather than failing, so callers can attach metrics
 opportunistically.  :func:`codegen_compiles` and :func:`jobs_submitted`
-read JVM counters instead, and :func:`python_worker_cpu_s` reads ``/proc``;
+read JVM counters instead, and :func:`python_worker_cpu` reads ``/proc``;
 they work in any session.
 """
 
@@ -143,9 +143,9 @@ def jobs_submitted(spark: SparkSession) -> int:
     return int(spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs())
 
 
-def _proc_stats() -> dict[int, tuple[int, int]]:
-    """``pid -> (ppid, CPU ticks)`` of every live process, the ticks being
-    its own user + system time plus that of the children it waited for."""
+def _proc_stats() -> dict[int, tuple[int, int, int]]:
+    """``pid -> (ppid, start time, CPU ticks)`` of every live process, the
+    ticks being its own and its waited-for children's user + system time."""
     out = {}
     for name in os.listdir("/proc"):
         if not name.isdigit():
@@ -158,29 +158,32 @@ def _proc_stats() -> dict[int, tuple[int, int]]:
         # The command name may hold spaces and parentheses: split after
         # its last ")", where field 3 (state) is index 0.
         fields = line.rpartition(")")[2].split()
-        out[int(name)] = (int(fields[1]), sum(int(f) for f in fields[11:15]))
+        out[int(name)] = (int(fields[1]), int(fields[19]), sum(map(int, fields[11:15])))
     return out
 
 
-def python_worker_cpu_s(spark: SparkSession) -> float:
-    """CPU seconds the JVM's descendant processes have used so far: the
-    Python worker daemon and the workers it forks.
-
-    Read from ``/proc`` as ``perfbench/proc.py`` reads its process tree, so
-    it works with the UI off; the delta over a pass is the Python worker
-    CPU that pass cost.  The daemon ignores ``SIGCHLD``, so the kernel
-    reaps an exited worker without adding its time to the daemon's: a
-    worker that exits (Spark stops one idle for a minute) drops out of the
-    figure, which therefore suits deltas over short spans.
-    """
+def python_worker_cpu(spark: SparkSession) -> dict[tuple[int, int], float]:
+    """CPU seconds used so far by each live descendant of the JVM (the
+    Python worker daemon and its workers), keyed by (pid, start time).
+    Read from ``/proc``, so it works with the UI off."""
     jvm = int(spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid())
     stats = _proc_stats()
     children: dict[int, list[int]] = {}
-    for pid, (ppid, _) in stats.items():
+    for pid, (ppid, _, _) in stats.items():
         children.setdefault(ppid, []).append(pid)
-    ticks, todo = 0, list(children.get(jvm, ()))
+    tick = os.sysconf("SC_CLK_TCK")
+    out, todo = {}, list(children.get(jvm, ()))
     while todo:
         pid = todo.pop()
-        ticks += stats[pid][1]
+        out[pid, stats[pid][1]] = stats[pid][2] / tick
         todo.extend(children.get(pid, ()))
-    return ticks / os.sysconf("SC_CLK_TCK")
+    return out
+
+
+def python_worker_cpu_s(before: dict, after: dict) -> float:
+    """Python worker CPU seconds between two :func:`python_worker_cpu`
+    snapshots: each process alive at ``after`` counts from its value at
+    ``before``, or from 0 if it started since.  The daemon ignores
+    ``SIGCHLD``, so a worker that exits in the span (Spark stops one idle
+    for a minute) takes its CPU with it: an undercount, never negative."""
+    return sum(t - before.get(key, 0.0) for key, t in after.items())

@@ -5,10 +5,12 @@ data-processing layer a 100 TB pretraining pipeline needs.  Every query
 carries a DuckDB oracle so the driver hash-matches it like any SQL query.
 Most stay JVM-side; the exceptions run Python in Arrow-batched workers,
 where interpreted higher-order expressions would cost more: the
+``mapInArrow`` winnowing fingerprint map (at every scale), the
 ``mapInArrow`` MinHash band emitter above its size gate, the
 ``applyInPandas`` block tiles of embedding-cosine dedup and brute-force
 ANN, and the ``mapInArrow`` kernels of MinHash dedup, PQ and k-means (a
-whole query in one task below each kernel's size gate).
+whole query in one task below each kernel's size gate).  The Python side
+hashes with ``_phash_str``, bit-equal to the SQL ``_phash``.
 
 Portability contract with the oracle:
 * 60-bit portable hash: Spark ``conv(substr(md5(x),1,15),16,10)::long`` ==
@@ -29,6 +31,7 @@ query set so the big side is never shuffled.
 from __future__ import annotations
 
 import os
+from hashlib import md5
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -76,6 +79,12 @@ def _phash(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
+def _phash_str(s: str) -> int:
+    """``_phash`` of one Python string: the top 60 bits of the md5 of its
+    UTF-8 bytes, bit-equal to ``int(md5(s).hexdigest()[:15], 16)``."""
+    return int.from_bytes(md5(s.encode()).digest()[:8], "big") >> 4
+
+
 def _phash_sql(expr: str) -> str:
     return f"CAST(concat('0x', substr(md5({expr}), 1, 15)) AS BIGINT)"
 
@@ -98,7 +107,7 @@ _STOPRATIO_SQL = (
 
 def _docs_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents with compute-grade parallelism: text pipelines are
-    CPU-bound (interpreted HOFs / pandas UDFs), but the corpus's
+    CPU-bound (interpreted HOFs / Python maps), but the corpus's
     compressed on-disk size gives the scan only a handful of row-group
     splits (3 tasks on 32 cores at 16×sf0.1 — measured 3× wall on
     text_stats).  No-op whenever the scan already has ≥cores NON-EMPTY
@@ -275,13 +284,13 @@ def _shared_shingle_arrays(d: DataFrame) -> DataFrame:
     The Jaccard/containment scorers consume the shingle computation TWICE —
     once exploded into the pair self-join, once as per-doc set sizes for
     the denominator — and Spark has no cross-branch CSE, so without a
-    checkpoint the scan+tokenize+shingle pass runs twice (same reasoning
-    as the winnowing fingerprint checkpoint below).  The round-8 x256
-    stage decomposition (docs/scale_sweep_r8.jsonl decomp rows) put that
-    pass at ~23 s of the 90 s total; sharing it through a lazy
-    localCheckpoint saves the second execution at the cost of
-    materializing the gram arrays (MEMORY_AND_DISK, spills instead of
-    OOM)."""
+    checkpoint the scan+tokenize+shingle pass runs twice.  ReuseExchange
+    cannot share it: the two consumers read it through different
+    exchanges.  The round-8 x256 stage decomposition
+    (docs/scale_sweep_r8.jsonl decomp rows) put that pass at ~23 s of the
+    90 s total; sharing it through a lazy localCheckpoint saves the second
+    execution at the cost of materializing the gram arrays
+    (MEMORY_AND_DISK, spills instead of OOM)."""
     return _doc_shingles(d).localCheckpoint(eager=False)
 
 
@@ -411,9 +420,9 @@ WINNOW_W = 10  # winnowing window (guarantee: shared spans >= K+W-1 = 34 chars)
 WINNOW_T = 8  # min shared fingerprints to report a pair
 
 
-#: Grams per winnowing chunk: bounds every per-(doc, chunk) window sort at
-#: CHUNK + W - 1 rows no matter how long one document is.  Overlap overhead
-#: is (W-1)/CHUNK ≈ 0.1% extra gram rows.
+#: Anchors per winnowing chunk: bounds one document's gram-hash array at
+#: CHUNK + W - 1 int64s (64 KB) no matter how long the document is.  Each
+#: chunk re-hashes the W - 1 grams it borrows from the next one, ≈ 0.1%.
 WINNOW_CHUNK = 8192
 
 #: Stop-fingerprint document-frequency ceiling for the winnowing pair
@@ -436,67 +445,61 @@ WINNOW_CHUNK = 8192
 WINNOW_FP_DF_CEILING = 256
 
 
-def winnow_fingerprints(
-    d: DataFrame, k: int = WINNOW_K, w: int = WINNOW_W, chunk: int = WINNOW_CHUNK
-) -> DataFrame:
-    """(doc_id, h) winnowing fingerprints: hash every k-char gram of
-    ``text``, keep each w-gram sliding window's MIN hash, distinct per doc.
-    Selection is content-local (never absolute-position-dependent), which
-    is what makes the shared-span guarantee hold across alignments.
+def _winnow_minima(text: str, k: int, w: int, chunk: int):
+    """The sorted distinct window minima of a text of >= k chars: for each
+    gram position, the min ``_phash_str`` over its gram and the w - 1
+    after it (fewer at the tail, as a ROWS BETWEEN CURRENT ROW AND w - 1
+    FOLLOWING frame).  Taken ``chunk`` positions at a time, each chunk
+    hashing its substring plus the w + k - 2 chars borrowed from the next
+    one; grams past the text's end hash as int64 max."""
+    import numpy as np
+    from numpy.lib.stride_tricks import sliding_window_view
 
-    SHUFFLE-FREE chunked evaluation (round 10, replacing the r5
-    explode-grams + WindowExec formulation): the window min at anchor
-    ``pos`` depends only on grams ``pos..pos+w-1``, so the text is cut
-    into substrings of ``chunk`` anchor positions (+ the w+k-2 borrowed
-    tail chars the last owned anchor's window needs), and each chunk's
-    gram-hash array and sliding minima are computed by higher-order
-    functions entirely inside the narrow scan stage: ``transform`` builds
-    the hash array once per chunk (bound as a lambda variable via the
-    single-element-array idiom so it is NOT re-evaluated per anchor),
-    ``array_min(slice(...))`` takes each owned anchor's window minimum
-    (``slice`` truncates at the array end, matching the doc-tail
-    behavior of a ROWS BETWEEN 0 AND w-1 frame).  The fingerprint set is
-    bit-identical to the whole-doc window (pinned by a hypothesis test
-    against an unchunked pure-Python reference at chunk=16), but where
-    the r5 window formulation EXCHANGED AND SORTED the entire gram table
-    — ~24 bytes x total_chars, 91 GB of x256 sort spill, the r9 ledger's
-    #2 item — this plan's first shuffle is the ~2/(w+1)-density
-    fingerprint distinct.  Per-doc peak memory is the chunk-substring
-    array (~= the doc itself); per-expression state is one
-    chunk+w-1-long hash array (64 KB), so a 1 GB document streams
-    through chunk rows instead of pinning a sort partition."""
-    k1 = k - 1
-    sub_len = chunk + w + k - 2
-    # _phash in SQL (md5 -> 15 hex chars -> bigint), applied per gram of
-    # the chunk substring; the outer transform-over-array(...) binds the
-    # hash array as lambda var `harr` so it is built ONCE per chunk row
-    # (inlining it into the per-anchor lambda would rebuild it per anchor
-    # — and CollapseProject would do exactly that to a plain column
-    # alias, which is why this is one self-contained expression).
-    hashes = (
-        f"transform(sequence(1, length(e.sub) - {k1}), "
-        f"p -> cast(conv(substring(md5(substring(e.sub, p, {k})), 1, 15), 16, 10) as bigint))"
-    )
-    wmins = (
-        f"transform(array({hashes}), harr -> "
-        f"transform(sequence(1, e.owned), p -> array_min(slice(harr, p, {w}))))[0]"
-    )
-    subs = (
-        f"transform(sequence(0, cast(ceil((length(text) - {k1}) / {chunk}.0) as int) - 1), "
-        f"c -> struct(substring(text, c * {chunk} + 1, {sub_len}) as sub, "
-        f"least({chunk}, length(text) - {k1} - c * {chunk}) as owned))"
-    )
-    # Fingerprints = the DISTINCT per-window minima.  (Selecting rows where
-    # h equals the min of the window ANCHORED AT h's own position is the
-    # tempting one-liner but a DIFFERENT rule — it compares a gram only
-    # against its w-1 successors, and the guarantee fails when a smaller
-    # hash sits just past the shared span's edge.  The window-min VALUES
-    # are exactly the selected hash set, no argmin bookkeeping needed.)
+    n = len(text) - k + 1
+    parts = []
+    for c in range(0, n, chunk):
+        owned = min(chunk, n - c)
+        sub = text[c : c + owned + w + k - 2]
+        h = np.full(owned + w - 1, np.iinfo(np.int64).max, dtype=np.int64)
+        grams = len(sub) - k + 1
+        h[:grams] = [_phash_str(sub[p : p + k]) for p in range(grams)]
+        parts.append(sliding_window_view(h, w).min(axis=1))
+    return np.unique(np.concatenate(parts))
+
+
+def winnow_fingerprints(d: DataFrame) -> DataFrame:
+    """(doc_id, h) winnowing fingerprints of ``d`` (doc_id, text), whose
+    doc_id is unique: hash every WINNOW_K-char gram, keep each
+    WINNOW_W-gram window's MIN hash, distinct per doc.  Selection is
+    content-local, which is what makes the shared-span guarantee hold
+    across alignments.
+
+    One ``mapInArrow`` runs _winnow_minima per document inside the scan
+    stage, at every scale, with no shuffle and no distinct (a doc_id is
+    one row).  WINNOW_CHUNK bounds the per-document hash array."""
+    # Read on the driver: the workers import the module's own constants.
+    k, w, chunk = WINNOW_K, WINNOW_W, WINNOW_CHUNK
+
+    def emit(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        for b in batches:
+            docs, hs = [], []
+            for doc, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
+                h = _winnow_minima(text, k, w, chunk)
+                docs.append(np.full(len(h), doc, dtype=np.int64))
+                hs.append(h)
+            if hs:
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(np.concatenate(docs)), pa.array(np.concatenate(hs))],
+                    names=["doc_id", "h"],
+                )
+
     return (
-        d.filter(F.length("text") >= k)
-        .select("doc_id", F.explode(F.expr(subs)).alias("e"))
-        .select("doc_id", F.explode(F.expr(f"array_distinct({wmins})")).alias("h"))
-        .distinct()
+        d.select("doc_id", "text")
+        .filter(F.length("text") >= k)
+        .mapInArrow(emit, schema="doc_id long, h long")
     )
 
 
@@ -504,12 +507,10 @@ def winnow_pair_counts(fp: DataFrame, ceiling: int = WINNOW_FP_DF_CEILING) -> Da
     """(doc_a, doc_b, shared_fps) from a (doc_id, h) fingerprint table,
     pre-threshold.  Fingerprints appearing in more than ``ceiling``
     documents are dropped before the self-join (stop-fingerprint rule —
-    see WINNOW_FP_DF_CEILING); operators/pairs.py counts the pairs."""
+    see WINNOW_FP_DF_CEILING); operators/pairs.py counts the pairs.  Both
+    sides of the self-join read the one ``h`` exchange: ReuseExchange
+    merges the fingerprint map's subtree below it, so the map runs once."""
     fp = cap_groups(partition_groups(fp, "h"), "h", ceiling)
-    # The self-join consumes fp twice and Spark has no cross-branch CSE:
-    # without a checkpoint the fingerprint-selection stage — the heaviest
-    # — would execute twice.  Same pattern as the MinHash band join.
-    fp = fp.localCheckpoint(eager=False)
     return pair_counts(fp, "h", "doc_id", ("doc_a", "doc_b"), "shared_fps")
 
 
@@ -557,18 +558,14 @@ def dedup_winnow_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     both documents (the winnowing guarantee).  Pairs sharing >= T distinct
     fingerprints are reported.
 
-    Scale: fingerprint selection is SHUFFLE-FREE (round 10) — gram
-    hashing and the sliding window minima run as higher-order functions
-    inside the narrow scan stage (see winnow_fingerprints; the r5
-    WindowExec formulation exchanged + sorted the whole O(total_chars)
-    gram table, 91 GB of x256 sort spill).  The first exchange is the
-    ~2/(W+1)-density fingerprint distinct, ~5x smaller than the gram
-    table, before the blocked self-join (same Σ df(h)² cost shape +
+    Scale: fingerprint selection is one Python ``mapInArrow`` per
+    document inside the scan stage (see winnow_fingerprints), with no
+    shuffle.  The first exchange is the ~2/(W+1)-density fingerprint
+    table's ``h`` partitioning, ~5x smaller than the gram table, which
+    both sides of the blocked self-join read (same Σ df(h)² cost shape +
     stop-fingerprint WINNOW_FP_DF_CEILING cap + AQE skew-split mitigation
     as the shingle index — the cap bounds the one adversarial input left:
-    a boilerplate fingerprint shared by millions of documents).  No
-    Python in the plan: substring/md5/conv/transform/array_min are all
-    JVM expressions."""
+    a boilerplate fingerprint shared by millions of documents)."""
     d = _docs_spread(spark, sf_dir)
     fp = winnow_fingerprints(d)
     return winnow_pair_counts(fp).filter(F.col("shared_fps") >= WINNOW_T)
@@ -667,12 +664,10 @@ def _minhash_rows(texts):
     windows; a doc of under 3 tokens, ``''`` included, yields one truncated
     shingle); a NULL text has no shingle, as in the oracle, so it gets no
     signature and joins no candidate pair.  Hashes are exact integer math:
-    ``int(md5(s)[:15], 16)`` equals ``conv(substring(md5(s),1,15),16,10)``,
+    ``_phash_str`` equals ``conv(substring(md5(s),1,15),16,10)``,
     and a, b, h < P = 2³¹−1 keeps a·h+b < 2⁶² inside int64.  The
     permutations are batched in NumPy: one broadcast multiply-mod over the
     flattened hashes, then a ``minimum.reduceat`` segment-min per doc."""
-    from hashlib import md5
-
     import numpy as np
 
     idx, sets, lens, hashes = [], [], [], []
@@ -684,7 +679,7 @@ def _minhash_rows(texts):
         idx.append(i)
         sets.append(s)
         lens.append(len(s))
-        hashes.extend([int(md5(x.encode()).hexdigest()[:15], 16) for x in s])
+        hashes.extend([_phash_str(x) for x in s])
     if not idx:
         return np.zeros(0, np.int64), sets, np.zeros((0, N_PERMS), np.int64)
     mul, add = (np.array(c, dtype=np.int64)[:, None] for c in zip(*PERMS))

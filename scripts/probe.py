@@ -10,9 +10,10 @@ plan/exec split reported alongside, and so are the number of generated
 classes Janino compiled during the pass (``metrics.codegen_compiles``; a
 warm pass that recompiles is paying codegen again), the number of Spark
 jobs it launched (``metrics.jobs_submitted``) and the CPU seconds its Python
-workers used (``metrics.python_worker_cpu_s``).  Each row also records the
-session's ``spark.sql.shuffle.partitions``.  Prints one JSON line per
-query.
+workers used (``metrics.python_worker_cpu_s``; a worker that exits during
+the pass drops out, so the figure can undercount but not go negative).
+Each row also records the session's ``spark.sql.shuffle.partitions``.
+Prints one JSON line per query.
 
 Paired mode (``--paired A_DIR B_DIR``) is the round-8 protocol answer to
 this VM's ±20–70% cross-window drift (VERDICT r7 item 2): for each query it
@@ -106,6 +107,7 @@ def run_single(sf_dir: str, names: list[str]) -> int:
     from datafusion_parallelism_spark.metrics import (
         codegen_compiles,
         jobs_submitted,
+        python_worker_cpu,
         python_worker_cpu_s,
     )
     from datafusion_parallelism_spark.queries import REGISTRY
@@ -145,7 +147,7 @@ def run_single(sf_dir: str, names: list[str]) -> int:
         def one_pass():
             c0 = codegen_compiles(spark)
             j0 = jobs_submitted(spark)
-            p0 = python_worker_cpu_s(spark)
+            p0 = python_worker_cpu(spark)
             t0 = time.perf_counter()
             df = REGISTRY[name].fn(spark, sf_dir)
             t1 = time.perf_counter()
@@ -156,7 +158,7 @@ def run_single(sf_dir: str, names: list[str]) -> int:
             t2 = time.perf_counter()
             compiles = codegen_compiles(spark) - c0
             jobs = jobs_submitted(spark) - j0
-            python_cpu = round(python_worker_cpu_s(spark) - p0, 3)
+            python_cpu = round(python_worker_cpu_s(p0, python_worker_cpu(spark)), 3)
             sig = plan_signature(df) if want_plan else None
             metrics = None
             if want_metrics:

@@ -17,6 +17,7 @@ from conftest import with_conf
 from datafusion_parallelism_spark.metrics import (
     SUMMABLE,
     jobs_submitted,
+    python_worker_cpu,
     python_worker_cpu_s,
     stage_metrics,
     totals,
@@ -96,12 +97,27 @@ def test_python_worker_cpu_counts_python_tasks_only(spark):
     # polls its socket once a second: let the first settle, and allow the
     # second a tick of slack.
     time.sleep(1)
-    before = python_worker_cpu_s(spark)
+    before = python_worker_cpu(spark)
     spark.range(1000).selectExpr("sum(id)").collect()
-    assert python_worker_cpu_s(spark) - before <= 0.02
-    before = python_worker_cpu_s(spark)
+    assert python_worker_cpu_s(before, python_worker_cpu(spark)) <= 0.02
+    before = python_worker_cpu(spark)
     python_task()
-    assert python_worker_cpu_s(spark) - before >= 0.25
+    assert python_worker_cpu_s(before, python_worker_cpu(spark)) >= 0.25
+
+
+def test_python_worker_cpu_counts_each_process_from_its_own_start():
+    """A worker that exits during the span takes its CPU with it but
+    cannot make the span negative; a worker that starts during it counts
+    from 0, and a pid reused by a new process is a new process."""
+    before = {(10, 1): 5.0, (11, 2): 60.0, (12, 3): 1.0}
+    after = {
+        (10, 1): 5.5,  # the daemon: +0.5
+        (12, 3): 1.25,  # a reused worker: +0.25
+        (13, 9): 0.75,  # forked during the span
+        (11, 8): 0.5,  # pid 11 exited; a new process took its number
+    }
+    assert python_worker_cpu_s(before, after) == 2.0
+    assert python_worker_cpu_s(before, {(10, 1): 5.0}) == 0.0
 
 
 def test_totals_sums_additive_fields_only():

@@ -1,9 +1,8 @@
 """Persisted-block lifecycle across repeated in-session query runs.
 
 Several queries truncate lineage with ``localCheckpoint`` (directly or via
-helpers: the shared shingle subtree, winnow fingerprints, MinHash signature
-table, graph iteration state; above their size gates also PQ sub-vectors
-and k-means dims).  Checkpoint blocks are MEMORY_AND_DISK-persisted RDDs
+helpers: the shared shingle subtree, the MinHash candidate table above
+its gate, graph iteration state).  Checkpoint blocks are MEMORY_AND_DISK-persisted RDDs
 that Spark only releases through the slow finalizer → ContextCleaner
 path — a consumer who calls these
 queries repeatedly in ONE session accumulates blocks until
@@ -39,7 +38,6 @@ from datafusion_parallelism_spark.session import (
 CHECKPOINT_BEARING = [
     "dedup_ngram_jaccard",
     "dedup_containment",
-    "dedup_winnow_spans",
     "dedup_near_clusters",
     "dedup_apply",
     "stream_foreachbatch_upsert",
@@ -80,7 +78,7 @@ def test_keep_ids_are_kept(spark, sf_dir):
     cached.count()  # materialize
     keep = persistent_rdd_ids(spark)
     assert keep, "cache() produced no persisted RDD"
-    force_execute(REGISTRY["dedup_winnow_spans"].fn(spark, sf_dir))
+    force_execute(REGISTRY["dedup_ngram_jaccard"].fn(spark, sf_dir))
     release_persisted(spark, keep)
     assert persistent_rdd_ids(spark) == keep
     cached.unpersist(True)

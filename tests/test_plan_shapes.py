@@ -541,34 +541,31 @@ def test_pagerank_final_plan_is_copartitioned_no_exchange(spark, monkeypatch):
 
 
 def test_winnow_fingerprints_selection_is_shuffle_free(spark):
-    """Round-10 contract: winnowing fingerprint SELECTION (gram hashing +
-    sliding window minima) runs as higher-order functions inside the
-    narrow scan stage — no WindowExec, no Sort, and the plan's ONLY
-    exchange is the final fingerprint distinct.  The r5 formulation
-    exchanged + sorted the whole O(total_chars) gram table (91 GB of
-    x256 sort spill, ledger item #2); a regression to any window/sort
-    based selection re-introduces that linear-in-corpus sort."""
+    """Winnowing fingerprint SELECTION (gram hashing + sliding window
+    minima + per-doc distinct) is one Arrow map inside the narrow scan
+    stage: no WindowExec, no Sort, no Exchange.  The r5 formulation
+    exchanged + sorted the whole O(total_chars) gram table (91 GB of x256
+    sort spill, ledger item #2); a regression to any window/sort based
+    selection, or to a fingerprint distinct, re-introduces a shuffle."""
     from datafusion_parallelism_spark.queries.llm import winnow_fingerprints
 
     d = spark.createDataFrame(
         [(1, "x" * 200), (2, "y" * 500)], "doc_id long, text string"
     )
     plan = physical_plan_str(winnow_fingerprints(d))
+    assert "MapInArrow" in plan, plan
     assert "Window" not in plan, plan
     assert "Sort" not in plan, plan
-    assert plan.count("Exchange") == 1, plan
+    assert "Exchange" not in plan, plan
 
 
 def test_winnow_capped_fingerprints_df_window_rides_join_partitioning(spark):
     """The stop-fingerprint cap (round 6) must cost ZERO exchanges beyond
     what the uncapped pipeline already shuffles: the df-count window runs
-    over the same hashpartitioning(h) the pair self-join consumes.  The
-    executed query plan truncates at the localCheckpoint, so this pins the
-    pre-join subtree of the pair primitive (operators/pairs.py
-    partition_groups + cap_groups) directly — exactly two exchanges total
-    since the round-10 shuffle-free fingerprint selection: (doc_id, h) for
-    the fingerprint distinct, and h for the repartition the df window and
-    join both ride."""
+    over the same hashpartitioning(h) the pair self-join consumes.  This
+    pins the pre-join subtree of the pair primitive (operators/pairs.py
+    partition_groups + cap_groups) directly: exactly one exchange, the h
+    repartition the df window and the join both ride."""
     from datafusion_parallelism_spark.operators.pairs import (
         cap_groups,
         partition_groups,
@@ -583,9 +580,21 @@ def test_winnow_capped_fingerprints_df_window_rides_join_partitioning(spark):
     )
     fp = partition_groups(winnow_fingerprints(d), "h")
     plan = physical_plan_str(cap_groups(fp, "h", WINNOW_FP_DF_CEILING))
-    assert plan.count("Exchange") == 2, plan
+    assert plan.count("Exchange") == 1, plan
     # The df window itself partitions on h and sits above the h-repartition.
     assert "windowspecdefinition(h#" in plan or "windowspecdefinition(h " in plan, plan
+
+
+def test_winnow_spans_map_runs_once_per_build(spark, sf_dir):
+    """Both sides of dedup_winnow_spans' pair self-join read one h
+    exchange: with AQE off, ReuseExchange merges the fingerprint map's
+    subtree, so the plan holds one MapInArrow and the second side is a
+    ReusedExchange, with no checkpoint between them."""
+    with with_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
+        plan = physical_plan_str(REGISTRY["dedup_winnow_spans"].fn(spark, sf_dir))
+    assert plan.count("MapInArrow") == 1, plan
+    assert "ReusedExchange" in plan, plan
+    assert "Scan ExistingRDD" not in plan, plan
 
 
 def test_kmeans_final_plan_broadcast_assign_two_exchanges(spark, sf_dir):

@@ -14,6 +14,7 @@ import string
 
 import pytest
 
+from datafusion_parallelism_spark.queries import llm
 from datafusion_parallelism_spark.queries.llm import (
     WINNOW_K,
     WINNOW_W,
@@ -87,7 +88,8 @@ def _reference_fingerprints(text, k, w):
     doc tail), distinct."""
     from hashlib import md5
 
-    P = (1 << 61) - 1
+    if text is None:
+        return set()
     n = len(text) - k + 1
     if n <= 0:
         return set()
@@ -98,31 +100,43 @@ def _reference_fingerprints(text, k, w):
     return {min(hs[i : i + w]) for i in range(n)}
 
 
-def test_chunked_equals_unchunked_reference(spark):
+def test_chunked_equals_unchunked_reference(spark, monkeypatch):
     """The chunked window evaluation must be OUTPUT-IDENTICAL to whole-doc
     winnowing.  chunk=16 with 300-char docs forces ~18 chunk boundaries per
-    doc, exercising the borrowed-gram overlap on every boundary."""
-    from datafusion_parallelism_spark.queries.llm import _phash  # noqa: F401
-
+    doc, exercising the borrowed-gram overlap on every boundary; the
+    default chunk holds every doc whole.  The corpus also holds NULL,
+    empty, shorter-than-K and exactly-K texts, and non-ASCII ones with an
+    astral character: Spark's ``length`` and Python slices both count
+    code points."""
     rng = random.Random(11)
-    texts = []
+    texts = [None, "", "z" * (WINNOW_K - 1), "q" * WINNOW_K]
     for n in (WINNOW_K, WINNOW_K + 1, 40, 97, 300, 301):
-        texts.append(
-            "".join(rng.choice("ab") for _ in range(n))  # tiny alphabet: many ties
-        )
-        texts.append(
-            "".join(rng.choice(string.ascii_lowercase) for _ in range(n))
-        )
+        for alphabet in ("ab", string.ascii_lowercase, "aé漢😀"):  # "ab": many ties
+            texts.append("".join(rng.choice(alphabet) for _ in range(n)))
     df = _docs_df(spark, texts)
-    got = winnow_fingerprints(df, chunk=16)
-    by_doc = {}
-    for r in got.collect():
-        by_doc.setdefault(r.doc_id, set()).add(r.h)
-    for i, t in enumerate(texts):
-        want = _reference_fingerprints(t, WINNOW_K, WINNOW_W)
-        assert by_doc.get(i, set()) == want, (
-            f"doc {i} (len {len(t)}): chunked != unchunked reference"
-        )
+    for chunk in (16, llm.WINNOW_CHUNK):
+        monkeypatch.setattr(llm, "WINNOW_CHUNK", chunk)
+        by_doc = {}
+        for r in winnow_fingerprints(df).collect():
+            by_doc.setdefault(r.doc_id, set()).add(r.h)
+        for i, t in enumerate(texts):
+            want = _reference_fingerprints(t, WINNOW_K, WINNOW_W)
+            assert by_doc.get(i, set()) == want, (
+                f"doc {i} ({t!r:.40}): chunk={chunk} != unchunked reference"
+            )
+
+
+def test_python_phash_equals_spark_phash(spark):
+    """The workers' _phash_str is bit-equal to the SQL _phash column."""
+    from pyspark.sql import functions as F
+
+    words = ["", "a", "shingle of three", "aé漢😀", "😀" * 30, "x" * 1000]
+    rows = (
+        spark.createDataFrame([(w,) for w in words], "s string")
+        .select("s", llm._phash(F.col("s")).alias("h"))
+        .collect()
+    )
+    assert {r.s: r.h for r in rows} == {w: llm._phash_str(w) for w in words}
 
 
 @pytest.mark.parametrize("seed", [0, 1, 2])
@@ -196,18 +210,19 @@ def test_df_ceiling_counts_unchanged_below_ceiling(spark):
     assert capped == uncapped and (0, 1) in capped
 
 
-def test_guaranteed_span_detected_across_chunk_boundary(spark):
+def test_guaranteed_span_detected_across_chunk_boundary(spark, monkeypatch):
     """A guarantee-length span straddling a chunk boundary in ONE doc and
     sitting mid-chunk in the other must still share a fingerprint."""
     rng = random.Random(13)
     span = "".join(rng.choice(string.ascii_lowercase) for _ in range(GUARANTEE_LEN))
     chunk = 64
+    monkeypatch.setattr(llm, "WINNOW_CHUNK", chunk)
     for offset in range(chunk - GUARANTEE_LEN, chunk + 1):  # span crosses pos=chunk
         a = "".join(rng.choice(string.ascii_uppercase) for _ in range(offset)) + span \
             + "".join(rng.choice(string.ascii_uppercase) for _ in range(40))
         b = "".join(rng.choice(string.digits) for _ in range(17)) + span
         df = _docs_df(spark, [a, b])
-        fp = winnow_fingerprints(df, chunk=chunk)
+        fp = winnow_fingerprints(df)
         by_doc = {}
         for r in fp.collect():
             by_doc.setdefault(r.doc_id, set()).add(r.h)
