@@ -84,15 +84,6 @@ def fingerprint(text: Column) -> Column:
     return F.md5(F.regexp_replace(F.lower(text), "\\s+", " "))
 
 
-def word_shingles(toks: Column, n: int = 3) -> Column:
-    """All n-word shingles of a token array (short docs yield one truncated
-    shingle, mirroring the oracle's list-slice semantics)."""
-    return F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1))),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-    )
-
-
 def lang_id(text: Column) -> Column:
     """Marker-word language heuristic (n-gram-free, deterministic)."""
     toks = tokens(F.lower(text))

@@ -5,6 +5,7 @@ data-processing layer a 100 TB pretraining pipeline needs.  Every query
 carries a DuckDB oracle so the driver hash-matches it like any SQL query.
 Most stay JVM-side; the exceptions run Python in Arrow-batched workers,
 where interpreted higher-order expressions would cost more: the
+``mapInArrow`` shingle map (shingle_sets, every shingle consumer), the
 ``mapInArrow`` winnowing fingerprint map (at every scale), the
 ``mapInArrow`` MinHash band emitter above its size gate, the
 ``applyInPandas`` block tiles of embedding-cosine dedup and brute-force
@@ -24,8 +25,7 @@ Scale posture (100 TB): everything is expressed as hash-partitioned
 joins/aggregations over exploded token/shingle tables — the shapes that
 scale linearly with executors.  Pairwise work only ever happens AFTER a
 blocking step (shared shingle, LSH band bucket, sign-bit bucket), never as
-an unblocked cross join; the brute-force ANN variant broadcasts the (small)
-query set so the big side is never shuffled.
+an unblocked cross join.
 """
 
 from __future__ import annotations
@@ -48,7 +48,6 @@ from ..functions.text import (
     stopword_ratio,
     token_count,
     tokens,
-    word_shingles,
 )
 from ..functions.vectors import as_double, cosine
 from ..operators import vectors
@@ -106,16 +105,17 @@ _STOPRATIO_SQL = (
 
 
 def _docs_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents with compute-grade parallelism: text pipelines are
-    CPU-bound (interpreted HOFs / Python maps), but the corpus's
-    compressed on-disk size gives the scan only a handful of row-group
-    splits (3 tasks on 32 cores at 16×sf0.1 — measured 3× wall on
-    text_stats).  No-op whenever the scan already has ≥cores NON-EMPTY
-    splits: the estimate is byte-based but capped by the file's row-group
-    count (round 7 — byte splits beyond the row groups are empty tasks,
-    and trusting them serialized the gram explode onto 11 of 32 cores at
-    the x256 replica; see session.parquet_scan_tasks).  Driver-local file
-    stat + footer read — no per-call RDD-conversion py4j cost."""
+    """documents with compute-grade parallelism: text pipelines and the
+    multimodal payload builds and decodes (queries/multimodal.py) are
+    CPU-bound, but the corpus's compressed on-disk size gives the scan only
+    a handful of row-group splits (3 tasks on 32 cores at 16×sf0.1 —
+    measured 3× wall on text_stats; at x64 mm_assets_summary ran one
+    9-task stage of 284 s CPU on 32 cores).  No-op whenever the scan
+    already has ≥cores NON-EMPTY splits: the estimate is byte-based but
+    capped by the file's row-group count (round 7 — byte splits beyond the
+    row groups are empty tasks, and trusting them serialized the gram
+    explode onto 11 of 32 cores at the x256 replica; see
+    session.parquet_scan_tasks).  Driver-local file stat + footer read."""
     path = os.path.join(sf_dir, "documents.parquet")
     return spread_for_compute(load(spark, sf_dir, "documents"), input_path=path)
 
@@ -251,47 +251,65 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _doc_shingles(d: DataFrame) -> DataFrame:
-    """(doc_id, shingles: per-doc-distinct 3-word shingle array, n = |set|).
+def _word_shingles(text: str | None, n: int = 3) -> list[str]:
+    """The package's one shingle rule: each window of n consecutive tokens
+    of ``text.split(" ")`` joined by one space, in order, repeats kept.  A
+    text of under n tokens (``''`` included) yields one truncated shingle;
+    NULL yields none.  The oracle's ``_SHINGLES_SQL`` and ``_BIGRAMS_SQL``
+    give the same lists, NULL aside (a NULL shingle that joins nothing)."""
+    if text is None:
+        return []
+    toks = text.split(" ")
+    return [" ".join(toks[k : k + n]) for k in range(max(len(toks) - n + 1, 1))]
 
-    Keeping the shingle set as an ARRAY column (not exploded rows) lets
-    MinHash signatures and exact-Jaccard verification run as narrow per-row
-    expressions — no shuffle until a join actually needs one.
 
-    The token array is materialized in its own projection BEFORE shingling:
-    ``word_shingles`` references its input inside a ``transform`` lambda, so
-    an inline ``split()`` argument would be re-evaluated once per shingle
-    index (O(tokens²) splits per doc — measured 3.5× slower at sf0.1)."""
-    return (
-        d.select("doc_id", tokens(F.col("text")).alias("toks"))
-        .select(
-            "doc_id",
-            F.array_distinct(word_shingles(F.col("toks"))).alias("shingles"),
+#: Low bits of the packed shingle-set member that hold the set size.
+_SET_BITS = 20
+_DOC_BITS = 63 - _SET_BITS
+
+
+def _pack_member(doc_id: int, n: int) -> int:
+    """``doc_id << 20 | n`` for a doc_id in [-2⁴³, 2⁴³) and a set size n
+    in [0, 2²⁰): an exact long that orders as its doc_id, so a pair
+    self-join on it is doc_a < doc_b and carries both set sizes.  Outside
+    the bound it raises ValueError naming the doc_id, never truncates."""
+    if not (-(1 << _DOC_BITS) <= doc_id < 1 << _DOC_BITS and 0 <= n < 1 << _SET_BITS):
+        raise ValueError(
+            f"doc_id {doc_id} with {n} distinct shingles is outside the packed "
+            f"shingle-set bound (doc_id < 2**{_DOC_BITS}, n < 2**{_SET_BITS})"
         )
-        .withColumn("n", F.size("shingles"))
+    return doc_id << _SET_BITS | n
+
+
+def shingle_sets(
+    d: DataFrame, n: int = 3, *, distinct: bool = True, packed: bool = False
+) -> DataFrame:
+    """(doc_id, shingles) per row of ``d`` (doc_id, text): its text's
+    _word_shingles, per-doc distinct in first-seen order unless
+    ``distinct`` is False.  With ``packed`` the first column is ``m``,
+    _pack_member(doc_id, |shingles|), instead.  One ``mapInArrow`` in the
+    scan stage, read by every Spark-side shingle consumer."""
+    key = "m" if packed else "doc_id"
+
+    def emit(batches):
+        import pyarrow as pa
+
+        for b in batches:
+            keys, sets = [], []
+            for doc, text in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
+                s = _word_shingles(text, n)
+                if distinct:
+                    s = list(dict.fromkeys(s))
+                keys.append(_pack_member(doc, len(s)) if packed else doc)
+                sets.append(s)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(keys, pa.int64()), pa.array(sets, pa.list_(pa.string()))],
+                names=[key, "shingles"],
+            )
+
+    return d.select("doc_id", "text").mapInArrow(
+        emit, schema=f"{key} long, shingles array<string>"
     )
-
-
-def _shingle_table(d: DataFrame) -> DataFrame:
-    """(doc_id, shingle) with per-doc-distinct 3-word shingles (inverted-
-    index shape, used where blocking on the shingle value is the point)."""
-    return _doc_shingles(d).select("doc_id", F.explode("shingles").alias("s"))
-
-
-def _shared_shingle_arrays(d: DataFrame) -> DataFrame:
-    """(doc_id, shingles, n), lazily checkpointed for multi-consumer plans.
-
-    The Jaccard/containment scorers consume the shingle computation TWICE —
-    once exploded into the pair self-join, once as per-doc set sizes for
-    the denominator — and Spark has no cross-branch CSE, so without a
-    checkpoint the scan+tokenize+shingle pass runs twice.  ReuseExchange
-    cannot share it: the two consumers read it through different
-    exchanges.  The round-8 x256 stage decomposition
-    (docs/scale_sweep_r8.jsonl decomp rows) put that pass at ~23 s of the
-    90 s total; sharing it through a lazy localCheckpoint saves the second
-    execution at the cost of materializing the gram arrays
-    (MEMORY_AND_DISK, spills instead of OOM)."""
-    return _doc_shingles(d).localCheckpoint(eager=False)
 
 
 #: Stop-shingle document-frequency ceiling for the pair self-joins.  The
@@ -319,23 +337,29 @@ _SHINGLE_CTE = f"""
 """
 
 
-def _shared_pair_counts(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """(shared, cnt) for the shingle-overlap scorers: ``shared`` is
-    (doc_a, doc_b, c) — the count of shingles each doc pair (doc_a <
-    doc_b) shares — and ``cnt`` is (doc_id, n), the per-doc set size.
+def _shared_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_a, doc_b, c, na, nb) for the shingle-overlap scorers: ``c`` is
+    the count of shingles the doc pair (doc_a < doc_b) shares, ``na`` and
+    ``nb`` the two docs' distinct-shingle set sizes.
 
-    The inverted shingle index is the shingle arrays exploded to
-    (doc_id, s) rows, grouped on the shingle, with stop-shingles above
-    SHINGLE_DF_CEILING dropped; operators/pairs.py counts the pairs.
-    Taking the arrays lets the per-doc set sizes share the one
-    tokenize+shingle pass."""
-    arrays = _shared_shingle_arrays(_docs_spread(spark, sf_dir))
-    sh = arrays.select("doc_id", F.explode("shingles").alias("s"))
+    The inverted shingle index is the packed shingle sets exploded to
+    (s, m) rows, grouped on the shingle, with stop-shingles above
+    SHINGLE_DF_CEILING dropped; operators/pairs.py counts the pairs of
+    packed members, and the sizes are unpacked from them.  One shingle
+    pass, no checkpoint and no join back to a size table."""
+    sets = shingle_sets(_docs_spread(spark, sf_dir), packed=True)
+    sh = sets.select(F.explode("shingles").alias("s"), "m")
     capped = cap_groups(partition_groups(sh, "s"), "s", SHINGLE_DF_CEILING)
-    shared = pair_counts(capped, "s", "doc_id", ("doc_a", "doc_b"), "c")
-    return shared, arrays.select("doc_id", "n")
+    # The pair columns hold packed members until the select unpacks them.
+    shared = pair_counts(capped, "s", "m", ("doc_a", "doc_b"), "c")
+    mask = (1 << _SET_BITS) - 1
+    return shared.select(
+        F.shiftright("doc_a", _SET_BITS).alias("doc_a"),
+        F.shiftright("doc_b", _SET_BITS).alias("doc_b"),
+        "c",
+        F.col("doc_a").bitwiseAND(mask).alias("na"),
+        F.col("doc_b").bitwiseAND(mask).alias("nb"),
+    )
 
 
 @query(
@@ -365,13 +389,10 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     generation (stop-shingle rule, mirrored in the oracle): without the
     ceiling the Σ df² cost grows super-linearly as common boilerplate
     accumulates — measured 33 s at x16 -> 314 s at x64 before the cap."""
-    shared, cnt = _shared_pair_counts(spark, sf_dir)
-    jac = F.round(F.col("c") / (F.col("ca.n") + F.col("cb.n") - F.col("c")), 4)
-    return (
-        shared.join(cnt.alias("ca"), F.col("ca.doc_id") == F.col("doc_a"))
-        .join(cnt.alias("cb"), F.col("cb.doc_id") == F.col("doc_b"))
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+    shared = _shared_pair_counts(spark, sf_dir)
+    jac = F.round(F.col("c") / (F.col("na") + F.col("nb") - F.col("c")), 4)
+    return shared.select("doc_a", "doc_b", jac.alias("jaccard")).filter(
+        F.col("jaccard") >= JACCARD_THRESHOLD
     )
 
 
@@ -405,13 +426,10 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression differs — at 100 TB both queries share the Σ df(s)² cost
     profile, the stop-shingle ceiling, and the AQE skew-split mitigation
     for hot shingles."""
-    shared, cnt = _shared_pair_counts(spark, sf_dir)
-    cont = F.round(F.col("c") / F.least(F.col("ca.n"), F.col("cb.n")), 4)
-    return (
-        shared.join(cnt.alias("ca"), F.col("ca.doc_id") == F.col("doc_a"))
-        .join(cnt.alias("cb"), F.col("cb.doc_id") == F.col("doc_b"))
-        .select("doc_a", "doc_b", cont.alias("containment"))
-        .filter(F.col("containment") >= CONTAINMENT_THRESHOLD)
+    shared = _shared_pair_counts(spark, sf_dir)
+    cont = F.round(F.col("c") / F.least(F.col("na"), F.col("nb")), 4)
+    return shared.select("doc_a", "doc_b", cont.alias("containment")).filter(
+        F.col("containment") >= CONTAINMENT_THRESHOLD
     )
 
 
@@ -660,10 +678,8 @@ def _minhash_rows(texts):
     distributed band emitter (_minhash_candidates) and the one-task kernel
     (_minhash_pairs_arrow) alike, so the two sides cannot drift.
 
-    Shingles mirror ``word_shingles`` over a single-space ``split`` (3-token
-    windows; a doc of under 3 tokens, ``''`` included, yields one truncated
-    shingle); a NULL text has no shingle, as in the oracle, so it gets no
-    signature and joins no candidate pair.  Hashes are exact integer math:
+    Shingles are _word_shingles' (n = 3); a NULL text has none, so it
+    gets no signature and joins no candidate pair.  Hashes are integer math:
     ``_phash_str`` equals ``conv(substring(md5(s),1,15),16,10)``,
     and a, b, h < P = 2³¹−1 keeps a·h+b < 2⁶² inside int64.  The
     permutations are batched in NumPy: one broadcast multiply-mod over the
@@ -674,8 +690,7 @@ def _minhash_rows(texts):
     for i, text in enumerate(texts):
         if text is None:
             continue
-        toks = text.split(" ")
-        s = {" ".join(toks[k : k + 3]) for k in range(max(len(toks) - 2, 1))}
+        s = set(_word_shingles(text))
         idx.append(i)
         sets.append(s)
         lens.append(len(s))
@@ -911,13 +926,15 @@ def _minhash_pairs_distributed(d: DataFrame) -> DataFrame:
     # Shingle only docs that appear in some candidate pair (a small
     # fraction of the corpus at any scale): exact-Jaccard verification
     # needs shingle sets, but computing them for every document would cost
-    # a second full interpreted-HOF pass over the corpus for nothing.
+    # a second full shingle pass over the corpus for nothing.
     needed = (
         cand.select(F.col("doc_a").alias("doc_id"))
         .union(cand.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
-    ds = _doc_shingles(d.join(F.broadcast(needed), "doc_id"))
+    ds = shingle_sets(d.join(F.broadcast(needed), "doc_id")).withColumn(
+        "n", F.size("shingles")
+    )
     pairs = cand.join(ds.alias("da"), F.col("da.doc_id") == F.col("doc_a")).join(
         ds.alias("db"), F.col("db.doc_id") == F.col("doc_b")
     )
@@ -1229,8 +1246,6 @@ def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         return pd.concat(out, ignore_index=True)
 
-    from pyspark.sql import Window
-
     scored = (
         q.union(c)
         .groupBy("blk")
@@ -1279,8 +1294,6 @@ def ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = e.filter(F.col("vec_id") >= _N_QUERY_VECS).select(
         F.col("vec_id").alias("neighbor_id"), "label", F.col("v").alias("cv")
     )
-    from pyspark.sql import Window
-
     scored = c.join(F.broadcast(q), "label").select(
         "query_id",
         "neighbor_id",
@@ -1370,8 +1383,6 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = e.filter(F.col("vec_id") >= _N_QUERY_VECS).select(
         F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"), "bucket"
     )
-    from pyspark.sql import Window
-
     scored = c.join(F.broadcast(q), "bucket").select(
         "query_id",
         "neighbor_id",
@@ -1713,8 +1724,6 @@ def text_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     content fingerprint, token order matters and the hash is incrementally
     maintainable over a sliding window.  Computed JVM-side with
     aggregate(); n_same counts exact-sequence duplicates."""
-    from pyspark.sql import Window
-
     d = _docs_spread(spark, sf_dir)
     rh = F.aggregate(
         F.transform(tokens(F.col("text")), lambda t: _phash(t) % P),
@@ -1840,10 +1849,13 @@ def corpus_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly one branch; the doc_id attach join disappears entirely."""
     d = _docs_spread(spark, sf_dir)
     bench = (
-        _shingle_table(d.filter(F.col("source") == "src1")).select("s").distinct()
+        shingle_sets(d.filter(F.col("source") == "src1"))
+        .select(F.explode("shingles").alias("s"))
+        .distinct()
     )
     return (
-        _shingle_table(d.filter(F.col("source") != "src1"))
+        shingle_sets(d.filter(F.col("source") != "src1"))
+        .select("doc_id", F.explode("shingles").alias("s"))
         .join(F.broadcast(bench), "s")
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_shared"))
@@ -1911,12 +1923,11 @@ _BIGRAMS_SQL = (
 def text_bigram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top word bigrams (n-gram frequency analysis, the n=2 companion of
     text_vocab_topk): same explode → count → deterministic top-k plan, with
-    the bigram arrays built per row before exploding (token array
-    materialized first — see _doc_shingles on why that matters)."""
+    each document's bigrams, repeats kept, built by shingle_sets."""
     d = _docs_spread(spark, sf_dir)
     return (
-        d.select(tokens(F.col("text")).alias("toks"))
-        .select(F.explode(word_shingles(F.col("toks"), 2)).alias("bigram"))
+        shingle_sets(d, 2, distinct=False)
+        .select(F.explode("shingles").alias("bigram"))
         .groupBy("bigram")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.desc("n"), F.asc("bigram"))
@@ -1989,8 +2000,6 @@ def text_tfidf_top_term(spark: SparkSession, sf_dir: str) -> DataFrame:
     count.  Per-doc argmax via WindowGroupLimit (rank over doc_id) — ties
     broken on the ROUNDED score then token text, so the winner is
     engine-independent."""
-    from pyspark.sql import Window
-
     d = _docs_spread(spark, sf_dir)
     terms = d.select("doc_id", F.explode(tokens(F.col("text"))).alias("tok"))
     tf = terms.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))

@@ -28,25 +28,9 @@ from ..operators.multimodal import (
     real_asset_features,
     resize_images,
 )
-from ..session import load, spread_for_compute
+from .llm import _docs_spread
 from .registry import query
 
-
-def _docs_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents with compute-grade parallelism (the llm-corpus pattern,
-    queries/llm.py): every query here runs payload construction
-    (md5/repeat/unhex over KB blobs) or real-codec decode (mapInPandas)
-    whose CPU is orders of magnitude above the scan bytes, so the
-    INPUT-byte-sized scan splits starve it — the x64 ledger showed
-    mm_assets_summary as one 9-task stage, 284 s CPU, zero spill on a
-    32-core box.  spread_for_compute is a no-op whenever the scan
-    already has ≥cores non-empty row-group splits (any real data size)."""
-    import os
-
-    return spread_for_compute(
-        load(spark, sf_dir, "documents"),
-        input_path=os.path.join(sf_dir, "documents.parquet"),
-    )
 
 _N_BYTES_SQL = """
     CASE WHEN doc_id % 3 = 0 THEN (32 + doc_id % 32) * (32 + doc_id % 16)

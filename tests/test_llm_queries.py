@@ -53,13 +53,14 @@ def test_stop_shingle_ceiling_prunes_hot_shingles(spark):
     )
     from datafusion_parallelism_spark.queries.llm import (
         SHINGLE_DF_CEILING,
-        _shingle_table,
+        shingle_sets,
     )
 
     hot = SHINGLE_DF_CEILING + 10
     docs = [(i, "common boiler plate " + f"unique{i} token{i} tail{i}") for i in range(hot)]
     d = spark.createDataFrame(docs, "doc_id long, text string")
-    idx = cap_groups(partition_groups(_shingle_table(d), "s"), "s", SHINGLE_DF_CEILING)
+    sh = shingle_sets(d).select("doc_id", F.explode("shingles").alias("s"))
+    idx = cap_groups(partition_groups(sh, "s"), "s", SHINGLE_DF_CEILING)
     shingles = {r.s for r in idx.select("s").distinct().collect()}
     # 'common boiler plate' appears in every doc (> ceiling) -> pruned;
     # the per-doc unique shingles (df == 1) survive.

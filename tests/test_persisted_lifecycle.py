@@ -1,8 +1,8 @@
 """Persisted-block lifecycle across repeated in-session query runs.
 
 Several queries truncate lineage with ``localCheckpoint`` (directly or via
-helpers: the shared shingle subtree, the MinHash candidate table above
-its gate, graph iteration state).  Checkpoint blocks are MEMORY_AND_DISK-persisted RDDs
+helpers: the MinHash candidate table above its gate, graph iteration
+state).  Checkpoint blocks are MEMORY_AND_DISK-persisted RDDs
 that Spark only releases through the slow finalizer → ContextCleaner
 path — a consumer who calls these
 queries repeatedly in ONE session accumulates blocks until
@@ -31,13 +31,12 @@ from datafusion_parallelism_spark.session import (
 )
 
 #: Queries observed to leave persisted RDDs after execution (full-registry
-#: sweep at sf0.001, re-derived 2026-10-19).  Count per query varies with
-#: iteration depth, so only names are pinned here.  Queries whose
-#: single-task kernel runs at this scale (the five PQ and k-means queries,
-#: dedup_minhash_lsh, graph_pagerank, graph_triangle_counts) leave none.
+#: sweep at sf0.001).  Count per query varies with iteration depth, so only
+#: names are pinned here.  Queries whose single-task kernel runs at this
+#: scale (the five PQ and k-means queries, dedup_minhash_lsh,
+#: graph_pagerank, graph_triangle_counts) leave none, and neither do the
+#: shingle-overlap scorers, whose set sizes ride the packed pair member.
 CHECKPOINT_BEARING = [
-    "dedup_ngram_jaccard",
-    "dedup_containment",
     "dedup_near_clusters",
     "dedup_apply",
     "stream_foreachbatch_upsert",
@@ -78,7 +77,8 @@ def test_keep_ids_are_kept(spark, sf_dir):
     cached.count()  # materialize
     keep = persistent_rdd_ids(spark)
     assert keep, "cache() produced no persisted RDD"
-    force_execute(REGISTRY["dedup_ngram_jaccard"].fn(spark, sf_dir))
+    force_execute(REGISTRY["dedup_near_clusters"].fn(spark, sf_dir))
+    assert persistent_rdd_ids(spark) - keep, "the query persisted no blocks"
     release_persisted(spark, keep)
     assert persistent_rdd_ids(spark) == keep
     cached.unpersist(True)

@@ -361,7 +361,8 @@ def test_minhash_above_gate_runs_one_arrow_map(spark, sf_dir, monkeypatch, aqe):
     (with AQE on, once its stages have run).  A pandas UDF's
     ArrowEvalPython subtree was never merged that way, so its band table
     needed a checkpoint of its own.  The final plan reads the lazily
-    checkpointed candidates and verifies them with no Python node."""
+    checkpointed candidates and verifies them against llm.shingle_sets,
+    one map per side of the verify join."""
     from datafusion_parallelism_spark.queries import llm
 
     monkeypatch.setattr(llm, "_MINHASH_KERNEL_MAX_DOCS", 0)
@@ -374,7 +375,26 @@ def test_minhash_above_gate_runs_one_arrow_map(spark, sf_dir, monkeypatch, aqe):
         final = physical_plan_str(df)
     assert plan.count("MapInArrow") == 1 and "ReusedExchange" in plan, plan
     assert "ArrowEvalPython" not in plan + final, plan + final
-    assert "MapInArrow" not in final, final
+    assert final.count("MapInArrow emit") == 2 == final.count("MapInArrow"), final
+
+
+@pytest.mark.parametrize("aqe", ["false", "true"])
+@pytest.mark.parametrize("name", ["dedup_ngram_jaccard", "dedup_containment"])
+def test_shingle_overlap_builds_with_no_job(spark, sf_dir, name, aqe):
+    """The shingle-overlap scorers build with zero Spark jobs, AQE on or
+    off, and plan no checkpoint scan and no join but the pair self-join:
+    the set sizes ride the packed pair member, so no size table is joined
+    back and no lazy checkpoint (which AQE runs at build) is needed."""
+    load(spark, sf_dir, "documents")
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    with with_conf(spark, {"spark.sql.adaptive.enabled": aqe}):
+        jobs = scheduler.numTotalJobs()
+        df = REGISTRY[name].fn(spark, sf_dir)
+        assert scheduler.numTotalJobs() == jobs
+        plan = physical_plan_str(df)
+        joins = join_kinds(df)
+    assert "ExistingRDD" not in plan and "MapInArrow" in plan, plan
+    assert len(joins) == 1, joins
 
 
 def test_pii_redact_is_single_aggregation_no_python(spark, sf_dir):
